@@ -1,6 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.annotation.tailrec
+import scala.util.{Failure, Success, Try}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.schema.Layout
@@ -161,13 +163,6 @@ object Lake {
     restored
   }
 
-  /** Current-version scan (`generate_asset_silver.py:77-83`): one
-    * partition, iscurrent==1, bookkeeping columns dropped. */
-  def currentScan(spark: SparkSession, root: String, edCode: String, pcd: String)
-      : Option[DataFrame] =
-    readPartition(spark, root, edCode, pcd)
-      .map(_.filter(col("iscurrent") === 1).drop(Layout.scd2Cols: _*))
-
   /** Whole-table current scan (deal_details silver,
     * `generate_deal_details_silver.py:89-94`). */
   def currentScanAll(spark: SparkSession, root: String): DataFrame =
@@ -316,15 +311,21 @@ object Lake {
       .toSeq
   }
 
-  /** Reference-shaped bounded retry (`generate_bronze_tables.py:76-90`).
-    * Unlike the reference we rethrow after the budget instead of
-    * swallowing deterministic failures (SURVEY §7.5.4). */
-  def retry[T](tries: Int = 5)(f: => T): T = {
-    var last: Throwable = null
-    (1 to tries).foreach { _ =>
-      try return f
-      catch { case e: Throwable => last = e }
+  /** Reference-shaped bounded retry (`generate_bronze_tables.py:76-90`):
+    * runs `f` at most `tries` times and returns its first success at
+    * once, so a successful write runs exactly once. Only transient
+    * failures are retried: a non-fatal throwable other than Spark's
+    * `AnalysisException`, which is a deterministic plan error that
+    * every attempt would repeat. Fatal errors, `InterruptedException`
+    * and control throwables (all excluded by `NonFatal`) and
+    * `AnalysisException` propagate from the attempt that raised them.
+    * Unlike the reference we rethrow the last failure after the budget
+    * instead of swallowing it (SURVEY §7.5.4). */
+  @tailrec
+  def retry[T](tries: Int = 5)(f: => T): T =
+    Try(f) match {
+      case Success(v) => v
+      case Failure(e) if tries <= 1 || e.isInstanceOf[AnalysisException] => throw e
+      case Failure(_) => retry(tries - 1)(f)
     }
-    throw last
-  }
 }

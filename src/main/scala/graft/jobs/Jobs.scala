@@ -112,7 +112,15 @@ object Jobs {
   }
 
   /** Silver job for assets / bond_info
-    * (`generate_asset_silver.py:48-118`). */
+    * (`generate_asset_silver.py:48-118`). Every ledger partition is
+    * read in one pruned current-version scan
+    * (`generate_asset_silver.py:77-83`) and validated, cast and split
+    * in one pass; `dirty_dumps` and each topic table then get one
+    * publish, which swaps each `part=` directory in the frame on its
+    * own. `part` is a primary column of every topic table, so dedup
+    * and the all-null topic drop stay within a partition, and a
+    * partition with no bad (or no good) rows publishes nothing to
+    * that table. */
   def silverTopicSplit(spark: SparkSession, lakeRoot: String, dataType: String,
                        tries: Int = 5): Unit = {
     val bronzeRoot = s"$lakeRoot/bronze/$dataType"
@@ -126,35 +134,38 @@ object Jobs {
       case "assets" => Registries.assetColumns
       case "bond_info" => Registries.bondColumns
     }
-    Lake.readLedgers(spark, lakeRoot, dataType).foreach { case (ed, pcd) =>
-      Lake.currentScan(spark, bronzeRoot, ed, pcd).foreach { bronze =>
-        // single Catalyst pass + one cache: the reference re-executed
-        // the scan→RDD-validate lineage ~9× per pcd (SURVEY §3.2)
-        val (good, bad) = Rules.profile(bronze, schema)
-        val annotated = good.unionByName(bad).cache()
+    val parts = Lake.readLedgers(spark, lakeRoot, dataType)
+      .map { case (ed, pcd) => Lake.partValue(ed, pcd) }.distinct
+      .filter(Lake.partitionExists(spark, bronzeRoot, _))
+    if (parts.isEmpty) return
+    val bronze = spark.read.parquet(bronzeRoot)
+      .where(col("part").isin(parts: _*) && col("iscurrent") === 1)
+      .drop(Layout.scd2Cols: _*)
+    // single Catalyst pass + one cache: the reference re-executed
+    // the scan→RDD-validate lineage ~9× per pcd (SURVEY §3.2)
+    val (good, bad) = Rules.profile(bronze, schema)
+    val annotated = good.unionByName(bad).cache()
+    try {
+      val badRows = annotated.filter(!col("flag"))
+      if (!badRows.isEmpty) {
+        Lake.retry(tries) {
+          Lake.writePartitioned(
+            badRows.drop("flag"),
+            s"$lakeRoot/dirty_dumps/$dataType")
+        }
+      }
+      val goodRows = annotated.filter(col("flag")).drop("flag", "qc_errors")
+      if (!goodRows.isEmpty) {
+        val typed = Silver.castToDatatype(goodRows, registry).cache()
         try {
-          val badRows = annotated.filter(!col("flag"))
-          if (!badRows.isEmpty) {
+          Silver.topicTables(typed, dataType).foreach { case (table, df) =>
             Lake.retry(tries) {
-              Lake.writePartitioned(
-                badRows.drop("flag"),
-                s"$lakeRoot/dirty_dumps/$dataType")
+              Lake.writePartitioned(df, s"$silverRoot/$table")
             }
           }
-          val goodRows = annotated.filter(col("flag")).drop("flag", "qc_errors")
-          if (!goodRows.isEmpty) {
-            val typed = Silver.castToDatatype(goodRows, registry).cache()
-            try {
-              Silver.topicTables(typed, dataType).foreach { case (table, df) =>
-                Lake.retry(tries) {
-                  Lake.writePartitioned(df, s"$silverRoot/$table")
-                }
-              }
-            } finally typed.unpersist()
-          }
-        } finally annotated.unpersist()
+        } finally typed.unpersist()
       }
-    }
+    } finally annotated.unpersist()
   }
 
   /** Per-deal DAG fan-out (#24; reference `dags/LES_dag_assets.py:
@@ -196,10 +207,15 @@ object Jobs {
         ed
       }
     }
-    val done = scala.concurrent.Await.result(
+    // shut down on failure too, and let the other deals finish their
+    // publishes first: no writer and no idle pool thread outlives the call
+    val done = try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(futures),
       scala.concurrent.duration.Duration.Inf)
-    pool.shutdown()
+    finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
+    }
     // silver is ledger-driven across every deal loaded above
     silverTopicSplit(spark, lakeRoot, "assets")
     silverTopicSplit(spark, lakeRoot, "bond_info")

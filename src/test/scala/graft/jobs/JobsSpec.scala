@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 import graft.TestSpark
 
 /** End-to-end miniature pipeline (SURVEY.md §7.2): assets CSV →
@@ -147,29 +148,32 @@ class JobsSpec extends AnyFunSuite {
     assert(gold("fr") == (500.1, 1L))
   }
 
+  private def dealXml(ed: String, country: String, balance: String, assets: String) =
+    s"""<?xml version="1.0"?>
+       |<ns:Envelope xmlns:ns="urn:edw">
+       |  <ns:Header><ns:Noise>x</ns:Noise></ns:Header>
+       |  <ns:Body><ns:Wrapper><ns:Meta>m</ns:Meta><ns:Deals><ns:Deal>
+       |    <ns:EDCode>$ed</ns:EDCode>
+       |    <ns:PoolCutOffDate>2023-07-31T00:00:00</ns:PoolCutOffDate>
+       |    <ns:CountryCodeOfSecuritisedAsset>$country</ns:CountryCodeOfSecuritisedAsset>
+       |    <ns:CurrentPoolBalance>$balance</ns:CurrentPoolBalance>
+       |    <ns:NumberOfActiveAssets>$assets</ns:NumberOfActiveAssets>
+       |    <ns:Submissions><ns:Submission>
+       |      <ns:RequestId>r-$ed</ns:RequestId>
+       |    </ns:Submission></ns:Submissions>
+       |  </ns:Deal></ns:Deals></ns:Wrapper></ns:Body>
+       |</ns:Envelope>""".stripMargin
+
+  private def writeDealXml(dir: String, name: String, xml: String): Unit =
+    Files.write(Paths.get(dir, name), xml.getBytes(StandardCharsets.UTF_8))
+
   test("deal_details xml → bronze → silver → gold dealSummary") {
-    def dealXml(ed: String, country: String, balance: String, assets: String) =
-      s"""<?xml version="1.0"?>
-         |<ns:Envelope xmlns:ns="urn:edw">
-         |  <ns:Header><ns:Noise>x</ns:Noise></ns:Header>
-         |  <ns:Body><ns:Wrapper><ns:Meta>m</ns:Meta><ns:Deals><ns:Deal>
-         |    <ns:EDCode>$ed</ns:EDCode>
-         |    <ns:PoolCutOffDate>2023-07-31T00:00:00</ns:PoolCutOffDate>
-         |    <ns:CountryCodeOfSecuritisedAsset>$country</ns:CountryCodeOfSecuritisedAsset>
-         |    <ns:CurrentPoolBalance>$balance</ns:CurrentPoolBalance>
-         |    <ns:NumberOfActiveAssets>$assets</ns:NumberOfActiveAssets>
-         |    <ns:Submissions><ns:Submission>
-         |      <ns:RequestId>r-$ed</ns:RequestId>
-         |    </ns:Submission></ns:Submissions>
-         |  </ns:Deal></ns:Deals></ns:Wrapper></ns:Body>
-         |</ns:Envelope>""".stripMargin
     val lake = Files.createTempDirectory("lakedeal").toString
     Seq(("DEALD1", "de", "1000.50", "10"), ("DEALD2", "de", "2000.25", "20"),
         ("DEALD3", "fr", "500.10", "5")).foreach {
       case (ed, c, b, a) =>
         val raw = Files.createTempDirectory(s"rawdeal$ed").toString
-        Files.write(Paths.get(raw, s"${ed}_Deal_Details.xml"),
-          dealXml(ed, c, b, a).getBytes(StandardCharsets.UTF_8))
+        writeDealXml(raw, s"${ed}_Deal_Details.xml", dealXml(ed, c, b, a))
         assert(Jobs.bronzeDealDetails(spark, raw, lake, "Deal_Details") == 0)
     }
     Jobs.silverDealDetails(spark, lake)
@@ -205,5 +209,79 @@ class JobsSpec extends AnyFunSuite {
     val tranche = spark.read.parquet(s"$lake/silver/bond_info/tranche_info")
     assert(tranche.select("BL25").orderBy("BL25").collect()
       .map(_.getString(0)).toSeq == Seq("a1", "b2"))
+  }
+
+  test("deal_details resubmission with the same cut-off date merges through SCD2") {
+    val raw = Files.createTempDirectory("rawresub").toString
+    val lake = Files.createTempDirectory("lakeresub").toString
+    writeDealXml(raw, "DEALR_Deal_Details.xml", dealXml("DEALR", "de", "1000.50", "10"))
+    assert(Jobs.bronzeDealDetails(spark, raw, lake, "Deal_Details") == 0)
+    // same PoolCutOffDate, changed non-key field: the merge re-reads and
+    // replaces the partition it was built from
+    writeDealXml(raw, "DEALR_Deal_Details.xml", dealXml("DEALR", "de", "2000.25", "10"))
+    assert(Jobs.bronzeDealDetails(spark, raw, lake, "Deal_Details") == 0)
+    val rows = spark.read.parquet(s"$lake/bronze/deal_details")
+      .where($"part" === "DEALR_20230731")
+      .select("iscurrent", "CurrentPoolBalance").as[(Int, String)].collect()
+    // keys-only checksum: unchanged keys keep the first version
+    assert(rows.toSeq == Seq((1, "1000.50")))
+  }
+
+  test("silver batches ledger partitions with the per-partition output") {
+    val raw = Files.createTempDirectory("rawbatch").toString
+    val lake = Files.createTempDirectory("lakebatch").toString
+    val header = Seq("AL1,AL2,AL5,AL6,AL7,AL18,AL30,AL50,AL51",
+      "Cut-off,Pool,Lease,Orig,Reg,Form,Price,Start,Maturity")
+    val shared = "2023-07-31,P1,L1,OrigCo,y,3,1234.567,2020-01-01,2026-06"
+    def tape(date: String, rows: String*): Unit =
+      Files.write(Paths.get(raw, s"DEALB_${date}_Loan_Data.csv"),
+        (header ++ rows).mkString("\n").getBytes(StandardCharsets.UTF_8))
+    // the same row in both partitions: dedup must stay within a part
+    tape("2023_07_31", shared, shared,
+      "2023-07-31,P1,L2,OrigCo,n,9,10,2020-01-01,2026-06") // bad AL18
+    tape("2023_08_31", shared, "2023-07-31,P1,L4,OrigCo,n,2,55,2021-03-01,2027-01")
+    assert(Jobs.bronzeCsv(spark, raw, lake, "assets", "DEALB", "Loan_Data",
+      "2023-09-01").size == 2)
+
+    Jobs.silverTopicSplit(spark, lake, "assets")
+
+    def tableRows(path: String): Map[String, Seq[String]] =
+      spark.read.parquet(path).collect().toSeq
+        .groupBy(_.getAs[String]("part"))
+        .map { case (p, rs) => p -> rs.map(_.toString).sorted }
+    def silver(): Map[String, Map[String, Seq[String]]] =
+      new java.io.File(s"$lake/silver/assets").listFiles()
+        .map(t => t.getName -> tableRows(t.getPath)).toMap
+    val first = silver()
+    val lease = spark.read.parquet(s"$lake/silver/assets/lease_info")
+      .select("part", "AL5").as[(String, String)].collect().toSeq.groupBy(_._1)
+      .map { case (p, rs) => p -> rs.map(_._2).sorted }
+    assert(lease == Map("DEALB_20230731" -> Seq("l1"), "DEALB_20230831" -> Seq("l1", "l4")))
+    assert(first.values.forall(_.keySet == Set("DEALB_20230731", "DEALB_20230831")))
+    val dirty = tableRows(s"$lake/dirty_dumps/assets")
+    assert(dirty.keySet == Set("DEALB_20230731") && dirty("DEALB_20230731").size == 1)
+
+    Jobs.silverTopicSplit(spark, lake, "assets")
+    assert(silver() == first)
+    assert(tableRows(s"$lake/dirty_dumps/assets") == dirty)
+  }
+
+  test("run-all: a failing deal propagates its error and leaves no pool thread") {
+    val rawRoot = Files.createTempDirectory("rawfail").toString
+    val lake = Files.createTempDirectory("lakefail").toString
+    val dir = Files.createDirectories(Paths.get(rawRoot, "DEALF")).toString
+    Seq("a", "b").foreach { v =>
+      writeDealXml(dir, s"DEALF_${v}_Deal_Details.xml", dealXml("DEALF", "de", "1", "1"))
+    }
+    def nonDaemon(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && !t.isDaemon).toSet
+    val before = nonDaemon()
+    val e = intercept[RuntimeException](
+      Jobs.runAllDeals(spark, rawRoot, lake, "2023-07-31", parallelism = 2))
+    assert(e.getMessage.contains("expected exactly one XML"))
+    // an idle pool thread would never exit and keep the JVM alive
+    val leaked = nonDaemon() -- before
+    leaked.foreach(_.join(10000))
+    assert(leaked.forall(!_.isAlive), leaked.map(_.getName))
   }
 }
