@@ -12,6 +12,10 @@ import org.apache.spark.sql.SparkSession
   *  - AQE on: runtime coalescing + skew-join handling — the local
   *    stand-in for what a 1000-executor cluster relies on.
   *  - shuffle.partitions sized to the machine, not the 200 default.
+  *
+  * The native `graft_*` functions and [[plans.RangeJoinRule]] come from
+  * [[GraftExtensions]], the one registration path; sessions derived
+  * with `newSession()` carry them too.
   */
 object GraftSession {
   def build(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
@@ -61,27 +65,6 @@ object GraftSession {
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // imperative registration kept as a fallback for sessions that
-    // pre-existed getOrCreate (extensions only apply to new sessions)
-    graft.functions.VectorExpressions.register(spark)
-    graft.functions.PlaneBands.register(spark)
-    graft.functions.Int8Quantize.register(spark)
-    graft.functions.MinHashAgg.register(spark)
-    graft.functions.MinHashArray.register(spark)
-    graft.functions.Transliterate.register(spark)
-    graft.functions.WordShingles.register(spark)
-    graft.functions.TokenNgrams.register(spark)
-    graft.functions.IntersectCount.register(spark)
-    graft.functions.SimHash64.register(spark)
-    graft.functions.TopKAgg.register(spark)
-    graft.functions.HeavyHittersAgg.register(spark)
-    graft.functions.QuantileSketchAgg.register(spark)
-    graft.functions.KMinAgg.register(spark)
-    graft.functions.VectorSumAgg.register(spark)
-    if (!spark.experimental.extraOptimizations
-        .exists(_.isInstanceOf[graft.plans.RangeJoinRule]))
-      spark.experimental.extraOptimizations ++=
-        Seq(graft.plans.RangeJoinRule(spark))
     spark
   }
 }

@@ -1,8 +1,9 @@
 package graft
 
-/** Dump `.explain("formatted")` for named SparkEntry queries to
-  * `plans/<round>/<query>_<suffix>.txt` — the optimization-round
-  * evidence trail (the judge checks plan claims against these files).
+/** Dump `.explain("formatted")` for named SparkEntry queries (every
+  * query when no name is given) to `plans/<round>/<query>_<suffix>.txt`
+  * — the plan-audit utility and the optimization-round evidence trail
+  * (plan claims are checked against these files).
   *
   * Usage: `sbt "runMain graft.PlanDump x87_kmeans_lloyd x14_ivf_topk"`
   * with SPARK_GRAFT_SF_DIR / SPARK_GRAFT_PLAN_DIR /
@@ -19,7 +20,8 @@ object PlanDump {
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "after")
     val spark = GraftSession.build(appName = "graft-plandump")
     new java.io.File(outDir).mkdirs()
-    args.foreach { name =>
+    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
+    names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query $name"))
       val plan = fn(spark, sfDir).queryExecution

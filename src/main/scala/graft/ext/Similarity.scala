@@ -35,12 +35,6 @@ object Similarity {
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
-  /** Vector scaled to unit L2 norm (double elements). */
-  def unitNorm(a: Column): Column =
-    transform(a, x => x.cast("double") / norm(a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Per-group embedding centroids in long form: one (group, pos,
     * centroid) row per vector dimension — corpus statistics for
     * cluster drift / quantizer seeding. One posexplode + one
@@ -942,109 +936,14 @@ object Similarity {
   def lshSketch(vec: Column, bits: Int, dim: Int = 64): Column =
     Planes.sketch(vec, Planes.components(bits, dim))
 
-  /** IVF coarse quantizer: k-means centroids trained with
-    * deterministic init (lowest-id vectors) and a fixed iteration
-    * count — every step is a DataFrame op (broadcast centroid join +
-    * per-dimension mean), so training streams over an arbitrarily
-    * large corpus. Returns (centroid_id, centroid) rows. */
-  def ivfTrain(corpus: DataFrame, id: String, vec: String,
-               nCentroids: Int, iters: Int = 3,
-               trainSample: Int = 2048): DataFrame = {
-    val spark = corpus.sparkSession
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val centSchema = StructType(Seq(
-      StructField("cid", IntegerType),
-      StructField("cv", ArrayType(DoubleType))))
-    // k-means trains on a bounded sample (standard IVF practice — the
-    // quantizer doesn't need the full 100 TB corpus). The sample is a
-    // deterministic, partition-layout-independent hash draw: a hash
-    // FILTER first shrinks the corpus to ~4×trainSample survivors (no
-    // full-corpus sort), then orderBy(hash).limit — a per-partition
-    // top-K heap (TakeOrderedAndProject) over the small survivor set.
-    val all = corpus.select(col(id).as("_id"), col(vec).as("v"))
-    val n = all.count()
-    val keepMod = math.max(1L, n / math.max(1L, trainSample.toLong * 4))
-    val v = all.filter(pmod(xxhash64(col("_id")), lit(keepMod)) === 0)
-      .orderBy(xxhash64(col("_id"), lit(17))).limit(trainSample)
-      .localCheckpoint()
-    // deterministic init: the nCentroids hash-smallest sample rows,
-    // materialized driver-side (tiny by definition) — avoids any
-    // unpartitioned window; centroids collect every iteration anyway
-    // to truncate the iteration-deep lineage
-    val init = v.orderBy(xxhash64(col("_id"), lit(29))).limit(nCentroids)
-      .select(col("v")).collect()
-    var centroids = spark.createDataFrame(
-      init.toSeq.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row(i + 1, r.getSeq[Any](0).map {
-          case f: Float => f.toDouble
-          case d: Double => d
-        })
-      }.asJava, centSchema)
-    (1 to iters).foreach { _ =>
-      val next = assign(v, centroids)
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("cid", "pos").agg(avg(col("x").cast("double")).as("m"))
-        .groupBy("cid")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("ps"))
-        .select(col("cid"), transform(col("ps"), p => p.getField("m")).as("cv"))
-        .collect()
-      centroids = spark.createDataFrame(next.toSeq.asJava, centSchema)
-    }
-    centroids
-  }
-
-  /** Nearest-centroid assignment. The condition-free
-    * `join(broadcast(centroids))` plans as a BroadcastNestedLoopJoin
-    * on purpose: it is the k-means assignment cross product of the
-    * corpus against nCentroids (≤ dozens) broadcast rows — linear in
-    * the corpus, NOT an all-pairs corpus join. */
-  private def assign(v: DataFrame, centroids: DataFrame): DataFrame = {
-    val scored = v.join(broadcast(centroids))
-      .withColumn("sim", cosine(col("v"), col("cv")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("_id").orderBy(col("sim").desc, col("cid"))
-    scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("_id"), col("v"), col("cid"))
-  }
-
-  /** IVF ANN top-k: corpus bucketed by nearest centroid; each query
-    * probes its `nProbe` nearest centroid buckets only — the classic
-    * inverted-file scale path (scored rows shrink by ~nProbe/nCentroids). */
-  def ivfTopK(queries: DataFrame, qId: String, qVec: String,
-              corpus: DataFrame, cId: String, cVec: String,
-              k: Int, nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
-    // cents is a driver-built LocalRelation (collect()-backed) —
-    // nothing to cache, re-references are free
-    val cents = ivfTrain(corpus, cId, cVec, nCentroids)
-    val bucketed = assign(
-      corpus.select(col(cId).as("_id"), col(cVec).as("v")), cents)
-      .select(col("_id").as("neighbour_id"), col("v").as("cv2"), col("cid"))
-    val qProbes = queries.select(col(qId).as("query_id"), col(qVec).as("qv"))
-      .join(broadcast(cents))
-      .withColumn("sim_c", cosine(col("qv"), col("cv")))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-          .orderBy(col("sim_c").desc, col("cid"))))
-      .filter(col("rn") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cid"))
-    val scored = qProbes.join(bucketed, Seq("cid"))
-      .filter(col("query_id") =!= col("neighbour_id"))
-      .select(col("query_id"), col("neighbour_id"),
-        cosine(col("qv"), col("cv2")).as("cosine"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("query_id").orderBy(col("cosine").desc, col("neighbour_id"))
-    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-  }
-
   /** IVF ANN top-k with a DETERMINISTIC coarse quantizer: the
     * codebook is [[kmeansLloyd]]'s int8 integer-domain k-means
     * (smallest-id seeds, exact integer distances, rounded-mean
     * M-step), so the buckets — and therefore the candidate set and
     * the final ranking — are bit-identical on any engine, hardware or
-    * partitioning. Where [[ivfTopK]]'s float quantizer is the
-    * classic cross-run reproducibility hole (SIMD-order float means
-    * flip boundary vectors between probes), this variant is fully
+    * partitioning. Where a float k-means quantizer is the classic
+    * cross-run reproducibility hole (SIMD-order float means flip
+    * boundary vectors between probes), this variant is fully
     * oracle-checkable: the x14 gate unrolls the identical arithmetic
     * in DuckDB ([[kmeansLloydCtes]] + probe + top-k) and hash-matches
     * the rows.

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -187,17 +187,6 @@ case class HeavyHittersAgg(
 }
 
 object HeavyHittersAgg {
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_heavyhitters",
-      exprs => HeavyHittersAgg(exprs(0),
-        exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other =>
-            sys.error(s"graft_heavyhitters cap must be an int literal, got $other")
-        }).toAggregateExpression(),
-      "built-in")
 
   /** The (item, est, err) summary of a group, hottest first. */
   def heavyHitters(item: Column, cap: Int): Column =

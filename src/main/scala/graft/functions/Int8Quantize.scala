@@ -143,12 +143,6 @@ object Int8Quantize {
           .fromPrimitiveArray(out)))
   }
 
-  /** Register in a session's function registry (GraftSession calls
-    * this; same pattern as [[PlaneBands.register]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_int8_quantize", exprs => Int8Quantize(exprs(0)), "built-in")
-
   /** Column builder. */
   def int8_quantize(vec: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_int8_quantize", vec)

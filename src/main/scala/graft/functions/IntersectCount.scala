@@ -92,13 +92,6 @@ object IntersectCount {
     n
   }
 
-  /** Register as `graft_intersect_count` (GraftSession calls this). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_intersect_count",
-      exprs => IntersectCount(exprs(0), exprs(1)),
-      "built-in")
-
   def intersectCount(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_intersect_count", a, b)
 }

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -104,17 +104,6 @@ case class KMinAgg(
 }
 
 object KMinAgg {
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmin",
-      exprs => KMinAgg(exprs(0),
-        exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other =>
-            sys.error(s"graft_kmin k must be an int literal, got $other")
-        }).toAggregateExpression(),
-      "built-in")
 
   /** The k smallest distinct values of a group, ascending. */
   def kmin(value: Column, k: Int): Column =

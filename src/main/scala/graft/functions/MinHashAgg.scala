@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, XxHash64Function}
+import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64Function}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -91,17 +91,6 @@ case class MinHashAgg(
 }
 
 object MinHashAgg {
-  /** Register alongside the other graft natives. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash",
-      exprs => MinHashAgg(exprs(0),
-        exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => sys.error(s"graft_minhash k must be an int literal, got $other")
-        }).toAggregateExpression(),
-      "built-in")
-
   /** k-slot MinHash signature of a (grouped) string column. */
   def minhash(c: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function(

@@ -83,18 +83,6 @@ object MinHashArray {
     new GenericArrayData(buf)
   }
 
-  /** Register as `graft_minhash_array` (GraftSession calls this). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_array",
-      exprs => MinHashArray(exprs(0), exprs(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-          v.toString.toInt
-        case other => throw new IllegalArgumentException(
-          s"graft_minhash_array k must be a literal, got $other")
-      }),
-      "built-in")
-
   def minhashArray(shingles: Column, k: Int): Column =
     org.apache.spark.sql.functions.call_function("graft_minhash_array",
       shingles, org.apache.spark.sql.functions.lit(k))

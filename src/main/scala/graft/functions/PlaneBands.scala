@@ -147,20 +147,6 @@ object PlaneBands {
           "pass the actual embedding dim (the dim parameter) or fix " +
           "the vector column")
 
-  /** Register in a session's function registry (GraftSession calls
-    * this; same pattern as [[VectorExpressions.register]]). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_plane_bands", exprs => {
-        val plData = exprs(1).eval().asInstanceOf[ArrayData]
-        val planes = (0 until plData.numElements()).map(i =>
-          plData.getArray(i).toDoubleArray()).toArray
-        PlaneBands(exprs(0), planes,
-          exprs(2).eval().asInstanceOf[Number].intValue(),
-          exprs(3).eval().asInstanceOf[Number].intValue(),
-          exprs(4).eval().toString)
-      }, "built-in")
-
   /** Column builder: the plane matrix is a plan-time constant that
     * becomes a reference object (never a literal tree) — exactly
     * [[VectorExpressions.pq_encode]]'s shape. */

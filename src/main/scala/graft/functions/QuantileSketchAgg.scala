@@ -4,7 +4,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -179,17 +179,6 @@ object QuantileSketchAgg {
     val entries: ArrayBuffer[(Double, Long)] = ArrayBuffer.empty
     var flip: Boolean = false
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_quantile_sketch",
-      exprs => QuantileSketchAgg(exprs(0),
-        exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => sys.error(
-            s"graft_quantile_sketch cap must be an int literal, got $other")
-        }).toAggregateExpression(),
-      "built-in")
 
   /** The (value, weight) summary of a group, values ascending. */
   def sketch(value: Column, cap: Int): Column =

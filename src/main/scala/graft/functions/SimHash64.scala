@@ -81,11 +81,6 @@ object SimHash64 {
     sig
   }
 
-  /** Register as `graft_simhash64` (GraftSession calls this). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", exprs => SimHash64(exprs(0)), "built-in")
-
   def simhash64(text: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_simhash64", text)
 }

@@ -80,19 +80,6 @@ object TokenNgrams {
     new GenericArrayData(out)
   }
 
-  /** Register as `graft_token_ngrams` (GraftSession calls this). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_ngrams",
-      exprs => TokenNgrams(exprs(0),
-        exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-            v.toString.toInt
-          case other =>
-            sys.error(s"graft_token_ngrams n must be a literal, got $other")
-        }),
-      "built-in")
-
   def tokenNgrams(text: Column, n: Int): Column =
     org.apache.spark.sql.functions.call_function("graft_token_ngrams", text,
       org.apache.spark.sql.functions.lit(n))

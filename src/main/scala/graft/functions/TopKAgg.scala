@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -121,16 +121,6 @@ object TopKAgg {
       }
     }
   }
-
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk",
-      exprs => TopKAgg(exprs(0), exprs(1),
-        exprs(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => sys.error(s"graft_topk k must be an int literal, got $other")
-        }).toAggregateExpression(),
-      "built-in")
 
   /** Top-k (value, id) pairs of a group, rank order. */
   def topk(value: Column, id: Column, k: Int): Column =

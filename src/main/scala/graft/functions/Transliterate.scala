@@ -277,11 +277,6 @@ object Transliterate {
     UTF8String.fromString(sb.toString)
   }
 
-  /** Register as `graft_translit` (GraftSession calls this). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_translit", exprs => Transliterate(exprs(0)), "built-in")
-
   def transliterate(c: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_translit", c)
 }

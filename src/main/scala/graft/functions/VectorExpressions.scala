@@ -261,29 +261,6 @@ object PqEncode {
 
 object VectorExpressions {
 
-  /** Register graft's native expressions in a session's function
-    * registry (idempotent; GraftSession calls this). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot_long", exprs => DotProductLong(exprs(0), exprs(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sliding_min", exprs => SlidingMin(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_inversions", exprs => InversionCount(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_pq_encode", exprs => {
-        val cbData = exprs(1).eval().asInstanceOf[ArrayData]
-        val cb = (0 until cbData.numElements()).map(i =>
-          cbData.getArray(i).toLongArray()).toArray
-        PqEncode(exprs(0), cb,
-          exprs(2).eval().asInstanceOf[Number].intValue())
-      }, "built-in")
-  }
-
   /** Codegen'd O(n) sliding-window minimum over array<bigint>
     * ([[SlidingMin]]); `w` must be a literal. */
   def sliding_min(a: Column, w: Int): Column =
@@ -291,7 +268,7 @@ object VectorExpressions {
       org.apache.spark.sql.functions.lit(w))
 
   /** Codegen'd dot product over array<float|double> columns (requires
-    * a GraftSession-built or register()-ed session). */
+    * a session with [[graft.GraftExtensions]]). */
   def dot_product(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("graft_dot", a, b)
 

@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -83,25 +83,6 @@ case class VectorSumAgg(
 }
 
 object VectorSumAgg {
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vecsum",
-      exprs => VectorSumAgg(exprs(0),
-        exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => sys.error(s"graft_vecsum dims must be an int literal, got $other")
-        }).toAggregateExpression(),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vecoutersum",
-      exprs => VectorOuterSumAgg(exprs(0),
-        exprs(1) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => sys.error(s"graft_vecoutersum dims must be an int literal, got $other")
-        }).toAggregateExpression(),
-      "built-in")
-  }
-
   /** Element-wise sum of a long-array column (fixed width `dims`). */
   def vecSum(c: Column, dims: Int): Column =
     org.apache.spark.sql.functions.call_function(

@@ -71,18 +71,6 @@ object WordShingles {
     new GenericArrayData(out)
   }
 
-  /** Register as `graft_shingles` (GraftSession calls this). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => WordShingles(exprs(0),
-        exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v, _) =>
-            v.toString.toInt
-          case other => sys.error(s"graft_shingles n must be a literal, got $other")
-        }),
-      "built-in")
-
   def wordShingles(text: Column, n: Int): Column =
     org.apache.spark.sql.functions.call_function("graft_shingles", text,
       org.apache.spark.sql.functions.lit(n))

@@ -280,7 +280,8 @@ class AnnStoreSpec extends AnyFunSuite {
       .join(union.select($"vec_id".as("corpus_id"), $"embedding".as("_c")),
         Seq("corpus_id"))
       .select($"query_id", $"corpus_id",
-        Similarity.cosine($"_q", $"_c").as("_cos"))
+        (Similarity.dot($"_q", $"_c") /
+          (Similarity.norm($"_q") * Similarity.norm($"_c"))).as("_cos"))
       .withColumn("rank", row_number().over(
         Window.partitionBy("query_id").orderBy($"_cos".desc, $"corpus_id")))
       .filter($"rank" <= 3)

@@ -12,7 +12,6 @@ class TopKAggSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("SQL call with decimal value and int id gets implicit casts") {
-    TopKAgg.register(spark)
     Seq((BigDecimal(1.5), 1), (BigDecimal(9.5), 2), (BigDecimal(4.5), 3))
       .toDF("v", "id").createOrReplaceTempView("tk_in")
     val out = spark.sql(
