@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc measurement CLI — the SCALING.md instrument runner. Each
@@ -16,7 +17,9 @@ import org.apache.spark.sql.functions._
   *   // same audit with m planted ≥0.85-cosine clone pairs, so the
   *   // SemDeDup design threshold has nonzero exact-pair support
   * sbt "runMain graft.Audit time <queryName> <sfDir> [runs]"
-  *   // median wall of one SparkEntry query, Bench's per-run hygiene
+  *   // median wall of one SparkEntry query as Bench times it: Bench's
+  *   // sizing (SPARK_GRAFT_BENCH_PANEL_CAP / _TRUTH_BITS; both 0 =
+  *   // the gate's) and a Harness.settle before each run
   * sbt "runMain graft.Audit stream-ramp <semantic|simhash|minhash> <sfDir>
   *   <session|disk> [probeDiv] [bands] [bits]"
   *   // scaled micro-batch through the dedup-at-ingest path
@@ -35,9 +38,11 @@ import org.apache.spark.sql.functions._
   *   // refined-serving economics: served-from-store vs re-encode chain
   * }}}
   *
-  * Timing convention matches Bench: one discarded warm-up execution,
-  * then the reported wall is a median over `runs` (default 3) with
-  * cache/persistent-RDD/GC hygiene between runs.
+  * `time` and the two `ivf-recall` audits use Bench's timer
+  * ([[Harness.time]]): one discarded warm-up execution, then `runs`
+  * (default 3; 1 for the recall audits) runs, each after a
+  * [[Harness.settle]]; the reported wall is their median. The
+  * cost/amortize rows time single steps with [[Harness.clock]], unsettled.
   */
 object Audit {
   def main(args: Array[String]): Unit = {
@@ -45,22 +50,8 @@ object Audit {
     args.toList match {
       case "ivf-recall" :: sfDir :: num :: den :: k :: rest =>
         val bits = rest.headOption.map(_.toInt).getOrElse(0)
-        val df = tables.t(spark, sfDir, "embeddings")
-        def run(): String = {
-          val row = ext.Dedup.semanticIvfAudit(df, "vec_id", "embedding",
-            cos2Num = num.toLong, cos2Den = den.toLong,
-            nClusters = k.toInt, rounds = 2, docSampleBits = bits)
-            .collect().head
-          s""""n_exact":${row.getLong(0)},"n_ivf":${row.getLong(1)},""" +
-            s""""n_hits":${row.getLong(2)},"recall_ppm":${row.get(3)}"""
-        }
-        run() // warm-up: JIT + file listing, discarded
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        System.gc()
-        val t0 = System.nanoTime()
-        val payload = run()
-        val secs = (System.nanoTime() - t0) / 1e9
+        val (payload, secs) = ivfRecall(spark,
+          tables.t(spark, sfDir, "embeddings"), num, den, k, bits)
         println(f"""{"audit":"ivf-recall","sf":"$sfDir","cos2":"$num/$den","k":${k.toInt},"bits":$bits,$payload,"wall_sec":$secs%.2f}""")
       case "ivf-recall-planted" :: sfDir :: m :: num :: den :: k :: Nil =>
         // plant mode (round-10 verdict item 2): the synthetic corpus
@@ -88,35 +79,15 @@ object Audit {
         // no localCheckpoint here: the between-run unpersist hygiene
         // would drop its blocks and the timed run could not recompute
         // a truncated lineage (the audit materializes what it needs)
-        val planted = base.unionByName(clones)
-        def runPlanted(): String = {
-          val row = ext.Dedup.semanticIvfAudit(planted, "vec_id",
-            "embedding", cos2Num = num.toLong, cos2Den = den.toLong,
-            nClusters = k.toInt, rounds = 2, docSampleBits = 0)
-            .collect().head
-          s""""n_exact":${row.getLong(0)},"n_ivf":${row.getLong(1)},""" +
-            s""""n_hits":${row.getLong(2)},"recall_ppm":${row.get(3)}"""
-        }
-        runPlanted() // warm-up, discarded
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        System.gc()
-        val tp0 = System.nanoTime()
-        val payloadP = runPlanted()
-        val secsP = (System.nanoTime() - tp0) / 1e9
-        println(f"""{"audit":"ivf-recall-planted","sf":"$sfDir","planted":$nPlant,"cos2":"$num/$den","k":${k.toInt},$payloadP,"wall_sec":$secsP%.2f}""")
+        val (payload, secs) = ivfRecall(spark, base.unionByName(clones),
+          num, den, k, bits = 0)
+        println(f"""{"audit":"ivf-recall-planted","sf":"$sfDir","planted":$nPlant,"cos2":"$num/$den","k":${k.toInt},$payload,"wall_sec":$secs%.2f}""")
       case "time" :: name :: sfDir :: rest =>
         val runs = rest.headOption.map(_.toInt).getOrElse(3)
-        val fn = SparkEntry.queries(name)
-        fn(spark, sfDir).count() // warm-up, discarded
-        val times = (1 to runs).map { _ =>
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-          System.gc()
-          val t0 = System.nanoTime()
+        val fn = Harness.benchQueries(name)
+        val (_, times) = Harness.time(spark, runs, warmUp = true) {
           fn(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }.sorted
+        }
         println(f"""{"audit":"time","query":"$name","sf":"$sfDir","runs":$runs,"median_sec":${times(times.length / 2)}%.3f,"min":${times.head}%.3f,"max":${times.last}%.3f}""")
       case "index-save" :: sfDir :: dir :: Nil =>
         // cross-JVM survival instrument, save half: build the semantic
@@ -192,10 +163,7 @@ object Audit {
         streaming.RefIndexSlices.appendSemantic(hist, dirB,
           "vec_id", "embedding",
           bands = histIdx.bands, bitsPerBand = histIdx.bitsPerBand)
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val tRewrite = timed {
+        val (_, tRewrite) = Harness.clock {
           val merged = streaming.EmbedStream.mergeRefIndex(
             streaming.RefIndexStore.loadSemantic(spark, dirA),
             slice, "vec_id", "embedding")
@@ -203,7 +171,7 @@ object Audit {
         }
         val bytesRewrite = dirBytes(spark, dirA)
         val bytesB0 = dirBytes(spark, dirB)
-        val tAppend = timed {
+        val (_, tAppend) = Harness.clock {
           streaming.RefIndexSlices.appendSemantic(slice, dirB,
             "vec_id", "embedding")
         }
@@ -214,13 +182,10 @@ object Audit {
           streaming.EmbedStream.semanticDupMatches(probe, idx,
               "vec_id", "embedding", cos2Num = 4, cos2Den = 25)
             .select("id_a", "id_b").distinct().count()
-        var nStore = 0L; var nSliced = 0L
-        val tProbeStore = timed {
-          nStore = probeCount(streaming.RefIndexStore.loadSemantic(spark, dirA))
-        }
-        val tProbeSliced = timed {
-          nSliced = probeCount(streaming.RefIndexSlices.loadSemantic(spark, dirB))
-        }
+        val (nStore, tProbeStore) = Harness.clock(
+          probeCount(streaming.RefIndexStore.loadSemantic(spark, dirA)))
+        val (nSliced, tProbeSliced) = Harness.clock(
+          probeCount(streaming.RefIndexSlices.loadSemantic(spark, dirB)))
         require(nStore == nSliced,
           s"layout mismatch: store probe $nStore != sliced probe $nSliced")
         println(f"""{"audit":"slice-append-cost","sf":"$sfDir","rewrite_sec":$tRewrite%.2f,"append_sec":$tAppend%.2f,"rewrite_bytes":$bytesRewrite,"append_bytes":$bytesAppend,"probe_store_sec":$tProbeStore%.2f,"probe_sliced_sec":$tProbeSliced%.2f,"matches":$nStore}""")
@@ -249,25 +214,16 @@ object Audit {
         ext.AnnStore.savePq(fullIndex(hist), dirA)
         ext.AnnStore.createPqSliced(spark, dirB, cb, dim = 64)
         ext.AnnStore.appendPq(hist, dirB, "vec_id", "embedding")
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val tRewrite = timed { ext.AnnStore.savePq(fullIndex(emb), dirA) }
+        val (_, tRewrite) = Harness.clock(ext.AnnStore.savePq(fullIndex(emb), dirA))
         val bytesRewrite = dirBytes(spark, dirA)
         val bytesB0 = dirBytes(spark, dirB)
-        val tAppend = timed {
-          ext.AnnStore.appendPq(slice, dirB, "vec_id", "embedding")
-        }
+        val (_, tAppend) = Harness.clock(
+          ext.AnnStore.appendPq(slice, dirB, "vec_id", "embedding"))
         val bytesAppend = dirBytes(spark, dirB) - bytesB0
-        var (sumA, sumB) = (0L, 0L)
-        val tServeFlat = timed {
-          sumA = pqPanelChecksum(spark, sfDir,
-            ext.AnnStore.loadPq(spark, dirA), 0)
-        }
-        val tServeSliced = timed {
-          sumB = pqPanelChecksum(spark, sfDir,
-            ext.AnnStore.loadPqSliced(spark, dirB), 0)
-        }
+        val (sumA, tServeFlat) = Harness.clock(pqPanelChecksum(spark, sfDir,
+          ext.AnnStore.loadPq(spark, dirA), 0))
+        val (sumB, tServeSliced) = Harness.clock(pqPanelChecksum(spark, sfDir,
+          ext.AnnStore.loadPqSliced(spark, dirB), 0))
         require(sumA == sumB,
           s"layout mismatch: flat checksum $sumA != sliced $sumB")
         println(f"""{"audit":"pq-append-cost","sf":"$sfDir","rewrite_sec":$tRewrite%.2f,"append_sec":$tAppend%.2f,"rewrite_bytes":$bytesRewrite,"append_bytes":$bytesAppend,"serve_flat_sec":$tServeFlat%.2f,"serve_sliced_sec":$tServeSliced%.2f,"checksum":$sumA}""")
@@ -291,29 +247,20 @@ object Audit {
         ext.AnnStore.createIvfPqSliced(spark, dirB, built.codebook,
           built.cents, dim = 64)
         ext.AnnStore.appendIvfPq(hist, dirB, "vec_id", "embedding")
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        val tRebuild = timed {
+        val (_, tRebuild) = Harness.clock {
           ext.AnnStore.createIvfPqSliced(spark, dirA, built.codebook,
             built.cents, dim = 64)
           ext.AnnStore.appendIvfPq(emb, dirA, "vec_id", "embedding")
         }
         val bytesRebuild = dirBytes(spark, dirA)
         val bytesB0 = dirBytes(spark, dirB)
-        val tAppend = timed {
-          ext.AnnStore.appendIvfPq(slice, dirB, "vec_id", "embedding")
-        }
+        val (_, tAppend) = Harness.clock(
+          ext.AnnStore.appendIvfPq(slice, dirB, "vec_id", "embedding"))
         val bytesAppend = dirBytes(spark, dirB) - bytesB0
-        var (sumA, sumB) = (0L, 0L)
-        val tServeRebuild = timed {
-          sumA = ivfPqPanelChecksum(spark, sfDir,
-            ext.AnnStore.loadIvfPqSliced(spark, dirA), 0)
-        }
-        val tServeSliced = timed {
-          sumB = ivfPqPanelChecksum(spark, sfDir,
-            ext.AnnStore.loadIvfPqSliced(spark, dirB), 0)
-        }
+        val (sumA, tServeRebuild) = Harness.clock(ivfPqPanelChecksum(spark,
+          sfDir, ext.AnnStore.loadIvfPqSliced(spark, dirA), 0))
+        val (sumB, tServeSliced) = Harness.clock(ivfPqPanelChecksum(spark,
+          sfDir, ext.AnnStore.loadIvfPqSliced(spark, dirB), 0))
         require(sumA == sumB,
           s"layout mismatch: rebuild checksum $sumA != sliced $sumB")
         println(f"""{"audit":"ivfpq-append-cost","sf":"$sfDir","rebuild_sec":$tRebuild%.2f,"append_sec":$tAppend%.2f,"rebuild_bytes":$bytesRebuild,"append_bytes":$bytesAppend,"serve_rebuild_sec":$tServeRebuild%.2f,"serve_sliced_sec":$tServeSliced%.2f,"checksum":$sumA}""")
@@ -328,37 +275,23 @@ object Audit {
         val emb = tables.t(spark, sfDir, "embeddings")
         val dir = new java.io.File(
           sys.props("java.io.tmpdir"), "graft_ivfpq_amort").getAbsolutePath
-        val tb0 = System.nanoTime()
-        val built = ext.AnnStore.buildIvfPq(emb, "vec_id", "embedding")
-        ext.AnnStore.saveIvfPq(built, dir, withPayload = true)
-        val loaded = ext.AnnStore.loadIvfPq(spark, dir)
-        val buildSec = (System.nanoTime() - tb0) / 1e9
+        val (loaded, buildSec) = Harness.clock {
+          ext.AnnStore.saveIvfPq(ext.AnnStore.buildIvfPq(emb, "vec_id",
+            "embedding"), dir, withPayload = true)
+          ext.AnnStore.loadIvfPq(spark, dir)
+        }
         def panel(i: Int) = emb.filter(
           pmod(col("vec_id"), lit(97)) === i).limit(21)
         ext.AnnStore.ivfPqServeRefined(panel(0), "vec_id", "embedding",
           loaded, k = 10).count() // warm-up
-        val refined = (1 to panels).map { i =>
-          val t0 = System.nanoTime()
-          ext.AnnStore.ivfPqServeRefined(panel(i), "vec_id", "embedding",
-            loaded, k = 10).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val adcOnly = (1 to panels).map { i =>
-          val t0 = System.nanoTime()
-          ext.AnnStore.ivfPqServe(panel(i), "vec_id", "embedding",
-            loaded, k = 10).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val cbL = loaded.codebook
-        val pipelined = (1 to panels).map { i =>
-          val t0 = System.nanoTime()
-          ext.Similarity.ivfPqTopK(panel(i), "vec_id", "embedding",
-            emb, "vec_id", "embedding", cbL, k = 10).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        def fmtD(xs: Seq[Double]) =
-          xs.map(x => f"$x%.3f").mkString("[", ",", "]")
-        println(f"""{"audit":"ivfpq-amortize","sf":"$sfDir","panels":$panels,"build_save_load_sec":$buildSec%.2f,"refined_sec":${fmtD(refined)},"adc_sec":${fmtD(adcOnly)},"pipeline_sec":${fmtD(pipelined)}}""")
+        val refined = panelSecs(panels)(i => ext.AnnStore.ivfPqServeRefined(
+          panel(i), "vec_id", "embedding", loaded, k = 10))
+        val adcOnly = panelSecs(panels)(i => ext.AnnStore.ivfPqServe(
+          panel(i), "vec_id", "embedding", loaded, k = 10))
+        val pipelined = panelSecs(panels)(i => ext.Similarity.ivfPqTopK(
+          panel(i), "vec_id", "embedding", emb, "vec_id", "embedding",
+          loaded.codebook, k = 10))
+        println(f"""{"audit":"ivfpq-amortize","sf":"$sfDir","panels":$panels,"build_save_load_sec":$buildSec%.2f,"refined_sec":$refined,"adc_sec":$adcOnly,"pipeline_sec":$pipelined}""")
       case "pq-amortize" :: sfDir :: rest =>
         // the serving-economics measurement behind AnnStore: one
         // build+save, then N panels served from the LOADED index,
@@ -369,30 +302,21 @@ object Audit {
         val emb = tables.t(spark, sfDir, "embeddings")
         val dir = new java.io.File(
           sys.props("java.io.tmpdir"), "graft_pq_amort").getAbsolutePath
-        val tb0 = System.nanoTime()
-        ext.AnnStore.savePq(
-          ext.AnnStore.buildPq(emb, "vec_id", "embedding"), dir)
-        val loaded = ext.AnnStore.loadPq(spark, dir)
-        val buildSec = (System.nanoTime() - tb0) / 1e9
+        val (loaded, buildSec) = Harness.clock {
+          ext.AnnStore.savePq(
+            ext.AnnStore.buildPq(emb, "vec_id", "embedding"), dir)
+          ext.AnnStore.loadPq(spark, dir)
+        }
         def panel(i: Int) = emb.filter(
           pmod(col("vec_id"), lit(97)) === i).limit(21)
         ext.AnnStore.pqServe(panel(0), "vec_id", "embedding", loaded,
           k = 10).count() // warm-up
-        val served = (1 to panels).map { i =>
-          val t0 = System.nanoTime()
-          ext.AnnStore.pqServe(panel(i), "vec_id", "embedding", loaded,
-            k = 10).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        val cb = loaded.codebook
-        val pipelined = (1 to panels).map { i =>
-          val t0 = System.nanoTime()
-          ext.Similarity.pqTopKRefined(panel(i), "vec_id", "embedding",
-            emb, "vec_id", "embedding", cb, k = 10).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        def fmt(xs: Seq[Double]) = xs.map(x => f"$x%.3f").mkString("[", ",", "]")
-        println(f"""{"audit":"pq-amortize","sf":"$sfDir","panels":$panels,"build_save_load_sec":$buildSec%.2f,"served_sec":${fmt(served)},"pipeline_sec":${fmt(pipelined)}}""")
+        val served = panelSecs(panels)(i => ext.AnnStore.pqServe(
+          panel(i), "vec_id", "embedding", loaded, k = 10))
+        val pipelined = panelSecs(panels)(i => ext.Similarity.pqTopKRefined(
+          panel(i), "vec_id", "embedding", emb, "vec_id", "embedding",
+          loaded.codebook, k = 10))
+        println(f"""{"audit":"pq-amortize","sf":"$sfDir","panels":$panels,"build_save_load_sec":$buildSec%.2f,"served_sec":$served,"pipeline_sec":$pipelined}""")
       case "stream-ramp" :: kind :: sfDir :: refMode :: rest =>
         // optional probe divisor: probe keeps ids ≡ 0 (mod d), so a
         // 10×-corpus run with d = 10 holds the MICRO-BATCH size fixed
@@ -409,52 +333,68 @@ object Audit {
     spark.stop()
   }
 
+  /** One settled timed run of the x192 IVF recall audit over `df`,
+    * after a discarded warm-up (JIT + file listing): the count fields
+    * as JSON, and the run's wall seconds. */
+  private def ivfRecall(spark: SparkSession, df: DataFrame, num: String,
+                        den: String, k: String, bits: Int): (String, Double) = {
+    val (row, secs) = Harness.time(spark, runs = 1, warmUp = true) {
+      ext.Dedup.semanticIvfAudit(df, "vec_id", "embedding",
+        cos2Num = num.toLong, cos2Den = den.toLong,
+        nClusters = k.toInt, rounds = 2, docSampleBits = bits)
+        .collect().head
+    }
+    (s""""n_exact":${row.getLong(0)},"n_ivf":${row.getLong(1)},""" +
+      s""""n_hits":${row.getLong(2)},"recall_ppm":${row.get(3)}""", secs.head)
+  }
+
+  /** Wall seconds of serving panels 1..`panels` (unsettled, one count
+    * each), as a JSON array. */
+  private def panelSecs(panels: Int)(serve: Int => DataFrame): String =
+    (1 to panels).map(i => f"${Harness.clock(serve(i).count())._2}%.3f")
+      .mkString("[", ",", "]")
+
   /** Deterministic checksum of one served panel (panel `i` = vec_ids
     * ≡ i mod 97 below 3000 — a fixed set, no limit() nondeterminism):
-    * Σ over result rows of a rank-weighted id mix. Equal checksums ⇒
-    * identical served rankings. */
-  private def pqPanelChecksum(spark: org.apache.spark.sql.SparkSession,
-                              sfDir: String,
-                              idx: ext.AnnStore.PqServeIndex,
-                              i: Int): Long = {
+    * Σ over `serve`'s result rows of a rank-weighted id mix. Equal
+    * checksums ⇒ identical served rankings. */
+  private def panelChecksum(spark: SparkSession, sfDir: String, i: Int)(
+      serve: DataFrame => DataFrame): Long = {
     val panel = tables.t(spark, sfDir, "embeddings")
       .filter(pmod(col("vec_id"), lit(97)) === i && col("vec_id") < 3000)
-    ext.AnnStore.pqServe(panel, "vec_id", "embedding", idx, k = 10)
+    serve(panel)
       .agg(sum(col("query_id") * 1000003L + col("rank") * 97L +
         col("corpus_id")))
       .collect().head.getLong(0)
   }
+
+  /** [[panelChecksum]] of panel `i` served from a PQ index (k = 10). */
+  private def pqPanelChecksum(spark: SparkSession, sfDir: String,
+                              idx: ext.AnnStore.PqServeIndex, i: Int): Long =
+    panelChecksum(spark, sfDir, i)(
+      ext.AnnStore.pqServe(_, "vec_id", "embedding", idx, k = 10))
+
+  /** [[panelChecksum]] of panel `i` served from an IVF-PQ index at the
+    * gate knobs (k = 10, nProbe = 4). */
+  private def ivfPqPanelChecksum(spark: SparkSession, sfDir: String,
+                                 idx: ext.AnnStore.IvfPqServeIndex, i: Int): Long =
+    panelChecksum(spark, sfDir, i)(
+      ext.AnnStore.ivfPqServe(_, "vec_id", "embedding", idx, k = 10, nProbe = 4))
 
   /** Total on-disk bytes under `dir` (0 when absent) — the write-
     * volume term the append-economics rows extrapolate on. */
-  private def dirBytes(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Long = {
+  private def dirBytes(spark: SparkSession, dir: String): Long = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-  }
-
-  /** [[pqPanelChecksum]]'s IVF-PQ counterpart: panel `i` served from
-    * the given index at the gate knobs (k = 10, nProbe = 4); equal
-    * checksums ⇒ identical served rankings. */
-  private def ivfPqPanelChecksum(spark: org.apache.spark.sql.SparkSession,
-                                 sfDir: String,
-                                 idx: ext.AnnStore.IvfPqServeIndex,
-                                 i: Int): Long = {
-    val panel = tables.t(spark, sfDir, "embeddings")
-      .filter(pmod(col("vec_id"), lit(97)) === i && col("vec_id") < 3000)
-    ext.AnnStore.ivfPqServe(panel, "vec_id", "embedding", idx, k = 10,
-        nProbe = 4)
-      .agg(sum(col("query_id") * 1000003L + col("rank") * 97L +
-        col("corpus_id")))
-      .collect().head.getLong(0)
   }
 
   /** Streaming dedup-at-ingest at a SCALED micro-batch (SCALING.md
     * round-10 instrument, r9 verdict item 4): builds the reference
     * index over the given SF's corpus (`kind` = "semantic" →
     * [[graft.streaming.EmbedStream]] over embeddings; "simhash" →
-    * [[graft.streaming.SimHashStream.sigDupMatches]] over documents),
+    * [[graft.streaming.SimHashStream]] and "minhash" →
+    * [[graft.streaming.MinHashStream]] over documents),
     * optionally round-trips it through [[graft.streaming.RefIndexStore]]
     * (`refMode` = "disk" vs "session"), then drives TWO identical
     * corpus-sized micro-batches through the match path (trigger 1
@@ -462,94 +402,66 @@ object Audit {
     * Prints one JSON line with per-trigger batch wall, input rows,
     * match count, and the state-store row count (0 by design — the
     * match path is stateless stream-static joins). */
-  private def streamRamp(spark: org.apache.spark.sql.SparkSession,
+  private def streamRamp(spark: SparkSession,
                          kind: String, sfDir: String, refMode: String,
                          probeDiv: Int, bands: Int, bits: Int): Unit = {
-    import org.apache.spark.sql.DataFrame
+    import streaming.{EmbedStream, MinHashStream, RefIndexStore, SimHashStream}
     val stage = java.nio.file.Files.createTempDirectory("graft_ramp")
-    def stageCopies(df: DataFrame): (String, Int) = {
-      // two identical copies, each coalesced to a known file count so
-      // maxFilesPerTrigger cuts exactly two micro-batches
-      val out = stage.resolve("probe").toString
-      df.repartition(4).write.mode("overwrite")
-        .parquet(stage.resolve("c0").toString)
-      val files = new java.io.File(stage.resolve("c0").toString)
-        .listFiles().filter(_.getName.endsWith(".parquet"))
-      new java.io.File(out).mkdirs()
-      (0 to 1).foreach { c =>
-        files.zipWithIndex.foreach { case (f, i) =>
-          java.nio.file.Files.copy(f.toPath,
-            java.nio.file.Paths.get(out, s"copy$c-$i.parquet"))
-        }
-      }
-      (out, files.length)
-    }
-    val t0 = System.nanoTime()
-    val (matched, probeDir, perTrigger) = kind match {
-      case "semantic" =>
-        val emb = tables.t(spark, sfDir, "embeddings")
-        // bands/bits = 0 -> corpus-aware defaults; passing them pins
-        // the knobs across a ramp, isolating the pure equi-join
-        // reference term from the recall-holding knob growth
-        val idx0 = streaming.EmbedStream.semanticRefIndex(
-          emb, "vec_id", "embedding", bands = bands, bitsPerBand = bits)
-        val idx = if (refMode == "disk") {
-          val dir = stage.resolve("idx").toString
-          streaming.RefIndexStore.saveSemantic(idx0, dir)
-          streaming.RefIndexStore.loadSemantic(spark, dir)
-        } else idx0
-        val (dir, n) = stageCopies(
-          emb.filter(pmod(col("vec_id"), lit(probeDiv)) === 0)
-            .select((col("vec_id") + 10000000L).as("vec_id"),
-              col("embedding")))
-        val schema = spark.read.parquet(dir).schema
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", n.toString).parquet(dir)
-        (streaming.EmbedStream.semanticDupMatches(stream, idx,
-          "vec_id", "embedding", cos2Num = 4, cos2Den = 25), dir, n)
-      case "simhash" =>
-        val docs = tables.t(spark, sfDir, "documents")
-        val idx0 = streaming.SimHashStream.simhashRefIndex(
-          docs, "doc_id", "text", maxHamming = 3)
-        val idx = if (refMode == "disk") {
-          val dir = stage.resolve("idx").toString
-          streaming.RefIndexStore.saveSimHash(idx0, dir)
-          streaming.RefIndexStore.loadSimHash(spark, dir)
-        } else idx0
-        val (dir, n) = stageCopies(
-          docs.filter(pmod(col("doc_id"), lit(probeDiv)) === 0)
-            .select((col("doc_id") + 10000000L).as("doc_id"),
-              col("text")))
-        val schema = spark.read.parquet(dir).schema
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", n.toString).parquet(dir)
-        (streaming.SimHashStream.simhashDupMatches(
-          stream, idx, "doc_id", "text"), dir, n)
-      case "minhash" =>
-        // x50/x209's at-ingest family: shingle-MinHash banding against
-        // a static reference index — knobs at the gate defaults
-        val docs = tables.t(spark, sfDir, "documents")
-        val idx0 = streaming.MinHashStream.minhashRefIndex(
-          docs, "doc_id", "text", n = 3, threshold = 0.7)
-        val idx = if (refMode == "disk") {
-          val dir = stage.resolve("idx").toString
-          streaming.RefIndexStore.saveMinHash(idx0, dir)
-          streaming.RefIndexStore.loadMinHash(spark, dir)
-        } else idx0
-        val (dir, n) = stageCopies(
-          docs.filter(pmod(col("doc_id"), lit(probeDiv)) === 0)
-            .select((col("doc_id") + 10000000L).as("doc_id"),
-              col("text")))
-        val schema = spark.read.parquet(dir).schema
-        val stream = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", n.toString).parquet(dir)
-        (streaming.MinHashStream.minhashDupMatches(
-          stream, idx, "doc_id", "text"), dir, n)
+    val (table, id, payload) = kind match {
+      case "semantic" => ("embeddings", "vec_id", "embedding")
+      case "simhash" | "minhash" => ("documents", "doc_id", "text")
       case other => throw new IllegalArgumentException(
         s"stream-ramp kind must be semantic|simhash|minhash, got $other")
     }
-    val buildSec = (System.nanoTime() - t0) / 1e9
-    val q = matched.writeStream.outputMode("append").format("noop").start()
+    // the index as built in session, or after a save + load round trip
+    def ref[I](idx: I)(save: (I, String) => Unit,
+                       load: (SparkSession, String) => I): I =
+      if (refMode != "disk") idx else {
+        val dir = stage.resolve("idx").toString
+        save(idx, dir)
+        load(spark, dir)
+      }
+    val ((matches, perTrigger), buildSec) = Harness.clock {
+      val src = tables.t(spark, sfDir, table)
+      val matchesOf: DataFrame => DataFrame = kind match {
+        case "semantic" =>
+          // bands/bits = 0 -> corpus-aware defaults; passing them pins
+          // the knobs across a ramp, isolating the pure equi-join
+          // reference term from the recall-holding knob growth
+          val idx = ref(EmbedStream.semanticRefIndex(src, id, payload,
+            bands = bands, bitsPerBand = bits))(
+            RefIndexStore.saveSemantic(_, _), RefIndexStore.loadSemantic)
+          EmbedStream.semanticDupMatches(_, idx, id, payload,
+            cos2Num = 4, cos2Den = 25)
+        case "simhash" =>
+          val idx = ref(SimHashStream.simhashRefIndex(src, id, payload,
+            maxHamming = 3))(RefIndexStore.saveSimHash(_, _), RefIndexStore.loadSimHash)
+          SimHashStream.simhashDupMatches(_, idx, id, payload)
+        case _ =>
+          // x50/x209's at-ingest family: shingle-MinHash banding
+          // against a static reference index — knobs at the gate defaults
+          val idx = ref(MinHashStream.minhashRefIndex(src, id, payload,
+            n = 3, threshold = 0.7))(RefIndexStore.saveMinHash(_, _), RefIndexStore.loadMinHash)
+          MinHashStream.minhashDupMatches(_, idx, id, payload)
+      }
+      // two identical copies of the probe, each coalesced to a known
+      // file count so maxFilesPerTrigger cuts exactly two micro-batches
+      val c0 = stage.resolve("c0").toString
+      src.filter(pmod(col(id), lit(probeDiv)) === 0)
+        .select((col(id) + 10000000L).as(id), col(payload))
+        .repartition(4).write.mode("overwrite").parquet(c0)
+      val files = new java.io.File(c0).listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      val probeDir = stage.resolve("probe").toString
+      new java.io.File(probeDir).mkdirs()
+      for (c <- 0 to 1; (f, i) <- files.zipWithIndex)
+        java.nio.file.Files.copy(f.toPath,
+          java.nio.file.Paths.get(probeDir, s"copy$c-$i.parquet"))
+      val stream = spark.readStream.schema(spark.read.parquet(probeDir).schema)
+        .option("maxFilesPerTrigger", files.length.toString).parquet(probeDir)
+      (matchesOf(stream), files.length)
+    }
+    val q = matches.writeStream.outputMode("append").format("noop").start()
     q.processAllAvailable()
     val progresses = q.recentProgress.filter(_.numInputRows > 0)
     q.stop()

@@ -1,9 +1,11 @@
 package graft
 
-/** Benchmark main: runs every SparkEntry query against
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
-  * Convention per BASELINE.md: warm JVM (one discarded warmup pass of
-  * the first query), median of SPARK_GRAFT_BENCH_RUNS (default 3).
+/** Benchmark main: runs every SparkEntry query, at
+  * [[Harness.benchSizing]], against SPARK_GRAFT_SF_DIR and prints ONE
+  * JSON line with per-query seconds. Convention per BASELINE.md: warm
+  * JVM (one discarded warm-up pass over every query), then each query's
+  * median of SPARK_GRAFT_BENCH_RUNS (default 5) runs, each after a
+  * [[Harness.settle]].
   *
   * Failures are first-class: a query that throws is recorded as -1.0
   * (never a bogus fast "time"), and its name + error are logged to
@@ -19,25 +21,9 @@ object Bench {
     // (p05's 166-rule constant fold swings ~10% run to run at 3)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "5").toInt
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_result.json")
-    // routine bench runs audit the LSH banding on a deterministic
-    // stratified sub-corpus (x142 sampled-truth mode, ~1/4 the pair
-    // cost at 1 bit); the correctness gate (Verify) never sets this
-    // property and always audits the exhaustive truth. Override with
-    // SPARK_GRAFT_BENCH_TRUTH_BITS=0 to bench exact mode.
-    System.setProperty("graft.bench.truthSampleBits",
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_TRUTH_BITS", "1"))
-    // fixed-size ANN query panel (x172/x178/x181): the gate's %97
-    // panel grows with the corpus, so sf-ramp bench ratios would
-    // measure corpus×panel (r8 verdict item 3). 21 = the sf0.1 panel
-    // size, keeping the filed sf0.1 numbers comparable while pinning
-    // the panel across the ramp. 0 = uncapped (the gate behavior).
-    System.setProperty("graft.bench.panelCap",
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_PANEL_CAP", "21"))
     val spark = GraftSession.build(appName = "graft-bench")
     // optional subset filter (regex) for local bisection
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
-    val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
+    val qs = Harness.select(Harness.benchQueries, sys.env.get("SPARK_GRAFT_BENCH_ONLY"))
     // warmup: executes one full pass so JIT/codegen/file-listing caches
     // are hot before anything is timed; failures are named, not hidden
     qs.foreach { case (name, fn) =>
@@ -46,39 +32,16 @@ object Bench {
           System.err.println(s"[bench] WARMUP FAILURE $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
       }
     }
-    def timeQuery(name: String, fn: (org.apache.spark.sql.SparkSession,
-        String) => org.apache.spark.sql.DataFrame): (Boolean, Seq[Double]) = {
+    // every TIMED RUN (not just every query) starts settled
+    def timeQuery(name: String, fn: SparkEntry.Fn): (Boolean, Seq[Double]) = {
       var failed = false
-      val times = (1 to runs).map { _ =>
-        // isolate every TIMED RUN (not just every query) from leaked
-        // state — all of it outside the timer:
-        // 1. table-cache entries: 50+ queries × per-call caches
-        //    otherwise fill storage memory and LRU-evict the CURRENT
-        //    query's cache mid-run (observed 3-5x inflation);
-        // 2. stranded localCheckpoint blocks: clearCache doesn't touch
-        //    persistent RDDs, and the checkpoint-heavy queries strand
-        //    a FULL set of blocks per run (x46's shingle arrays +
-        //    per-round CC labels) — five runs of accumulation pushed
-        //    runs 3-5 into storage pressure and inflated the MEDIAN
-        //    (x46 measured 10.6 s vs 4.6 s across back-to-back suite
-        //    runs before this moved inside the run loop). Each run
-        //    rebuilds its own checkpoints, so dropping stale ones
-        //    between runs is safe;
-        // 3. heap settle: 100+ queries of driver-side plan/codegen
-        //    allocation otherwise bleed GC pressure into late queries
-        //    (x18 measured 4.5 s isolated vs 6.6 s at position ~110
-        //    of a 147-query session).
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        System.gc()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch {
+      val (_, times) = Harness.time(spark, runs, warmUp = false) {
+        try fn(spark, sfDir).count() catch {
           case e: Throwable =>
             failed = true
             System.err.println(s"[bench] FAILURE $name: ${e.getClass.getSimpleName}: ${e.getMessage}")
         }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+      }
       (failed, times)
     }
     // protocol (SCALING.md / r7 verdict item 3, hardened r9): a run

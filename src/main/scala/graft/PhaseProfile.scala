@@ -13,14 +13,13 @@ package graft
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.PhaseProfile <regex>"
   * — prints one CSV line per query; timings are single-shot (this is
-  * a profile, not a bench — medians come from graft.Bench).
+  * a profile, not a bench — medians come from graft.Bench). Queries
+  * run at Bench's sizing ([[Harness.benchSizing]], the same env vars),
+  * each after a [[Harness.settle]].
   */
 object PhaseProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val only = args.headOption.map(_.r)
-    System.setProperty("graft.bench.truthSampleBits", "1")
-    System.setProperty("graft.bench.panelCap", "21")
     val spark = GraftSession.build(appName = "graft-phaseprofile")
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val stages = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -34,30 +33,22 @@ object PhaseProfile {
           tasks.addAndGet(j.stageInfos.map(_.numTasks).sum)
         }
       })
-    val qs = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
     println("query,build_s,plan_s,exec_s,total_s,jobs,stages,tasks," +
       "tracker_optimization_ms,tracker_planning_ms")
-    qs.foreach { case (name, fn) =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
+    Harness.select(Harness.benchQueries, args.headOption).foreach { case (name, fn) =>
+      Harness.settle(spark)
       jobs.set(0); stages.set(0); tasks.set(0)
       try {
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        val t1 = System.nanoTime()
-        df.queryExecution.executedPlan // force analysis/optimization/planning
-        val t2 = System.nanoTime()
-        df.count()
-        val t3 = System.nanoTime()
+        val (df, buildS) = Harness.clock(fn(spark, sfDir))
+        // force analysis/optimization/planning
+        val (_, planS) = Harness.clock(df.queryExecution.executedPlan)
+        val (_, execS) = Harness.clock(df.count())
         // Spark's own planning tracker (driver-side rule time)
         val phases = df.queryExecution.tracker.phases
         def ph(k: String): Long =
           phases.get(k).map(s => s.endTimeMs - s.startTimeMs).getOrElse(-1L)
-        println(f"$name,${(t1 - t0) / 1e9}%.3f,${(t2 - t1) / 1e9}%.3f," +
-          f"${(t3 - t2) / 1e9}%.3f,${(t3 - t0) / 1e9}%.3f," +
+        println(f"$name,$buildS%.3f,$planS%.3f,$execS%.3f," +
+          f"${buildS + planS + execS}%.3f," +
           s"${jobs.get},${stages.get},${tasks.get}," +
           s"${ph("optimization")},${ph("planning")}")
       } catch {

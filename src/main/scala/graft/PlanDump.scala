@@ -1,7 +1,8 @@
 package graft
 
 /** Dump `.explain("formatted")` for named SparkEntry queries (every
-  * query when no name is given) to `plans/<round>/<query>_<suffix>.txt`
+  * query when no name is given; gate sizing), in name order, to
+  * `plans/<round>/<query>_<suffix>.txt`
   * — the plan-audit utility and the optimization-round evidence trail
   * (plan claims are checked against these files).
   *
@@ -20,10 +21,10 @@ object PlanDump {
     val suffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "after")
     val spark = GraftSession.build(appName = "graft-plandump")
     new java.io.File(outDir).mkdirs()
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query $name"))
+    val all = SparkEntry.queries
+    val named = if (args.isEmpty) all else args.map(n =>
+      n -> all.getOrElse(n, sys.error(s"unknown query $n"))).toMap
+    Harness.select(named, None).foreach { case (name, fn) =>
       val plan = fn(spark, sfDir).queryExecution
         .explainString(org.apache.spark.sql.execution.FormattedMode)
       val w = new java.io.PrintWriter(s"$outDir/${name}_$suffix.txt")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -24,9 +23,7 @@ object Verify {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     // optional subset filter for local iteration (unset → all queries)
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY").map(_.r)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.findFirstIn(n).isDefined) }
+    val selected = Harness.select(SparkEntry.queries, sys.env.get("SPARK_GRAFT_VERIFY_ONLY"))
     // batches of 8: queries inside a batch run concurrently; the cache
     // clears at batch barriers so leaked per-query cache entries can't
     // accumulate into storage-eviction storms (they inflate cache-heavy
@@ -34,11 +31,10 @@ object Verify {
     selected.grouped(8).foreach { batch =>
       val futures = batch.map { case (name, fn) =>
         scala.concurrent.Future {
-          val t0 = System.nanoTime()
           try {
-            fn(spark, sfDir).repartition(1).write.mode("overwrite")
-              .parquet(s"$outDir/$name")
-            System.err.println(f"[verify] $name ok in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+            val (_, secs) = Harness.clock(fn(spark, sfDir).repartition(1)
+              .write.mode("overwrite").parquet(s"$outDir/$name"))
+            System.err.println(f"[verify] $name ok in $secs%.1fs")
           } catch { case e: Throwable =>
             System.err.println(s"[verify] $name failed: ${e.getMessage}")
           }

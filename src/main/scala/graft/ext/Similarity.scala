@@ -177,20 +177,6 @@ object Similarity {
   def int8Quantize(vec: Column): Column =
     graft.functions.Int8Quantize.int8_quantize(vec)
 
-  /** The pre-r13 higher-order-function composition of [[int8Quantize]]
-    * — three interpreted lambda passes per row. Kept ONLY as the
-    * bit-parity reference for the native expression's spec
-    * (R13OptSpec); no production path calls it. */
-  private[graft] def int8QuantizeHof(vec: Column): Column = {
-    val maxabs = array_max(transform(vec, v => abs(v.cast("double"))))
-    val scale = lit(127.0) / maxabs
-    val q = when(maxabs === 0.0, transform(vec, _ => lit(0L)))
-      .otherwise(transform(vec, v =>
-        greatest(lit(-127L), least(lit(127L),
-          floor(v.cast("double") * scale + 0.5)))))
-    struct(maxabs.as("maxabs"), q.as("q"))
-  }
-
   /** Nearest-centroid assignment in the int8-quantized INTEGER domain
     * — the k-means E-step / IVF routing step, made bit-deterministic.
     *

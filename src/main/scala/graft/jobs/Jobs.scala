@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 import graft.io.{CleanCsv, DealXml, Lake}

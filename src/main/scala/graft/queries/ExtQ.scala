@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.tables.t
 import graft.ext.{Assoc, BloomJoin, Bpe, Chunk, Classify, Cms, Dedup, Drift, Eval, Fuzzy, Graph, Hll, Index, IntMath, Kmv, Multimodal, Packing, Planes, Prefix, Privacy, Profile, Redact, Sampling, Similarity, Skew, Temporal, TextAnalysis}
 import graft.io.ZOrder
+import graft.Sizing
 
 /** Training-data-pipeline extension queries (north-star surface):
   * dedup (exact / n-gram Jaccard / MinHash+LSH / SimHash / embedding),
@@ -21,22 +22,6 @@ import graft.io.ZOrder
 object ExtQ {
 
   type Fn = (SparkSession, String) => DataFrame
-
-  /** Bench-only fixed-size ANN query panel: when
-    * `graft.bench.panelCap` > 0 (set by [[graft.Bench]] from
-    * SPARK_GRAFT_BENCH_PANEL_CAP; Verify never sets it, so the
-    * correctness gate always runs the full panel), the sparse %97
-    * query panel is further capped to its `cap` smallest ids — so
-    * sf-ramp bench points measure the CORPUS term instead of a
-    * corpus×panel conflation (r8 verdict: x172/x178/x181's panel
-    * grows 21 → 206 across the sf0.1 → sf1 decade, turning their
-    * decade ratios into panel-growth artifacts). Deterministic
-    * (TakeOrdered on the id) and recall-neutral: every surviving
-    * query still runs against the full corpus. */
-  private def benchPanelCap(panel: DataFrame, id: String): DataFrame = {
-    val cap = sys.props.getOrElse("graft.bench.panelCap", "0").toInt
-    if (cap > 0) panel.orderBy(col(id)).limit(cap) else panel
-  }
 
   /** Shared DuckDB CTE: distinct word-3-gram shingle rows per doc —
     * incl. WordShingles' truncated tokens[0, len) gram for texts
@@ -1371,7 +1356,6 @@ object ExtQ {
     * cluster would need per key. */
   private val x39: (Fn, String) = (
     (s, d) => {
-      import s.implicits._
       Skew.keyProfile(t(s, d, "orders"), "o_custkey", topK = 20, parts = 32)
     },
     """WITH c AS (SELECT o_custkey, COUNT(*)::BIGINT AS cnt
@@ -1604,7 +1588,6 @@ object ExtQ {
     * digit count of an integer quotient, negated below ratio 1. */
   private val x55: (Fn, String) = (
     (s, d) => {
-      import s.implicits._
       TextAnalysis.collocations(t(s, d, "documents"), "doc_id", "text",
         minCount = 5L, k = 50)
     },
@@ -2173,7 +2156,6 @@ object ExtQ {
     * map-combined count, TakeOrdered cut at a total order. */
   private val x71: (Fn, String) = (
     (s, d) => {
-      import s.implicits._
       TextAnalysis.skipgramCounts(t(s, d, "documents"), "text",
         window = 2, k = 50)
     },
@@ -2364,7 +2346,6 @@ object ExtQ {
     * session convention matches x13's sessionize exactly. */
   private val x78: (Fn, String) = (
     (s, d) => {
-      import s.implicits._
       Temporal.sessionPaths(t(s, d, "events"), "user_id", "ts",
           "event_type", "event_id", gap = "30 minutes",
           maxSteps = 3, topN = 20)
@@ -2571,7 +2552,6 @@ object ExtQ {
     * (value, key) total order), per-bin population and bounds. */
   private val x86: (Fn, String) = (
     (s, d) => {
-      import s.implicits._
       Profile.equalFrequencyBins(t(s, d, "orders"), "o_totalprice",
         "o_orderkey", bins = 10)
     },
@@ -2939,7 +2919,6 @@ object ExtQ {
   /** Benford first-digit profile of order totals. */
   private val x100: (Fn, String) = (
     (s, d) => {
-      import s.implicits._
       Profile.benfordProfile(t(s, d, "orders"), "o_totalprice")
     },
     """SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT)
@@ -4095,15 +4074,15 @@ object ExtQ {
     * engine's n_hits comes from candidates ∩ exact, so it can only
     * equal n_exact when no true pair escaped the bands.
     *
-    * Bench runs set the `graft.bench.truthSampleBits` JVM property
-    * (see [[graft.Bench]]) to run the audit in SAMPLED-truth mode —
-    * same plan shape at ~1/4^bits the standing pair cost. The
-    * correctness gate (Verify) never sets it, so the oracle always
+    * A sizing with `truthSampleBits` > 0 (the bench's, see
+    * [[graft.Harness.benchSizing]]) runs the audit in SAMPLED-truth
+    * mode — same plan shape at ~1/4^bits the standing pair cost. The
+    * correctness gate runs [[graft.Sizing.Gate]], so the oracle always
     * compares against the exhaustive truth. */
-  private val x142: (Fn, String) = (
-    (s, d) => {
+  private val x142: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
-      val bits = sys.props.getOrElse("graft.bench.truthSampleBits", "0").toInt
+      val bits = z.truthSampleBits
       Dedup.lshBandingAudit(t(s, d, "documents"), "doc_id", "text",
           n = 3, threshold = 0.6, bands = 64, rowsPerBand = 2,
           truthSampleBits = bits)
@@ -4386,7 +4365,6 @@ object ExtQ {
   /** Rolling 7-day active users per active day, plus same-day DAU. */
   private val x151: (Fn, String) = (
     (s, d) => {
-      import s.implicits._
       Temporal.rollingActiveUsers(t(s, d, "events"), "ts", "user_id",
         windowDays = 7)
     },
@@ -5036,13 +5014,13 @@ object ExtQ {
     * row red and the recall value itself is engine-verified. Runs on
     * the 500-vector fixture slice (the exact side is O(n²) by
     * definition — audit-only). */
-  private val x169: (Fn, String) = (
-    (s, d) => {
+  private val x169: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       // bench runs audit a deterministic sub-corpus (paired
       // comparison, see mutualBandingAudit); the gate always runs
       // exhaustive (the property is unset under Verify)
-      val bits = sys.props.getOrElse("graft.bench.truthSampleBits", "0").toInt
+      val bits = z.truthSampleBits
       val emb = t(s, d, "embeddings").filter($"vec_id" < 500)
       Similarity.mutualBandingAudit(
           emb.filter(pmod($"vec_id", lit(2)) === 0), "vec_id", "embedding",
@@ -5111,12 +5089,12 @@ object ExtQ {
     * scale path): exact brute-force top-k neighbour pairs vs the
     * banded top-k pairs on the 500-vector fixture slice, every
     * number oracle-recomputed. */
-  private val x170: (Fn, String) = (
-    (s, d) => {
+  private val x170: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       // bench runs sample the QUERY side (unbiased full-corpus
       // recall, see knnBandingAudit); the gate always runs exhaustive
-      val bits = sys.props.getOrElse("graft.bench.truthSampleBits", "0").toInt
+      val bits = z.truthSampleBits
       Similarity.knnBandingAudit(
           t(s, d, "embeddings").filter($"vec_id" < 500),
           "vec_id", "embedding", k = 10,
@@ -5201,14 +5179,14 @@ object ExtQ {
     * 16 codes from an md5-sampled codebook, corpus scanned as codes
     * only, per-query integer distance tables; the oracle replays the
     * identical quantize → sample → encode → reconstruct arithmetic. */
-  private val x172: (Fn, String) = (
-    (s, d) => {
+  private val x172: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val cb = Similarity.pqCodebook(emb, "vec_id", "embedding",
         subspaces = 8, ksub = 16, dim = 64)
       Similarity.pqTopK(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", emb, "vec_id", "embedding", cb, k = 10)
         .orderBy($"query_id", $"rank")
     },
@@ -5421,21 +5399,21 @@ object ExtQ {
     * x172): exact int8-lattice top-10 as ground truth vs the PQ-ADC
     * top-10 under the same sampled codebook; the oracle recomputes
     * both sides. */
-  private val x178: (Fn, String) = (
-    (s, d) => {
+  private val x178: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       // bench runs thin the (already sparse) query panel by a further
       // deterministic hash filter — recall per surviving query is
       // still exact against the full corpus, so the estimate stays
       // unbiased; the gate always runs the full %97 panel
-      val bits = sys.props.getOrElse("graft.bench.truthSampleBits", "0").toInt
+      val bits = z.truthSampleBits
       val qFilter = if (bits == 0) lit(true)
         else pmod(xxhash64($"vec_id".cast("string")), lit(1L << bits)) === 0
       val emb = t(s, d, "embeddings")
       val cb = Similarity.pqCodebook(emb, "vec_id", "embedding",
         subspaces = 8, ksub = 16, dim = 64)
       Similarity.pqRecallAudit(
-        benchPanelCap(emb.filter($"vec_id" % 97 === 0).filter(qFilter),
+        z.capPanel(emb.filter($"vec_id" % 97 === 0).filter(qFilter),
           "vec_id"), "vec_id",
         "embedding", emb, "vec_id", "embedding", cb, k = 10)
     },
@@ -5512,14 +5490,14 @@ object ExtQ {
     * production serving shape; the oracle stacks the PQ chain on the
     * shared Lloyd CTEs and replays routing + encode + table lookups
     * bit-for-bit. */
-  private val x181: (Fn, String) = (
-    (s, d) => {
+  private val x181: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val cb = Similarity.pqCodebook(emb, "vec_id", "embedding",
         subspaces = 8, ksub = 16, dim = 64)
       Similarity.ivfPqTopK(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", emb, "vec_id", "embedding", cb, k = 10,
           nCentroids = 16, nProbe = 4, rounds = 2)
         .orderBy($"query_id", $"rank")
@@ -5642,12 +5620,11 @@ object ExtQ {
     * (x62's production path): exact integer-decision pair set vs the
     * banded pairs, one row of integer counts — the instrument behind
     * the round-8 knob retune. Exhaustive in the gate
-    * (docSampleBits = 0); bench runs sample pairs via the shared
-    * `graft.bench.truthSampleBits` property. */
-  private val x184: (Fn, String) = (
-    (s, d) => {
-      import s.implicits._
-      val bits = sys.props.getOrElse("graft.bench.truthSampleBits", "0").toInt
+    * (docSampleBits = 0); bench runs sample pairs via the sizing's
+    * `truthSampleBits`. */
+  private val x184: (Sizing => Fn, String) = (
+    z => (s, d) => {
+      val bits = z.truthSampleBits
       Dedup.semanticBandingAudit(t(s, d, "embeddings"), "vec_id",
           "embedding", cos2Num = 4, cos2Den = 25, dim = 64,
           docSampleBits = bits)
@@ -6059,13 +6036,12 @@ object ExtQ {
     * `nClusters` retune: exact integer-decision pairs vs the
     * cluster-bucketed production pairs, one row of integer counts.
     * Exhaustive in the gate (docSampleBits = 0); bench runs sample
-    * via the shared `graft.bench.truthSampleBits` property. The
+    * via the sizing's `truthSampleBits`. The
     * oracle replays the Lloyd chain at the derived k = 4 plus the
     * brute-force exact side. */
-  private val x192: (Fn, String) = (
-    (s, d) => {
-      import s.implicits._
-      val bits = sys.props.getOrElse("graft.bench.truthSampleBits", "0").toInt
+  private val x192: (Sizing => Fn, String) = (
+    z => (s, d) => {
+      val bits = z.truthSampleBits
       Dedup.semanticIvfAudit(t(s, d, "embeddings"), "vec_id",
           "embedding", cos2Num = 4, cos2Den = 25, rounds = 2,
           docSampleBits = bits)
@@ -6112,8 +6088,8 @@ object ExtQ {
     * COMBINED reference, and the integer decision — so the merge must
     * equal a full rebuild row-for-row (the spec proves index-level
     * parity; this gate proves the downstream answer end-to-end). */
-  private val x193: (Fn, String) = (
-    (s, d) => {
+  private val x193: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val idx0 = graft.streaming.EmbedStream.semanticRefIndex(
@@ -6123,7 +6099,7 @@ object ExtQ {
         emb.filter(pmod($"vec_id", lit(5)).isin(3, 4)),
         "vec_id", "embedding")
       graft.streaming.EmbedStream.semanticDupMatches(
-          benchPanelCap(emb.filter(pmod($"vec_id", lit(5)) === 0),
+          z.capPanel(emb.filter(pmod($"vec_id", lit(5)) === 0),
             "vec_id"), merged,
           "vec_id", "embedding", cos2Num = 4, cos2Den = 25)
         .select($"id_a", $"id_b", $"dotq", $"na", $"nb").distinct()
@@ -6182,11 +6158,11 @@ object ExtQ {
     * replays tokenization, distinct query terms, per-term scores,
     * the per-(query, doc) sum, and the (score desc, doc asc)
     * ranking. */
-  private val x194: (Fn, String) = (
-    (s, d) => {
+  private val x194: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val docs = t(s, d, "documents")
-      val queries = benchPanelCap(docs.filter($"doc_id" % 97 === 0)
+      val queries = z.capPanel(docs.filter($"doc_id" % 97 === 0)
         .select($"doc_id".as("query_id"),
           concat_ws(" ", slice(filter(split($"text", " "),
             t => t =!= ""), 1, 4)).as("qtext")), "query_id")
@@ -6271,12 +6247,12 @@ object ExtQ {
     * fusion; a query missing from one leg (panel coverage differs by
     * modality at some scales) fuses from the other alone — union
     * semantics, n_lists recording the evidence. */
-  private val x196: (Fn, String) = (
-    (s, d) => {
+  private val x196: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val docs = t(s, d, "documents")
       val emb = t(s, d, "embeddings")
-      val queriesTxt = benchPanelCap(docs.filter($"doc_id" % 97 === 0)
+      val queriesTxt = z.capPanel(docs.filter($"doc_id" % 97 === 0)
         .select($"doc_id".as("query_id"),
           concat_ws(" ", slice(filter(split($"text", " "),
             t => t =!= ""), 1, 4)).as("qtext")), "query_id")
@@ -6284,7 +6260,7 @@ object ExtQ {
           docs, "doc_id", "text", k = 10)
         .select($"query_id", $"doc_id".as("id"), $"rank")
       val dense = Similarity.bruteForceTopK(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding",
           emb, "vec_id", "embedding", k = 10)
         .select($"query_id", $"neighbour_id".as("id"), $"rank")
@@ -6343,14 +6319,14 @@ object ExtQ {
     * replays the whole chain — quantize, sample, encode, ADC ranks,
     * the 40-candidate cut, and the double-cosine re-rank (x06's
     * ordering). */
-  private val x197: (Fn, String) = (
-    (s, d) => {
+  private val x197: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val cb = Similarity.pqCodebook(emb, "vec_id", "embedding",
         subspaces = 8, ksub = 16, dim = 64)
       Similarity.pqTopKRefined(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", emb, "vec_id", "embedding", cb,
           k = 10, refine = 4)
         .select($"query_id", $"rank", $"corpus_id",
@@ -6640,12 +6616,12 @@ object ExtQ {
     * full-dim (64) and prefix-dim (8/16/32) cosine rankings over the
     * %97 query panel — both rankings and the overlap replayed exactly
     * by the oracle. */
-  private val x205: (Fn, String) = (
-    (s, d) => {
+  private val x205: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       Similarity.truncationRecallAudit(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", emb, "vec_id", "embedding",
           dims = Seq(8, 16, 32), k = 10)
         .orderBy($"dim")
@@ -6687,8 +6663,8 @@ object ExtQ {
     * x193 by construction: persistence must not change a single pair.
     * The save dir is a fixed tmp location; save is an atomic
     * overwrite (staging + rename swap), so repeated runs are safe. */
-  private val x206: (Fn, String) = (
-    (s, d) => {
+  private val x206: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val idx0 = graft.streaming.EmbedStream.semanticRefIndex(
@@ -6706,7 +6682,7 @@ object ExtQ {
       graft.streaming.RefIndexStore.saveSemantic(merged, dir, buckets = 8)
       val loaded = graft.streaming.RefIndexStore.loadSemantic(s, dir)
       graft.streaming.EmbedStream.semanticDupMatches(
-          benchPanelCap(emb.filter(pmod($"vec_id", lit(5)) === 0),
+          z.capPanel(emb.filter(pmod($"vec_id", lit(5)) === 0),
             "vec_id"), loaded,
           "vec_id", "embedding", cos2Num = 4, cos2Den = 25)
         .select($"id_a", $"id_b", $"dotq", $"na", $"nb").distinct()
@@ -6793,8 +6769,8 @@ object ExtQ {
     * amortization mechanism for the round-10 build-vs-serve split
     * (encode once, serve many panels at the measured ~30 ms/query).
     * Same oracle as x197: persistence must not move a single rank. */
-  private val x210: (Fn, String) = (
-    (s, d) => {
+  private val x210: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val dir = new java.io.File(
@@ -6804,7 +6780,7 @@ object ExtQ {
           subspaces = 8, ksub = 16, dim = 64), dir)
       val loaded = graft.ext.AnnStore.loadPq(s, dir)
       graft.ext.AnnStore.pqServe(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, refine = 4)
         .select($"query_id", $"rank", $"corpus_id",
           (floor($"cosine" * 1e6 + 0.5) / 1e6).as("cos6"))
@@ -6819,8 +6795,8 @@ object ExtQ {
     * every row's sub against the census merged from per-slice counts.
     * Same oracle as x193: the sliced layout must reproduce the full
     * rebuild's pair set exactly. */
-  private val x211: (Fn, String) = (
-    (s, d) => {
+  private val x211: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val dir = new java.io.File(
@@ -6838,7 +6814,7 @@ object ExtQ {
         "vec_id", "embedding")
       val loaded = graft.streaming.RefIndexSlices.loadSemantic(s, dir)
       graft.streaming.EmbedStream.semanticDupMatches(
-          benchPanelCap(emb.filter(pmod($"vec_id", lit(5)) === 0),
+          z.capPanel(emb.filter(pmod($"vec_id", lit(5)) === 0),
             "vec_id"), loaded,
           "vec_id", "embedding", cos2Num = 4, cos2Den = 25)
         .select($"id_a", $"id_b", $"dotq", $"na", $"nb").distinct()
@@ -6854,8 +6830,8 @@ object ExtQ {
     * pattern at lake-layout granularity (flat-PQ serving scans every
     * code; this reads nProbe/nCentroids of them). Same oracle as
     * x181: persistence + pruning must not move a single rank. */
-  private val x212: (Fn, String) = (
-    (s, d) => {
+  private val x212: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val dir = new java.io.File(
@@ -6866,7 +6842,7 @@ object ExtQ {
           rounds = 2), dir)
       val loaded = graft.ext.AnnStore.loadIvfPq(s, dir)
       graft.ext.AnnStore.ivfPqServe(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, nProbe = 4)
         .orderBy($"query_id", $"rank")
     },
@@ -6881,8 +6857,8 @@ object ExtQ {
     * candidate prune pushes into every slice's sorted payload. Same
     * oracle as x197/x210: two appends must serve exactly like the
     * one-shot pipeline. */
-  private val x213: (Fn, String) = (
-    (s, d) => {
+  private val x213: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val cb = Similarity.pqCodebook(emb, "vec_id", "embedding",
@@ -6899,7 +6875,7 @@ object ExtQ {
         emb.filter(pmod($"vec_id", lit(2)) === 1), dir, "vec_id", "embedding")
       val loaded = graft.ext.AnnStore.loadPqSliced(s, dir)
       graft.ext.AnnStore.pqServe(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, refine = 4)
         .select($"query_id", $"rank", $"corpus_id",
           (floor($"cosine" * 1e6 + 0.5) / 1e6).as("cos6"))
@@ -6919,8 +6895,8 @@ object ExtQ {
     * cluster predicate prunes directories inside every slice. Same
     * oracle as x181/x212: two appends must serve exactly like the
     * one-shot build. */
-  private val x214: (Fn, String) = (
-    (s, d) => {
+  private val x214: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val built = graft.ext.AnnStore.buildIvfPq(emb, "vec_id", "embedding",
@@ -6938,7 +6914,7 @@ object ExtQ {
         emb.filter(pmod($"vec_id", lit(2)) === 1), dir, "vec_id", "embedding")
       val loaded = graft.ext.AnnStore.loadIvfPqSliced(s, dir)
       graft.ext.AnnStore.ivfPqServe(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, nProbe = 4)
         .orderBy($"query_id", $"rank")
     },
@@ -6950,8 +6926,8 @@ object ExtQ {
     * keeps its row-group stats), CAS replace-manifest + graced sweep,
     * then served. Same oracle as x197/x210/x213: compaction re-lays
     * out the index, it must not move a single rank. */
-  private val x215: (Fn, String) = (
-    (s, d) => {
+  private val x215: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val cb = Similarity.pqCodebook(emb, "vec_id", "embedding",
@@ -6969,7 +6945,7 @@ object ExtQ {
       graft.ext.AnnStore.compactPq(s, dir)
       val loaded = graft.ext.AnnStore.loadPqSliced(s, dir)
       graft.ext.AnnStore.pqServe(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, refine = 4)
         .select($"query_id", $"rank", $"corpus_id",
           (floor($"cosine" * 1e6 + 0.5) / 1e6).as("cos6"))
@@ -6988,8 +6964,8 @@ object ExtQ {
     * routing + ADC chain widened to k·refine, then x197's re-rank
     * tail — fully integer until the final double cosine, so DuckDB
     * replays every rank. */
-  private val x216: (Fn, String) = (
-    (s, d) => {
+  private val x216: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val dir = new java.io.File(
@@ -7000,7 +6976,7 @@ object ExtQ {
           rounds = 2), dir, withPayload = true)
       val loaded = graft.ext.AnnStore.loadIvfPq(s, dir)
       graft.ext.AnnStore.ivfPqServeRefined(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, nProbe = 4, refine = 4)
         .select($"query_id", $"rank", $"corpus_id",
           (floor($"cosine" * 1e6 + 0.5) / 1e6).as("cos6"))
@@ -7070,8 +7046,8 @@ object ExtQ {
     * (candidate prune pushing into every slice's sorted payload,
     * cluster prune into every slice's partitioned codes). Same oracle
     * as x216: the layout must not move a single refined rank. */
-  private val x217: (Fn, String) = (
-    (s, d) => {
+  private val x217: (Sizing => Fn, String) = (
+    z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
       val built = graft.ext.AnnStore.buildIvfPq(emb, "vec_id", "embedding",
@@ -7089,7 +7065,7 @@ object ExtQ {
         emb.filter(pmod($"vec_id", lit(2)) === 1), dir, "vec_id", "embedding")
       val loaded = graft.ext.AnnStore.loadIvfPqSliced(s, dir)
       graft.ext.AnnStore.ivfPqServeRefined(
-          benchPanelCap(emb.filter($"vec_id" % 97 === 0), "vec_id"),
+          z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, nProbe = 4, refine = 4)
         .select($"query_id", $"rank", $"corpus_id",
           (floor($"cosine" * 1e6 + 0.5) / 1e6).as("cos6"))
@@ -7097,7 +7073,9 @@ object ExtQ {
     },
     x216._2) // the sliced layout must not move a single refined rank
 
-  val all: Seq[(String, (Fn, Option[String]))] = Seq(
+  /** Every extension query with its oracle SQL; the 22 sized ones
+    * (ANN query panels, sampled-truth audits) run at `z`. */
+  def all(z: Sizing): Seq[(String, (Fn, Option[String]))] = Seq(
     "x01_dedup_exact" -> (x01._1, Some(x01._2)),
     "x02_dedup_ngram_jaccard" -> (x02._1, Some(x02._2)),
     "x03_dedup_minhash_lsh" -> (x03._1, Some(x03._2)),
@@ -7239,7 +7217,7 @@ object ExtQ {
     "x139_trimmed_mean" -> (x139._1, Some(x139._2)),
     "x140_class_tfidf" -> (x140._1, Some(x140._2)),
     "x141_ab_chisq" -> (x141._1, Some(x141._2)),
-    "x142_lsh_banding_audit" -> (x142._1, Some(x142._2)),
+    "x142_lsh_banding_audit" -> (x142._1(z), Some(x142._2)),
     "x143_principal_direction" -> (x143._1, Some(x143._2)),
     "x144_bootstrap_ci" -> (x144._1, Some(x144._2)),
     "x145_winnow_fingerprints" -> (x145._1, Some(x145._2)),
@@ -7266,22 +7244,22 @@ object ExtQ {
     "x166_mann_kendall" -> (x166._1, Some(x166._2)),
     "x167_theil_sen" -> (x167._1, Some(x167._2)),
     "x168_interval_overlap" -> (x168._1, Some(x168._2)),
-    "x169_mutual_banding_audit" -> (x169._1, Some(x169._2)),
-    "x170_knn_banding_audit" -> (x170._1, Some(x170._2)),
+    "x169_mutual_banding_audit" -> (x169._1(z), Some(x169._2)),
+    "x170_knn_banding_audit" -> (x170._1(z), Some(x170._2)),
     "x171_concurrent_intervals" -> (x171._1, Some(x171._2)),
-    "x172_pq_adc_topk" -> (x172._1, Some(x172._2)),
+    "x172_pq_adc_topk" -> (x172._1(z), Some(x172._2)),
     "x173_ra_link_prediction" -> (x173._1, Some(x173._2)),
     "x174_ndcg_at_k" -> (x174._1, Some(x174._2)),
     "x175_vocab_growth" -> (x175._1, Some(x175._2)),
     "x176_fleiss_kappa" -> (x176._1, Some(x176._2)),
     "x177_interval_pair_join" -> (x177._1, Some(x177._2)),
-    "x178_pq_recall_audit" -> (x178._1, Some(x178._2)),
+    "x178_pq_recall_audit" -> (x178._1(z), Some(x178._2)),
     "x179_stable_dense_ids" -> (x179._1, Some(x179._2)),
     "x180_farthest_point_sample" -> (x180._1, Some(x180._2)),
-    "x181_ivf_pq_topk" -> (x181._1, Some(x181._2)),
+    "x181_ivf_pq_topk" -> (x181._1(z), Some(x181._2)),
     "x182_nucleus_vocab" -> (x182._1, Some(x182._2)),
     "x183_sqrt_temperature_mix" -> (x183._1, Some(x183._2)),
-    "x184_semantic_banding_audit" -> (x184._1, Some(x184._2)),
+    "x184_semantic_banding_audit" -> (x184._1(z), Some(x184._2)),
     "x185_dsir_importance" -> (x185._1, Some(x185._2)),
     "x186_unimax_allocation" -> (x186._1, Some(x186._2)),
     "x187_jl_distortion_audit" -> (x187._1, Some(x187._2)),
@@ -7289,12 +7267,12 @@ object ExtQ {
     "x189_semantic_dedup_ivf" -> (x189._1, Some(x189._2)),
     "x190_substring_dedup" -> (x190._1, Some(x190._2)),
     "x191_semantic_dedup_corpus" -> (x191._1, Some(x191._2)),
-    "x192_semantic_ivf_audit" -> (x192._1, Some(x192._2)),
-    "x193_semantic_index_merge" -> (x193._1, Some(x193._2)),
-    "x194_bm25_retrieval" -> (x194._1, Some(x194._2)),
+    "x192_semantic_ivf_audit" -> (x192._1(z), Some(x192._2)),
+    "x193_semantic_index_merge" -> (x193._1(z), Some(x193._2)),
+    "x194_bm25_retrieval" -> (x194._1(z), Some(x194._2)),
     "x195_simhash_incremental" -> (x195._1, Some(x195._2)),
-    "x196_hybrid_retrieval" -> (x196._1, Some(x196._2)),
-    "x197_pq_refine_topk" -> (x197._1, Some(x197._2)),
+    "x196_hybrid_retrieval" -> (x196._1(z), Some(x196._2)),
+    "x197_pq_refine_topk" -> (x197._1(z), Some(x197._2)),
     "x198_rocchio_classifier" -> (x198._1, Some(x198._2)),
     "x199_balanced_shards" -> (x199._1, Some(x199._2)),
     "x200_corpus_overlap_matrix" -> (x200._1, Some(x200._2)),
@@ -7302,18 +7280,18 @@ object ExtQ {
     "x202_dedup_threshold_sweep" -> (x202._1, Some(x202._2)),
     "x203_ngram_diversity" -> (x203._1, Some(x203._2)),
     "x204_packing_efficiency" -> (x204._1, Some(x204._2)),
-    "x205_truncation_recall" -> (x205._1, Some(x205._2)),
-    "x206_persistent_index_probe" -> (x206._1, Some(x206._2)),
+    "x205_truncation_recall" -> (x205._1(z), Some(x205._2)),
+    "x206_persistent_index_probe" -> (x206._1(z), Some(x206._2)),
     "x207_containment_from_store" -> (x207._1, Some(x207._2)),
     "x208_persistent_sig_index" -> (x208._1, Some(x208._2)),
     "x209_persistent_minhash_index" -> (x209._1, Some(x209._2)),
-    "x210_persistent_pq_serve" -> (x210._1, Some(x210._2)),
-    "x211_sliced_index_probe" -> (x211._1, Some(x211._2)),
-    "x212_persistent_ivfpq_serve" -> (x212._1, Some(x212._2)),
-    "x213_pq_append_serve" -> (x213._1, Some(x213._2)),
-    "x214_ivfpq_append_serve" -> (x214._1, Some(x214._2)),
-    "x215_pq_compact_serve" -> (x215._1, Some(x215._2)),
-    "x216_ivfpq_refine_serve" -> (x216._1, Some(x216._2)),
-    "x217_ivfpq_sliced_refine" -> (x217._1, Some(x217._2)),
+    "x210_persistent_pq_serve" -> (x210._1(z), Some(x210._2)),
+    "x211_sliced_index_probe" -> (x211._1(z), Some(x211._2)),
+    "x212_persistent_ivfpq_serve" -> (x212._1(z), Some(x212._2)),
+    "x213_pq_append_serve" -> (x213._1(z), Some(x213._2)),
+    "x214_ivfpq_append_serve" -> (x214._1(z), Some(x214._2)),
+    "x215_pq_compact_serve" -> (x215._1(z), Some(x215._2)),
+    "x216_ivfpq_refine_serve" -> (x216._1(z), Some(x216._2)),
+    "x217_ivfpq_sliced_refine" -> (x217._1(z), Some(x217._2)),
   )
 }

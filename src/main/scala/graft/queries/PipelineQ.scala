@@ -1,9 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.tables.{t, dec}
+import graft.tables.t
 import graft.io.CleanCsv
 import graft.quality.Rules
 import graft.quality.Rules._

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.FormattedMode
 import java.nio.file.Files
 import graft.TestSpark
@@ -17,6 +16,15 @@ class PlanSpec extends AnyFunSuite {
 
   private def planOf(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
+
+  /** Every SparkEntry query built once at sf0.001, in name order. The
+    * three all-query audits below share these frames: building a query
+    * runs its eager training and index saves, so building it per audit
+    * tripled the suite's cost. */
+  private lazy val built: Seq[(String, org.apache.spark.sql.DataFrame)] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      name -> fn(spark, "/root/testdata/sf0.001")
+    }
 
   test("filters and projection push down to the parquet scan") {
     val plan = planOf(SparkEntry.queries("q02_filter_pushdown")(
@@ -200,9 +208,9 @@ class PlanSpec extends AnyFunSuite {
       "x215_pq_compact_serve",   // x213's served shape after compaction (same local-candidate refine plan, one slice)
       "x216_ivfpq_refine_serve", // x212's routed ADC (≤16-row centroid cross) + x210's local-candidate refine plan
       "x217_ivfpq_sliced_refine") // x216's served shape over frozen-artifact slices
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = planOf(fn(spark, "/root/testdata/sf0.001"))
+    val offenders = built.flatMap {
+      case (name, df) =>
+        val plan = planOf(df)
         if (plan.contains("CartesianProduct")) Some(s"$name: CartesianProduct")
         else if (plan.contains("BroadcastNestedLoopJoin") &&
                  !whitelist.contains(name)) Some(s"$name: BNLJ")
@@ -218,11 +226,9 @@ class PlanSpec extends AnyFunSuite {
     // exchange + per-partition offsets) instead; this gate keeps the
     // class extinct. Checked on the pre-AQE physical plan so
     // WindowExec nodes are still visible as such.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val plan = fn(spark, "/root/testdata/sf0.001")
-          .queryExecution.sparkPlan
-        val bad = plan.collect {
+    val offenders = built.flatMap {
+      case (name, df) =>
+        val bad = df.queryExecution.sparkPlan.collect {
           case w: org.apache.spark.sql.execution.window.WindowExec
               if w.partitionSpec.isEmpty => w.nodeName
           case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec
@@ -243,10 +249,11 @@ class PlanSpec extends AnyFunSuite {
     // through an aggregate / limit before broadcasting (1-row totals,
     // ≤k centroid tables, top-k seeds). Whitelisted: brute-force
     // ground-truth baselines whose broadcast side is a documented
-    // fixture-bounded query set.
+    // fixture-bounded query set. Each built frame's logical plan is
+    // planned again under the disabled threshold.
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
-    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
     val corpus = Seq("lineitem", "orders", "events", "documents",
       "embeddings", "customer", "part", "partsupp", "supplier")
     val whitelist = Set(
@@ -292,11 +299,11 @@ class PlanSpec extends AnyFunSuite {
     val saved = spark.conf.get(key)
     try {
       spark.conf.set(key, "-1")
-      val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) if whitelist.contains(name) => None
-        case (name, fn) =>
-          val plan = fn(spark, "/root/testdata/sf0.001")
-            .queryExecution.sparkPlan
+      val offenders = built.flatMap {
+        case (name, _) if whitelist.contains(name) => None
+        case (name, df) =>
+          val plan = spark.sessionState
+            .executePlan(df.queryExecution.logical).sparkPlan
           val builds = plan.collect {
             case j: BroadcastHashJoinExec =>
               if (j.buildSide == BuildLeft) j.left else j.right

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Gen, Properties}
 import org.scalacheck.Prop.{forAll, propBoolean}
 import org.apache.spark.sql.functions._
 
@@ -140,7 +140,7 @@ object GraftProperties extends Properties("graft") {
     forAll(Gen.listOfN(6, textGen)) { texts =>
       texts.toDF("t")
         .select(ext.Dedup.simhash64($"t").as("native"),
-          ext.Dedup.simhash64Hof($"t").as("hof"))
+          HofReference.simhash64Hof($"t").as("hof"))
         .collect()
         .forall(r => r.getLong(0) == r.getLong(1))
     }

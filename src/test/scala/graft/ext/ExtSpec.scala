@@ -1393,7 +1393,6 @@ class ExtSpec extends AnyFunSuite {
     val S = Graph.Scale
     // iter math: base = (S - 0.85S) = 0.15S on node 1 only.
     // r0 = (S, 0, 0); r1 = (0.15S, (S div 2)*85 div 100, same)
-    val half = S / 2
     assert(pr(1L) == S - S * 85 / 100)
     // r2: node 2/3 get (r1(1) div 2) * 85 div 100
     val r1_1 = S - S * 85 / 100

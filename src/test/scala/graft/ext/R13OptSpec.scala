@@ -361,7 +361,7 @@ class R13OptSpec extends AnyFunSuite {
     def check(df: org.apache.spark.sql.DataFrame): Unit = {
       val rows = df.select(col("id"),
           Similarity.int8Quantize(col("v")).as("nw"),
-          Similarity.int8QuantizeHof(col("v")).as("od"))
+          graft.HofReference.int8QuantizeHof(col("v")).as("od"))
         .collect()
       assert(rows.nonEmpty)
       rows.foreach { row =>

@@ -1,7 +1,6 @@
 package graft.jobs
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._

@@ -31,7 +31,6 @@ class Scd2Spec extends AnyFunSuite {
     val merged = Scd2.merge(old, newDf, "assets").cache()
 
     // poolA: unchanged by checksum → old version kept, no new row
-    val a = merged.filter($"AL2" === "poola" || $"AL2" === "poolA")
     // note: fixture bypasses cell cleaning so case is preserved
     assert(merged.filter($"AL2" === "poolA").count() == 1)
     assert(merged.filter($"AL2" === "poolA").select("payload").first().getString(0) == "v1")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.ExplainMode
-import org.apache.spark.sql.functions._
 import graft.TestSpark
 
 /** Persistence parity for the three streaming reference indexes: a
