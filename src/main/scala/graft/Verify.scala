@@ -11,7 +11,10 @@ import java.nio.file.{Files, Paths}
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val (sfDir, outDir) = args match {
+      case Array(sf, out) => (sf, out)
+      case _ => sys.error("usage: graft.Verify <sf-dir> <out-dir>")
+    }
     val spark = GraftSession.build(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // queries are independent — run several concurrently (the Spark

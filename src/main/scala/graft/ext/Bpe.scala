@@ -89,7 +89,7 @@ object Bpe {
     while (count < merges && !exhausted) {
       val want = math.min(batch, merges - count)
       val slice = math.max(3 * want, 16)
-      val top = pairStats(vocab.toDF)
+      val top = pairStats(vocab.toDF())
         .orderBy(col("freq").desc, col("a"), col("b")).limit(slice + 1)
         .collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toIndexedSeq

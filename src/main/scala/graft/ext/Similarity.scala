@@ -1664,7 +1664,7 @@ object Similarity {
         coalesce(size(col(vec)).cast("string"), lit("NULL")),
         lit(s" != projection dim $dim"))))
     df.select(col(id).as("vec_id"),
-      array(planes.map(p =>
+      array(planes.toIndexedSeq.map(p =>
         graft.functions.VectorExpressions.dot_product(v,
           typedLit(p.toSeq))): _*).as("proj"))
   }

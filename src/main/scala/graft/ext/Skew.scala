@@ -24,23 +24,13 @@ object Skew {
     pmod(xxhash64(cols: _*), lit(n.toLong)).cast("int")
   }
 
-  /** Two-phase aggregation of a skewed group key: partial aggregate on
-    * (key, salt), final on key. For algebraic aggregates only — caller
-    * provides both phases. */
-  def saltedAgg(df: DataFrame, key: Column, saltCols: Seq[Column], salts: Int,
-                partial: Seq[Column], finalAgg: Seq[Column]): DataFrame =
-    df.groupBy(key.as("_k"), salt(salts, saltCols: _*).as("_salt"))
-      .agg(partial.head, partial.tail: _*)
-      .groupBy(col("_k"))
-      .agg(finalAgg.head, finalAgg.tail: _*)
-
   /** Key-distribution profile for a prospective join/agg key: the
     * top-k heaviest keys with exact counts, each key's corpus share in
     * parts-per-million, and the salt fan-out that would level it
     * (ceil(count·parts/total): how many reducers this key needs so its
     * share of one equals the average partition). All integer
     * arithmetic — reproducible anywhere. Run this BEFORE shipping a
-    * 100 TB join; feed the result into [[saltedJoin]]/[[saltedAgg]]
+    * 100 TB join; feed the result into [[saltedJoin]]
     * or trust AQE when the profile is flat. One map-combined agg plus
     * a single-row broadcast of the total. */
   def keyProfile(df: DataFrame, key: String, topK: Int,

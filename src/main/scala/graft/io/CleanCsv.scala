@@ -64,24 +64,21 @@ object CleanCsv {
     line0.replace("\uFEFF", "").replace("\u0000", "")
   }
 
-  /** Physical column count of the file's header line — over-length
-    * detection is relative to THIS, not the amortisation-truncated
-    * header (amortisation data rows legitimately carry the full
-    * pre-truncation arity). */
-  private def rawWidth(spark: SparkSession, path: String): Int =
-    headerLine(spark, path).split(",", -1).length
-
-  /** Header of one file: cell 0 force-renamed (`INITIAL_COL`),
-    * amortisation truncated to its column cap. */
-  def readHeader(spark: SparkSession, path: String, dataType: String): Seq[String] = {
+  /** Header of one file, truncated to the tape's column cap with cell 0
+    * force-renamed (`INITIAL_COL`), and the physical column count of
+    * the line: over-length detection is relative to that count, not the
+    * truncated header (amortisation data rows legitimately carry the
+    * full pre-truncation arity). */
+  private def header(spark: SparkSession, path: String,
+                     dataType: String): (Seq[String], Int) = {
+    val t = Layout.tape(dataType)
     val raw = headerLine(spark, path)
       .split(",", -1).map(_.trim.stripPrefix("\"").stripSuffix("\"")).toSeq
-    val truncated =
-      if (dataType == "amortisation") raw.take(Layout.amortisationMaxCols) else raw
-    Layout.initialCol.get(dataType) match {
-      case Some(first) => first +: truncated.drop(1)
-      case None => truncated
-    }
+    val capped = raw.take(t.maxCols)
+    val names = t.initialCol.fold(capped)(_ +: capped.drop(1))
+    require(names.distinct.size == names.size,
+      s"duplicate header columns in $path (reference silently collapsed these — we error, SURVEY §7.5.5)")
+    (names, raw.size)
   }
 
   /** Positional parse schema `_c0.._c{n-1}` + `_extra` phantom: a row
@@ -100,10 +97,16 @@ object CleanCsv {
       clean(col(s"_c$i")).as(h)
     }: _*)
 
+  /** (ed_code, pcd) of a tape file from its name: basename token 0, and
+    * tokens 1-3 joined with "-" (`D1_2023_07_31_Loan_Data.csv` →
+    * (`D1`, `2023-07-31`)). */
+  def lineage(path: String): (String, String) = {
+    val tokens = path.split("/").last.split("_")
+    (tokens(0), tokens.slice(1, 4).mkString("-"))
+  }
+
   private def withLineage(df: DataFrame, path: String): DataFrame = {
-    val basename = path.split("/").last
-    val edCode = basename.split("_")(0)
-    val pcd = basename.split("_").slice(1, 4).mkString("-")
+    val (edCode, pcd) = lineage(path)
     df.withColumn("filename", lit(path))
       .withColumn("pcd", lit(pcd))
       .withColumn("ed_code", lit(edCode))
@@ -113,10 +116,7 @@ object CleanCsv {
     * lineage + SCD2 bookkeeping columns. Distributed: the file may span
     * many splits; only split 0 drops the header/units lines. */
   def read(spark: SparkSession, path: String, dataType: String): DataFrame = {
-    val header = readHeader(spark, path, dataType)
-    require(header.distinct.size == header.size,
-      s"duplicate header columns in $path (reference silently collapsed these — we error, SURVEY §7.5.5)")
-    val nraw = rawWidth(spark, path)
+    val (names, nraw) = header(spark, path, dataType)
 
     // distributed line source; split 0 starts at byte 0 of the file, so
     // dropping its first two lines removes exactly header + units row
@@ -150,7 +150,7 @@ object CleanCsv {
       .filter(col("_extra").isNull)
 
     // cleanChars already ran on the whole line pre-parse
-    val cleaned = withLineage(projectHeader(parsed, header, cleanCell), path)
+    val cleaned = withLineage(projectHeader(parsed, names, cleanCell), path)
     withBookkeeping(cleaned, dataType)
   }
 
@@ -163,10 +163,7 @@ object CleanCsv {
     * are dropped via the same `_extra` phantom column; cell cleaning
     * is identical. */
   def readMultiLine(spark: SparkSession, path: String, dataType: String): DataFrame = {
-    val header = readHeader(spark, path, dataType)
-    require(header.distinct.size == header.size,
-      s"duplicate header columns in $path (reference silently collapsed these — we error, SURVEY §7.5.5)")
-    val nraw = rawWidth(spark, path)
+    val (names, nraw) = header(spark, path, dataType)
     val parsed = spark.read
       .option("header", "false")
       .option("multiLine", "true")
@@ -180,20 +177,16 @@ object CleanCsv {
       .filter(col("_extra").isNull)
 
     val cleaned = withLineage(
-      projectHeader(parsed, header, c => cleanCell(cleanChars(c))), path)
+      projectHeader(parsed, names, c => cleanCell(cleanChars(c))), path)
     withBookkeeping(cleaned, dataType)
   }
 
   /** SCD2 bookkeeping derivation (`bronze_funcs.py:117-141`): checksum
-    * is md5 over ed_code, pcd and the PK columns ONLY — the reference's
-    * keys-only quirk is preserved (SURVEY §2.c.2). */
+    * is md5 over ed_code, pcd and the tape row's keys ONLY — the
+    * reference's keys-only quirk is preserved (SURVEY §2.c.2). */
   def withBookkeeping(df: DataFrame, dataType: String): DataFrame = {
-    // amortisation has no PRIMARY_COLS entry in the reference (its
-    // checksum build would KeyError there — latent defect); we degrade
-    // to checksumming (ed_code, pcd) only
     val pkCols = Seq(col("ed_code"), col("pcd")) ++
-      Layout.primaryCols.getOrElse(dataType, Seq.empty)
-        .filter(df.columns.contains).map(col)
+      Layout.tape(dataType).keys.filter(df.columns.contains).map(col)
     df.withColumn("valid_from", current_timestamp())
       .withColumn("valid_to", lit(null).cast("timestamp"))
       .withColumn("iscurrent", lit(1).cast("int"))

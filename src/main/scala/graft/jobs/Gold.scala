@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.schema.Layout
 
 /** Gold-layer metrics (SURVEY.md §7.2's flagship business query; the
   * reference computes its gold "index metrics" outside the repo —
@@ -13,23 +14,33 @@ import org.apache.spark.sql.functions._
   */
 object Gold {
 
-  /** Current principal outstanding (AL56) per country (AL15), from the
-    * silver lease_info (AL15) and lease_features (AL56) topic tables,
-    * joined on the shared primaries. */
-  def principalByCountry(spark: SparkSession, lakeRoot: String): DataFrame = {
-    val leaseInfo = spark.read.parquet(s"$lakeRoot/silver/assets/lease_info")
-    val feats = spark.read.parquet(s"$lakeRoot/silver/assets/lease_features")
-    val keys = Seq("ed_code", "part", "AL1", "AL2", "AL3", "AL4", "AL5")
+  /** lease_info's country (AL15) beside lease_features' principal
+    * (AL56), joined on the asset topic primaries both tables carry;
+    * with `parts`, both reads are pruned to those partitions. */
+  private def principalRows(spark: SparkSession, lakeRoot: String,
+                            parts: Option[Seq[String]]): DataFrame = {
+    def topic(name: String) = {
+      val df = spark.read.parquet(s"$lakeRoot/silver/assets/$name")
+      parts.fold(df)(ps => df.filter(col("part").isin(ps: _*)))
+    }
+    val (leaseInfo, feats) = (topic("lease_info"), topic("lease_features"))
+    val keys = Layout.tape("assets").primaries(leaseInfo.columns.toSeq)
       .filter(c => leaseInfo.columns.contains(c) && feats.columns.contains(c))
     leaseInfo.select((keys.map(col) :+ col("AL15")): _*)
       .join(feats.select((keys.map(col) :+ col("AL56")): _*), keys)
+  }
+
+  /** Current principal outstanding (AL56) per country (AL15), from the
+    * silver lease_info (AL15) and lease_features (AL56) topic tables,
+    * joined on the shared primaries. */
+  def principalByCountry(spark: SparkSession, lakeRoot: String): DataFrame =
+    principalRows(spark, lakeRoot, None)
       .groupBy(col("AL15").as("country"))
       .agg(
         sum(col("AL56").cast("decimal(18,2)")).cast("double")
           .as("principal_outstanding"),
         count(lit(1)).as("n_leases"))
       .orderBy(col("country").asc_nulls_first)
-  }
 
   /** Incremental maintenance of the principal-by-country metric:
     * a PARTIAL rollup table partitioned by `part` holds per-(part,
@@ -45,14 +56,7 @@ object Gold {
   def refreshPrincipalRollup(spark: SparkSession, lakeRoot: String,
                              rollupRoot: String,
                              parts: Seq[String]): Unit = {
-    val leaseInfo = spark.read.parquet(s"$lakeRoot/silver/assets/lease_info")
-      .filter(col("part").isin(parts: _*))
-    val feats = spark.read.parquet(s"$lakeRoot/silver/assets/lease_features")
-      .filter(col("part").isin(parts: _*))
-    val keys = Seq("ed_code", "part", "AL1", "AL2", "AL3", "AL4", "AL5")
-      .filter(c => leaseInfo.columns.contains(c) && feats.columns.contains(c))
-    val partials = leaseInfo.select((keys.map(col) :+ col("AL15")): _*)
-      .join(feats.select((keys.map(col) :+ col("AL56")): _*), keys)
+    val partials = principalRows(spark, lakeRoot, Some(parts))
       .groupBy(col("part"), col("AL15").as("country"))
       .agg(sum(col("AL56").cast("decimal(18,2)")).cast("decimal(28,2)")
           .as("principal_partial"),

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
 import graft.io.{CleanCsv, DealXml, Lake}
 import graft.quality.Rules
-import graft.schema.{Layout, Registries, ValidationSchemas}
+import graft.schema.Layout
 import graft.scd2.Scd2
 import graft.silver.Silver
 
@@ -14,6 +14,10 @@ import graft.silver.Silver
   * first-write-wins, ledger; ledger-driven silver with
   * profile → quarantine/cast → topic split → partitioned writes.
   *
+  * Every per-tape fact (file key, keys, schema, registry, topics)
+  * comes from the tape's [[Layout.Tape]] row; [[bronze]] and [[silver]]
+  * route a row to its job, for the CLI stages and [[runAllDeals]] alike.
+  *
   * Deliberate fixes vs the reference (SURVEY §7.5): SCD2 merge
   * implemented (was missing), one cache() after profiling instead of
   * 9 recomputations of the scan→validate lineage, typed Column
@@ -21,63 +25,58 @@ import graft.silver.Silver
   */
 object Jobs {
 
-  /** Object-store file discovery (#1): CSVs under `dir` containing
-    * `fileKey`, excluding "Labeled" tapes for assets. */
-  def discoverCsvFiles(spark: SparkSession, dir: String, fileKey: String,
-                       dataType: String): Seq[String] = {
+  /** Object-store file discovery (#1, #2): the paths under `dir`,
+    * recursively, that end in `suffix` and contain `fileKey`, sorted. */
+  private def discover(spark: SparkSession, dir: String, suffix: String,
+                       fileKey: String): Seq[String] = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Seq.empty
     val it = fs.listFiles(p, true)
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     while (it.hasNext) {
-      val f = it.next().getPath
-      val name = f.toString
-      if (name.endsWith(".csv") && name.contains(fileKey) &&
-        (dataType != "assets" || !name.contains("Labeled"))) out += name
+      val f = it.next().getPath.toString
+      if (f.endsWith(suffix) && f.contains(fileKey)) out += f
     }
     out.toSeq.sorted
   }
 
-  /** Single-XML discovery (#2): exactly one .xml containing fileKey. */
-  def discoverXmlFile(spark: SparkSession, dir: String, fileKey: String)
-      : Option[String] = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return None
-    val it = fs.listFiles(p, true)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val f = it.next().getPath.toString
-      if (f.endsWith(".xml") && f.contains(fileKey)) out += f
-    }
-    out.toList match {
-      case Nil => None
-      case one :: Nil => Some(one)
-      case many => sys.error(s"expected exactly one XML under $dir, got ${many.size}")
-    }
-  }
+  /** One deal's bronze stage for tape row `t`: the CSV tapes load per
+    * file with a ledger ([[bronzeCsv]]); the XML tape is one SCD2
+    * upsert ([[bronzeDealDetails]]) that needs no ed_code and no
+    * ingestion date, so those are evaluated only for CSV tapes. */
+  def bronze(spark: SparkSession, t: Layout.Tape, rawDir: String,
+             lakeRoot: String, fileKey: String, edCode: => String,
+             ingestionDate: => String): Unit =
+    if (t.xml) bronzeDealDetails(spark, rawDir, lakeRoot, fileKey)
+    else bronzeCsv(spark, rawDir, lakeRoot, t.dataType, edCode, fileKey,
+      ingestionDate)
 
-  /** Bronze job for assets / bond_info / amortisation CSVs
-    * (`generate_bronze_tables.py:23-99`). Returns the cleanly loaded
-    * (ed_code, pcd) pairs. */
+  /** Silver stage of tape row `t`: the ledger-driven topic split, or
+    * the XML tape's deal_info_table. */
+  def silver(spark: SparkSession, lakeRoot: String, t: Layout.Tape): Unit =
+    if (t.xml) silverDealDetails(spark, lakeRoot)
+    else silverTopicSplit(spark, lakeRoot, t.dataType)
+
+  /** Bronze job for the CSV tapes (`generate_bronze_tables.py:23-99`).
+    * Returns the cleanly loaded (ed_code, pcd) pairs. */
   def bronzeCsv(spark: SparkSession, rawDir: String, lakeRoot: String,
                 dataType: String, edCode: String, fileKey: String,
-                ingestionDate: String, tries: Int = 5): Seq[(String, String)] = {
+                ingestionDate: String): Seq[(String, String)] = {
     val bronzeRoot = s"$lakeRoot/bronze/$dataType"
     if (Lake.cleanDumpExists(spark, lakeRoot, dataType, ingestionDate, edCode)) {
       return Seq.empty // job-level idempotency (#3), scoped per deal
     }
-    val files = discoverCsvFiles(spark, rawDir, fileKey, dataType)
+    val exclude = Layout.tape(dataType).exclude
+    val files = discover(spark, rawDir, ".csv", fileKey)
+      .filterNot(f => exclude.exists(f.contains))
     val clean = files.flatMap { f =>
-      val basename = f.split("/").last
-      val ed = basename.split("_")(0)
-      val pcd = basename.split("_").slice(1, 4).mkString("-")
+      val (ed, pcd) = CleanCsv.lineage(f)
       // first-write-wins partition skip (#4 / §7.5.3)
       if (Lake.partitionExists(spark, bronzeRoot, Lake.partValue(ed, pcd))) None
       else {
         val df = CleanCsv.read(spark, f, dataType)
-        Lake.retry(tries) { Lake.writePartitioned(df, bronzeRoot) }
+        Lake.retry() { Lake.writePartitioned(df, bronzeRoot) }
         Some((ed, pcd))
       }
     }
@@ -87,31 +86,33 @@ object Jobs {
   }
 
   /** Deal-details bronze (`generate_deal_details_bronze.py:147-201`):
-    * initial load or the (repaired) SCD2 upsert. */
+    * initial load or the (repaired) SCD2 upsert of exactly one XML. */
   def bronzeDealDetails(spark: SparkSession, rawDir: String, lakeRoot: String,
-                        fileKey: String, tries: Int = 5): Int = {
+                        fileKey: String): Int = {
     val bronzeRoot = s"$lakeRoot/bronze/deal_details"
-    discoverXmlFile(spark, rawDir, fileKey) match {
-      case None => 1
-      case Some(xml) =>
+    discover(spark, rawDir, ".xml", fileKey) match {
+      case Seq() => 1
+      case Seq(xml) =>
         val (pcd, newDf) = DealXml.read(spark, xml)
         val edCode = newDf.select("ed_code").first().getString(0)
         val old = if (Lake.tableExists(spark, bronzeRoot))
           Lake.readPartition(spark, bronzeRoot, edCode,
             pcd.patch(4, "-", 0).patch(7, "-", 0)) // yyyyMMdd → yyyy-MM-dd
         else None
-        // deal_details rows carry pcd only inside PoolCutOffDate; merge
-        // keys come from Layout.primaryCols("deal_details")
+        // deal_details rows carry pcd only inside PoolCutOffDate, one
+        // of the merge keys of its Layout row
         val merged = old match {
           case None => newDf
           case Some(o) => Scd2.merge(o, newDf, "deal_details")
         }
-        Lake.retry(tries) { Lake.writePartitioned(merged, bronzeRoot) }
+        Lake.retry() { Lake.writePartitioned(merged, bronzeRoot) }
         0
+      case many =>
+        sys.error(s"expected exactly one XML under $rawDir, got ${many.size}")
     }
   }
 
-  /** Silver job for assets / bond_info
+  /** Silver job for the tapes with a topic split, assets and bond_info
     * (`generate_asset_silver.py:48-118`). Every ledger partition is
     * read in one pruned current-version scan
     * (`generate_asset_silver.py:77-83`) and validated, cast and split
@@ -121,19 +122,12 @@ object Jobs {
     * and the all-null topic drop stay within a partition, and a
     * partition with no bad (or no good) rows publishes nothing to
     * that table. */
-  def silverTopicSplit(spark: SparkSession, lakeRoot: String, dataType: String,
-                       tries: Int = 5): Unit = {
+  def silverTopicSplit(spark: SparkSession, lakeRoot: String,
+                       dataType: String): Unit = {
+    val t = Layout.tape(dataType)
+    require(t.topics.nonEmpty, s"no topic split for $dataType")
     val bronzeRoot = s"$lakeRoot/bronze/$dataType"
     val silverRoot = s"$lakeRoot/silver/$dataType"
-    val schema = dataType match {
-      case "assets" => ValidationSchemas.assetSchema
-      case "bond_info" => ValidationSchemas.bondInfoSchema
-      case other => sys.error(s"no validation schema for $other")
-    }
-    val registry = dataType match {
-      case "assets" => Registries.assetColumns
-      case "bond_info" => Registries.bondColumns
-    }
     val parts = Lake.readLedgers(spark, lakeRoot, dataType)
       .map { case (ed, pcd) => Lake.partValue(ed, pcd) }.distinct
       .filter(Lake.partitionExists(spark, bronzeRoot, _))
@@ -143,12 +137,12 @@ object Jobs {
       .drop(Layout.scd2Cols: _*)
     // single Catalyst pass + one cache: the reference re-executed
     // the scan→RDD-validate lineage ~9× per pcd (SURVEY §3.2)
-    val (good, bad) = Rules.profile(bronze, schema)
+    val (good, bad) = Rules.profile(bronze, t.schema)
     val annotated = good.unionByName(bad).cache()
     try {
       val badRows = annotated.filter(!col("flag"))
       if (!badRows.isEmpty) {
-        Lake.retry(tries) {
+        Lake.retry() {
           Lake.writePartitioned(
             badRows.drop("flag"),
             s"$lakeRoot/dirty_dumps/$dataType")
@@ -156,10 +150,10 @@ object Jobs {
       }
       val goodRows = annotated.filter(col("flag")).drop("flag", "qc_errors")
       if (!goodRows.isEmpty) {
-        val typed = Silver.castToDatatype(goodRows, registry).cache()
+        val typed = Silver.castToDatatype(goodRows, t.registry).cache()
         try {
           Silver.topicTables(typed, dataType).foreach { case (table, df) =>
-            Lake.retry(tries) {
+            Lake.retry() {
               Lake.writePartitioned(df, s"$silverRoot/$table")
             }
           }
@@ -170,8 +164,8 @@ object Jobs {
 
   /** Per-deal DAG fan-out (#24; reference `dags/LES_dag_assets.py:
     * 84-178`, `max_active_tasks=20`): every subdirectory of `rawRoot`
-    * is one deal (directory name = ed_code); all four bronze stages
-    * run per deal on a bounded thread pool — deals are independent,
+    * is one deal (directory name = ed_code); every tape row's bronze
+    * stage runs per deal on a bounded thread pool — deals are independent,
     * and concurrent jobs interleave on the shared Spark scheduler
     * (same pattern as Verify's concurrent queries, so a slow tape
     * never idles the cluster) — then the ledger-driven silver stages
@@ -199,11 +193,8 @@ object Jobs {
       scala.concurrent.ExecutionContext.fromExecutor(pool)
     val futures = deals.map { ed =>
       scala.concurrent.Future {
-        val rawDir = s"$rawRoot/$ed"
-        bronzeCsv(spark, rawDir, lakeRoot, "assets", ed, "Loan_Data", ingestionDate)
-        bronzeCsv(spark, rawDir, lakeRoot, "bond_info", ed, "Bond_Info", ingestionDate)
-        bronzeCsv(spark, rawDir, lakeRoot, "amortisation", ed, "Amortisation", ingestionDate)
-        bronzeDealDetails(spark, rawDir, lakeRoot, "Deal_Details")
+        Layout.tapes.foreach(t =>
+          bronze(spark, t, s"$rawRoot/$ed", lakeRoot, t.fileKey, ed, ingestionDate))
         ed
       }
     }
@@ -216,11 +207,8 @@ object Jobs {
       pool.shutdown()
       pool.awaitTermination(Long.MaxValue, java.util.concurrent.TimeUnit.NANOSECONDS)
     }
-    // silver is ledger-driven across every deal loaded above
-    silverTopicSplit(spark, lakeRoot, "assets")
-    silverTopicSplit(spark, lakeRoot, "bond_info")
-    if (Lake.tableExists(spark, s"$lakeRoot/bronze/deal_details"))
-      silverDealDetails(spark, lakeRoot)
+    // silver reads every deal loaded above
+    Layout.tapes.filter(_.hasSilver).foreach(silver(spark, lakeRoot, _))
     done
   }
 
@@ -233,15 +221,14 @@ object Jobs {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return Map.empty
     val tableRoots =
-      Seq("assets", "bond_info", "amortisation", "deal_details")
-        .map(dt => s"$lakeRoot/bronze/$dt") ++
-      Seq("assets", "bond_info", "deal_details").flatMap { dt =>
-        val d = new Path(s"$lakeRoot/silver/$dt")
+      Layout.tapes.map(t => s"$lakeRoot/bronze/${t.dataType}") ++
+      Layout.tapes.filter(_.hasSilver).flatMap { t =>
+        val d = new Path(s"$lakeRoot/silver/${t.dataType}")
         if (!fs.exists(d)) Seq.empty
         else fs.listStatus(d).filter(_.isDirectory).map(_.getPath.toString).toSeq
       } ++
-      Seq("assets", "bond_info", "amortisation")
-        .map(dt => s"$lakeRoot/dirty_dumps/$dt")
+      Layout.tapes.filter(_.schema.nonEmpty)
+        .map(t => s"$lakeRoot/dirty_dumps/${t.dataType}")
     tableRoots.flatMap { t =>
       val restored = Lake.recover(spark, t)
       if (restored.isEmpty) None else Some(t -> restored)
@@ -249,13 +236,13 @@ object Jobs {
   }
 
   /** Deal-details silver (`generate_deal_details_silver.py:74-115`). */
-  def silverDealDetails(spark: SparkSession, lakeRoot: String, tries: Int = 5): Unit = {
+  def silverDealDetails(spark: SparkSession, lakeRoot: String): Unit = {
     val bronzeRoot = s"$lakeRoot/bronze/deal_details"
     if (!Lake.tableExists(spark, bronzeRoot)) return
     val bronze = Lake.currentScanAll(spark, bronzeRoot)
-    val typed = Silver.castToDatatype(bronze, Registries.dealDetailsColumns)
+    val typed = Silver.castToDatatype(bronze, Layout.tape("deal_details").registry)
       .dropDuplicates()
-    Lake.retry(tries) {
+    Lake.retry() {
       Lake.writePartitioned(typed, s"$lakeRoot/silver/deal_details/deal_info_table")
     }
   }

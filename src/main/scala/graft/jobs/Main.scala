@@ -1,6 +1,7 @@
 package graft.jobs
 
 import graft.GraftSession
+import graft.schema.Layout
 
 /** CLI stage dispatcher (SURVEY.md §2 #22; reference
   * `les_main.py:54-202`). Stage name → job, invalid stage → error,
@@ -11,17 +12,20 @@ import graft.GraftSession
   *   --raw-dir /data/raw/DEAL1 --lake-root /data/lake \
   *   --ed-code DEAL1 --file-key Loan_Data --ingestion-date 2023-07-31
   * }}}
+  *
+  * Each row of [[graft.schema.Layout.tapes]] gives a `bronze_{stage}`
+  * stage and, when the tape has silver, a `silver_{stage}` stage; the
+  * row also holds the `--file-key` default.
   */
 object Main {
 
   sealed trait Stage { def name: String }
-  case object BronzeAsset extends Stage { val name = "bronze_asset" }
-  case object BronzeBondInfo extends Stage { val name = "bronze_bond_info" }
-  case object BronzeAmortisation extends Stage { val name = "bronze_amortisation" }
-  case object BronzeDealDetails extends Stage { val name = "bronze_deal_details" }
-  case object SilverAsset extends Stage { val name = "silver_asset" }
-  case object SilverBondInfo extends Stage { val name = "silver_bond_info" }
-  case object SilverDealDetails extends Stage { val name = "silver_deal_details" }
+  final case class Bronze(tape: Layout.Tape) extends Stage {
+    val name = s"bronze_${tape.stage}"
+  }
+  final case class Silver(tape: Layout.Tape) extends Stage {
+    val name = s"silver_${tape.stage}"
+  }
   /** Whole-lake runner: bronze for every deal under --raw-root with
     * bounded parallelism (default 20, the reference DAG's
     * max_active_tasks), then the silver stages once. */
@@ -51,9 +55,9 @@ object Main {
     * sweep unreferenced slice dirs. */
   case object IndexCompact extends Stage { val name = "index_compact" }
 
-  val stages: Seq[Stage] = Seq(BronzeAsset, BronzeBondInfo, BronzeAmortisation,
-    BronzeDealDetails, SilverAsset, SilverBondInfo, SilverDealDetails, RunAll,
-    IndexBuild, IndexProbe, IndexAppend, IndexCompact)
+  val stages: Seq[Stage] = Layout.tapes.map(Bronze(_)) ++
+    Layout.tapes.filter(_.hasSilver).map(Silver(_)) ++
+    Seq(RunAll, IndexBuild, IndexProbe, IndexAppend, IndexCompact)
 
   def main(args: Array[String]): Unit = {
     val opts = args.sliding(2, 2).collect {
@@ -78,30 +82,15 @@ object Main {
     // def, not val: the index stages are lake-free
     def lakeRoot = req("lake-root")
     stage match {
-      case BronzeAsset =>
-        Jobs.bronzeCsv(spark, req("raw-dir"), lakeRoot, "assets",
-          req("ed-code"), opts.getOrElse("file-key", "Loan_Data"),
+      case Bronze(t) =>
+        Jobs.bronze(spark, t, req("raw-dir"), lakeRoot,
+          opts.getOrElse("file-key", t.fileKey), req("ed-code"),
           req("ingestion-date"))
-      case BronzeBondInfo =>
-        Jobs.bronzeCsv(spark, req("raw-dir"), lakeRoot, "bond_info",
-          req("ed-code"), opts.getOrElse("file-key", "Bond_Info"),
-          req("ingestion-date"))
-      case BronzeAmortisation =>
-        // same bronze path; the reference truncates these tapes to 121
-        // columns and has no PK entry (degraded checksum — see CleanCsv)
-        Jobs.bronzeCsv(spark, req("raw-dir"), lakeRoot, "amortisation",
-          req("ed-code"), opts.getOrElse("file-key", "Amortisation"),
-          req("ingestion-date"))
-      case BronzeDealDetails =>
-        Jobs.bronzeDealDetails(spark, req("raw-dir"), lakeRoot,
-          opts.getOrElse("file-key", "Deal_Details"))
+      case Silver(t) => Jobs.silver(spark, lakeRoot, t)
       case RunAll =>
         Jobs.runAllDeals(spark, req("raw-root"), lakeRoot,
           req("ingestion-date"),
           opts.getOrElse("parallelism", "20").toInt)
-      case SilverAsset => Jobs.silverTopicSplit(spark, lakeRoot, "assets")
-      case SilverBondInfo => Jobs.silverTopicSplit(spark, lakeRoot, "bond_info")
-      case SilverDealDetails => Jobs.silverDealDetails(spark, lakeRoot)
       case IndexBuild =>
         val src = spark.read.parquet(req("source"))
         val dir = req("index-dir")

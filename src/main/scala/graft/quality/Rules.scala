@@ -106,15 +106,6 @@ object Rules {
     when(c.isNull, nullErr).otherwise(nonNullErr)
   }
 
-  /** Compile a schema into (flag, qc_errors) columns for one pass.
-    * Columns absent from `presentCols` are skipped (Cerberus treats
-    * missing keys as valid when not `required`). */
-  def compile(schema: Map[String, ColumnRule], presentCols: Seq[String])
-      : (Column, Column) = {
-    val (flag, qcErrors, _) = compileParts(schema, presentCols)
-    (flag, qcErrors)
-  }
-
   /** One-pass good/bad split (reference `profile_data`,
     * `silver_funcs.py:37-78`) — stays inside Catalyst; callers should
     * cache the annotated frame before fanning out.
@@ -129,8 +120,7 @@ object Rules {
   def profile(df: org.apache.spark.sql.DataFrame,
               schema: Map[String, ColumnRule])
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val (_, _, errMap) = compileParts(schema, df.columns.toSeq)
-    val annotated = df.withColumn("_qc_map", errMap)
+    val annotated = df.withColumn("_qc_map", errorMap(schema, df.columns.toSeq))
       .withColumn("flag", size(col("_qc_map")) === 0)
       .withColumn("qc_errors",
         when(col("flag"), lit(null).cast("string"))
@@ -139,18 +129,16 @@ object Rules {
     (annotated.filter(col("flag")), annotated.filter(!col("flag")))
   }
 
-  /** [[compile]]'s pieces, exposing the single error-map expression
-    * both outputs derive from. */
-  private def compileParts(schema: Map[String, ColumnRule],
-                           presentCols: Seq[String])
-      : (Column, Column, Column) = {
-    val applicable = schema.toSeq.sortBy(_._1)
+  /** The error map of one row: rule name → message for every failed
+    * rule whose column is in `presentCols` (Cerberus treats missing
+    * keys as valid when not `required`). */
+  private def errorMap(schema: Map[String, ColumnRule],
+                       presentCols: Seq[String]): Column = {
+    val errs = schema.toSeq.sortBy(_._1)
       .filter { case (name, _) => presentCols.contains(name) }
-    val errs = applicable.map { case (name, r) => name -> errorFor(name, r) }
-    val flag = errs.map(_._2.isNull).reduceOption(_ && _).getOrElse(lit(true))
-    val errMap = map_filter(
+      .map { case (name, r) => name -> errorFor(name, r) }
+    map_filter(
       map(errs.flatMap { case (n, e) => Seq(lit(n), e) }: _*),
       (_, v) => v.isNotNull)
-    (flag, when(flag, lit(null).cast("string")).otherwise(to_json(errMap)), errMap)
   }
 }

@@ -1257,7 +1257,7 @@ object ExtQ {
           lpad($"doc_id".cast("string"), 4, "0"), lit("-123")).as("text"))
       Redact.redact(planted, "text").orderBy($"doc_id")
     }, {
-      val Seq(e, ip, ph) = Redact.pii.map(_.pattern)
+      val Seq(e, ip, ph) = (Redact.pii.map(_.pattern): @unchecked)
       s"""WITH planted AS (
          |  SELECT doc_id,
          |    text || ' contact user' || doc_id::VARCHAR
@@ -1313,7 +1313,7 @@ object ExtQ {
   private val x37: (Fn, String) = (
     (s, d) => {
       import s.implicits._
-      Bpe.pairStats(Bpe.initVocab(t(s, d, "documents"), "text").toDF)
+      Bpe.pairStats(Bpe.initVocab(t(s, d, "documents"), "text").toDF())
         .orderBy($"freq".desc, $"a", $"b")
     },
     """WITH wc AS (

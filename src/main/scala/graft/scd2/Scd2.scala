@@ -10,7 +10,8 @@ import graft.schema.Layout
   * This is the repaired, normative implementation.
   *
   * Semantics (SURVEY §2.c):
-  *  - row identity = (ed_code, pcd) + PRIMARY_COLS[dataType];
+  *  - row identity = (ed_code, pcd) + the tape row's keys
+  *    (`PRIMARY_COLS[dataType]`);
   *  - change detection via `checksum` = md5(ed_code‖pcd‖PKs) — the
   *    keys-only quirk is preserved for parity, so a changed non-key
   *    attribute with unchanged keys does NOT produce a new version;
@@ -46,7 +47,7 @@ object Scd2 {
       regexp_replace(regexp_replace(regexp_replace(c.cast("string"),
         "\u0002", "\u0002\u0002"), "\u0000", "\u00020"), "\u0001", "\u00021")
     def digest(df: DataFrame): org.apache.spark.sql.Column = {
-      val payload = df.columns.filterNot(pks.contains).sorted
+      val payload = df.columns.toSeq.filterNot(pks.contains).sorted
       md5(concat_ws("\u0001",
         payload.map(c => coalesce(esc(col(c)), lit("\u0000"))): _*))
     }
@@ -68,7 +69,7 @@ object Scd2 {
     * multiple current versions — found by GraftProperties). */
   def merge(oldDf: DataFrame, newDf: DataFrame, dataType: String): DataFrame =
     mergeOnKeys(oldDf, newDf,
-      (Seq("ed_code", "pcd") ++ Layout.primaryCols(dataType))
+      (Seq("ed_code", "pcd") ++ Layout.tape(dataType).keys)
         .distinct.filter(oldDf.columns.contains))
 
   /** Same merge with caller-chosen identity columns. */
@@ -89,8 +90,8 @@ object Scd2 {
       .withColumn("_changed",
         col("_matched") && !(col("o.checksum") <=> col("n.checksum")))
 
-    val oCols = oldCur.columns.map(c => col(s"o.$c").as(c))
-    val nCols = newDf.columns.map(c => col(s"n.$c").as(c))
+    val oCols = oldCur.columns.toSeq.map(c => col(s"o.$c").as(c))
+    val nCols = newDf.columns.toSeq.map(c => col(s"n.$c").as(c))
 
     // old side survives unless it was matched by a changed new version
     val keptOld = joined.filter(col("o._o").isNotNull && !col("_changed"))

@@ -41,17 +41,14 @@ object Silver {
   }
 
   /** Vertical topic split (#17): per-topic projection of primaries +
-    * topic columns, tolerant of missing columns. */
+    * topic columns, tolerant of missing columns; the primaries and
+    * topic ranges come from the tape's [[Layout.Tape]] row. */
   def topicTables(df: DataFrame, dataType: String): Map[String, DataFrame] = {
+    val t = Layout.tape(dataType)
+    require(t.topics.nonEmpty, s"no topic split for $dataType")
     val cols = df.columns.toSeq
-    val (primaries, topics) = dataType match {
-      case "assets" => (Layout.assetPrimaries(cols),
-        Layout.assetTopics.map { case (n, r) => n -> Layout.topicCols("AL", r, cols) })
-      case "bond_info" => (Layout.bondPrimaries(cols),
-        Layout.bondTopics.map { case (n, r) => n -> Layout.topicCols("BL", r, cols) })
-      case other => sys.error(s"no topic split for $other")
-    }
-    topics.collect { case (name, tcols) if tcols.nonEmpty =>
+    val primaries = t.primaries(cols)
+    t.topicCols(cols).collect { case (name, tcols) if tcols.nonEmpty =>
       // drop rows where every topic column is null (#16), project (#17),
       // dedupe whole rows (#18)
       name -> df.na.drop("all", tcols)

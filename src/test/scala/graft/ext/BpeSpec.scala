@@ -43,7 +43,7 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("pairStats weights pairs by corpus word count") {
-    val stats = Bpe.pairStats(Bpe.initVocab(corpus, "text").toDF)
+    val stats = Bpe.pairStats(Bpe.initVocab(corpus, "text").toDF())
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(stats(("e", "s")) == 9)  // newest×6 + widest×3
     assert(stats(("l", "o")) == 7)  // low×5 + lower×2

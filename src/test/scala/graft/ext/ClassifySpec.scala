@@ -108,7 +108,7 @@ class ClassifySpec extends AnyFunSuite {
     val batch = Classify.rocchioScore(
         Seq((1L, "curated article sources")).toDF("doc_id", "text"),
         "doc_id", "text", w, buckets = 64)
-      .select($"score".cast("long")).head.getLong(0)
+      .select($"score".cast("long")).head().getLong(0)
     assert(rows(1L) == batch)
   }
 
@@ -124,9 +124,9 @@ class ClassifySpec extends AnyFunSuite {
     // at/below the bound the score is computed normally
     val ok = Seq((1L, ("tok " * 8).trim)).toDF("doc_id", "text")
       .select(Classify.scoreColumn($"text", vec, maxDocTokens = 8).as("s"))
-      .head.getLong(0)
+      .head().getLong(0)
     val unbounded = Seq((1L, ("tok " * 8).trim)).toDF("doc_id", "text")
-      .select(Classify.scoreColumn($"text", vec).as("s")).head.getLong(0)
+      .select(Classify.scoreColumn($"text", vec).as("s")).head().getLong(0)
     assert(ok == unbounded)
   }
 

@@ -494,7 +494,7 @@ class ExtSpec extends AnyFunSuite {
     val sharded = Packing.packByBudget(
       rows.withColumn("g", pmod(xxhash64($"doc_id"), lit(2))),
       Seq("g"), "doc_id", col("tok"), budget = 100L)
-    assert(sharded.agg(sum("n_tokens")).head.getLong(0) == 390L)
+    assert(sharded.agg(sum("n_tokens")).head().getLong(0) == 390L)
   }
 
   test("balanced shards: serpentine deal matches a local replay") {
@@ -862,7 +862,7 @@ class ExtSpec extends AnyFunSuite {
     // reconstruction error ≤ half a quantization step everywhere
     rows.filter(_.getDouble(1) > 0).foreach { r =>
       val m = r.getDouble(1)
-      val v = vecs.filter($"id" === r.getLong(0)).head.getSeq[Float](1)
+      val v = vecs.filter($"id" === r.getLong(0)).head().getSeq[Float](1)
       r.getSeq[Long](2).zip(v).foreach { case (q, x) =>
         assert(math.abs(q * m / 127.0 - x) <= m / 254.0 + 1e-12)
       }
@@ -1318,7 +1318,7 @@ class ExtSpec extends AnyFunSuite {
     assert(got.map(_._1).toSeq == (1L to 5L))
     assert(got.map(_._2).toSeq == Seq(5L, 5L, 5L, 4L, 4L))
     // bin boundaries are monotone: each bin's lo >= previous bin's hi
-    got.sliding(2).foreach { case Array(p, n) => assert(n._3 >= p._4) }
+    got.zip(got.tail).foreach { case (p, n) => assert(n._3 >= p._4) }
     assert(got.map(_._2).sum == 23L)
   }
 

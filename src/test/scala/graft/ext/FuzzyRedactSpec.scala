@@ -34,7 +34,7 @@ class FuzzyRedactSpec extends AnyFunSuite {
     val got = cards.select(col("n"), Redact.luhnValid(col("n")).as("ok"))
       .as[(String, Boolean)].collect().toMap
     valid.foreach(c => assert(got(c), c))
-    got.filterKeys(k => !valid.contains(k)).foreach { case (c, ok) =>
+    got.view.filterKeys(k => !valid.contains(k)).foreach { case (c, ok) =>
       assert(!ok, s"corrupted $c must fail")
     }
     val ibans = Seq(
@@ -173,7 +173,7 @@ class FuzzyRedactSpec extends AnyFunSuite {
     ).toDF("media_id", "payload", "media_type")
     val sigs = Multimodal.dHash(rows).select($"media_id", $"dhash")
       .collect().map(r => r.getLong(0) ->
-        Option(r.getAs[java.lang.Long]("dhash"))).toMap
+        Option(r.getAs[java.lang.Long]("dhash")).map(_.longValue)).toMap
     assert(sigs(1L).contains(-1L))          // every gradient ascends
     assert(sigs(3L).contains(0L))           // every gradient descends
     assert(sigs(4L) == sigs(1L))            // 2x upscale: same hash

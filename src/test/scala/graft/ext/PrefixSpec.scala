@@ -77,8 +77,8 @@ class PrefixSpec extends AnyFunSuite {
 
   test("re-execution of the returned frame is stable (pinned boundaries)") {
     val out = Prefix.globalRunningSum(rows(3000), Seq(col("id")), col("v"), "cum")
-    val a = out.agg(sum($"cum")).head.getLong(0)
-    val b = out.agg(sum($"cum")).head.getLong(0)
+    val a = out.agg(sum($"cum")).head().getLong(0)
+    val b = out.agg(sum($"cum")).head().getLong(0)
     assert(a == b)
     assert(out.filter($"cum" < 0).isEmpty)
   }

@@ -25,7 +25,7 @@ class TemporalSpec extends AnyFunSuite {
     val out = Temporal.asOfJoin(left, right, "user_id", "ts", "event_id",
         Seq("event_id", "value"))
       .collect().map(r => r.getAs[Long]("event_id") ->
-        Option(r.getAs[java.lang.Long]("asof_event_id"))).toMap
+        Option(r.getAs[java.lang.Long]("asof_event_id")).map(_.longValue)).toMap
     assert(out(1L).contains(100L))   // most recent prior
     assert(out(2L).contains(100L))   // equal-ts inclusive
     assert(out(3L).isEmpty)          // nothing at or before → null

@@ -281,4 +281,15 @@ class MainSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.contains("missing required --raw-dir"))
   }
+
+  test("invalid stage message lists the 12 stages in CLI order") {
+    val e = intercept[RuntimeException] {
+      Main.run(Map("stage-name" -> "nope"), spark)
+    }
+    assert(e.getMessage == "invalid stage nope; expected one of " +
+      "bronze_asset, bronze_bond_info, bronze_amortisation, " +
+      "bronze_deal_details, silver_asset, silver_bond_info, " +
+      "silver_deal_details, run_all, index_build, index_probe, " +
+      "index_append, index_compact")
+  }
 }

@@ -43,6 +43,23 @@ class SilverSpec extends AnyFunSuite {
     assert(tables("lease_features").count() == 2) // AL50 non-null in all 3, dedup → 2
   }
 
+  test("bond topic split without BL2: primaries are ed_code, part and the present BL1") {
+    val df = Seq(("e1", "p1", "2020-01-01", "x", "y"))
+      .toDF("ed_code", "part", "BL1", "BL3", "BL19")
+    val tables = Silver.topicTables(df, "bond_info")
+    assert(tables.keySet == Set("bond_info", "transaction_info"))
+    assert(tables("bond_info").columns.toSeq ==
+      Seq("ed_code", "part", "BL1", "BL3"))
+    assert(tables("transaction_info").columns.toSeq ==
+      Seq("ed_code", "part", "BL1", "BL19"))
+    // with BL2 present it joins the primaries; BL3 stays a topic column
+    val withBl2 = Silver.topicTables(
+      Seq(("e1", "p1", "2020-01-01", "pool", "x")).toDF("ed_code", "part", "BL1", "BL2", "BL3"),
+      "bond_info")
+    assert(withBl2("bond_info").columns.toSeq ==
+      Seq("ed_code", "part", "BL1", "BL2", "BL3"))
+  }
+
   test("registry entries absent from the frame are tolerated") {
     val df = Seq(("y")).toDF("AL7")
     val out = Silver.castToDatatype(df, assetColumns)
