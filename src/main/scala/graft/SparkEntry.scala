@@ -33,15 +33,14 @@ object Sizing {
 /** Driver contract — see SURVEY.md §7.
   *
   * Query registry aggregated from the per-category query objects under
-  * [[graft.queries]]. Every entry with a DuckDB-expressible semantics
-  * also appears in [[oracleSql]]; the rest get the driver's weaker
-  * rows-only check.
+  * [[graft.queries]]. Every entry pairs its Spark query with the DuckDB
+  * SQL in [[oracleSql]] that its result is hash-compared against.
   */
 object SparkEntry {
 
   type Fn = (SparkSession, String) => DataFrame
 
-  private def registry(sizing: Sizing): Seq[(String, (Fn, Option[String]))] =
+  private def registry(sizing: Sizing): Seq[(String, (Fn, String))] =
     q.Relational.all ++ q.PipelineQ.all ++ q.ExtQ.all(sizing)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
@@ -57,7 +56,7 @@ object SparkEntry {
     registry(sizing).map { case (n, (fn, _)) => n -> fn }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
+    * the same parquet tables. */
   def oracleSql: Map[String, String] =
-    registry(Sizing.Gate).collect { case (n, (_, Some(sql))) => n -> sql }.toMap
+    registry(Sizing.Gate).map { case (n, (_, sql)) => n -> sql }.toMap
 }

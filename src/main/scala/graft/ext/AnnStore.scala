@@ -134,12 +134,6 @@ object AnnStore {
     Similarity.pqTopKRefinedFromCodes(queries, qId, qVec,
       idx.codes, idx.payload, idx.codebook, k, refine)
 
-  /** ADC-only serving (no refine) — [[Similarity.pqTopKFromCodes]]. */
-  def pqServeAdc(queries: DataFrame, qId: String, qVec: String,
-                 idx: PqServeIndex, k: Int): DataFrame =
-    Similarity.pqTopKFromCodes(queries, qId, qVec, idx.codes,
-      idx.codebook, k)
-
   // ------------------------------------------------------ sliced PQ
   /** Initialize a SLICED PQ index at `dir` with a FROZEN codebook —
     * the incremental counterpart of [[savePq]], whose save re-encodes
@@ -158,7 +152,7 @@ object AnnStore {
     *
     * [[loadPqSliced]] returns the same [[PqServeIndex]] handle as
     * [[loadPq]] (codes/payload as unions over committed slices), so
-    * [[pqServe]]/[[pqServeAdc]] work unchanged — and the serving
+    * [[pqServe]] works unchanged — and the serving
     * payload prune survives the union: the candidate-id predicate
     * pushes into EVERY slice's scan, and each slice's payload is
     * sorted on corpus_id at append, so row-group pruning holds

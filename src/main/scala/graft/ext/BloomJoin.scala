@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * probed row for any h, not h string digests, which is the
   * scan-speed difference at 100 TB (this filter lives and dies
   * inside one query, so no cross-engine digest stability is needed —
-  * unlike [[graft.io.BloomSkip]]'s on-disk md5-hex sidecars; a hash
-  * choice can only move the false-positive rate, never the result).
+  * a hash choice can only move the false-positive rate, never the
+  * result).
   * The bitset is built DISTRIBUTIVELY as per-word bit_or aggregates —
   * the driver materializes only the finished m/64-long word array
   * (16 KiB at defaults, bounded metadata like a sketch, never the

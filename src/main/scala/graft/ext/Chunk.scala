@@ -50,22 +50,6 @@ object Chunk {
           s => s("tok"))).cast("binary")).as("digest"))
   }
 
-  /** Cross-document shared-chunk discovery over [[cdcChunks]]: chunk
-    * digests appearing in more than one document, with occurrence
-    * counts — the content-defined analogue of duplicated-span
-    * discovery (x32), robust to span offsets. */
-  def sharedChunks(df: DataFrame, id: String, text: String,
-                   divisor: Int = 8, salt: String = "cdc",
-                   minTokens: Int = 2): DataFrame =
-    cdcChunks(df, id, text, divisor, salt)
-      .filter(col("n_tokens") >= minTokens)
-      .groupBy("digest")
-      .agg(
-        countDistinct(col("doc")).as("n_docs"),
-        count(lit(1)).as("n_occurrences"),
-        first(col("n_tokens")).as("n_tokens"))
-      .filter(col("n_docs") > 1)
-
   /** RAG context assembly — merge a retriever's per-chunk hits into
     * contiguous document SPANS before prompt construction: hits whose
     * chunk indices are within `maxGap` missing chunks of each other

@@ -95,58 +95,4 @@ object Classify {
         sum(coalesce(col("w"), lit(0L).cast(d38))).as("score"))
       .withColumn("pred", (col("score") > 0).cast("long"))
   }
-
-  /** Driver-side dense weight vector for the IN-ROW scoring form —
-    * the k-bounded codebook-collect pattern (≤ `buckets` rows by
-    * construction, never corpus-sized). The guard makes the long
-    * arithmetic downstream PROVABLY exact: [[scoreColumn]]'s running
-    * sum is bounded by maxDocTokens · max|w|, so every weight must fit
-    * in 62 − log₂(maxDocTokens) bits (|w| ≤ nPos·nNeg — big seeds
-    * produce big weights; a seed past the guard stays on the DECIMAL
-    * [[rocchioScore]] path, which never overflows). */
-  def weightVector(weights: DataFrame, buckets: Int,
-                   maxDocTokens: Int = 1 << 20): Array[Long] = {
-    require(maxDocTokens >= 1, "maxDocTokens must be positive")
-    val headroom = 62 - (63 - java.lang.Long.numberOfLeadingZeros(
-      maxDocTokens.toLong))
-    val arr = new Array[Long](buckets)
-    weights.collect().foreach { r =>
-      val bi = r.getDecimal(1).toBigInteger
-      require(bi.bitLength <= headroom,
-        s"weight $bi needs ${bi.bitLength} bits; with maxDocTokens = " +
-          s"$maxDocTokens only $headroom are exact — use rocchioScore")
-      arr(r.getLong(0).toInt) = bi.longValueExact
-    }
-    arr
-  }
-
-  /** In-row score (Σ_tokens w[bucket(token)], long) — stateless, so it
-    * scores a STREAM at ingest inside a plain select: no explode, no
-    * join, no aggregation state, the quality-filter-at-ingest shape
-    * (CCNet scores each crawl batch as it lands). Bit-equal to
-    * [[rocchioScore]]'s `score` for any doc with ≥ 1 token
-    * (spec-pinned); a tokenless or NULL-text doc scores 0 here (never
-    * NULL — a NULL pred would silently fall out of BOTH sides of a
-    * keep/reject filter) and has no [[rocchioScore]] row. Exact for
-    * docs up to `maxDocTokens` — pass the SAME bound the weight
-    * vector was guarded for ([[weightVector]]'s overflow proof is
-    * |score| ≤ maxDocTokens · max|w|): a longer doc could wrap the
-    * long fold and silently flip the keep/reject decision, so the
-    * bound is ENFORCED in-row — an over-long doc raises instead of
-    * scoring wrong (`raise_error` fails the batch loudly; filter
-    * such docs upstream if they are expected). */
-  def scoreColumn(text: Column, w: Array[Long],
-                  portableHash: Boolean = true,
-                  maxDocTokens: Int = 1 << 20): Column = {
-    val toks = coalesce(graft.functions.TokenNgrams.tokenNgrams(text, 1),
-      typedLit(Array.empty[String]))
-    when(size(toks) > maxDocTokens, raise_error(concat(
-        lit(s"scoreColumn: document exceeds maxDocTokens = $maxDocTokens ("),
-        size(toks).cast("string"),
-        lit(" tokens) — the long score could overflow; raise the bound " +
-          "(and re-derive the weight vector with it) or pre-filter"))))
-      .otherwise(aggregate(toks, lit(0L),
-        (acc, t) => acc + element_at(typedLit(w.toSeq),
-          (bucketOf(t, w.length, portableHash) + 1).cast("int"))))
-  }
 }

@@ -876,9 +876,9 @@ object Dedup {
     *
     * A FLOOD of identical signatures (boilerplate docs that survive
     * exact dedup as byte-different variants, or perceptually-flat
-    * images in [[graft.ext.Multimodal.imageNearDups]] where every
-    * blank thumbnail dHashes the same) shares every chunk in every
-    * band and would pair quadratically on one hot key; buckets over
+    * images where every blank thumbnail hashes the same) shares every
+    * chunk in every band and would pair quadratically on one hot key;
+    * buckets over
     * `maxBucket` members are deterministically sub-split by
     * [[Planes.cappedSelfPairs]], bounding candidate volume at
     * ~bands · n · maxBucket. Below the cap the candidate set is

@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
   * list or sorts the posting stream.
   *
   * At 100 TB the posting rows themselves would additionally be
-  * hash-sharded by term ([[graft.io.JsonLines.writeSharded]] /
-  * [[graft.io.Buckets]]) to make term lookups single-shard; the
-  * champion build here is that pipeline's final aggregation stage.
+  * hash-sharded (bucketed) by term to make term lookups single-shard;
+  * the champion build here is that pipeline's final aggregation stage.
   */
 object Index {
 

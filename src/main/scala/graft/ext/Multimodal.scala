@@ -1,63 +1,12 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing (north-star extension): image/audio/video
-  * payloads ride as opaque `binary` columns with a typed metadata
-  * struct; decode / feature-extraction runs partition-wise so a real
-  * codec drops in without touching the plan shape.
-  *
-  * Decode is REAL for PPM (P6) images — an uncompressed format whose
-  * header+raw-RGB layout needs no codec library: exact width/height
-  * and channel-mean features come from the actual pixels. Codec
-  * formats (JPEG/PNG/WAV/MP4 — no libs in this container) fall back
-  * to a deterministic STUB deriving fake metadata/features from the
-  * payload digest. The batching, schema, and feature shape are
-  * identical on both paths, so a real codec drops into the same slot.
+  * payloads ride as opaque `binary` columns next to their media type.
   */
 object Multimodal {
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("media_type", StringType, nullable = true),
-    StructField("meta", StructType(Seq(
-      StructField("n_bytes", IntegerType, nullable = false),
-      StructField("digest", StringType, nullable = false),
-      StructField("width", IntegerType, nullable = false),
-      StructField("height", IntegerType, nullable = false),
-      // audio-only fields, null for images/stubs
-      StructField("channels", IntegerType, nullable = true),
-      StructField("sample_rate", IntegerType, nullable = true),
-      StructField("duration_ms", IntegerType, nullable = true))),
-      nullable = true),
-    StructField("features", ArrayType(FloatType), nullable = true),
-  ))
-
-  /** Ingest a directory of real media files via Spark's binaryFile
-    * source: one row per file with the payload as a binary column,
-    * media type sniffed from the extension, and a stable media_id
-    * hashed from the path. Feeds [[decode]] directly — the actual
-    * files → binary column → partition-wise decode pipeline. The
-    * source is split-proof (each file is one row) and predicate
-    * pushdown on path/length/modificationTime prunes at the listing. */
-  def readMediaDir(spark: org.apache.spark.sql.SparkSession, dir: String,
-                   glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
-      .select(
-        xxhash64(col("path")).as("media_id"),
-        col("content").as("payload"),
-        when(lower(col("path")).endsWith(".ppm"), "image/x-portable-pixmap")
-          .when(lower(col("path")).endsWith(".wav"), "audio/wav")
-          .when(lower(col("path")).endsWith(".png"), "image/png")
-          .when(lower(col("path")).endsWith(".jpg") ||
-                lower(col("path")).endsWith(".jpeg"), "image/jpeg")
-          .otherwise("application/octet-stream").as("media_type"),
-        col("path"), col("length"))
 
   /** Attach a binary payload column synthesized from a text column —
     * the stand-in for reading real media files; keeps the pipeline
@@ -68,424 +17,4 @@ object Multimodal {
       when(col(id) % 3 === 0, "image/png")
         .when(col(id) % 3 === 1, "audio/wav")
         .otherwise("video/mp4").as("media_type"))
-
-  /** Parse a binary PPM (P6): `P6 <w> <h> <maxval=255>` header
-    * (whitespace-separated, `#` comments allowed) followed by one
-    * whitespace byte and w·h·3 raw RGB bytes. Returns
-    * (width, height, pixel bytes); None when the payload isn't P6. */
-  private[ext] def parsePpm(b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    if (b.length < 2 || b(0) != 'P' || b(1) != '6') return None
-    var i = 2
-    val vals = new Array[Int](3)
-    var v = 0
-    while (v < 3) {
-      while (i < b.length &&
-             (Character.isWhitespace(b(i).toChar) || b(i) == '#')) {
-        if (b(i) == '#') while (i < b.length && b(i) != '\n') i += 1
-        else i += 1
-      }
-      var x = 0
-      var any = false
-      while (i < b.length && b(i) >= '0' && b(i) <= '9') {
-        x = x * 10 + (b(i) - '0'); i += 1; any = true
-      }
-      if (!any) return None
-      vals(v) = x; v += 1
-    }
-    if (i >= b.length || !Character.isWhitespace(b(i).toChar)) return None
-    i += 1
-    val (w, h, maxv) = (vals(0), vals(1), vals(2))
-    // size math in Long with sane dim bounds: a crafted header like
-    // w=h=100000 overflows Int (w*h*3), which would bypass the length
-    // guard and blow up copyOfRange inside the task
-    if (maxv != 255 || w <= 0 || h <= 0 || w > 32768 || h > 32768 ||
-        b.length.toLong - i < w.toLong * h * 3) return None
-    Some((w, h, java.util.Arrays.copyOfRange(b, i, i + w * h * 3)))
-  }
-
-  /** Parse a PCM WAV (RIFF/WAVE): walks the chunk list for `fmt ` and
-    * `data`. Returns (channels, sampleRate, bitsPerSample, samples);
-    * None unless format tag 1 (uncompressed PCM, the only WAV flavor
-    * that needs no codec). */
-  private[ext] def parseWav(b: Array[Byte])
-      : Option[(Int, Int, Int, Array[Byte])] = {
-    def ascii(off: Int, s: String): Boolean =
-      off + s.length <= b.length &&
-        s.indices.forall(i => b(off + i) == s.charAt(i).toByte)
-    def le16(off: Int): Int =
-      java.lang.Byte.toUnsignedInt(b(off)) |
-        (java.lang.Byte.toUnsignedInt(b(off + 1)) << 8)
-    def le32(off: Int): Int =
-      le16(off) | (le16(off + 2) << 16)
-    if (b.length < 44 || !ascii(0, "RIFF") || !ascii(8, "WAVE")) return None
-    var i = 12
-    var fmt: Option[(Int, Int, Int)] = None
-    var data: Option[Array[Byte]] = None
-    while (i + 8 <= b.length && (fmt.isEmpty || data.isEmpty)) {
-      val size = le32(i + 4)
-      if (size < 0 || i + 8 + size > b.length) return None
-      if (ascii(i, "fmt ") && size >= 16) {
-        if (le16(i + 8) != 1) return None // not plain PCM
-        fmt = Some((le16(i + 10), le32(i + 12), le16(i + 22)))
-      } else if (ascii(i, "data")) {
-        data = Some(java.util.Arrays.copyOfRange(b, i + 8, i + 8 + size))
-      }
-      i += 8 + size + (size & 1) // chunks are word-aligned
-    }
-    for ((ch, rate, bits) <- fmt; d <- data
-         if ch > 0 && rate > 0 && bits == 16)
-      yield (ch, rate, bits, d)
-  }
-
-  /** Partition-wise decode. PPM payloads decode for real (exact dims;
-    * features = per-channel means then a luminance histogram over the
-    * remaining slots). Anything else takes the deterministic stub path
-    * (fake dims/features from the payload digest) — swap a codec in
-    * for those without touching schema or plan shape. */
-  def decode(df: DataFrame, featureDim: Int = 8): DataFrame = {
-    require(featureDim >= 3, "featureDim must fit the 3 channel means")
-    val outSchema = StructType(df.schema.fields ++ Seq(
-      StructField("meta", mediaSchema("meta").dataType, nullable = true),
-      StructField("features", ArrayType(FloatType), nullable = true)))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      val md = java.security.MessageDigest.getInstance("MD5")
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]]("payload")
-        if (payload == null) Row.fromSeq(r.toSeq ++ Seq(null, null))
-        else {
-          md.reset()
-          val digest = md.digest(payload)
-          val hex = digest.map("%02x".format(_)).mkString
-          // a crafted/corrupt payload that slips past the parsers must
-          // degrade to the stub row, not fail the whole task
-          val real = scala.util.Try(parsePpm(payload) match {
-            case Some((w, h, px)) => // REAL image path
-              val n = w * h
-              val sums = new Array[Long](3)
-              val bins = math.max(featureDim - 3, 0)
-              val hist = new Array[Long](math.max(bins, 1))
-              var p = 0
-              while (p < n) {
-                val rr = java.lang.Byte.toUnsignedInt(px(3 * p))
-                val gg = java.lang.Byte.toUnsignedInt(px(3 * p + 1))
-                val bb = java.lang.Byte.toUnsignedInt(px(3 * p + 2))
-                sums(0) += rr; sums(1) += gg; sums(2) += bb
-                if (bins > 0) {
-                  val luma = (rr * 299 + gg * 587 + bb * 114) / 1000
-                  hist(math.min(luma * bins / 256, bins - 1)) += 1
-                }
-                p += 1
-              }
-              val feats = (sums.map(s => s.toFloat / n / 255.0f) ++
-                (0 until bins).map(i => hist(i).toFloat / n)).toArray
-              Some(Row.fromSeq(r.toSeq ++ Seq(
-                Row(payload.length, hex, w, h, null, null, null), feats)))
-            case None => parseWav(payload).map {
-              case (ch, rate, _, d) => // REAL audio path (16-bit PCM)
-                val nSamples = d.length / 2 / ch
-                val durMs = (nSamples.toLong * 1000 / rate).toInt
-                // per-channel RMS in the leading feature slots
-                val sq = new Array[Double](ch)
-                var s = 0
-                while (s < nSamples) {
-                  var c = 0
-                  while (c < ch) {
-                    val off = 2 * (s * ch + c)
-                    val v = ((d(off) & 0xff) | (d(off + 1) << 8)).toShort / 32768.0
-                    sq(c) += v * v
-                    c += 1
-                  }
-                  s += 1
-                }
-                val feats = (0 until featureDim).map { i =>
-                  if (i < ch && nSamples > 0)
-                    math.sqrt(sq(i) / nSamples).toFloat
-                  else 0.0f
-                }.toArray
-                Row.fromSeq(r.toSeq ++ Seq(
-                  Row(payload.length, hex, 0, 0, ch, rate, durMs), feats))
-            }
-          }).toOption.flatten
-          real.getOrElse { // stub path: no codec in this container
-            val width = 16 + (java.lang.Byte.toUnsignedInt(digest(0)) % 64)
-            val height = 16 + (java.lang.Byte.toUnsignedInt(digest(1)) % 64)
-            val feats = (0 until featureDim).map(i =>
-              (java.lang.Byte.toUnsignedInt(digest(i % 16)) / 255.0f)).toArray
-            Row.fromSeq(r.toSeq ++ Seq(
-              Row(payload.length, hex, width, height, null, null, null),
-              feats))
-          }
-        }
-      }
-    }(enc)
-  }
-
-  /** Former name of [[decode]] (everything non-PPM still stubs). */
-  def decodeStub(df: DataFrame, featureDim: Int = 8): DataFrame =
-    decode(df, featureDim)
-
-  /** Partition-wise nearest-neighbour image resize: PPM (P6) payloads
-    * are resampled for real into a new `resized` P6 payload of
-    * `outW`×`outH` (floor source mapping sx = x·w/outW — the standard
-    * NN kernel, deterministic); payloads no parser claims resize to
-    * null (a codec library drops into the same slot, like [[decode]]).
-    * Same mapPartitions batch shape as decode: no shuffle, no UDF
-    * registry, schema appended not rewritten — at 100 TB this is a
-    * pure scan-transform whose cost is the pixel loop. */
-  def resize(df: DataFrame, outW: Int, outH: Int): DataFrame = {
-    require(outW > 0 && outH > 0 && outW <= 32768 && outH <= 32768,
-      "resize dims must be in 1..32768")
-    val outSchema = StructType(df.schema.fields :+
-      StructField("resized", BinaryType, nullable = true))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]]("payload")
-        val resized: Array[Byte] =
-          if (payload == null) null
-          else scala.util.Try(parsePpm(payload).map { case (w, h, px) =>
-            val header = s"P6\n$outW $outH\n255\n".getBytes("US-ASCII")
-            val out = new Array[Byte](header.length + outW * outH * 3)
-            System.arraycopy(header, 0, out, 0, header.length)
-            var y = 0
-            while (y < outH) {
-              val sy = (y.toLong * h / outH).toInt
-              var x = 0
-              while (x < outW) {
-                val sx = (x.toLong * w / outW).toInt
-                val si = 3 * (sy * w + sx)
-                val di = header.length + 3 * (y * outW + x)
-                out(di) = px(si); out(di + 1) = px(si + 1); out(di + 2) = px(si + 2)
-                x += 1
-              }
-              y += 1
-            }
-            out
-          }.orNull).getOrElse(null)
-        Row.fromSeq(r.toSeq :+ resized)
-      }
-    }(enc)
-  }
-
-  /** 64-bit perceptual difference hash (dHash) over real P6 payloads:
-    * the image is nearest-neighbour-sampled onto a 9×8 luma grid (the
-    * same floor kernel as [[resize]], the same integer 299/587/114
-    * luma as [[decode]]) and bit r·8+c is set when
-    * grid(r,c) < grid(r,c+1) — the sign pattern of horizontal
-    * gradients, which survives rescaling and small edits that change
-    * every byte-level digest. Appends `dhash` (LongType; null when no
-    * parser claims the payload). Pure scan-transform, no shuffle;
-    * pairing happens in [[imageNearDups]]. */
-  def dHash(df: DataFrame): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("dhash", LongType, nullable = true))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]]("payload")
-        val sig: java.lang.Long =
-          if (payload == null) null
-          else scala.util.Try(parsePpm(payload).map { case (w, ht, px) =>
-            val luma = Array.ofDim[Int](8, 9)
-            var gy = 0
-            while (gy < 8) {
-              val sy = (gy.toLong * ht / 8).toInt
-              var gx = 0
-              while (gx < 9) {
-                val sx = (gx.toLong * w / 9).toInt
-                val si = 3 * (sy * w + sx)
-                luma(gy)(gx) =
-                  (java.lang.Byte.toUnsignedInt(px(si)) * 299 +
-                   java.lang.Byte.toUnsignedInt(px(si + 1)) * 587 +
-                   java.lang.Byte.toUnsignedInt(px(si + 2)) * 114) / 1000
-                gx += 1
-              }
-              gy += 1
-            }
-            var h = 0L
-            var bit = 0
-            while (bit < 64) {
-              if (luma(bit / 8)(bit % 8) < luma(bit / 8)(bit % 8 + 1))
-                h |= (1L << bit)
-              bit += 1
-            }
-            java.lang.Long.valueOf(h)
-          }.orNull).getOrElse(null)
-        Row.fromSeq(r.toSeq :+ sig)
-      }
-    }(enc)
-  }
-
-  /** Perceptual image near-dup pairs: [[dHash]] signatures paired
-    * inside a hamming ball via the same pigeonhole banding as text
-    * SimHash ([[Dedup.simhashCandidates]] — k flips cannot touch all
-    * k+1 disjoint signature chunks) and then EXACTLY hamming-verified.
-    * Returns (id_a, id_b, hamming); payloads no parser claims simply
-    * don't participate. The signature step is scan-speed; the pair
-    * join shuffles 16-byte (id, chunk) rows only — at 100 TB of
-    * images the bytes never leave the scan.
-    *
-    * dHash's hot key is REALISTIC, not adversarial: every
-    * perceptually-flat image (blank thumbnail, test card, black
-    * frame) hashes to the same signature while differing in bytes,
-    * so upstream exact byte-dedup does NOT pre-empt the flood the
-    * way it largely does for text SimHash. The shared oversized-
-    * bucket cap (`maxBucket`, [[Planes.cappedSelfPairs]] through
-    * [[Dedup.simhashCandidates]]) bounds that flood's candidate
-    * volume at ~bands · n · maxBucket; [[Dedup.simhashPairs]]
-    * documents the recall trade inside a capped bucket. */
-  def imageNearDups(df: DataFrame, id: String, maxHamming: Int,
-                    maxBucket: Int = 4096): DataFrame = {
-    val sigs = dHash(df).filter(col("dhash").isNotNull)
-      .select(col(id).as("_id"), col("dhash").as("sig"))
-      .localCheckpoint()
-    Dedup.simhashCandidates(sigs, maxHamming, maxBucket)
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
-
-  /** 64-bit audio fingerprint over real 16-bit-PCM WAV payloads: the
-    * channel-summed sample stream is cut into 65 equal windows, each
-    * window's total absolute amplitude (exact integer energy) is
-    * compared with its successor, and bit j is set when
-    * energy(j) < energy(j+1) — the sign pattern of the energy
-    * envelope's derivative (landmark-lite). Adjacent-window
-    * comparison makes the fingerprint invariant to uniform gain
-    * (both operands scale together) and robust to byte-level
-    * re-encodings — the audio analogue of [[dHash]]'s horizontal
-    * gradient signs. Appends `afp` (LongType; null when no parser
-    * claims the payload or the clip has fewer than 65 frames — too
-    * short for an envelope). Pure scan-transform, no shuffle;
-    * pairing happens in [[audioNearDups]]. */
-  def audioFingerprint(df: DataFrame): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+
-      StructField("afp", LongType, nullable = true))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]]("payload")
-        val sig: java.lang.Long =
-          if (payload == null) null
-          else scala.util.Try(parseWav(payload).flatMap {
-            case (ch, _, _, d) =>
-              val frames = d.length / (2 * ch)
-              if (frames < 65) None
-              else {
-                val win = frames / 65
-                val energy = new Array[Long](65)
-                var wdx = 0
-                while (wdx < 65) {
-                  var e = 0L
-                  var f = wdx * win
-                  val end = f + win
-                  while (f < end) {
-                    var s = 0L
-                    var c = 0
-                    while (c < ch) {
-                      val off = 2 * (f * ch + c)
-                      s += ((d(off) & 0xff) | (d(off + 1) << 8)).toShort.toLong
-                      c += 1
-                    }
-                    e += math.abs(s)
-                    f += 1
-                  }
-                  energy(wdx) = e
-                  wdx += 1
-                }
-                var h = 0L
-                var bit = 0
-                while (bit < 64) {
-                  if (energy(bit) < energy(bit + 1)) h |= (1L << bit)
-                  bit += 1
-                }
-                Some(java.lang.Long.valueOf(h))
-              }
-          }.orNull).getOrElse(null)
-        Row.fromSeq(r.toSeq :+ sig)
-      }
-    }(enc)
-  }
-
-  /** Perceptual audio near-dup pairs: [[audioFingerprint]] signatures
-    * through the SAME capped pigeonhole banding + exact hamming
-    * verify as [[imageNearDups]] ([[Dedup.simhashCandidates]]).
-    * Returns (id_a, id_b, hamming); payloads no parser claims simply
-    * don't participate. Audio's realistic hot key mirrors the flat
-    * image: silence and constant test tones all fingerprint to the
-    * same constant-envelope signature while differing in bytes —
-    * bounded by the shared oversized-bucket cap, recall trade
-    * documented at [[Dedup.simhashPairs]]. */
-  def audioNearDups(df: DataFrame, id: String, maxHamming: Int,
-                    maxBucket: Int = 4096): DataFrame = {
-    val sigs = audioFingerprint(df).filter(col("afp").isNotNull)
-      .select(col(id).as("_id"), col("afp").as("sig"))
-      .localCheckpoint()
-    Dedup.simhashCandidates(sigs, maxHamming, maxBucket)
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-  }
-
-  /** Partition-wise PCM WAV resample (nearest-sample / zero-order
-    * hold): 16-bit PCM payloads are re-emitted as a valid RIFF/WAVE
-    * at `targetRate` — output sample i copies input sample
-    * floor(i·inRate/targetRate), all channels interleaved. Payloads no
-    * parser claims resample to null, like [[resize]]. Duration is
-    * preserved (±1 sample); a real resampler (windowed sinc) drops
-    * into the same slot. Pure scan-transform, no shuffle. */
-  def resampleAudio(df: DataFrame, targetRate: Int): DataFrame = {
-    require(targetRate > 0 && targetRate <= 384000,
-      "targetRate must be in 1..384000")
-    val outSchema = StructType(df.schema.fields :+
-      StructField("resampled", BinaryType, nullable = true))
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema)
-    df.mapPartitions { rows =>
-      rows.map { r =>
-        val payload = r.getAs[Array[Byte]]("payload")
-        val out: Array[Byte] =
-          if (payload == null) null
-          else scala.util.Try(parseWav(payload).map { case (ch, rate, _, d) =>
-            val nIn = d.length / 2 / ch
-            val nOut = (nIn.toLong * targetRate / rate).toInt
-            val dataLen = nOut * ch * 2
-            val bb = java.nio.ByteBuffer.allocate(44 + dataLen)
-              .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            bb.put("RIFF".getBytes("US-ASCII")).putInt(36 + dataLen)
-              .put("WAVE".getBytes("US-ASCII"))
-              .put("fmt ".getBytes("US-ASCII")).putInt(16)
-              .putShort(1).putShort(ch.toShort).putInt(targetRate)
-              .putInt(targetRate * ch * 2).putShort((ch * 2).toShort).putShort(16)
-              .put("data".getBytes("US-ASCII")).putInt(dataLen)
-            var i = 0
-            while (i < nOut) {
-              val si = (i.toLong * rate / targetRate).toInt
-              var c = 0
-              while (c < ch) {
-                val off = 2 * (si * ch + c)
-                bb.put(d(off)).put(d(off + 1))
-                c += 1
-              }
-              i += 1
-            }
-            bb.array()
-          }.orNull).getOrElse(null)
-        Row.fromSeq(r.toSeq :+ out)
-      }
-    }(enc)
-  }
-
-  /** Frame-sample stub: every `stride`-byte window of the payload
-    * becomes one "frame" row — the explode shape a video frame-sampler
-    * produces, with per-frame digests. */
-  def frameSample(df: DataFrame, stride: Int = 64): DataFrame = {
-    val nFrames = greatest(floor(length(col("payload")) / stride).cast("int"), lit(1))
-    df.select(col("media_id"),
-        posexplode(transform(sequence(lit(0), nFrames - 1),
-          i => col("payload").substr(i * stride + 1, lit(stride))))
-          .as(Seq("frame_no", "frame_payload")))
-      .withColumn("frame_digest", md5(col("frame_payload")))
-      .drop("frame_payload")
-  }
 }

@@ -706,7 +706,7 @@ object TextAnalysis {
     * filtering are few; the final orderBy+limit is a TakeOrdered, no
     * full sort). Counts multiply as c_ab·N ≤ N² and c_a·c_b ≤ N² —
     * BIGINT-safe to N ≈ 3·10⁹ bigrams; shard to DECIMAL beyond. */
-  def collocations(df: DataFrame, id: String, text: String,
+  def collocations(df: DataFrame, text: String,
                    minCount: Long = 5L, k: Int = 50): DataFrame = {
     require(minCount >= 1 && k >= 1, "minCount and k must be positive")
     val toks = filter(tokens(col(text)), t => t =!= "")

@@ -274,27 +274,6 @@ object Lake {
     stats
   }
 
-  /** One partition's file-level stats. */
-  final case class PartitionStat(part: String, files: Int, bytes: Long)
-
-  /** FS-level partition inventory (files + bytes per `part=` dir) —
-    * the observability feed for [[compact]] (too many files?) and
-    * [[vacuum]] (stale partitions?) decisions. Listing only; never
-    * opens a file. */
-  def partitionStats(spark: SparkSession, root: String,
-                     format: String = "parquet"): Seq[PartitionStat] = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(rootPath)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("part="))
-      .map { p =>
-        val files = fs.listStatus(p.getPath)
-          .filter(f => f.isFile && f.getPath.getName.endsWith(s".$format"))
-        PartitionStat(p.getPath.getName.stripPrefix("part="),
-          files.length, files.map(_.getLen).sum)
-      }.toSeq.sortBy(_.part)
-  }
-
   /** Retention: delete every `part=` partition whose VALUE fails
     * `keep`. FS-level and partition-scoped (readers of kept partitions
     * never see a half-deleted table); returns the deleted partition

@@ -1,10 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Z-order (Morton-curve) data layout for multi-dimensional data
-  * skipping.
+/** Z-order (Morton-curve) key for multi-dimensional data skipping.
   *
   * A table range-partitioned and sorted by the interleaved-bit key of
   * two filter columns clusters BOTH dimensions at once: each output
@@ -42,15 +41,4 @@ object ZOrder {
       Seq(s"((($x >> $i) & 1) << ${2 * i})",
           s"((($y >> $i) & 1) << ${2 * i + 1})")
     }.mkString(" | ")
-
-  /** Write `df` Z-ordered on (xCol, yCol): range-partition by the
-    * Morton key into `nFiles` files, sort within each, drop the key.
-    * One shuffle, paid once at write time. */
-  def zorderWrite(df: DataFrame, xCol: String, yCol: String,
-                  path: String, nFiles: Int, bits: Int = 16): Unit =
-    df.withColumn("_z", zValue(col(xCol), col(yCol), bits))
-      .repartitionByRange(nFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
 }

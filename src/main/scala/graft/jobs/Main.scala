@@ -74,6 +74,8 @@ object Main {
           spark: org.apache.spark.sql.SparkSession): Unit = {
     def req(k: String): String =
       opts.getOrElse(k, sys.error(s"missing required --$k"))
+    def badKind(kind: String): Nothing = sys.error(
+      s"invalid --kind $kind; expected semantic, simhash, minhash, pq or ivfpq")
 
     val stageName = req("stage-name")
     val stage = stages.find(_.name == stageName)
@@ -181,9 +183,7 @@ object Main {
               graft.ext.AnnStore.appendIvfPq(src, dir, id, vec)
             } else graft.ext.AnnStore.saveIvfPq(built, dir,
               withPayload = withPayload)
-          case other => sys.error(
-            s"invalid --kind $other; expected semantic, simhash, " +
-              "minhash, pq or ivfpq")
+          case other => badKind(other)
         }
       case IndexProbe =>
         val probe = spark.read.parquet(req("probe"))
@@ -247,8 +247,7 @@ object Main {
               if (sliced) graft.streaming.RefIndexSlices.loadMinHash(spark, dir)
               else graft.streaming.RefIndexStore.loadMinHash(spark, dir),
               opts.getOrElse("id", "doc_id"), opts.getOrElse("text", "text"))
-          case other => sys.error(
-            s"invalid --kind $other; expected semantic, simhash or minhash")
+          case other => badKind(other)
         }
         // natural write parallelism: a dup-heavy probe can yield an
         // arbitrarily large match set, so never funnel it through one
@@ -286,8 +285,7 @@ object Main {
               n = opts.getOrElse("ngram", "3").toInt,
               threshold = opts.getOrElse("threshold", "0.7").toDouble,
               maxBucket = opts.getOrElse("max-bucket", "4096").toInt)
-          case other => sys.error(
-            s"invalid --kind $other; expected semantic, simhash or minhash")
+          case other => badKind(other)
         }
       case IndexCompact =>
         // dispatch on the stored kind: the sliced ANN stores compact

@@ -66,8 +66,8 @@ case class RangeJoinRule(spark: org.apache.spark.sql.SparkSession)
     if (w <= 0) return plan
     plan.transformUp {
       case j @ Join(left, right, Inner, Some(cond), hint)
-          if rewritable(j, left, right, cond).isDefined =>
-        val (p, lo, hi, pointOnLeft) = rewritable(j, left, right, cond).get
+          if rewritable(left, right, cond).isDefined =>
+        val (p, lo, hi, pointOnLeft) = rewritable(left, right, cond).get
         val (points, intervals) = if (pointOnLeft) (left, right) else (right, left)
         // points side: one bucket column
         val pb = Alias(bucket(p, w), "_graft_pb")()
@@ -98,7 +98,7 @@ case class RangeJoinRule(spark: org.apache.spark.sql.SparkSession)
   /** Matches a condition that is exactly the two range bounds of one
     * point between one interval, with no equality conjunct. Returns
     * (point, lo, hi, pointOnLeft). */
-  private def rewritable(j: Join, left: LogicalPlan, right: LogicalPlan,
+  private def rewritable(left: LogicalPlan, right: LogicalPlan,
                          cond: Expression)
       : Option[(Expression, Expression, Expression, Boolean)] = {
     val conjuncts = splitConjuncts(cond)

@@ -1294,8 +1294,7 @@ object ExtQ {
       |ORDER BY k_a, k_b""".stripMargin)
 
   /** Z-order (Morton) layout key over (o_custkey, o_orderkey) —
-    * the multi-dimensional clustering key behind io.ZOrder.zorderWrite,
-    * verified bit-for-bit against integer bit ops in the oracle. */
+    * the multi-dimensional clustering key of io.ZOrder, verified bit-for-bit against integer bit ops in the oracle. */
   private val x36: (Fn, String) = (
     (s, d) => {
       import s.implicits._
@@ -1588,7 +1587,7 @@ object ExtQ {
     * digit count of an integer quotient, negated below ratio 1. */
   private val x55: (Fn, String) = (
     (s, d) => {
-      TextAnalysis.collocations(t(s, d, "documents"), "doc_id", "text",
+      TextAnalysis.collocations(t(s, d, "documents"), "text",
         minCount = 5L, k = 50)
     },
     """WITH tk AS (
@@ -7075,223 +7074,223 @@ object ExtQ {
 
   /** Every extension query with its oracle SQL; the 22 sized ones
     * (ANN query panels, sampled-truth audits) run at `z`. */
-  def all(z: Sizing): Seq[(String, (Fn, Option[String]))] = Seq(
-    "x01_dedup_exact" -> (x01._1, Some(x01._2)),
-    "x02_dedup_ngram_jaccard" -> (x02._1, Some(x02._2)),
-    "x03_dedup_minhash_lsh" -> (x03._1, Some(x03._2)),
-    "x04_dedup_simhash" -> (x04._1, Some(x04._2)),
-    "x05_dedup_embedding_cosine" -> (x05._1, Some(x05._2)),
-    "x06_ann_bruteforce_topk" -> (x06._1, Some(x06._2)),
-    "x07_text_stats_quality" -> (x07._1, Some(x07._2)),
-    "x08_langid_markers" -> (x08._1, Some(x08._2)),
-    "x09_doc_fingerprint" -> (x09._1, Some(x09._2)),
-    "x10_multimodal_metadata" -> (x10._1, Some(x10._2)),
-    "x11_salted_skew_join" -> (x11._1, Some(x11._2)),
-    "x12_asof_join" -> (x12._1, Some(x12._2)),
-    "x13_sessionize" -> (x13._1, Some(x13._2)),
-    "x14_ann_ivf_topk" -> (x14._1, Some(x14._2)),
-    "x15_ann_lsh_topk" -> (x15._1, Some(x15._2)),
-    "x16_subword_punct" -> (x16._1, Some(x16._2)),
-    "x17_stop_shingles" -> (x17._1, Some(x17._2)),
-    "x18_dedup_clusters" -> (x18._1, Some(x18._2)),
-    "x19_stratified_sample" -> (x19._1, Some(x19._2)),
-    "x20_pack_contexts" -> (x20._1, Some(x20._2)),
-    "x21_term_relevance" -> (x21._1, Some(x21._2)),
-    "x22_range_join_sessions" -> (x22._1, Some(x22._2)),
-    "x23_decontamination" -> (x23._1, Some(x23._2)),
-    "x24_repetition_signals" -> (x24._1, Some(x24._2)),
-    "x25_chunk_tokens" -> (x25._1, Some(x25._2)),
-    "x26_embedding_centroids" -> (x26._1, Some(x26._2)),
-    "x27_quality_quantile" -> (x27._1, Some(x27._2)),
-    "x28_vocab_coverage" -> (x28._1, Some(x28._2)),
-    "x29_budget_curation" -> (x29._1, Some(x29._2)),
-    "x30_embedding_quantize" -> (x30._1, Some(x30._2)),
-    "x31_gopher_rules" -> (x31._1, Some(x31._2)),
-    "x32_duplicate_chunks" -> (x32._1, Some(x32._2)),
-    "x33_incremental_dedup" -> (x33._1, Some(x33._2)),
-    "x34_pii_redaction" -> (x34._1, Some(x34._2)),
-    "x35_fuzzy_blocked_join" -> (x35._1, Some(x35._2)),
-    "x36_zorder_key" -> (x36._1, Some(x36._2)),
-    "x37_bpe_pair_counts" -> (x37._1, Some(x37._2)),
-    "x38_mixture_sampling" -> (x38._1, Some(x38._2)),
-    "x39_skew_key_profile" -> (x39._1, Some(x39._2)),
-    "x40_snapshot_diff" -> (x40._1, Some(x40._2)),
-    "x41_native_topk" -> (x41._1, Some(x41._2)),
-    "x42_pagerank" -> (x42._1, Some(x42._2)),
-    "x43_corpus_drift" -> (x43._1, Some(x43._2)),
-    "x44_histogram_profile" -> (x44._1, Some(x44._2)),
-    "x45_simhash_pairs" -> (x45._1, Some(x45._2)),
-    "x46_dedup_corpus" -> (x46._1, Some(x46._2)),
-    "x47_decontaminate_spans" -> (x47._1, Some(x47._2)),
-    "x48_unigram_surprisal" -> (x48._1, Some(x48._2)),
-    "x49_column_profile" -> (x49._1, Some(x49._2)),
-    "x50_incremental_neardup" -> (x50._1, Some(x50._2)),
-    "x51_bigram_surprisal" -> (x51._1, Some(x51._2)),
-    "x52_triangle_counts" -> (x52._1, Some(x52._2)),
-    "x53_bm25_top_terms" -> (x53._1, Some(x53._2)),
-    "x54_robust_outliers" -> (x54._1, Some(x54._2)),
-    "x55_pmi_collocations" -> (x55._1, Some(x55._2)),
-    "x56_kcore_members" -> (x56._1, Some(x56._2)),
-    "x57_label_propagation" -> (x57._1, Some(x57._2)),
-    "x58_heavy_hitters" -> (x58._1, Some(x58._2)),
-    "x59_funnel_stages" -> (x59._1, Some(x59._2)),
-    "x60_retention_cohorts" -> (x60._1, Some(x60._2)),
-    "x61_fd_discovery" -> (x61._1, Some(x61._2)),
-    "x62_semantic_dedup_int8" -> (x62._1, Some(x62._2)),
-    "x63_quantile_sketch" -> (x63._1, Some(x63._2)),
-    "x64_weighted_sample" -> (x64._1, Some(x64._2)),
-    "x65_inverted_index" -> (x65._1, Some(x65._2)),
-    "x66_source_overlap" -> (x66._1, Some(x66._2)),
-    "x67_checksum_pii" -> (x67._1, Some(x67._2)),
-    "x68_cdc_chunks" -> (x68._1, Some(x68._2)),
-    "x69_kmeans_assign" -> (x69._1, Some(x69._2)),
-    "x70_url_canonicalize" -> (x70._1, Some(x70._2)),
-    "x71_skipgram_counts" -> (x71._1, Some(x71._2)),
-    "x72_decayed_score" -> (x72._1, Some(x72._2)),
-    "x73_transition_counts" -> (x73._1, Some(x73._2)),
-    "x74_funnel_within" -> (x74._1, Some(x74._2)),
-    "x75_boilerplate_prune" -> (x75._1, Some(x75._2)),
-    "x76_containment_pairs" -> (x76._1, Some(x76._2)),
-    "x77_hard_negatives" -> (x77._1, Some(x77._2)),
-    "x78_session_paths" -> (x78._1, Some(x78._2)),
-    "x79_trailing_window" -> (x79._1, Some(x79._2)),
-    "x80_count_of_counts" -> (x80._1, Some(x80._2)),
-    "x81_gap_fill" -> (x81._1, Some(x81._2)),
-    "x82_interval_coverage" -> (x82._1, Some(x82._2)),
-    "x83_hits" -> (x83._1, Some(x83._2)),
-    "x84_rrf_fusion" -> (x84._1, Some(x84._2)),
-    "x85_negative_sampling" -> (x85._1, Some(x85._2)),
-    "x86_equal_freq_bins" -> (x86._1, Some(x86._2)),
-    "x87_kmeans_lloyd" -> (x87._1, Some(x87._2)),
-    "x88_hll_shard_union" -> (x88._1, Some(x88._2)),
-    "x89_basket_lift" -> (x89._1, Some(x89._2)),
-    "x90_epoch_shuffle" -> (x90._1, Some(x90._2)),
-    "x91_overlap_spans" -> (x91._1, Some(x91._2)),
-    "x92_rendezvous_shard" -> (x92._1, Some(x92._2)),
-    "x93_kn_continuation" -> (x93._1, Some(x93._2)),
-    "x94_internal_repeats" -> (x94._1, Some(x94._2)),
-    "x95_two_hop_counts" -> (x95._1, Some(x95._2)),
-    "x96_degree_profile" -> (x96._1, Some(x96._2)),
-    "x97_weighted_jaccard" -> (x97._1, Some(x97._2)),
-    "x98_kmv_join_estimate" -> (x98._1, Some(x98._2)),
-    "x99_ks_distance" -> (x99._1, Some(x99._2)),
-    "x100_benford_profile" -> (x100._1, Some(x100._2)),
-    "x101_pareto_frontier" -> (x101._1, Some(x101._2)),
-    "x102_sorted_neighbor_pairs" -> (x102._1, Some(x102._2)),
-    "x103_trend_slope" -> (x103._1, Some(x103._2)),
-    "x104_retention_ppm" -> (x104._1, Some(x104._2)),
-    "x105_bfs_distances" -> (x105._1, Some(x105._2)),
-    "x106_token_entropy" -> (x106._1, Some(x106._2)),
-    "x107_cms_estimates" -> (x107._1, Some(x107._2)),
-    "x108_fs_linkage" -> (x108._1, Some(x108._2)),
-    "x109_personalized_pagerank" -> (x109._1, Some(x109._2)),
-    "x110_shingle_novelty" -> (x110._1, Some(x110._2)),
-    "x111_privacy_audit" -> (x111._1, Some(x111._2)),
-    "x112_leakage_safe_split" -> (x112._1, Some(x112._2)),
-    "x113_auc_exact" -> (x113._1, Some(x113._2)),
-    "x114_calibration_bins" -> (x114._1, Some(x114._2)),
-    "x115_cohen_kappa" -> (x115._1, Some(x115._2)),
-    "x116_retrieval_eval" -> (x116._1, Some(x116._2)),
-    "x117_group_panel_sample" -> (x117._1, Some(x117._2)),
-    "x118_int8_gram" -> (x118._1, Some(x118._2)),
-    "x119_modularity" -> (x119._1, Some(x119._2)),
-    "x120_information_gain" -> (x120._1, Some(x120._2)),
-    "x121_weighted_median" -> (x121._1, Some(x121._2)),
-    "x122_kl_drift" -> (x122._1, Some(x122._2)),
-    "x123_clustering_coefficient" -> (x123._1, Some(x123._2)),
-    "x124_spearman" -> (x124._1, Some(x124._2)),
-    "x125_chao1_vocab" -> (x125._1, Some(x125._2)),
-    "x126_domain_cap" -> (x126._1, Some(x126._2)),
-    "x127_mixture_quota" -> (x127._1, Some(x127._2)),
-    "x128_bloom_semi_join" -> (x128._1, Some(x128._2)),
-    "x129_normalize_text" -> (x129._1, Some(x129._2)),
-    "x130_concentration" -> (x130._1, Some(x130._2)),
-    "x131_rolling_mad" -> (x131._1, Some(x131._2)),
-    "x132_component_sizes" -> (x132._1, Some(x132._2)),
-    "x133_percentile_rank" -> (x133._1, Some(x133._2)),
-    "x134_mine_positives" -> (x134._1, Some(x134._2)),
-    "x135_decile_lift" -> (x135._1, Some(x135._2)),
-    "x136_quantile_map" -> (x136._1, Some(x136._2)),
-    "x137_lag_autocorr" -> (x137._1, Some(x137._2)),
-    "x138_zipf_slope" -> (x138._1, Some(x138._2)),
-    "x139_trimmed_mean" -> (x139._1, Some(x139._2)),
-    "x140_class_tfidf" -> (x140._1, Some(x140._2)),
-    "x141_ab_chisq" -> (x141._1, Some(x141._2)),
-    "x142_lsh_banding_audit" -> (x142._1(z), Some(x142._2)),
-    "x143_principal_direction" -> (x143._1, Some(x143._2)),
-    "x144_bootstrap_ci" -> (x144._1, Some(x144._2)),
-    "x145_winnow_fingerprints" -> (x145._1, Some(x145._2)),
-    "x146_term_burstiness" -> (x146._1, Some(x146._2)),
-    "x147_rank_biased_overlap" -> (x147._1, Some(x147._2)),
-    "x148_cross_surprisal" -> (x148._1, Some(x148._2)),
-    "x149_cusum_changepoint" -> (x149._1, Some(x149._2)),
-    "x150_transition_entropy" -> (x150._1, Some(x150._2)),
-    "x151_rolling_active" -> (x151._1, Some(x151._2)),
-    "x152_mutual_neighbors" -> (x152._1, Some(x152._2)),
-    "x153_winsorized_mean" -> (x153._1, Some(x153._2)),
-    "x154_lang_segments" -> (x154._1, Some(x154._2)),
-    "x155_lateness_profile" -> (x155._1, Some(x155._2)),
-    "x156_golden_record" -> (x156._1, Some(x156._2)),
-    "x157_json_key_profile" -> (x157._1, Some(x157._2)),
-    "x158_knn_label_noise" -> (x158._1, Some(x158._2)),
-    "x159_oov_curve" -> (x159._1, Some(x159._2)),
-    "x160_pit_feature_join" -> (x160._1, Some(x160._2)),
-    "x161_sequence_surprisal" -> (x161._1, Some(x161._2)),
-    "x162_embedding_isotropy" -> (x162._1, Some(x162._2)),
-    "x163_merge_retrieved_chunks" -> (x163._1, Some(x163._2)),
-    "x164_majority_label" -> (x164._1, Some(x164._2)),
-    "x165_curation_pipeline" -> (x165._1, Some(x165._2)),
-    "x166_mann_kendall" -> (x166._1, Some(x166._2)),
-    "x167_theil_sen" -> (x167._1, Some(x167._2)),
-    "x168_interval_overlap" -> (x168._1, Some(x168._2)),
-    "x169_mutual_banding_audit" -> (x169._1(z), Some(x169._2)),
-    "x170_knn_banding_audit" -> (x170._1(z), Some(x170._2)),
-    "x171_concurrent_intervals" -> (x171._1, Some(x171._2)),
-    "x172_pq_adc_topk" -> (x172._1(z), Some(x172._2)),
-    "x173_ra_link_prediction" -> (x173._1, Some(x173._2)),
-    "x174_ndcg_at_k" -> (x174._1, Some(x174._2)),
-    "x175_vocab_growth" -> (x175._1, Some(x175._2)),
-    "x176_fleiss_kappa" -> (x176._1, Some(x176._2)),
-    "x177_interval_pair_join" -> (x177._1, Some(x177._2)),
-    "x178_pq_recall_audit" -> (x178._1(z), Some(x178._2)),
-    "x179_stable_dense_ids" -> (x179._1, Some(x179._2)),
-    "x180_farthest_point_sample" -> (x180._1, Some(x180._2)),
-    "x181_ivf_pq_topk" -> (x181._1(z), Some(x181._2)),
-    "x182_nucleus_vocab" -> (x182._1, Some(x182._2)),
-    "x183_sqrt_temperature_mix" -> (x183._1, Some(x183._2)),
-    "x184_semantic_banding_audit" -> (x184._1(z), Some(x184._2)),
-    "x185_dsir_importance" -> (x185._1, Some(x185._2)),
-    "x186_unimax_allocation" -> (x186._1, Some(x186._2)),
-    "x187_jl_distortion_audit" -> (x187._1, Some(x187._2)),
-    "x188_semantic_dedup_incremental" -> (x188._1, Some(x188._2)),
-    "x189_semantic_dedup_ivf" -> (x189._1, Some(x189._2)),
-    "x190_substring_dedup" -> (x190._1, Some(x190._2)),
-    "x191_semantic_dedup_corpus" -> (x191._1, Some(x191._2)),
-    "x192_semantic_ivf_audit" -> (x192._1(z), Some(x192._2)),
-    "x193_semantic_index_merge" -> (x193._1(z), Some(x193._2)),
-    "x194_bm25_retrieval" -> (x194._1(z), Some(x194._2)),
-    "x195_simhash_incremental" -> (x195._1, Some(x195._2)),
-    "x196_hybrid_retrieval" -> (x196._1(z), Some(x196._2)),
-    "x197_pq_refine_topk" -> (x197._1(z), Some(x197._2)),
-    "x198_rocchio_classifier" -> (x198._1, Some(x198._2)),
-    "x199_balanced_shards" -> (x199._1, Some(x199._2)),
-    "x200_corpus_overlap_matrix" -> (x200._1, Some(x200._2)),
-    "x201_signature_merge_overlap" -> (x201._1, Some(x201._2)),
-    "x202_dedup_threshold_sweep" -> (x202._1, Some(x202._2)),
-    "x203_ngram_diversity" -> (x203._1, Some(x203._2)),
-    "x204_packing_efficiency" -> (x204._1, Some(x204._2)),
-    "x205_truncation_recall" -> (x205._1(z), Some(x205._2)),
-    "x206_persistent_index_probe" -> (x206._1(z), Some(x206._2)),
-    "x207_containment_from_store" -> (x207._1, Some(x207._2)),
-    "x208_persistent_sig_index" -> (x208._1, Some(x208._2)),
-    "x209_persistent_minhash_index" -> (x209._1, Some(x209._2)),
-    "x210_persistent_pq_serve" -> (x210._1(z), Some(x210._2)),
-    "x211_sliced_index_probe" -> (x211._1(z), Some(x211._2)),
-    "x212_persistent_ivfpq_serve" -> (x212._1(z), Some(x212._2)),
-    "x213_pq_append_serve" -> (x213._1(z), Some(x213._2)),
-    "x214_ivfpq_append_serve" -> (x214._1(z), Some(x214._2)),
-    "x215_pq_compact_serve" -> (x215._1(z), Some(x215._2)),
-    "x216_ivfpq_refine_serve" -> (x216._1(z), Some(x216._2)),
-    "x217_ivfpq_sliced_refine" -> (x217._1(z), Some(x217._2)),
+  def all(z: Sizing): Seq[(String, (Fn, String))] = Seq(
+    "x01_dedup_exact" -> x01,
+    "x02_dedup_ngram_jaccard" -> x02,
+    "x03_dedup_minhash_lsh" -> x03,
+    "x04_dedup_simhash" -> x04,
+    "x05_dedup_embedding_cosine" -> x05,
+    "x06_ann_bruteforce_topk" -> x06,
+    "x07_text_stats_quality" -> x07,
+    "x08_langid_markers" -> x08,
+    "x09_doc_fingerprint" -> x09,
+    "x10_multimodal_metadata" -> x10,
+    "x11_salted_skew_join" -> x11,
+    "x12_asof_join" -> x12,
+    "x13_sessionize" -> x13,
+    "x14_ann_ivf_topk" -> x14,
+    "x15_ann_lsh_topk" -> x15,
+    "x16_subword_punct" -> x16,
+    "x17_stop_shingles" -> x17,
+    "x18_dedup_clusters" -> x18,
+    "x19_stratified_sample" -> x19,
+    "x20_pack_contexts" -> x20,
+    "x21_term_relevance" -> x21,
+    "x22_range_join_sessions" -> x22,
+    "x23_decontamination" -> x23,
+    "x24_repetition_signals" -> x24,
+    "x25_chunk_tokens" -> x25,
+    "x26_embedding_centroids" -> x26,
+    "x27_quality_quantile" -> x27,
+    "x28_vocab_coverage" -> x28,
+    "x29_budget_curation" -> x29,
+    "x30_embedding_quantize" -> x30,
+    "x31_gopher_rules" -> x31,
+    "x32_duplicate_chunks" -> x32,
+    "x33_incremental_dedup" -> x33,
+    "x34_pii_redaction" -> x34,
+    "x35_fuzzy_blocked_join" -> x35,
+    "x36_zorder_key" -> x36,
+    "x37_bpe_pair_counts" -> x37,
+    "x38_mixture_sampling" -> x38,
+    "x39_skew_key_profile" -> x39,
+    "x40_snapshot_diff" -> x40,
+    "x41_native_topk" -> x41,
+    "x42_pagerank" -> x42,
+    "x43_corpus_drift" -> x43,
+    "x44_histogram_profile" -> x44,
+    "x45_simhash_pairs" -> x45,
+    "x46_dedup_corpus" -> x46,
+    "x47_decontaminate_spans" -> x47,
+    "x48_unigram_surprisal" -> x48,
+    "x49_column_profile" -> x49,
+    "x50_incremental_neardup" -> x50,
+    "x51_bigram_surprisal" -> x51,
+    "x52_triangle_counts" -> x52,
+    "x53_bm25_top_terms" -> x53,
+    "x54_robust_outliers" -> x54,
+    "x55_pmi_collocations" -> x55,
+    "x56_kcore_members" -> x56,
+    "x57_label_propagation" -> x57,
+    "x58_heavy_hitters" -> x58,
+    "x59_funnel_stages" -> x59,
+    "x60_retention_cohorts" -> x60,
+    "x61_fd_discovery" -> x61,
+    "x62_semantic_dedup_int8" -> x62,
+    "x63_quantile_sketch" -> x63,
+    "x64_weighted_sample" -> x64,
+    "x65_inverted_index" -> x65,
+    "x66_source_overlap" -> x66,
+    "x67_checksum_pii" -> x67,
+    "x68_cdc_chunks" -> x68,
+    "x69_kmeans_assign" -> x69,
+    "x70_url_canonicalize" -> x70,
+    "x71_skipgram_counts" -> x71,
+    "x72_decayed_score" -> x72,
+    "x73_transition_counts" -> x73,
+    "x74_funnel_within" -> x74,
+    "x75_boilerplate_prune" -> x75,
+    "x76_containment_pairs" -> x76,
+    "x77_hard_negatives" -> x77,
+    "x78_session_paths" -> x78,
+    "x79_trailing_window" -> x79,
+    "x80_count_of_counts" -> x80,
+    "x81_gap_fill" -> x81,
+    "x82_interval_coverage" -> x82,
+    "x83_hits" -> x83,
+    "x84_rrf_fusion" -> x84,
+    "x85_negative_sampling" -> x85,
+    "x86_equal_freq_bins" -> x86,
+    "x87_kmeans_lloyd" -> x87,
+    "x88_hll_shard_union" -> x88,
+    "x89_basket_lift" -> x89,
+    "x90_epoch_shuffle" -> x90,
+    "x91_overlap_spans" -> x91,
+    "x92_rendezvous_shard" -> x92,
+    "x93_kn_continuation" -> x93,
+    "x94_internal_repeats" -> x94,
+    "x95_two_hop_counts" -> x95,
+    "x96_degree_profile" -> x96,
+    "x97_weighted_jaccard" -> x97,
+    "x98_kmv_join_estimate" -> x98,
+    "x99_ks_distance" -> x99,
+    "x100_benford_profile" -> x100,
+    "x101_pareto_frontier" -> x101,
+    "x102_sorted_neighbor_pairs" -> x102,
+    "x103_trend_slope" -> x103,
+    "x104_retention_ppm" -> x104,
+    "x105_bfs_distances" -> x105,
+    "x106_token_entropy" -> x106,
+    "x107_cms_estimates" -> x107,
+    "x108_fs_linkage" -> x108,
+    "x109_personalized_pagerank" -> x109,
+    "x110_shingle_novelty" -> x110,
+    "x111_privacy_audit" -> x111,
+    "x112_leakage_safe_split" -> x112,
+    "x113_auc_exact" -> x113,
+    "x114_calibration_bins" -> x114,
+    "x115_cohen_kappa" -> x115,
+    "x116_retrieval_eval" -> x116,
+    "x117_group_panel_sample" -> x117,
+    "x118_int8_gram" -> x118,
+    "x119_modularity" -> x119,
+    "x120_information_gain" -> x120,
+    "x121_weighted_median" -> x121,
+    "x122_kl_drift" -> x122,
+    "x123_clustering_coefficient" -> x123,
+    "x124_spearman" -> x124,
+    "x125_chao1_vocab" -> x125,
+    "x126_domain_cap" -> x126,
+    "x127_mixture_quota" -> x127,
+    "x128_bloom_semi_join" -> x128,
+    "x129_normalize_text" -> x129,
+    "x130_concentration" -> x130,
+    "x131_rolling_mad" -> x131,
+    "x132_component_sizes" -> x132,
+    "x133_percentile_rank" -> x133,
+    "x134_mine_positives" -> x134,
+    "x135_decile_lift" -> x135,
+    "x136_quantile_map" -> x136,
+    "x137_lag_autocorr" -> x137,
+    "x138_zipf_slope" -> x138,
+    "x139_trimmed_mean" -> x139,
+    "x140_class_tfidf" -> x140,
+    "x141_ab_chisq" -> x141,
+    "x142_lsh_banding_audit" -> (x142._1(z), x142._2),
+    "x143_principal_direction" -> x143,
+    "x144_bootstrap_ci" -> x144,
+    "x145_winnow_fingerprints" -> x145,
+    "x146_term_burstiness" -> x146,
+    "x147_rank_biased_overlap" -> x147,
+    "x148_cross_surprisal" -> x148,
+    "x149_cusum_changepoint" -> x149,
+    "x150_transition_entropy" -> x150,
+    "x151_rolling_active" -> x151,
+    "x152_mutual_neighbors" -> x152,
+    "x153_winsorized_mean" -> x153,
+    "x154_lang_segments" -> x154,
+    "x155_lateness_profile" -> x155,
+    "x156_golden_record" -> x156,
+    "x157_json_key_profile" -> x157,
+    "x158_knn_label_noise" -> x158,
+    "x159_oov_curve" -> x159,
+    "x160_pit_feature_join" -> x160,
+    "x161_sequence_surprisal" -> x161,
+    "x162_embedding_isotropy" -> x162,
+    "x163_merge_retrieved_chunks" -> x163,
+    "x164_majority_label" -> x164,
+    "x165_curation_pipeline" -> x165,
+    "x166_mann_kendall" -> x166,
+    "x167_theil_sen" -> x167,
+    "x168_interval_overlap" -> x168,
+    "x169_mutual_banding_audit" -> (x169._1(z), x169._2),
+    "x170_knn_banding_audit" -> (x170._1(z), x170._2),
+    "x171_concurrent_intervals" -> x171,
+    "x172_pq_adc_topk" -> (x172._1(z), x172._2),
+    "x173_ra_link_prediction" -> x173,
+    "x174_ndcg_at_k" -> x174,
+    "x175_vocab_growth" -> x175,
+    "x176_fleiss_kappa" -> x176,
+    "x177_interval_pair_join" -> x177,
+    "x178_pq_recall_audit" -> (x178._1(z), x178._2),
+    "x179_stable_dense_ids" -> x179,
+    "x180_farthest_point_sample" -> x180,
+    "x181_ivf_pq_topk" -> (x181._1(z), x181._2),
+    "x182_nucleus_vocab" -> x182,
+    "x183_sqrt_temperature_mix" -> x183,
+    "x184_semantic_banding_audit" -> (x184._1(z), x184._2),
+    "x185_dsir_importance" -> x185,
+    "x186_unimax_allocation" -> x186,
+    "x187_jl_distortion_audit" -> x187,
+    "x188_semantic_dedup_incremental" -> x188,
+    "x189_semantic_dedup_ivf" -> x189,
+    "x190_substring_dedup" -> x190,
+    "x191_semantic_dedup_corpus" -> x191,
+    "x192_semantic_ivf_audit" -> (x192._1(z), x192._2),
+    "x193_semantic_index_merge" -> (x193._1(z), x193._2),
+    "x194_bm25_retrieval" -> (x194._1(z), x194._2),
+    "x195_simhash_incremental" -> x195,
+    "x196_hybrid_retrieval" -> (x196._1(z), x196._2),
+    "x197_pq_refine_topk" -> (x197._1(z), x197._2),
+    "x198_rocchio_classifier" -> x198,
+    "x199_balanced_shards" -> x199,
+    "x200_corpus_overlap_matrix" -> x200,
+    "x201_signature_merge_overlap" -> x201,
+    "x202_dedup_threshold_sweep" -> x202,
+    "x203_ngram_diversity" -> x203,
+    "x204_packing_efficiency" -> x204,
+    "x205_truncation_recall" -> (x205._1(z), x205._2),
+    "x206_persistent_index_probe" -> (x206._1(z), x206._2),
+    "x207_containment_from_store" -> x207,
+    "x208_persistent_sig_index" -> x208,
+    "x209_persistent_minhash_index" -> x209,
+    "x210_persistent_pq_serve" -> (x210._1(z), x210._2),
+    "x211_sliced_index_probe" -> (x211._1(z), x211._2),
+    "x212_persistent_ivfpq_serve" -> (x212._1(z), x212._2),
+    "x213_pq_append_serve" -> (x213._1(z), x213._2),
+    "x214_ivfpq_append_serve" -> (x214._1(z), x214._2),
+    "x215_pq_compact_serve" -> (x215._1(z), x215._2),
+    "x216_ivfpq_refine_serve" -> (x216._1(z), x216._2),
+    "x217_ivfpq_sliced_refine" -> (x217._1(z), x217._2),
   )
 }

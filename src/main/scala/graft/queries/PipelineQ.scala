@@ -281,14 +281,14 @@ object PipelineQ {
       |        FROM orders))
       |GROUP BY parsed ORDER BY parsed""".stripMargin)
 
-  val all: Seq[(String, (Fn, Option[String]))] = Seq(
-    "p01_cell_clean" -> (p01._1, Some(p01._2)),
-    "p02_scd2_bookkeeping" -> (p02._1, Some(p02._2)),
-    "p03_current_version_scan" -> (p03._1, Some(p03._2)),
-    "p04_scd2_merge" -> (p04._1, Some(p04._2)),
-    "p05_validation_profile" -> (p05._1, Some(p05._2)),
-    "p06_cast_normalize" -> (p06._1, Some(p06._2)),
-    "p07_null_topic_drop" -> (p07._1, Some(p07._2)),
-    "p08_multiformat_date" -> (p08._1, Some(p08._2)),
+  val all: Seq[(String, (Fn, String))] = Seq(
+    "p01_cell_clean" -> p01,
+    "p02_scd2_bookkeeping" -> p02,
+    "p03_current_version_scan" -> p03,
+    "p04_scd2_merge" -> p04,
+    "p05_validation_profile" -> p05,
+    "p06_cast_normalize" -> p06,
+    "p07_null_topic_drop" -> p07,
+    "p08_multiformat_date" -> p08,
   )
 }

@@ -727,40 +727,40 @@ object Relational {
       |SELECT l_partkey, op, COUNT(*)::BIGINT AS n FROM bag
       |GROUP BY l_partkey, op ORDER BY l_partkey, op""".stripMargin)
 
-  val all: Seq[(String, (Fn, Option[String]))] = Seq(
-    "q01_agg_pricing_summary" -> (q01._1, Some(q01._2)),
-    "q02_filter_pushdown" -> (q02._1, Some(q02._2)),
-    "q03_join_revenue_by_nation" -> (q03._1, Some(q03._2)),
-    "q04_broadcast_join_brand" -> (q04._1, Some(q04._2)),
-    "q05_semi_join_exists" -> (q05._1, Some(q05._2)),
-    "q06_anti_join_not_exists" -> (q06._1, Some(q06._2)),
-    "q07_window_top_order_per_cust" -> (q07._1, Some(q07._2)),
-    "q08_window_running_revenue" -> (q08._1, Some(q08._2)),
-    "q09_window_lag_event_delta" -> (q09._1, Some(q09._2)),
-    "q10_topk_orders" -> (q10._1, Some(q10._2)),
-    "q11_setops_buyers" -> (q11._1, Some(q11._2)),
-    "q12_distinct_flags" -> (q12._1, Some(q12._2)),
-    "q13_rollup_qty" -> (q13._1, Some(q13._2)),
-    "q14_cube_orders" -> (q14._1, Some(q14._2)),
-    "q15_scalar_string_funcs" -> (q15._1, Some(q15._2)),
-    "q16_date_funcs" -> (q16._1, Some(q16._2)),
-    "q17_events_hourly_window" -> (q17._1, Some(q17._2)),
-    "q18_array_token_counts" -> (q18._1, Some(q18._2)),
-    "q19_agg_distinct_minmax" -> (q19._1, Some(q19._2)),
-    "q20_approx_count_distinct" -> (q20._1, Some(q20._2)),
-    "q21_json_extract" -> (q21._1, Some(q21._2)),
-    "q22_like_regexp" -> (q22._1, Some(q22._2)),
-    "q23_conditional_funcs" -> (q23._1, Some(q23._2)),
-    "q24_correlated_subquery" -> (q24._1, Some(q24._2)),
-    "q25_pivot" -> (q25._1, Some(q25._2)),
-    "q26_percentiles" -> (q26._1, Some(q26._2)),
-    "q27_string_agg" -> (q27._1, Some(q27._2)),
-    "q28_window_frames" -> (q28._1, Some(q28._2)),
-    "q29_grouping_sets" -> (q29._1, Some(q29._2)),
-    "q30_window_distribution" -> (q30._1, Some(q30._2)),
-    "q31_keep_latest" -> (q31._1, Some(q31._2)),
-    "q32_sql_text" -> (q32._1, Some(q32._2)),
-    "q33_null_semantics" -> (q33._1, Some(q33._2)),
-    "q34_setops_bag" -> (q34._1, Some(q34._2)),
+  val all: Seq[(String, (Fn, String))] = Seq(
+    "q01_agg_pricing_summary" -> q01,
+    "q02_filter_pushdown" -> q02,
+    "q03_join_revenue_by_nation" -> q03,
+    "q04_broadcast_join_brand" -> q04,
+    "q05_semi_join_exists" -> q05,
+    "q06_anti_join_not_exists" -> q06,
+    "q07_window_top_order_per_cust" -> q07,
+    "q08_window_running_revenue" -> q08,
+    "q09_window_lag_event_delta" -> q09,
+    "q10_topk_orders" -> q10,
+    "q11_setops_buyers" -> q11,
+    "q12_distinct_flags" -> q12,
+    "q13_rollup_qty" -> q13,
+    "q14_cube_orders" -> q14,
+    "q15_scalar_string_funcs" -> q15,
+    "q16_date_funcs" -> q16,
+    "q17_events_hourly_window" -> q17,
+    "q18_array_token_counts" -> q18,
+    "q19_agg_distinct_minmax" -> q19,
+    "q20_approx_count_distinct" -> q20,
+    "q21_json_extract" -> q21,
+    "q22_like_regexp" -> q22,
+    "q23_conditional_funcs" -> q23,
+    "q24_correlated_subquery" -> q24,
+    "q25_pivot" -> q25,
+    "q26_percentiles" -> q26,
+    "q27_string_agg" -> q27,
+    "q28_window_frames" -> q28,
+    "q29_grouping_sets" -> q29,
+    "q30_window_distribution" -> q30,
+    "q31_keep_latest" -> q31,
+    "q32_sql_text" -> q32,
+    "q33_null_semantics" -> q33,
+    "q34_setops_bag" -> q34,
   )
 }

@@ -22,7 +22,7 @@ import graft.ext.{Planes, Similarity}
   * for the matching itself. The only stateful piece is the OPTIONAL
   * per-pair dedup (a pair matching in k bands emits k rows), which
   * rides `dropDuplicatesWithinWatermark` so its state stays bounded
-  * like [[EventStream.dedupByDigest]]'s.
+  * by the watermark.
   */
 object EmbedStream {
 

@@ -102,20 +102,6 @@ object RefIndexSlices {
       meta("dim").toInt, meta("maxBucket").toInt, ns, bandRows, payload)
   }
 
-  /** One index handle PER slice, each carrying the GLOBAL merged
-    * census — since every reference id lives in exactly one slice,
-    * the union of per-slice probe matches equals the combined probe
-    * exactly, while each join's static side stays a single plain
-    * scan (the shape a probe job wants before compaction). */
-  def loadSemanticSlices(spark: SparkSession, dir: String)
-      : Seq[SemanticRefIndex] = {
-    val (meta, ns, parts) = loadRaw(spark, dir, "semantic")
-    parts.map { case (bandRows, payload) =>
-      SemanticRefIndex(meta("bands").toInt, meta("bitsPerBand").toInt,
-        meta("dim").toInt, meta("maxBucket").toInt, ns, bandRows, payload)
-    }
-  }
-
   // -------------------------------------------------------- simhash
   def appendSimHash(more: DataFrame, dir: String, id: String, text: String,
                     maxHamming: Int = 3, maxBucket: Int = 4096): Long = {
@@ -358,20 +344,6 @@ object RefIndexSlices {
     def part(p: String) = spark.read.parquet(slices.map(u =>
       new Path(slicePath(root, u), p).toString): _*)
     (meta, ns, withSub(part("band_rows"), ns), part("payload"))
-  }
-
-  /** (meta, merged ns, per-slice (sub-assigned band rows, payload)) —
-    * the per-slice shape [[loadSemanticSlices]] hands to probe jobs
-    * that want each join's static side as a single plain scan. */
-  private def loadRaw(spark: SparkSession, dir: String, kind: String)
-      : (Map[String, String], DataFrame, Seq[(DataFrame, DataFrame)]) = {
-    val (meta, slices, root, ns) = loadBase(spark, dir, kind)
-    def part(u: String, p: String) =
-      spark.read.parquet(new Path(slicePath(root, u), p).toString)
-    val parts = slices.map { u =>
-      (withSub(part(u, "band_rows"), ns), part(u, "payload"))
-    }
-    (meta, ns, parts)
   }
 
   private def readMetaIfExists(spark: SparkSession, dir: String)

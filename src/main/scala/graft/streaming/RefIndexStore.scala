@@ -17,9 +17,10 @@ import graft.streaming.SimHashStream.SimHashRefIndex
   *
   * Layout under `dir`:
   *  - `band_rows/` — (band, bucket, sub, id_b), hash-BUCKETED and
-  *    sorted on the three join keys (the [[graft.io.Buckets]]
-  *    economics): the per-micro-batch stream-static equi-join pays
-  *    NO shuffle and no sort on the static side — the shuffle is paid
+  *    sorted on the three join keys (bucketed tables with equal
+  *    bucket counts join without an Exchange): the per-micro-batch
+  *    stream-static equi-join pays NO shuffle and no sort on the
+  *    static side — the shuffle is paid
   *    once at save time and amortized over every probing job, which
   *    is exactly the scale note at `semanticDupMatches` (the
   *    reference side is corpus-sized; the probe side is a micro-batch).

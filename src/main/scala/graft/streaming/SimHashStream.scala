@@ -42,11 +42,7 @@ object SimHashStream {
 
   /** Signature-level index build: `sigs` carries (_id, sig) where
     * `sig` is ANY 64-bit signature family with the hamming-ball
-    * contract — the text path signs with the native SimHash64, the
-    * perceptual media paths with [[graft.ext.Multimodal.dHash]] /
-    * [[graft.ext.Multimodal.audioFingerprint]] (near-dup-at-ingest
-    * for images and audio rides the SAME index machinery and census
-    * contract as text). */
+    * contract — the text path signs with the native SimHash64. */
   def sigRefIndex(sigs: DataFrame, maxHamming: Int, maxBucket: Int = 4096)
       : SimHashRefIndex = {
     require(maxBucket >= 1, "maxBucket must be positive")

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Properties}
+import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.{forAll, propBoolean}
 import org.apache.spark.sql.functions._
 
@@ -11,6 +11,13 @@ object GraftProperties extends Properties("graft") {
 
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  // Each property's cases run on 4 threads against the one shared
+  // session: Spark schedules jobs from several threads at once. This
+  // holds only while no property mutates session state (no conf.set,
+  // temp view or fixed scratch path).
+  override def overrideParameters(p: Test.Parameters): Test.Parameters =
+    p.withWorkers(4)
 
   private val cellGen: Gen[String] = Gen.oneOf(
     Gen.alphaNumStr.map(s => s" $s "),

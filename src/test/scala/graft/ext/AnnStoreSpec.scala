@@ -40,11 +40,6 @@ class AnnStoreSpec extends AnyFunSuite {
     val fromDisk = ranking(AnnStore.pqServe(queries, "vec_id", "embedding",
       loaded, k = 5, refine = 3))
     assert(fromDisk == inSession && fromDisk.nonEmpty)
-    // the ADC-only leg agrees too (no refine)
-    assert(ranking(AnnStore.pqServeAdc(queries, "vec_id", "embedding",
-        loaded, k = 5)) ==
-      ranking(Similarity.pqTopK(queries, "vec_id", "embedding",
-        corpus, "vec_id", "embedding", idx.codebook, k = 5)))
   }
 
   test("served payload scan is pruned: read rows scale with candidates, not corpus") {

@@ -33,16 +33,6 @@ class ChunkSpec extends AnyFunSuite {
       s"shift broke realignment: ${d1.size} vs shared ${(d1 intersect d2).size}")
   }
 
-  test("sharedChunks: offset-shifted common span found, unique content not") {
-    val docs = Seq(
-      (1L, span + " unique tail one"),
-      (2L, "different beginning here " + span),
-      (3L, "totally unrelated words alpha beta gamma")).toDF("doc_id", "text")
-    val shared = Chunk.sharedChunks(docs, "doc_id", "text").collect()
-    assert(shared.nonEmpty, "common span must yield shared chunks")
-    assert(shared.forall(_.getLong(1) == 2L)) // present in exactly docs 1 and 2
-  }
-
   test("mergeRetrievedChunks bridges maxGap missing chunks, splits beyond") {
     val hits = Seq((1L, 0L, 10L), (1L, 1L, 10L), (1L, 3L, 10L),
       (1L, 7L, 10L), (1L, 8L, 10L), (2L, 5L, 4L))

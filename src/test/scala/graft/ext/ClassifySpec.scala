@@ -94,42 +94,6 @@ class ClassifySpec extends AnyFunSuite {
     assert(ids == Set(1L))
   }
 
-  test("scoreColumn: NULL/empty text scores 0, never NULL") {
-    val w = Classify.rocchioWeights(seed.toDF("text", "y"), "text",
-      col("y"), buckets = 64)
-    val vec = Classify.weightVector(w, buckets = 64)
-    val rows = Seq((1L, Some("curated article sources")), (2L, None),
-      (3L, Some("")))
-      .toDF("doc_id", "text")
-      .select($"doc_id", Classify.scoreColumn($"text", vec).as("s"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap // NULL would throw
-    assert(rows(2L) == 0L && rows(3L) == 0L)
-    // the in-row form agrees with the batch DECIMAL path on real text
-    val batch = Classify.rocchioScore(
-        Seq((1L, "curated article sources")).toDF("doc_id", "text"),
-        "doc_id", "text", w, buckets = 64)
-      .select($"score".cast("long")).head().getLong(0)
-    assert(rows(1L) == batch)
-  }
-
-  test("scoreColumn: doc past maxDocTokens fails loudly, never wraps") {
-    val w = Classify.rocchioWeights(seed.toDF("text", "y"), "text",
-      col("y"), buckets = 64)
-    val vec = Classify.weightVector(w, buckets = 64)
-    val long = ("tok " * 9).trim // 9 tokens vs a bound of 8
-    val df = Seq((1L, long)).toDF("doc_id", "text")
-      .select(Classify.scoreColumn($"text", vec, maxDocTokens = 8).as("s"))
-    val e = intercept[Exception](df.collect())
-    assert(e.getMessage.contains("maxDocTokens"))
-    // at/below the bound the score is computed normally
-    val ok = Seq((1L, ("tok " * 8).trim)).toDF("doc_id", "text")
-      .select(Classify.scoreColumn($"text", vec, maxDocTokens = 8).as("s"))
-      .head().getLong(0)
-    val unbounded = Seq((1L, ("tok " * 8).trim)).toDF("doc_id", "text")
-      .select(Classify.scoreColumn($"text", vec).as("s")).head().getLong(0)
-    assert(ok == unbounded)
-  }
-
   test("xxhash64 feature space also classifies (within-Spark path)") {
     val sdf = seed.toDF("text", "y")
     val edf = eval.toDF("doc_id", "text")

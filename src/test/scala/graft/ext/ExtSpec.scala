@@ -57,7 +57,7 @@ class ExtSpec extends AnyFunSuite {
       (1L, "a x a x a x a x a x a x a x a y"),
       (2L, "x b y b x b y b x b y b x b y b"),
       (3L, "a b")).toDF("doc_id", "text")
-    val got = TextAnalysis.collocations(corpus, "doc_id", "text",
+    val got = TextAnalysis.collocations(corpus, "text",
         minCount = 1L, k = 100)
       .collect()
       .map(r => (r.getString(0), r.getString(1)) ->
@@ -325,27 +325,6 @@ class ExtSpec extends AnyFunSuite {
       .select(graft.functions.VectorExpressions.dot_long($"a", $"b").as("d"))
       .first()
     assert(lmism.isNullAt(0))
-  }
-
-  test("multimodal: payload attach, stub decode batching, frame sampling") {
-    val media = Multimodal.attachPayload(docs, "doc_id", "text")
-    val decoded = Multimodal.decodeStub(media, featureDim = 8).cache()
-    assert(decoded.count() == 4)
-    val r = decoded.filter($"media_id" === 0).collect()(0)
-    val meta = r.getStruct(r.fieldIndex("meta"))
-    assert(meta.getAs[Int]("n_bytes") == 59)
-    assert(meta.getAs[String]("digest").length == 32)
-    assert(meta.getAs[Int]("width") >= 16 && meta.getAs[Int]("width") < 80)
-    assert(r.getSeq[Float](r.fieldIndex("features")).length == 8)
-    // identical payloads → identical features (deterministic stub)
-    val f0 = decoded.filter($"media_id" === 0).select("features").collect()(0)
-    val f3 = decoded.filter($"media_id" === 3).select("features").collect()(0)
-    assert(f0.getSeq[Float](0).toSeq == f3.getSeq[Float](0).toSeq)
-
-    val frames = Multimodal.frameSample(media, stride = 16)
-    assert(frames.filter($"media_id" === 0).count() == 3) // 59 bytes / 16
-    assert(frames.columns.toSeq ==
-      Seq("media_id", "frame_no", "frame_digest"))
   }
 
   test("connected components: multi-hop chains converge to min label") {
@@ -1741,8 +1720,8 @@ class ExtSpec extends AnyFunSuite {
 
   test("sqrtTemperatureQuota: hand-computed quotas; isqrt edge cases") {
     // supplies 100 / 400 / 10000 → weights 10 / 20 / 100 (Σ 130)
-    val df = (1 to 100).map(i => ("a", 1L)) ++
-      (1 to 4).map(i => ("b", 100L)) ++ Seq(("c", 10000L))
+    val df = Seq.fill(100)(("a", 1L)) ++
+      Seq.fill(4)(("b", 100L)) ++ Seq(("c", 10000L))
     val got = Sampling.sqrtTemperatureQuota(df.toDF("src", "n"), "src",
         col("n"), budgetTokens = 1300L)
       .collect().map(r => r.getString(0) ->

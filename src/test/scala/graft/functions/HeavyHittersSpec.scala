@@ -69,7 +69,7 @@ class HeavyHittersSpec extends AnyFunSuite {
       agg.update(buf, new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
         Array[Any](org.apache.spark.unsafe.types.UTF8String.fromString(i))))
     }
-  private def evalPairs(agg: HeavyHittersAgg, buf: HHBuf): Seq[(String, Long, Long)] =
+  private def evalPairs(buf: HHBuf): Seq[(String, Long, Long)] =
     buf.m.toSeq.map { case (i, (c, e)) => (i, c, e) }
       .sortBy { case (i, c, _) => (-c, i) }
 
@@ -83,7 +83,7 @@ class HeavyHittersSpec extends AnyFunSuite {
     feed(agg, b, "t", "u", "u", "u", "u", "u", "v", "v", "v", "v")
     assert(b.lossy && !b.m.contains("t"), "t must have been evicted from B")
     val merged = agg.merge(a, b)
-    val got = evalPairs(agg, merged)
+    val got = evalPairs(merged)
     // true counts: t=4, u=5, v=4; B's floor (min est) covers t's lost
     // copies, so true <= est <= true + err must hold for every slot
     val truth = Map("t" -> 4L, "u" -> 5L, "v" -> 4L)
@@ -103,7 +103,7 @@ class HeavyHittersSpec extends AnyFunSuite {
     feed(agg, b, "x")
     val merged = agg.merge(a, b)
     // y absent from B and x absent floor must stay 0: exact counts
-    assert(evalPairs(agg, merged) == Seq(("x", 3L, 0L), ("y", 1L, 0L)))
+    assert(evalPairs(merged) == Seq(("x", 3L, 0L), ("y", 1L, 0L)))
     assert(!merged.lossy)
   }
 
@@ -113,7 +113,7 @@ class HeavyHittersSpec extends AnyFunSuite {
     val big = "ü" * 70000 // 140000 UTF-8 bytes
     feed(agg, buf, big, big, "small")
     val back = agg.deserialize(agg.serialize(buf))
-    assert(evalPairs(agg, back) == Seq((big, 2L, 0L), ("small", 1L, 0L)))
+    assert(evalPairs(back) == Seq((big, 2L, 0L), ("small", 1L, 0L)))
     assert(back.lossy == buf.lossy)
   }
 

@@ -26,16 +26,6 @@ class LakeCompactSpec extends AnyFunSuite {
     assert(Lake.compact(spark, root).isEmpty)
   }
 
-  test("partitionStats reports files and bytes per partition") {
-    val root = java.nio.file.Files.createTempDirectory("pstats").toString + "/t"
-    Seq((1L, "D0"), (2L, "D0"), (3L, "D1")).toDF("id", "part")
-      .repartition(2).write.partitionBy("part").parquet(root)
-    val stats = Lake.partitionStats(spark, root)
-      .map(s => s.part -> s).toMap
-    assert(stats.keySet == Set("D0", "D1"))
-    assert(stats.values.forall(s => s.files >= 1 && s.bytes > 0))
-  }
-
   test("vacuum deletes only the partitions the predicate rejects") {
     val root = java.nio.file.Files.createTempDirectory("vacuum").toString + "/t"
     Seq((1L, "D0"), (2L, "D1"), (3L, "D2")).toDF("id", "part")

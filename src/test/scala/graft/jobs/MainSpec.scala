@@ -110,12 +110,16 @@ class MainSpec extends AnyFunSuite {
       assert(got == want && got.nonEmpty,
         s"$kind probe stage != batch cross oracle")
     }
-    // an unknown kind string is refused loudly
-    val e = intercept[RuntimeException](Main.run(
-      Map("stage-name" -> "index_probe", "kind" -> "nope",
-        "index-dir" -> s"$base/idx_simhash", "probe" -> s"$base/probe",
-        "out" -> s"$base/out_bad"), spark))
-    assert(e.getMessage.contains("invalid --kind"))
+    // an unknown kind string is refused loudly, and every index stage
+    // names the same five kinds
+    for (stage <- Seq("index_build", "index_append", "index_probe")) {
+      val e = intercept[RuntimeException](Main.run(
+        Map("stage-name" -> stage, "kind" -> "nope",
+          "source" -> s"$base/ref", "index-dir" -> s"$base/idx_simhash",
+          "probe" -> s"$base/probe", "out" -> s"$base/out_bad"), spark))
+      assert(e.getMessage == "invalid --kind nope; expected semantic, " +
+        "simhash, minhash, pq or ivfpq", s"$stage: ${e.getMessage}")
+    }
   }
 
   test("index_append + index_compact + sliced probe: nightly-append stages") {
