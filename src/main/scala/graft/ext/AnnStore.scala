@@ -81,7 +81,7 @@ object AnnStore {
       // the three artifacts are independent writes to distinct paths —
       // overlap them (guide §2.6); meta stays LAST (the completeness
       // marker atomicPublish/recover key on)
-      graft.io.Concurrent.awaitAll(Seq(
+      graft.io.Concurrent.awaitAll(spark, Seq(
         () => idx.codebook.zipWithIndex.flatMap { case (entries, m) =>
           entries.zipWithIndex.map { case (cvec, c) => (m, c, cvec) }
         }.toDF("m", "code", "cvec")
@@ -189,7 +189,7 @@ object AnnStore {
     // codes and payload are independent derivations of `more` to
     // distinct paths — overlap them (guide §2.6); the manifest CAS
     // commits strictly after both
-    graft.io.Concurrent.awaitAll(Seq(
+    graft.io.Concurrent.awaitAll(spark, Seq(
       () => Similarity.pqEncode(more, id, vec, loaded)
         .select(col(id).as("corpus_id"), col("codes"))
         .write.mode(SaveMode.Overwrite)
@@ -249,7 +249,7 @@ object AnnStore {
         def part(p: String) = spark.read.parquet(slices.map(u =>
           new Path(graft.streaming.RefIndexSlices.slicePath(new Path(dir), u),
             p).toString): _*)
-        graft.io.Concurrent.awaitAll(Seq(
+        graft.io.Concurrent.awaitAll(spark, Seq(
           () => part("codes")
             .write.mode(SaveMode.Overwrite)
             .parquet(new Path(slice, "codes").toString),
@@ -313,7 +313,7 @@ object AnnStore {
     RefIndexStore.atomicPublish(spark, dir, { stage =>
       // independent artifacts to distinct paths — overlap (guide
       // §2.6); meta stays LAST (the completeness marker)
-      graft.io.Concurrent.awaitAll(Seq(
+      graft.io.Concurrent.awaitAll(spark, Seq(
         () => idx.codebook.zipWithIndex.flatMap { case (entries, m) =>
           entries.zipWithIndex.map { case (cvec, c) => (m, c, cvec) }
         }.toDF("m", "code", "cvec")
@@ -422,7 +422,7 @@ object AnnStore {
       .localCheckpoint()
     // codes and payload are independent writes to distinct paths —
     // overlap (guide §2.6); the manifest CAS commits after both
-    graft.io.Concurrent.awaitAll(Seq(
+    graft.io.Concurrent.awaitAll(spark, Seq(
       () => Similarity.ivfPqEncodeAssigned(cq, cents, cb)
         .write.mode(SaveMode.Overwrite).partitionBy("cluster")
         .parquet(new Path(slice, "codes").toString)) ++
@@ -464,11 +464,11 @@ object AnnStore {
   }
 
   /** [[compactPq]] for the ivfpq slice shape: union every slice's
-    * codes into ONE slice, re-written PARTITIONED BY cluster (the
-    * directory-prune layout preserved across compaction) — plus the
-    * payload re-sorted on corpus_id when the store carries one —
-    * CAS-commit + graced sweep via the shared skeleton. Changes no
-    * served rank (spec-gated). */
+    * codes into ONE slice, re-written PARTITIONED BY cluster with one
+    * file per cluster (the directory-prune layout preserved across
+    * compaction) — plus the payload re-sorted on corpus_id when the
+    * store carries one — CAS-commit + graced sweep via the shared
+    * skeleton. Changes no served rank (spec-gated). */
   def compactIvfPq(spark: SparkSession, dir: String,
                    graceMs: Long = graft.streaming.RefIndexSlices.DefaultGraceMs)
       : Long = {
@@ -485,8 +485,11 @@ object AnnStore {
         def flat(p: String) = spark.read.parquet(slices.map(u =>
           new Path(graft.streaming.RefIndexSlices.slicePath(new Path(dir), u),
             p).toString): _*)
-        graft.io.Concurrent.awaitAll(Seq(
+        // one task per cluster: the union keeps its slices' tasks, and
+        // each would write its own file into every cluster dir
+        graft.io.Concurrent.awaitAll(spark, Seq(
           () => slices.map(part(_, "codes")).reduce(_ unionByName _)
+            .repartition(col("cluster"))
             .write.mode(SaveMode.Overwrite).partitionBy("cluster")
             .parquet(new Path(slice, "codes").toString)) ++
           (if (hasPayload) Seq(

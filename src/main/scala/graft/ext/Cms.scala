@@ -49,12 +49,6 @@ object Cms {
       .groupBy("row", "bucket").agg(count(lit(1)).as("cnt"))
   }
 
-  /** Merge shard sketches built with the same (depth, width):
-    * cell-wise sum. */
-  def merge(sketches: Seq[DataFrame]): DataFrame =
-    sketches.reduce(_ unionByName _)
-      .groupBy("row", "bucket").agg(sum(col("cnt")).as("cnt"))
-
   /** Point estimates for `probes` (a frame carrying `key`): the
     * CMS estimate min over depth rows, 0 for never-seen buckets.
     * The probe side fans out d rows per key then joins the ≤ d·w-cell

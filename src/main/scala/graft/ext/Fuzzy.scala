@@ -42,11 +42,6 @@ object Fuzzy {
       .select("k_a", "k_b", "dist")
   }
 
-  /** Canonical-form mapping: every distinct key → the representative
-    * of its fuzzy cluster (transitive closure of fuzzyPairs edges,
-    * canonical = lexicographic minimum). Composes the pair generator
-    * with [[Dedup.connectedComponents]]; singleton keys map to
-    * themselves. */
   /** Sorted-neighborhood candidate pairs (Hernández & Stolfo 1995) —
     * the OTHER classic ER blocking: sort records by a key, compare
     * each record only to its `window` successors in sort order. Where
@@ -138,7 +133,7 @@ object Fuzzy {
   }
 
   /** Golden-record survivorship — the step AFTER linkage
-    * ([[fellegiSunter]]/[[resolve]]) turns pairs into clusters: per
+    * ([[fellegiSunter]]) turns pairs into clusters: per
     * (cluster, field), elect the surviving value by majority vote
     * over non-null occurrences, ties to the lexicographically
     * smallest value (total, engine-portable order). Output is long
@@ -172,16 +167,5 @@ object Fuzzy {
         col("_win._v").as("golden_value"),
         (-col("_win._nc")).as("votes"),
         col("n_variants"), col("n_nonnull"))
-  }
-
-  def resolve(df: DataFrame, keyCol: String, maxDist: Int,
-              blockKey: Column => Column = firstToken): DataFrame = {
-    val vals = df.select(col(keyCol).as("k")).distinct()
-    val pairs = fuzzyPairs(df, keyCol, maxDist, blockKey)
-      .select(col("k_a").as("id_a"), col("k_b").as("id_b"))
-    val comps = Dedup.connectedComponents(pairs) // (id, cluster)
-    vals.join(comps.withColumnRenamed("id", "k"), Seq("k"), "left")
-      .withColumn("canonical", coalesce(col("cluster"), col("k")))
-      .select(col("k"), col("canonical"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Inverted-index construction — the IR-side consumer of a curated
@@ -28,9 +28,8 @@ object Index {
 
   /** Structured champion index: one row per term with `df`, `cf` and
     * `top` — the ≤ k highest-tf postings as (v=tf, id=doc) structs in
-    * (tf desc, doc asc) rank order. The mergeable form ([[merge]])
-    * and the string-rendered gate form ([[championIndex]]) both
-    * derive from this. */
+    * (tf desc, doc asc) rank order. The string-rendered gate form
+    * ([[championIndex]]) derives from this. */
   def championPostings(df: DataFrame, id: String, text: String,
                        k: Int): DataFrame = {
     require(k >= 1, s"championPostings needs k >= 1, got $k")
@@ -42,32 +41,6 @@ object Index {
         count(lit(1)).as("df"),
         sum(col("tf")).as("cf"),
         graft.functions.TopKAgg.topk(col("tf"), col("doc"), k).as("top"))
-  }
-
-  /** Merge two [[championPostings]] indexes built over DISJOINT
-    * document sets (a base index and a fresh-batch delta — the
-    * incremental indexing step). EXACT, not approximate: a document
-    * lives in exactly one side, so its tf is final there, and the
-    * union's true top-k per term is always contained in the union of
-    * the two sides' top-k lists — re-cutting the concatenation at k
-    * loses nothing. df/cf add for the same reason. One term-keyed
-    * full outer join; champion arrays are ≤ k+k structs in-row. */
-  def merge(a: DataFrame, b: DataFrame, k: Int): DataFrame = {
-    val emptyTop = array().cast("array<struct<v:double,id:bigint>>")
-    val byRank = (l: Column, r: Column) =>
-      when(l("v") > r("v"), -1).when(l("v") < r("v"), 1)
-        .otherwise(when(l("id") < r("id"), -1)
-          .when(l("id") > r("id"), 1).otherwise(0))
-    a.select(col("term"), col("df").as("df_a"), col("cf").as("cf_a"),
-        col("top").as("top_a"))
-      .join(b.select(col("term"), col("df").as("df_b"), col("cf").as("cf_b"),
-        col("top").as("top_b")), Seq("term"), "full_outer")
-      .select(col("term"),
-        (coalesce(col("df_a"), lit(0L)) + coalesce(col("df_b"), lit(0L))).as("df"),
-        (coalesce(col("cf_a"), lit(0L)) + coalesce(col("cf_b"), lit(0L))).as("cf"),
-        slice(array_sort(concat(
-          coalesce(col("top_a"), emptyTop),
-          coalesce(col("top_b"), emptyTop)), byRank), 1, k).as("top"))
   }
 
   /** [[championPostings]] rendered for the correctness gate: the

@@ -30,14 +30,6 @@ object Kmv {
   def summary(key: Column, k: Int, salt: String): Column =
     KMinAgg.kmin(hash52(key, salt), k)
 
-  /** Distinct-count estimate from a summary: exact when the sketch
-    * never filled (size < k), else the unbiased (k−1)/θ KMV
-    * estimator. */
-  def estimate(summary: Column, k: Int): Column =
-    when(size(summary) < k, size(summary).cast("double"))
-      .otherwise(lit((k - 1).toDouble) /
-        (element_at(summary, k).cast("double") / lit(HashRange)))
-
   /** Distinct-intersection estimate from two summaries — the
     * join-cardinality probe a planner wants BEFORE committing to a
     * shuffle strategy: two tiny sketch rows answer "how many keys

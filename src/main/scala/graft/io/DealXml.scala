@@ -30,8 +30,20 @@ object DealXml {
   private val skipTop = Set("Country", "DealVisibleToOrg", "DealVisibleToUser")
   private val skipSubmission = Set("MetricData", "IsProvisional", "IsRestructured")
 
+  /** One parsed deal-details XML: its pcd (`yyyyMMdd`), its ed_code
+    * (the `EDCode` field, null when missing or empty) and the 1-row
+    * bronze frame. */
+  final case class Parsed(pcd: String, edCode: String, df: DataFrame)
+
   /** Parse + flatten one deal-details XML; returns (pcd, 1-row DF). */
   def read(spark: SparkSession, path: String): (String, DataFrame) = {
+    val p = parse(spark, path)
+    (p.pcd, p.df)
+  }
+
+  /** [[read]], plus the ed_code the driver already parsed, so callers
+    * need no Spark job to take it back out of the frame. */
+  def parse(spark: SparkSession, path: String): Parsed = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
@@ -60,8 +72,10 @@ object DealXml {
       .getOrElse(sys.error(s"PoolCutOffDate missing in $path"))._2
     val pcd = pcdRaw.split("T")(0).replace("-", "")
 
+    val values = fields.map { case (_, v) => if (v == null || v.isEmpty) null else v }
+    val edCode = values.lift(cols.indexOf("EDCode")).orNull
     val schema = StructType(cols.map(StructField(_, StringType, nullable = true)).toArray)
-    val row = Row.fromSeq(fields.map { case (_, v) => if (v == null || v.isEmpty) null else v }.toSeq)
+    val row = Row.fromSeq(values.toSeq)
     val df = spark.createDataFrame(
         new java.util.ArrayList[Row](java.util.List.of(row)), schema)
       .withColumnRenamed("EDCode", "ed_code")
@@ -71,6 +85,6 @@ object DealXml {
       .withColumn("checksum",
         md5(concat(col("ed_code"), col("PoolCutOffDate")).cast("binary")))
       .withColumn("part", concat(col("ed_code"), lit("_"), lit(pcd)))
-    (pcd, df)
+    Parsed(pcd, edCode, df)
   }
 }

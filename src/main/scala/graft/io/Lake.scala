@@ -94,30 +94,42 @@ object Lake {
     val spark = df.sparkSession
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(rootPath)
+    // the dirs this publish creates: the root and its missing parents
+    val created = Iterator.iterate(rootPath)(_.getParent)
+      .takeWhile(d => d != null && !fs.exists(d)).toList
     val staging =
       new Path(rootPath, s"$PublishTmp/${java.util.UUID.randomUUID()}")
     df.write.partitionBy("part").mode("overwrite").format(format)
       .save(staging.toString)
     onStep("staged")
     val trashRoot = new Path(rootPath, PublishTrash)
-    fs.listStatus(staging)
+    val staged = fs.listStatus(staging)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("part="))
-      .foreach { s =>
-        val name = s.getPath.getName
-        val dst = new Path(rootPath, name)
-        val tr = new Path(trashRoot, name)
-        if (fs.exists(dst)) {
-          fs.mkdirs(trashRoot)
-          fs.delete(tr, true) // stale trash for this partition is superseded
-          renameStrict(fs, dst, tr)
-          onStep(s"aside:$name")
-        }
-        renameStrict(fs, s.getPath, dst)
-        onStep(s"swapped:$name")
-        fs.delete(tr, true)
+    staged.foreach { s =>
+      val name = s.getPath.getName
+      val dst = new Path(rootPath, name)
+      val tr = new Path(trashRoot, name)
+      if (fs.exists(dst)) {
+        fs.mkdirs(trashRoot)
+        fs.delete(tr, true) // stale trash for this partition is superseded
+        renameStrict(fs, dst, tr)
+        onStep(s"aside:$name")
       }
+      renameStrict(fs, s.getPath, dst)
+      onStep(s"swapped:$name")
+      fs.delete(tr, true)
+    }
     fs.delete(staging, true)
+    // an empty frame publishes nothing: its staging write must not
+    // leave behind a table root (or parent) that did not exist before.
+    // Only EMPTY dirs go, innermost first; a non-recursive delete
+    // refuses a dir that a concurrent publisher of the same table has
+    // staged into meanwhile.
+    if (staged.isEmpty && created.nonEmpty)
+      (new Path(rootPath, PublishTmp) :: created).foreach { d =>
+        if (fs.exists(d) && fs.listStatus(d).isEmpty)
+          Try(fs.delete(d, false))
+      }
   }
 
   /** Hadoop `FileSystem.rename` reports failure by RETURNING FALSE,
@@ -205,14 +217,28 @@ object Lake {
   }
 
   /** Read all ledgers for a data type → (ed_code, pcd) work list
-    * (`generate_asset_silver.py:65-75`). */
+    * (`generate_asset_silver.py:65-75`), in ledger file-name order.
+    * The files are the few-line CSVs [[writeLedger]] writes, so they
+    * are read on the driver, not by a Spark job: each file's header
+    * line is skipped, and so are files whose names start with `.` or
+    * `_` (checksums, markers), as Spark's file reader skips them. */
   def readLedgers(spark: SparkSession, root: String, dataType: String)
       : Seq[(String, String)] = {
-    val dir = ledgerDir(root, dataType)
-    if (!tableExists(spark, dir)) Seq.empty
-    else spark.read.option("header", "true").csv(dir)
-      .select("ed_code", "pcd").collect()
-      .map(r => (r.getString(0), r.getString(1))).toSeq
+    val dir = new Path(ledgerDir(root, dataType))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) return Seq.empty
+    fs.listStatus(dir).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith(".") &&
+        !s.getPath.getName.startsWith("_"))
+      .sortBy(_.getPath.getName)
+      .flatMap { s =>
+        val in = scala.io.Source.fromInputStream(fs.open(s.getPath), "UTF-8")
+        try in.getLines().drop(1).filter(_.nonEmpty).map { line =>
+          val (ed, pcd) = line.span(_ != ',')
+          (ed, pcd.drop(1))
+        }.toList
+        finally in.close()
+      }
   }
 
   /** One partition's compaction outcome. */

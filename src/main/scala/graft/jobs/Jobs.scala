@@ -3,7 +3,7 @@ package graft.jobs
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.hadoop.fs.Path
-import graft.io.{CleanCsv, DealXml, Lake}
+import graft.io.{CleanCsv, Concurrent, DealXml, Lake}
 import graft.quality.Rules
 import graft.schema.Layout
 import graft.scd2.Scd2
@@ -93,8 +93,8 @@ object Jobs {
     discover(spark, rawDir, ".xml", fileKey) match {
       case Seq() => 1
       case Seq(xml) =>
-        val (pcd, newDf) = DealXml.read(spark, xml)
-        val edCode = newDf.select("ed_code").first().getString(0)
+        val DealXml.Parsed(pcd, edCode, newDf) = DealXml.parse(spark, xml)
+        require(edCode != null, s"no EDCode in $xml")
         val old = if (Lake.tableExists(spark, bronzeRoot))
           Lake.readPartition(spark, bronzeRoot, edCode,
             pcd.patch(4, "-", 0).patch(7, "-", 0)) // yyyyMMdd → yyyy-MM-dd
@@ -115,13 +115,18 @@ object Jobs {
   /** Silver job for the tapes with a topic split, assets and bond_info
     * (`generate_asset_silver.py:48-118`). Every ledger partition is
     * read in one pruned current-version scan
-    * (`generate_asset_silver.py:77-83`) and validated, cast and split
-    * in one pass; `dirty_dumps` and each topic table then get one
-    * publish, which swaps each `part=` directory in the frame on its
-    * own. `part` is a primary column of every topic table, so dedup
-    * and the all-null topic drop stay within a partition, and a
-    * partition with no bad (or no good) rows publishes nothing to
-    * that table. */
+    * (`generate_asset_silver.py:77-83`) and validated once: the
+    * [[Rules.annotate]]d frame is the one cache, and the bad rows
+    * (`dirty_dumps`) and the cast good rows (one frame per topic table)
+    * are its two `flag` filters. The publishes, `dirty_dumps` plus one
+    * per topic table, are independent (distinct table roots, one
+    * cache) and run together through [[Concurrent.awaitAll]]; each
+    * swaps every `part=` directory of its frame on its own, and an
+    * empty frame publishes nothing, so a
+    * delivery with no bad (or no good) rows creates no `dirty_dumps`
+    * (or topic table) partition and no new table root. `part` is a
+    * primary column of every topic table, so dedup and the all-null
+    * topic drop stay within a partition. */
   def silverTopicSplit(spark: SparkSession, lakeRoot: String,
                        dataType: String): Unit = {
     val t = Layout.tape(dataType)
@@ -137,28 +142,18 @@ object Jobs {
       .drop(Layout.scd2Cols: _*)
     // single Catalyst pass + one cache: the reference re-executed
     // the scan→RDD-validate lineage ~9× per pcd (SURVEY §3.2)
-    val (good, bad) = Rules.profile(bronze, t.schema)
-    val annotated = good.unionByName(bad).cache()
+    val annotated = Rules.annotate(bronze, t.schema).cache()
     try {
-      val badRows = annotated.filter(!col("flag"))
-      if (!badRows.isEmpty) {
-        Lake.retry() {
-          Lake.writePartitioned(
-            badRows.drop("flag"),
-            s"$lakeRoot/dirty_dumps/$dataType")
+      val bad = annotated.filter(!col("flag")).drop("flag")
+      val good = Silver.castToDatatype(
+        annotated.filter(col("flag")).drop("flag", "qc_errors"), t.registry)
+      val tables = (s"$lakeRoot/dirty_dumps/$dataType" -> bad) +:
+        Silver.topicTables(good, dataType).toSeq.map { case (table, df) =>
+          s"$silverRoot/$table" -> df
         }
-      }
-      val goodRows = annotated.filter(col("flag")).drop("flag", "qc_errors")
-      if (!goodRows.isEmpty) {
-        val typed = Silver.castToDatatype(goodRows, t.registry).cache()
-        try {
-          Silver.topicTables(typed, dataType).foreach { case (table, df) =>
-            Lake.retry() {
-              Lake.writePartitioned(df, s"$silverRoot/$table")
-            }
-          }
-        } finally typed.unpersist()
-      }
+      Concurrent.awaitAll(spark, tables.map { case (root, df) =>
+        () => Lake.retry() { Lake.writePartitioned(df, root) }
+      })
     } finally annotated.unpersist()
   }
 

@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Declarative per-column validation vocabulary + compiler
@@ -106,26 +106,35 @@ object Rules {
     when(c.isNull, nullErr).otherwise(nonNullErr)
   }
 
-  /** One-pass good/bad split (reference `profile_data`,
-    * `silver_funcs.py:37-78`) — stays inside Catalyst; callers should
-    * cache the annotated frame before fanning out.
+  /** The input with two columns added: `flag` (true when every
+    * present rule passes) and `qc_errors` (the failed rules as a JSON
+    * object, null on passing rows) — the annotation of the reference's
+    * `profile_data` (`silver_funcs.py:37-78`), in one Catalyst pass.
+    * Callers that fan out over both halves should cache this frame and
+    * filter it on `flag`, not union [[profile]]'s two halves back
+    * together, which plans and runs the rule tree once per half.
     *
-    * Both outputs derive from ONE materialized error-map column in a
+    * Both columns derive from ONE materialized error-map column in a
     * staged projection: flag = map is empty, qc_errors = its JSON.
     * CollapseProject declines to inline a non-cheap expression
     * referenced twice, so the ~166-rule tree appears ONCE in the
     * annotated plan instead of once per derived column — halving both
     * the driver-side analysis work and the generated code size on the
     * silver validation path. */
-  def profile(df: org.apache.spark.sql.DataFrame,
-              schema: Map[String, ColumnRule])
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val annotated = df.withColumn("_qc_map", errorMap(schema, df.columns.toSeq))
+  def annotate(df: DataFrame, schema: Map[String, ColumnRule]): DataFrame =
+    df.withColumn("_qc_map", errorMap(schema, df.columns.toSeq))
       .withColumn("flag", size(col("_qc_map")) === 0)
       .withColumn("qc_errors",
         when(col("flag"), lit(null).cast("string"))
           .otherwise(to_json(col("_qc_map"))))
       .drop("_qc_map")
+
+  /** Good/bad split (reference `profile_data`, `silver_funcs.py:37-78`):
+    * the two `flag` filters of [[annotate]]; both halves keep `flag`
+    * and `qc_errors`. */
+  def profile(df: DataFrame, schema: Map[String, ColumnRule])
+      : (DataFrame, DataFrame) = {
+    val annotated = annotate(df, schema)
     (annotated.filter(col("flag")), annotated.filter(!col("flag")))
   }
 

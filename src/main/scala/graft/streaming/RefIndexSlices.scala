@@ -187,7 +187,7 @@ object RefIndexSlices {
         new Path(slicePath(new Path(dir), u), p).toString): _*)
       // three independent writes to distinct paths — overlap (guide
       // §2.6); the replace-manifest CAS commits after all of them
-      graft.io.Concurrent.awaitAll(Seq(
+      graft.io.Concurrent.awaitAll(spark, Seq(
         () => part("band_rows")
           .write.mode(SaveMode.Overwrite)
           .parquet(new Path(slice, "band_rows").toString),
@@ -283,7 +283,7 @@ object RefIndexSlices {
     // slices add their rows), and the payload are independent writes
     // to distinct paths — overlap (guide §2.6); the manifest CAS
     // commits strictly after all three
-    graft.io.Concurrent.awaitAll(Seq(
+    graft.io.Concurrent.awaitAll(spark, Seq(
       () => raw.write.mode(SaveMode.Overwrite)
         .parquet(new Path(slice, "band_rows").toString),
       () => raw.groupBy("band", "bucket").agg(count(lit(1)).as("cnt"))

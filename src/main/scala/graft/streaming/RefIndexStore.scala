@@ -295,7 +295,7 @@ object RefIndexStore {
     atomicPublish(spark, dir, { stage =>
       // the three artifacts are independent writes to distinct paths
       // (distinct transient catalog names too) — overlap (guide §2.6)
-      graft.io.Concurrent.awaitAll(Seq(
+      graft.io.Concurrent.awaitAll(spark, Seq(
         () => writeBucketedAt(
           bandRows.select(col("band"), col("bucket"), col("sub"), col("id_b")),
           new Path(stage, "band_rows").toString,

@@ -231,6 +231,19 @@ class AnnStoreSpec extends AnyFunSuite {
     val served = AnnStore.ivfPqServe(queries, "vec_id", "embedding",
       compacted, k = 5, nProbe = 2)
     assert(ranking(served) == want)
+    // the one compacted slice holds one codes file per cluster
+    val slices = graft.streaming.RefIndexSlices
+    val (fs, root) = slices.fsOf(spark, dir)
+    val Seq(slice) = slices.readSlices(fs, root, slices.currentVersion(fs, root)): @unchecked
+    val clusters = fs.listStatus(new org.apache.hadoop.fs.Path(
+        slices.slicePath(root, slice), "codes"))
+      .filter(_.getPath.getName.startsWith("cluster="))
+    assert(clusters.nonEmpty)
+    clusters.foreach { c =>
+      val files = fs.listStatus(c.getPath).map(_.getPath.getName)
+        .filterNot(f => f.startsWith(".") || f.startsWith("_"))
+      assert(files.length == 1, s"${c.getPath.getName} holds ${files.length} files")
+    }
     // the probed-cluster predicate still prunes the compacted,
     // cluster-partitioned codes read
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}

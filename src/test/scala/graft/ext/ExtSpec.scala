@@ -1333,12 +1333,13 @@ class ExtSpec extends AnyFunSuite {
     // never-seen key estimates 0 only if all 4 rows miss; must be >= 0
     // and <= total stream length
     est.foreach { case (_, e, _) => assert(e >= 0L && e <= 400L) }
-    // mergeability: cell-wise union of shard sketches == whole sketch
+    // mergeability: the cell-wise sum of shard sketches == whole sketch
     val whole = sk.collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     val even = toks.filter(substring($"tok", 2, 10).cast("int") % 2 === 0)
     val odd = toks.filter(substring($"tok", 2, 10).cast("int") % 2 =!= 0)
-    val merged = Cms.merge(Seq(
-        Cms.sketch(even, "tok", 4, 64), Cms.sketch(odd, "tok", 4, 64)))
+    val merged = Cms.sketch(even, "tok", 4, 64)
+      .unionByName(Cms.sketch(odd, "tok", 4, 64))
+      .groupBy("row", "bucket").agg(sum($"cnt"))
       .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
     assert(merged == whole)
   }

@@ -86,17 +86,6 @@ class FuzzyRedactSpec extends AnyFunSuite {
     assert(!pairs.exists(p => p._1.startsWith("other") || p._2.startsWith("other")))
   }
 
-  test("fuzzy resolve: variants map to the lexicographic-min canonical") {
-    val m = Fuzzy.resolve(names, "name", maxDist = 2)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(m("acme corp") == "acme cor")
-    assert(m("acme corpp") == "acme cor")
-    assert(m("acme cor") == "acme cor")
-    // out-of-cluster keys are their own canonical
-    assert(m("acme holdings") == "acme holdings")
-    assert(m("other inc") == "other inc")
-  }
-
   test("goldenRecord: majority wins, ties break low, nulls don't vote") {
     val df = Seq(
       (1L, Some("A"), Some(10L)), (1L, Some("A"), Some(20L)),

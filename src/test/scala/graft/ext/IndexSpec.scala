@@ -33,35 +33,6 @@ class IndexSpec extends AnyFunSuite {
     assert(got.map(_.getString(3)).toSeq == Seq("7:1", "7:1;8:1"))
   }
 
-  test("merge of disjoint-half indexes == full rebuild, exactly") {
-    val docs = (1L to 40L).map { i =>
-      (i, (1 to (i % 5 + 1).toInt).map(j => s"t${(i + j) % 7}").mkString(" "))
-    }.toDF("doc_id", "text")
-    val k = 3
-    val full = Index.render(Index.championPostings(docs, "doc_id", "text", k))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getString(3))).toSet
-    val even = Index.championPostings(
-      docs.filter($"doc_id" % 2 === 0), "doc_id", "text", k)
-    val odd = Index.championPostings(
-      docs.filter($"doc_id" % 2 === 1), "doc_id", "text", k)
-    val merged = Index.render(Index.merge(even, odd, k))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getString(3))).toSet
-    assert(merged == full)
-  }
-
-  test("merge: term present in only one side passes through intact") {
-    val a = Index.championPostings(
-      Seq((1L, "only here")).toDF("doc_id", "text"), "doc_id", "text", 2)
-    val b = Index.championPostings(
-      Seq((2L, "other side")).toDF("doc_id", "text"), "doc_id", "text", 2)
-    val got = Index.render(Index.merge(a, b, 2))
-      .collect().map(r => r.getString(0) -> r.getString(3)).toMap
-    assert(got == Map("only" -> "1:1", "here" -> "1:1",
-      "other" -> "2:1", "side" -> "2:1"))
-  }
-
   test("groupOverlap: exact jaccard on known shingle sets, disjoint pair absent") {
     val docs = Seq(
       ("s1", "a b c d"),     // shingles: {a b c, b c d}

@@ -450,13 +450,13 @@ class R13OptSpec extends AnyFunSuite {
 
   test("Concurrent.awaitAll runs every task and propagates the task's own exception") {
     val hits = new java.util.concurrent.atomic.AtomicInteger(0)
-    graft.io.Concurrent.awaitAll(Seq(
+    graft.io.Concurrent.awaitAll(spark, Seq(
       () => { hits.incrementAndGet(); () },
       () => { hits.incrementAndGet(); () },
       () => { hits.incrementAndGet(); () }))
     assert(hits.get == 3)
     val boom = intercept[IllegalStateException] {
-      graft.io.Concurrent.awaitAll(Seq(
+      graft.io.Concurrent.awaitAll(spark, Seq(
         () => (),
         () => throw new IllegalStateException("task failure surfaces")))
     }

@@ -63,4 +63,14 @@ class DealXmlSpec extends AnyFunSuite {
     assert(row.getAs[String]("part") == "LESSES0001_20230731")
     assert(row.getAs[Int]("iscurrent") == 1)
   }
+
+  test("parse carries the frame's ed_code and read's pcd") {
+    val dir = Files.createTempDirectory("dealxml").toString
+    val p = Paths.get(dir, "LESSES0001_Deal_Details.xml")
+    Files.write(p, xml.getBytes(StandardCharsets.UTF_8))
+    val parsed = DealXml.parse(spark, p.toString)
+    assert(parsed.edCode == "LESSES0001")
+    assert(parsed.edCode == parsed.df.select("ed_code").first().getString(0))
+    assert(parsed.pcd == DealXml.read(spark, p.toString)._1)
+  }
 }

@@ -24,6 +24,25 @@ class LakePublishSpec extends AnyFunSuite {
   private def crashAt(step: String): String => Unit =
     s => if (s == step) throw Crash(step)
 
+  test("readLedgers: every ledger's rows, headers and hidden files skipped") {
+    val lake = java.nio.file.Files.createTempDirectory("ledger").toString
+    Lake.writeLedger(spark, lake, "assets", "2023-08-01", "DEALB",
+      Seq("DEALB" -> "2023-07-31"))
+    Lake.writeLedger(spark, lake, "assets", "2023-07-31", "DEALA",
+      Seq("DEALA" -> "2023-06-30", "DEALA" -> "2023-07-31"))
+    val dir = new java.io.File(s"$lake/clean_dump/assets")
+    // the local Hadoop FS writes a .crc sibling per ledger file
+    assert(dir.list().count(_.endsWith(".crc")) == 2)
+    java.nio.file.Files.writeString(new java.io.File(dir, "_SUCCESS").toPath, "")
+    val got = Lake.readLedgers(spark, lake, "assets")
+    assert(got == Seq("DEALA" -> "2023-06-30", "DEALA" -> "2023-07-31",
+      "DEALB" -> "2023-07-31")) // file-name order
+    // the rows Spark's CSV reader finds in the same dir
+    assert(got.toSet == spark.read.option("header", "true").csv(dir.toString)
+      .as[(String, String)].collect().toSet)
+    assert(Lake.readLedgers(spark, lake, "bond_info").isEmpty)
+  }
+
   test("writePartitioned replaces only the partitions present in df") {
     val root = freshRoot("pub")
     Lake.writePartitioned(df(1L -> "A", 2L -> "B"), root)

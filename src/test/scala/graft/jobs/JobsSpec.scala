@@ -265,6 +265,46 @@ class JobsSpec extends AnyFunSuite {
     assert(tableRows(s"$lake/dirty_dumps/assets") == dirty)
   }
 
+  test("silver publishes no empty table: all-good and all-bad deliveries") {
+    val header = Seq("AL1,AL2,AL5,AL6,AL7,AL18,AL30,AL50,AL51",
+      "Cut-off,Pool,Lease,Orig,Reg,Form,Price,Start,Maturity")
+    val good = "2023-07-31,P1,L1,OrigCo,y,3,1234.567,2020-01-01,2026-06"
+    val bad = "2023-08-31,P1,L2,OrigCo,n,9,10,2020-01-01,2026-06" // AL18
+    def deliver(lake: String, date: String, row: String): Unit = {
+      val raw = Files.createTempDirectory("rawempty").toString
+      Files.write(Paths.get(raw, s"DEALE_${date}_Loan_Data.csv"),
+        (header :+ row).mkString("\n").getBytes(StandardCharsets.UTF_8))
+      assert(Jobs.bronzeCsv(spark, raw, lake, "assets", "DEALE", "Loan_Data",
+        date.replace('_', '-')).size == 1)
+      Jobs.silverTopicSplit(spark, lake, "assets")
+    }
+    // dot-prefixed staging dirs are invisible to readers of a table
+    def ls(dir: String): Set[String] =
+      Option(new java.io.File(dir).list()).map(_.toSet).getOrElse(Set.empty)
+        .filterNot(_.startsWith("."))
+    val tables = Set("lease_info", "lease_features") // the topics present
+    val allPart = Set("part=DEALE_20230731")
+
+    // all good: every topic table, and no dirty_dumps root at all
+    val lakeGood = Files.createTempDirectory("lakegood").toString
+    deliver(lakeGood, "2023_07_31", good)
+    assert(ls(s"$lakeGood/silver/assets") == tables)
+    tables.foreach(t => assert(ls(s"$lakeGood/silver/assets/$t") == allPart, t))
+    assert(ls(lakeGood) == Set("bronze", "clean_dump", "silver"))
+
+    // all bad: the quarantine only, and no silver root at all
+    val lakeBad = Files.createTempDirectory("lakebad").toString
+    deliver(lakeBad, "2023_08_31", bad)
+    assert(ls(s"$lakeBad/dirty_dumps/assets") == Set("part=DEALE_20230831"))
+    assert(ls(lakeBad) == Set("bronze", "clean_dump", "dirty_dumps"))
+
+    // over existing roots: a part with no good (no bad) rows gets no
+    // topic (dirty_dumps) partition
+    deliver(lakeBad, "2023_07_31", good)
+    tables.foreach(t => assert(ls(s"$lakeBad/silver/assets/$t") == allPart, t))
+    assert(ls(s"$lakeBad/dirty_dumps/assets") == Set("part=DEALE_20230831"))
+  }
+
   test("run-all: a failing deal propagates its error and leaves no pool thread") {
     val rawRoot = Files.createTempDirectory("rawfail").toString
     val lake = Files.createTempDirectory("lakefail").toString

@@ -59,6 +59,25 @@ class RulesSpec extends AnyFunSuite {
     assert(good.intersect(bad).count() == 0)
   }
 
+  test("annotate filtered on flag == profile's pair, bit for bit") {
+    val df = Seq(
+      ("a", "y", "1.5", "2020-01-02"), ("b", null, null, null),
+      ("c", "n", "2e3", "2020-07"), ("d", "y", "-4", "2020"),
+      (null, "y", "1", "2020-01-01"), ("a", "x", "1", "2020-01-01"),
+      ("a", "y", "abc", "2020-01-01"), ("a", "y", "1", "2011-12-31"),
+      ("a", "y", "1", "2031-01-01"), ("a", "y", "1", "20-20-20-20"),
+      ("a", "y", "1", "not-a-date"),
+    ).toDF("req_str", "opt_enum", "num", "dt")
+    val annotated = Rules.annotate(df, schema)
+    val (good, bad) = Rules.profile(df, schema)
+    Seq(annotated.filter($"flag") -> good, annotated.filter(!$"flag") -> bad)
+      .foreach { case (got, want) =>
+        assert(got.schema == want.schema)
+        assert(got.collect().toSeq == want.collect().toSeq)
+      }
+    assert(good.count() == 4 && bad.count() == 7)
+  }
+
   test("columns missing from the frame are skipped") {
     val df = Seq(("a")).toDF("req_str") // only one of the four schema cols
     val (good, bad) = Rules.profile(df, schema)
