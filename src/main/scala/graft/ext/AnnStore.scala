@@ -76,17 +76,12 @@ object AnnStore {
 
   def savePq(idx: PqServeIndex, dir: String): Unit = {
     val spark = idx.codes.sparkSession
-    import spark.implicits._
     RefIndexStore.atomicPublish(spark, dir, { stage =>
       // the three artifacts are independent writes to distinct paths —
       // overlap them (guide §2.6); meta stays LAST (the completeness
       // marker atomicPublish/recover key on)
       graft.io.Concurrent.awaitAll(spark, Seq(
-        () => idx.codebook.zipWithIndex.flatMap { case (entries, m) =>
-          entries.zipWithIndex.map { case (cvec, c) => (m, c, cvec) }
-        }.toDF("m", "code", "cvec")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(new Path(stage, "codebook").toString),
+        () => writeCodebook(spark, idx.codebook, stage),
         () => idx.codes.write.mode(SaveMode.Overwrite)
           .parquet(new Path(stage, "codes").toString),
         // global sort on corpus_id (range partition + in-partition
@@ -104,18 +99,31 @@ object AnnStore {
 
   def loadPq(spark: SparkSession, dir: String): PqServeIndex = {
     val meta = RefIndexStore.readMeta(spark, dir, "pq")
-    val (subspaces, ksub) = (meta("subspaces").toInt, meta("ksub").toInt)
-    PqServeIndex(subspaces, ksub, meta("dim").toInt,
-      readCodebookAt(spark, dir, subspaces, ksub),
+    PqServeIndex(meta("subspaces").toInt, meta("ksub").toInt,
+      meta("dim").toInt, readCodebookAt(spark, dir, meta),
       spark.read.parquet(new Path(dir, "codes").toString),
       spark.read.parquet(new Path(dir, "payload").toString))
   }
 
-  /** The persisted integer codebook — subspaces·ksub rows by
-    * construction, the same bounded-collect class as its training. */
+  /** The one codebook writer: `root/codebook` as the (m, code, cvec)
+    * table, one file. */
+  private def writeCodebook(spark: SparkSession,
+                            codebook: Seq[Seq[Seq[Long]]], root: Path): Unit = {
+    import spark.implicits._
+    codebook.zipWithIndex.flatMap { case (entries, m) =>
+      entries.zipWithIndex.map { case (cvec, c) => (m, c, cvec) }
+    }.toDF("m", "code", "cvec")
+      .coalesce(1).write.mode(SaveMode.Overwrite)
+      .parquet(new Path(root, "codebook").toString)
+  }
+
+  /** The persisted integer codebook of the index whose `meta/` is
+    * `meta` — subspaces·ksub rows by construction, the same
+    * bounded-collect class as its training. */
   private def readCodebookAt(spark: SparkSession, dir: String,
-                             subspaces: Int, ksub: Int)
+                             meta: Map[String, String])
       : Seq[Seq[Seq[Long]]] = {
+    val (subspaces, ksub) = (meta("subspaces").toInt, meta("ksub").toInt)
     val rows = spark.read.parquet(new Path(dir, "codebook").toString)
       .select(col("m"), col("code"), col("cvec"))
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
@@ -161,16 +169,11 @@ object AnnStore {
     * over the union, because encoding is per-row. */
   def createPqSliced(spark: SparkSession, dir: String,
                      codebook: Seq[Seq[Seq[Long]]], dim: Int): Unit = {
-    import spark.implicits._
     val (fs, root) = graft.streaming.RefIndexSlices.fsOf(spark, dir)
     require(!fs.exists(new Path(root, "meta")),
       s"sliced pq index already exists at $dir")
     fs.mkdirs(root)
-    codebook.zipWithIndex.flatMap { case (entries, m) =>
-      entries.zipWithIndex.map { case (cvec, c) => (m, c, cvec) }
-    }.toDF("m", "code", "cvec")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new Path(root, "codebook").toString)
+    writeCodebook(spark, codebook, root)
     RefIndexStore.writeMeta(spark, root, Map(
       "kind" -> "pq_sliced", "subspaces" -> codebook.length.toString,
       "ksub" -> codebook.head.length.toString, "dim" -> dim.toString))
@@ -182,7 +185,8 @@ object AnnStore {
   def appendPq(more: DataFrame, dir: String, id: String,
                vec: String): Long = {
     val spark = more.sparkSession
-    val loaded = loadPqSlicedMeta(spark, dir)
+    val loaded = readCodebookAt(spark, dir,
+      RefIndexStore.readMeta(spark, dir, "pq_sliced"))
     val (fs, root) = graft.streaming.RefIndexSlices.fsOf(spark, dir)
     val uuid = java.util.UUID.randomUUID().toString
     val slice = graft.streaming.RefIndexSlices.slicePath(root, uuid)
@@ -204,7 +208,6 @@ object AnnStore {
 
   def loadPqSliced(spark: SparkSession, dir: String): PqServeIndex = {
     val meta = RefIndexStore.readMeta(spark, dir, "pq_sliced")
-    val cb = loadPqSlicedMeta(spark, dir)
     val (fs, root) = graft.streaming.RefIndexSlices.fsOf(spark, dir)
     val v = graft.streaming.RefIndexSlices.currentVersion(fs, root)
     require(v > 0, s"no committed slices at $dir")
@@ -218,15 +221,8 @@ object AnnStore {
     def part(p: String) = spark.read.parquet(slices.map(u => new Path(
       graft.streaming.RefIndexSlices.slicePath(root, u), p).toString): _*)
     PqServeIndex(meta("subspaces").toInt, meta("ksub").toInt,
-      meta("dim").toInt, cb, part("codes"), part("payload"))
-  }
-
-  /** The frozen codebook of a sliced pq index (bounded collect, same
-    * validation as [[loadPq]]'s). */
-  private def loadPqSlicedMeta(spark: SparkSession, dir: String)
-      : Seq[Seq[Seq[Long]]] = {
-    val meta = RefIndexStore.readMeta(spark, dir, "pq_sliced")
-    readCodebookAt(spark, dir, meta("subspaces").toInt, meta("ksub").toInt)
+      meta("dim").toInt, readCodebookAt(spark, dir, meta), part("codes"),
+      part("payload"))
   }
 
   /** Collapse a sliced PQ index's committed slices into one (codes
@@ -307,18 +303,13 @@ object AnnStore {
   def saveIvfPq(idx: IvfPqServeIndex, dir: String,
                 withPayload: Boolean = false): Unit = {
     val spark = idx.codes.sparkSession
-    import spark.implicits._
     if (withPayload) require(idx.payload.isDefined,
       "withPayload = true but the index handle carries no payload frame")
     RefIndexStore.atomicPublish(spark, dir, { stage =>
       // independent artifacts to distinct paths — overlap (guide
       // §2.6); meta stays LAST (the completeness marker)
       graft.io.Concurrent.awaitAll(spark, Seq(
-        () => idx.codebook.zipWithIndex.flatMap { case (entries, m) =>
-          entries.zipWithIndex.map { case (cvec, c) => (m, c, cvec) }
-        }.toDF("m", "code", "cvec")
-          .coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(new Path(stage, "codebook").toString),
+        () => writeCodebook(spark, idx.codebook, stage),
         () => idx.cents.coalesce(1).write.mode(SaveMode.Overwrite)
           .parquet(new Path(stage, "centroids").toString),
         () => idx.codes.write.mode(SaveMode.Overwrite).partitionBy("cluster")
@@ -338,14 +329,13 @@ object AnnStore {
 
   def loadIvfPq(spark: SparkSession, dir: String): IvfPqServeIndex = {
     val meta = RefIndexStore.readMeta(spark, dir, "ivfpq")
-    val (subspaces, ksub) = (meta("subspaces").toInt, meta("ksub").toInt)
     // the partition column comes back type-inferred — leave it as
     // read: the serving filter emits Int literals against it (no cast
     // on the attribute, so directory pruning engages) and the probes
     // join promotes types without touching the scan predicate
-    IvfPqServeIndex(subspaces, ksub, meta("dim").toInt,
-      meta("nCentroids").toInt,
-      readCodebookAt(spark, dir, subspaces, ksub),
+    IvfPqServeIndex(meta("subspaces").toInt, meta("ksub").toInt,
+      meta("dim").toInt, meta("nCentroids").toInt,
+      readCodebookAt(spark, dir, meta),
       spark.read.parquet(new Path(dir, "centroids").toString),
       spark.read.parquet(new Path(dir, "codes").toString),
       if (meta.getOrElse("payload", "false").toBoolean)
@@ -381,16 +371,11 @@ object AnnStore {
   def createIvfPqSliced(spark: SparkSession, dir: String,
                         codebook: Seq[Seq[Seq[Long]]], cents: DataFrame,
                         dim: Int, withPayload: Boolean = false): Unit = {
-    import spark.implicits._
     val (fs, root) = graft.streaming.RefIndexSlices.fsOf(spark, dir)
     require(!fs.exists(new Path(root, "meta")),
       s"sliced ivfpq index already exists at $dir")
     fs.mkdirs(root)
-    codebook.zipWithIndex.flatMap { case (entries, m) =>
-      entries.zipWithIndex.map { case (cvec, c) => (m, c, cvec) }
-    }.toDF("m", "code", "cvec")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(new Path(root, "codebook").toString)
+    writeCodebook(spark, codebook, root)
     val nCentroids = cents.count()
     cents.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(new Path(root, "centroids").toString)
@@ -411,8 +396,7 @@ object AnnStore {
                   vec: String): Long = {
     val spark = more.sparkSession
     val meta = RefIndexStore.readMeta(spark, dir, "ivfpq_sliced")
-    val cb = readCodebookAt(spark, dir,
-      meta("subspaces").toInt, meta("ksub").toInt)
+    val cb = readCodebookAt(spark, dir, meta)
     val cents = spark.read.parquet(new Path(dir, "centroids").toString)
     val (fs, root) = graft.streaming.RefIndexSlices.fsOf(spark, dir)
     val uuid = java.util.UUID.randomUUID().toString
@@ -438,7 +422,6 @@ object AnnStore {
 
   def loadIvfPqSliced(spark: SparkSession, dir: String): IvfPqServeIndex = {
     val meta = RefIndexStore.readMeta(spark, dir, "ivfpq_sliced")
-    val (subspaces, ksub) = (meta("subspaces").toInt, meta("ksub").toInt)
     val (fs, root) = graft.streaming.RefIndexSlices.fsOf(spark, dir)
     val v = graft.streaming.RefIndexSlices.currentVersion(fs, root)
     require(v > 0, s"no committed slices at $dir")
@@ -453,9 +436,9 @@ object AnnStore {
       graft.streaming.RefIndexSlices.slicePath(root, u), p).toString)
     def flat(p: String) = spark.read.parquet(slices.map(u => new Path(
       graft.streaming.RefIndexSlices.slicePath(root, u), p).toString): _*)
-    IvfPqServeIndex(subspaces, ksub, meta("dim").toInt,
-      meta("nCentroids").toInt,
-      readCodebookAt(spark, dir, subspaces, ksub),
+    IvfPqServeIndex(meta("subspaces").toInt, meta("ksub").toInt,
+      meta("dim").toInt, meta("nCentroids").toInt,
+      readCodebookAt(spark, dir, meta),
       spark.read.parquet(new Path(dir, "centroids").toString),
       slices.map(part(_, "codes")).reduce(_ unionByName _),
       if (meta.getOrElse("payload", "false").toBoolean)
@@ -501,21 +484,6 @@ object AnnStore {
     }
   }
 
-  /** Kind-dispatching compaction for the sliced ANN stores — the CLI
-    * `index_compact` entry point when the dir holds a pq/ivfpq index. */
-  def compactAnn(spark: SparkSession, dir: String,
-                 graceMs: Long = graft.streaming.RefIndexSlices.DefaultGraceMs)
-      : Long = {
-    val meta = spark.read.parquet(new Path(dir, "meta").toString)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    meta.getOrElse("kind", "?") match {
-      case "pq_sliced" => compactPq(spark, dir, graceMs)
-      case "ivfpq_sliced" => compactIvfPq(spark, dir, graceMs)
-      case other => throw new IllegalArgumentException(
-        s"index at $dir is kind=$other, not a sliced ANN index")
-    }
-  }
-
   /** Serve ADC top-k from the persisted IVF-PQ index —
     * [[Similarity.ivfPqTopKFromCodes]]: routing collected (bounded),
     * probed clusters pushed into the partitioned codes read. */
@@ -537,10 +505,4 @@ object AnnStore {
     Similarity.ivfPqTopKRefinedFromCodes(queries, qId, qVec, idx.codes,
       idx.cents, idx.payload.get, idx.codebook, k, nProbe, refine)
   }
-
-  /** Heal a pq index dir after a crashed save — the publish protocol
-    * (staging/trash names, meta-as-completeness-marker) is shared
-    * with [[RefIndexStore]], so its healer applies verbatim. */
-  def recover(spark: SparkSession, dir: String): Boolean =
-    RefIndexStore.recover(spark, dir)
 }

@@ -76,7 +76,7 @@ object RefIndexSlices {
                      bands: Int = 0, bitsPerBand: Int = 0, dim: Int = 64,
                      maxBucket: Int = 4096): Long = {
     val spark = more.sparkSession
-    val idx = readMetaIfExists(spark, dir) match {
+    val idx = RefIndexStore.readMetaIfExists(spark, dir) match {
       case Some(m) =>
         require(m("kind") == "semantic",
           s"index at $dir is kind=${m("kind")}, not semantic")
@@ -106,7 +106,7 @@ object RefIndexSlices {
   def appendSimHash(more: DataFrame, dir: String, id: String, text: String,
                     maxHamming: Int = 3, maxBucket: Int = 4096): Long = {
     val spark = more.sparkSession
-    val idx = readMetaIfExists(spark, dir) match {
+    val idx = RefIndexStore.readMetaIfExists(spark, dir) match {
       case Some(m) =>
         require(m("kind") == "simhash",
           s"index at $dir is kind=${m("kind")}, not simhash")
@@ -132,7 +132,7 @@ object RefIndexSlices {
                     n: Int = 3, threshold: Double = 0.7, bands: Int = 64,
                     rowsPerBand: Int = 2, maxBucket: Int = 4096): Long = {
     val spark = more.sparkSession
-    val idx = readMetaIfExists(spark, dir) match {
+    val idx = RefIndexStore.readMetaIfExists(spark, dir) match {
       case Some(m) =>
         require(m("kind") == "minhash",
           s"index at $dir is kind=${m("kind")}, not minhash")
@@ -265,7 +265,7 @@ object RefIndexSlices {
                           meta: Map[String, String]): Long = {
     val spark = bandRows.sparkSession
     val (fs, root) = fsOf(spark, dir)
-    readMetaIfExists(spark, dir) match {
+    RefIndexStore.readMetaIfExists(spark, dir) match {
       case Some(existing) => require(existing == meta,
         s"slice knobs $meta != index knobs $existing — " +
           "slices must share the build knobs")
@@ -344,14 +344,6 @@ object RefIndexSlices {
     def part(p: String) = spark.read.parquet(slices.map(u =>
       new Path(slicePath(root, u), p).toString): _*)
     (meta, ns, withSub(part("band_rows"), ns), part("payload"))
-  }
-
-  private def readMetaIfExists(spark: SparkSession, dir: String)
-      : Option[Map[String, String]] = {
-    val (fs, root) = fsOf(spark, dir)
-    if (!fs.exists(new Path(root, "meta"))) None
-    else Some(spark.read.parquet(new Path(root, "meta").toString)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
   }
 
   // ------------------------------------------------------- manifest

@@ -278,10 +278,23 @@ object RefIndexStore {
       .parquet(new Path(stage, "meta").toString)
   }
 
+  /** The one `meta/` reader: the knob map of the index at `dir`, or
+    * None when `dir` holds no index. The schema is given, so the read
+    * is one small job with no schema-inference job before it. */
+  private[graft] def readMetaIfExists(spark: SparkSession, dir: String)
+      : Option[Map[String, String]] = {
+    val meta = new Path(dir, "meta")
+    if (!fileSystem(spark, meta).exists(meta)) None
+    else Some(spark.read.schema("key STRING, value STRING")
+      .parquet(meta.toString)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap)
+  }
+
+  /** [[readMetaIfExists]] for an index that must exist and be `kind`. */
   private[graft] def readMeta(spark: SparkSession, dir: String,
                               kind: String): Map[String, String] = {
-    val meta = spark.read.parquet(new Path(dir, "meta").toString)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    val meta = readMetaIfExists(spark, dir)
+      .getOrElse(throw new IllegalArgumentException(s"no index at $dir"))
     require(meta.get("kind").contains(kind),
       s"index at $dir is kind=${meta.getOrElse("kind", "?")}, not $kind")
     meta

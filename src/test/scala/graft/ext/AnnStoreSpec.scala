@@ -360,9 +360,12 @@ class AnnStoreSpec extends AnyFunSuite {
     AnnStore.compactPq(spark, dir, graceMs = 0)
     assert(!fs.exists(orphan), "compact must sweep AGED orphans")
     assert(ranking(AnnStore.loadPqSliced(spark, dir)) == want)
-    // compactAnn dispatches on the meta kind; a non-sliced dir refuses
-    AnnStore.compactAnn(spark, dir, graceMs = 0)
+    // the CLI stage dispatches on the stored kind (pq_sliced); MainSpec
+    // checks that it refuses a store-layout dir
+    graft.jobs.Main.run(Map("stage-name" -> "index_compact",
+      "index-dir" -> dir), spark)
     assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
+    assert(ranking(AnnStore.loadPqSliced(spark, dir)) == want)
   }
 
   test("save over an existing pq index swaps atomically") {

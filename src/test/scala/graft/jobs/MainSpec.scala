@@ -3,6 +3,8 @@ package graft.jobs
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.col
 import graft.TestSpark
 
 /** CLI dispatcher (#22): stage routing, required-arg errors, invalid
@@ -44,235 +46,247 @@ class MainSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$lake/silver/assets/lease_info").count() == 1)
   }
 
-  test("index_build + index_probe stages: nightly build, merge, probe") {
+  // ------------------------------------------------------ index stages
+  private def stage(opts: Map[String, String]): Unit = Main.run(opts, spark)
+
+  /** One row per index kind. `refA` builds the index or its first
+    * slice, and `refB` is merged into it (`streaming` kinds) or
+    * appended to it. `knobs` go to every stage, as a scheduler passes
+    * one option set. Each `probes` option set is checked against
+    * `serve`: the library composition `index_probe` stands for, over
+    * the dir the CLI wrote. The first set is also checked against
+    * `oracle(first, all)`: the answer, from the corpus alone, of an
+    * index trained on `first` that holds `all`. */
+  private case class KindCase(kind: String, streaming: Boolean,
+      cols: Seq[String], refA: DataFrame, refB: DataFrame, probe: DataFrame,
+      knobs: Map[String, String], probes: Seq[Map[String, String]],
+      serve: (String, Boolean, Map[String, String]) => DataFrame,
+      oracle: (DataFrame, DataFrame) => DataFrame)
+
+  private lazy val kindCases: Seq[KindCase] = {
     import spark.implicits._
-    def mkVec(i: Long): Array[Double] =
-      Array.tabulate(8)(j => math.cos((i % 5 + 1) * (j + 2) * 0.31))
-    val base = Files.createTempDirectory("mainidx").toString
-    (100L until 120L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-      .write.parquet(s"$base/ref_a")
-    (120L until 140L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-      .write.parquet(s"$base/ref_b")
-    (0L until 20L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-      .write.parquet(s"$base/probe")
-    // nightly build, then an incremental merge into a SECOND dir
-    // (source index untouched — publish is whole-dir atomic)
-    Main.run(Map("stage-name" -> "index_build",
-      "source" -> s"$base/ref_a", "index-dir" -> s"$base/idx",
-      "bands" -> "4", "bits" -> "4", "dim" -> "8"), spark)
-    Main.run(Map("stage-name" -> "index_build",
-      "source" -> s"$base/ref_b", "merge-into" -> s"$base/idx",
-      "index-dir" -> s"$base/idx2"), spark)
-    Main.run(Map("stage-name" -> "index_probe",
-      "index-dir" -> s"$base/idx2", "probe" -> s"$base/probe",
-      "cos2-num" -> "4", "cos2-den" -> "25", "out" -> s"$base/matches"),
-      spark)
-    val got = spark.read.parquet(s"$base/matches")
-      .as[(Long, Long)].collect().toSet
-    // oracle: the batch cross operator over the merged reference
-    val want = graft.ext.Dedup.semanticDupPairsInt8Across(
-        (0L until 20L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding"),
-        (100L until 140L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", cos2Num = 4, cos2Den = 25,
-        bands = 4, bitsPerBand = 4, dim = 8)
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    assert(got == want && got.nonEmpty)
+    import graft.ext.{AnnStore, Dedup, Similarity}
+    import graft.streaming.{EmbedStream, MinHashStream, RefIndexSlices,
+      RefIndexStore, SimHashStream}
+    def vecs(ids: Seq[Long], mod: Int, step: Double, dim: Int,
+             idBase: Long = 0L) =
+      ids.map(i => (idBase + i, Array.tabulate(dim)(j =>
+        math.cos((i % mod + 1) * (j + 2) * step)))).toDF("vec_id", "embedding")
+    def docs(ids: Seq[Long]) = ids.map(i => (i,
+      (0 until 24).map(j => s"w${(i % 3) * 7 + j}").mkString(" ")))
+      .toDF("doc_id", "text")
+    val pairs = Seq("id_a", "id_b")
+    val ranks = Seq("query_id", "rank", "corpus_id")
+    val sem = vecs(0L until 20L, 5, 0.31, 8)
+    val text = docs(0L until 12L)
+    val ann = vecs(0L until 60L by 11, 7, 0.23, 16, idBase = 1000L)
+    val annKnobs = Map("subspaces" -> "4", "ksub" -> "8", "dim" -> "16")
+    def cb(corpus: DataFrame) =
+      Similarity.pqCodebook(corpus, "vec_id", "embedding", 4, 8, 16)
+    Seq(
+      KindCase("semantic", streaming = true, pairs,
+        vecs(100L until 120L, 5, 0.31, 8), vecs(120L until 140L, 5, 0.31, 8),
+        sem, Map("bands" -> "4", "bits" -> "4", "dim" -> "8"),
+        Seq(Map("cos2-num" -> "4", "cos2-den" -> "25")),
+        (dir, sliced, _) => EmbedStream.semanticDupMatches(sem,
+          if (sliced) RefIndexSlices.loadSemantic(spark, dir)
+          else RefIndexStore.loadSemantic(spark, dir),
+          "vec_id", "embedding", cos2Num = 4, cos2Den = 25),
+        (_, all) => Dedup.semanticDupPairsInt8Across(sem, all, "vec_id",
+          "embedding", cos2Num = 4, cos2Den = 25, bands = 4,
+          bitsPerBand = 4, dim = 8)),
+      KindCase("simhash", streaming = true, pairs,
+        docs(100L until 115L), docs(115L until 130L), text, Map.empty,
+        Seq(Map.empty),
+        (dir, sliced, _) => SimHashStream.simhashDupMatches(text,
+          if (sliced) RefIndexSlices.loadSimHash(spark, dir)
+          else RefIndexStore.loadSimHash(spark, dir), "doc_id", "text"),
+        (_, all) => Dedup.simhashPairsAcross(text, all, "doc_id", "text",
+          maxHamming = 3)),
+      KindCase("minhash", streaming = true, pairs,
+        docs(100L until 115L), docs(115L until 130L), text, Map.empty,
+        Seq(Map.empty),
+        (dir, sliced, _) => MinHashStream.minhashDupMatches(text,
+          if (sliced) RefIndexSlices.loadMinHash(spark, dir)
+          else RefIndexStore.loadMinHash(spark, dir), "doc_id", "text"),
+        (_, all) => Dedup.minhashLshPairsAcross(text, all, "doc_id", "text",
+          n = 3, threshold = 0.7)),
+      KindCase("pq", streaming = false, ranks,
+        vecs(0L until 30L, 7, 0.23, 16), vecs(30L until 60L, 7, 0.23, 16),
+        ann, annKnobs, Seq(Map("k" -> "5", "refine" -> "3")),
+        (dir, sliced, _) => AnnStore.pqServe(ann, "vec_id", "embedding",
+          if (sliced) AnnStore.loadPqSliced(spark, dir)
+          else AnnStore.loadPq(spark, dir), k = 5, refine = 3),
+        // x197's in-session pipeline at the first corpus's codebook
+        (first, all) => Similarity.pqTopKRefined(ann, "vec_id", "embedding",
+          all, "vec_id", "embedding", cb(first), k = 5, refine = 3)),
+      KindCase("ivfpq", streaming = false, ranks,
+        vecs(0L until 30L, 7, 0.23, 16), vecs(30L until 60L, 7, 0.23, 16),
+        ann, annKnobs ++ Map("ncentroids" -> "8", "rounds" -> "2",
+          "payload" -> "true"),
+        Seq(Map("k" -> "5", "nprobe" -> "2"),
+          Map("k" -> "5", "nprobe" -> "2", "refine" -> "2")),
+        { (dir, sliced, opts) =>
+          val idx = if (sliced) AnnStore.loadIvfPqSliced(spark, dir)
+            else AnnStore.loadIvfPq(spark, dir)
+          opts.get("refine").fold(AnnStore.ivfPqServe(ann, "vec_id",
+            "embedding", idx, k = 5, nProbe = 2))(r =>
+            AnnStore.ivfPqServeRefined(ann, "vec_id", "embedding", idx,
+              k = 5, nProbe = 2, refine = r.toInt))
+        },
+        { (first, all) =>
+          // a store build trains on its whole corpus: x181's in-session
+          // operator. A sliced index keeps the first slice's centroids
+          // and codebook: the library's sliced store holding `all`.
+          if (first eq all) Similarity.ivfPqTopK(ann, "vec_id", "embedding",
+            all, "vec_id", "embedding", cb(all), k = 5, nCentroids = 8,
+            nProbe = 2, rounds = 2)
+          else {
+            val built = AnnStore.buildIvfPq(first, "vec_id", "embedding",
+              4, 8, 16, nCentroids = 8, rounds = 2)
+            val dir = Files.createTempDirectory("mainivfpqlib").toString +
+              "/idx"
+            AnnStore.createIvfPqSliced(spark, dir, built.codebook,
+              built.cents, dim = 16)
+            AnnStore.appendIvfPq(all, dir, "vec_id", "embedding")
+            AnnStore.ivfPqServe(ann, "vec_id", "embedding",
+              AnnStore.loadIvfPqSliced(spark, dir), k = 5, nProbe = 2)
+          }
+        }))
   }
 
-  test("index stages: --kind simhash and minhash route through the same dirs") {
-    import spark.implicits._
-    def doc(i: Long) = (0 until 24).map(j => s"w${(i % 3) * 7 + j}").mkString(" ")
-    val base = Files.createTempDirectory("mainidxsig").toString
-    (100L until 130L).map(i => (i, doc(i))).toDF("doc_id", "text")
-      .write.parquet(s"$base/ref")
-    (0L until 12L).map(i => (i, doc(i))).toDF("doc_id", "text")
-      .write.parquet(s"$base/probe")
-    val refDf = (100L until 130L).map(i => (i, doc(i))).toDF("doc_id", "text")
-    val probeDf = (0L until 12L).map(i => (i, doc(i))).toDF("doc_id", "text")
-    for (kind <- Seq("simhash", "minhash")) {
-      Main.run(Map("stage-name" -> "index_build", "kind" -> kind,
-        "source" -> s"$base/ref", "index-dir" -> s"$base/idx_$kind"), spark)
-      Main.run(Map("stage-name" -> "index_probe", "kind" -> kind,
-        "index-dir" -> s"$base/idx_$kind", "probe" -> s"$base/probe",
-        "out" -> s"$base/out_$kind"), spark)
-      val got = spark.read.parquet(s"$base/out_$kind")
-        .as[(Long, Long)].collect().toSet
-      // exact oracle: the batch cross operator at the CLI defaults,
-      // mirroring the semantic case (the x208/x209 stream==batch
-      // parity makes this the same pair set by construction)
-      val want = (kind match {
-        case "simhash" => graft.ext.Dedup.simhashPairsAcross(
-          probeDf, refDf, "doc_id", "text", maxHamming = 3)
-        case _ => graft.ext.Dedup.minhashLshPairsAcross(
-          probeDf, refDf, "doc_id", "text", n = 3, threshold = 0.7)
-      }).select($"id_a", $"id_b").distinct()
-        .as[(Long, Long)].collect().toSet
-      assert(got == want && got.nonEmpty,
-        s"$kind probe stage != batch cross oracle")
-    }
-    // an unknown kind string is refused loudly, and every index stage
-    // names the same five kinds
-    for (stage <- Seq("index_build", "index_append", "index_probe")) {
-      val e = intercept[RuntimeException](Main.run(
-        Map("stage-name" -> stage, "kind" -> "nope",
-          "source" -> s"$base/ref", "index-dir" -> s"$base/idx_simhash",
-          "probe" -> s"$base/probe", "out" -> s"$base/out_bad"), spark))
-      assert(e.getMessage == "invalid --kind nope; expected semantic, " +
-        "simhash, minhash, pq or ivfpq", s"$stage: ${e.getMessage}")
+  private def rowsOf(c: KindCase, df: DataFrame): Set[Row] =
+    df.select(c.cols.map(col): _*).collect().toSet
+
+  /** A temp dir holding the case's `ref_a`, `ref_b` and `probe`. */
+  private def fixture(c: KindCase): String = {
+    val base = Files.createTempDirectory(s"mainidx_${c.kind}").toString
+    c.refA.write.parquet(s"$base/ref_a")
+    c.refB.write.parquet(s"$base/ref_b")
+    c.probe.write.parquet(s"$base/probe")
+    base
+  }
+
+  /** Probe `dir` through the CLI with each of the case's option sets;
+    * each output must equal the library composition. Returns the first
+    * set's rows. */
+  private def probeAll(c: KindCase, base: String, dir: String,
+                       sliced: Boolean, tag: String): Set[Row] =
+    c.probes.zipWithIndex.map { case (p, n) =>
+      val out = s"$base/out_${tag}_$n"
+      stage(Map("stage-name" -> "index_probe", "kind" -> c.kind,
+        "index-dir" -> dir, "probe" -> s"$base/probe", "out" -> out) ++
+        (if (sliced) Map("layout" -> "sliced") else Map.empty) ++
+        c.knobs ++ p)
+      val got = rowsOf(c, spark.read.parquet(out))
+      assert(got == rowsOf(c, c.serve(dir, sliced, p)) && got.nonEmpty,
+        s"${c.kind} $tag probe $p != the library composition")
+      got
+    }.head
+
+  test("index_build + index_probe stages: nightly build, merge, probe") {
+    for (c <- kindCases) {
+      val base = fixture(c)
+      stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
+        "source" -> s"$base/ref_a", "index-dir" -> s"$base/idx") ++ c.knobs)
+      assert(probeAll(c, base, s"$base/idx", sliced = false, "built") ==
+        rowsOf(c, c.oracle(c.refA, c.refA)), s"${c.kind} build != oracle")
+      if (c.streaming) {
+        // the incremental merge publishes into a SECOND dir (the source
+        // index stays as it was: publish is whole-dir atomic)
+        stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
+          "source" -> s"$base/ref_b", "merge-into" -> s"$base/idx",
+          "index-dir" -> s"$base/idx2") ++ c.knobs)
+        val all = c.refA.unionByName(c.refB)
+        assert(probeAll(c, base, s"$base/idx2", sliced = false, "merged") ==
+          rowsOf(c, c.oracle(all, all)), s"${c.kind} merge != oracle")
+      }
     }
   }
 
   test("index_append + index_compact + sliced probe: nightly-append stages") {
-    import spark.implicits._
-    def mkVec(i: Long): Array[Double] =
-      Array.tabulate(8)(j => math.cos((i % 5 + 1) * (j + 2) * 0.31))
-    val base = Files.createTempDirectory("mainslices").toString
-    (100L until 120L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-      .write.parquet(s"$base/ref_a")
-    (120L until 140L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-      .write.parquet(s"$base/ref_b")
-    (0L until 20L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-      .write.parquet(s"$base/probe")
-    // two nightly appends (knobs freeze at the first), sliced probe
-    Main.run(Map("stage-name" -> "index_append",
-      "source" -> s"$base/ref_a", "index-dir" -> s"$base/idx",
-      "bands" -> "4", "bits" -> "4", "dim" -> "8"), spark)
-    Main.run(Map("stage-name" -> "index_append",
-      "source" -> s"$base/ref_b", "index-dir" -> s"$base/idx"), spark)
-    def probeTo(out: String): Set[(Long, Long)] = {
-      Main.run(Map("stage-name" -> "index_probe", "layout" -> "sliced",
-        "index-dir" -> s"$base/idx", "probe" -> s"$base/probe",
-        "cos2-num" -> "4", "cos2-den" -> "25", "out" -> out), spark)
-      spark.read.parquet(out).as[(Long, Long)].collect().toSet
+    for (c <- kindCases) {
+      val base = fixture(c)
+      val dir = s"$base/idx"
+      // the first slice: a streaming kind's knobs freeze at its first
+      // append; an ANN kind's sliced build freezes its codebook (and
+      // centroids) on the first source
+      for ((s, src) <- Seq(
+          (if (c.streaming) "index_append" else "index_build") -> "ref_a",
+          "index_append" -> "ref_b"))
+        stage(Map("stage-name" -> s, "kind" -> c.kind, "layout" -> "sliced",
+          "source" -> s"$base/$src", "index-dir" -> dir) ++ c.knobs)
+      val appended = probeAll(c, base, dir, sliced = true, "appended")
+      assert(appended == rowsOf(c, c.oracle(c.refA,
+        c.refA.unionByName(c.refB))), s"${c.kind} sliced != oracle")
+      // compaction collapses the slices and moves no row
+      stage(Map("stage-name" -> "index_compact", "index-dir" -> dir))
+      assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
+      assert(probeAll(c, base, dir, sliced = true, "compacted") == appended,
+        s"${c.kind} compaction moved a row")
     }
-    val got = probeTo(s"$base/matches")
-    val want = graft.ext.Dedup.semanticDupPairsInt8Across(
-        (0L until 20L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding"),
-        (100L until 140L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding"),
-        "vec_id", "embedding", cos2Num = 4, cos2Den = 25,
-        bands = 4, bitsPerBand = 4, dim = 8)
-      .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
-    assert(got == want && got.nonEmpty)
-    // compaction collapses the slices and changes no pair
-    Main.run(Map("stage-name" -> "index_compact",
-      "index-dir" -> s"$base/idx"), spark)
-    assert(graft.streaming.RefIndexSlices.sliceCount(spark, s"$base/idx") == 1)
-    assert(probeTo(s"$base/matches2") == want)
-    // a bad layout string is refused loudly
-    val e = intercept[RuntimeException](Main.run(
-      Map("stage-name" -> "index_probe", "layout" -> "nope",
-        "index-dir" -> s"$base/idx", "probe" -> s"$base/probe",
-        "out" -> s"$base/bad"), spark))
-    assert(e.getMessage.contains("invalid --layout"))
   }
 
-  test("ANN lifecycle through the CLI: pq sliced build/append/compact/probe at exact rank parity") {
-    import spark.implicits._
-    def mkVec(i: Long): Array[Double] =
-      Array.tabulate(16)(j => math.cos((i % 7 + 1) * (j + 2) * 0.23))
-    val base = Files.createTempDirectory("mainann").toString
-    val refA = (0L until 30L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-    val refB = (30L until 60L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-    val probeDf = (0L until 60L by 11).map(i => (1000L + i, mkVec(i)))
-      .toDF("vec_id", "embedding")
-    refA.write.parquet(s"$base/ref_a")
-    refB.write.parquet(s"$base/ref_b")
-    probeDf.write.parquet(s"$base/probe")
-    val knobs = Map("subspaces" -> "4", "ksub" -> "8", "dim" -> "16")
-    // nightly lifecycle: sliced build (codebook freezes on the first
-    // source), a second append, serve, compact, serve again
-    Main.run(Map("stage-name" -> "index_build", "kind" -> "pq",
-      "layout" -> "sliced", "source" -> s"$base/ref_a",
-      "index-dir" -> s"$base/pq") ++ knobs, spark)
-    Main.run(Map("stage-name" -> "index_append", "kind" -> "pq",
-      "source" -> s"$base/ref_b", "index-dir" -> s"$base/pq"), spark)
-    def ranksOf(out: String, extra: Map[String, String]): Set[(Long, Long, Long)] = {
-      Main.run(Map("stage-name" -> "index_probe", "layout" -> "sliced",
-        "index-dir" -> s"$base/pq", "probe" -> s"$base/probe",
-        "out" -> out, "k" -> "5") ++ extra, spark)
-      spark.read.parquet(out).select($"query_id", $"rank", $"corpus_id")
-        .as[(Long, Long, Long)].collect().toSet
+  test("index stages: an unknown --kind or --layout is refused by name") {
+    val base = fixture(kindCases.head)
+    // every index stage names the same five kinds
+    for (s <- Seq("index_build", "index_append", "index_probe")) {
+      val e = intercept[RuntimeException](stage(Map("stage-name" -> s,
+        "kind" -> "nope", "source" -> s"$base/ref_a",
+        "index-dir" -> s"$base/idx", "probe" -> s"$base/probe",
+        "out" -> s"$base/out_bad")))
+      assert(e.getMessage == "invalid --kind nope; expected semantic, " +
+        "simhash, minhash, pq or ivfpq", s"$s: ${e.getMessage}")
     }
-    // exact oracle: x197's in-session pipeline at the frozen (first-
-    // source) codebook over the full appended corpus
-    val cbA = graft.ext.Similarity.pqCodebook(refA, "vec_id", "embedding",
-      subspaces = 4, ksub = 8, dim = 16)
-    val want = graft.ext.Similarity.pqTopKRefined(probeDf, "vec_id",
-        "embedding", refA.unionByName(refB), "vec_id", "embedding", cbA,
-        k = 5, refine = 3)
-      .select($"query_id", $"rank", $"corpus_id")
-      .as[(Long, Long, Long)].collect().toSet
-    val got = ranksOf(s"$base/pq_out", Map("kind" -> "pq", "refine" -> "3"))
-    assert(got == want && got.nonEmpty)
-    // index_compact dispatches on the stored kind (pq_sliced) and
-    // must not move a rank
-    Main.run(Map("stage-name" -> "index_compact",
-      "index-dir" -> s"$base/pq"), spark)
-    assert(graft.streaming.RefIndexSlices.sliceCount(spark, s"$base/pq") == 1)
-    assert(ranksOf(s"$base/pq_out2",
-      Map("kind" -> "pq", "refine" -> "3")) == want)
+    val e = intercept[RuntimeException](stage(Map(
+      "stage-name" -> "index_probe", "layout" -> "nope",
+      "index-dir" -> s"$base/idx", "probe" -> s"$base/probe",
+      "out" -> s"$base/out_bad")))
+    assert(e.getMessage == "invalid --layout nope; expected store or sliced")
   }
 
-  test("ANN lifecycle through the CLI: ivfpq one-shot and sliced serve at exact rank parity") {
-    import spark.implicits._
-    def mkVec(i: Long): Array[Double] =
-      Array.tabulate(16)(j => math.cos((i % 7 + 1) * (j + 2) * 0.23))
-    val base = Files.createTempDirectory("mainannivf").toString
-    val union = (0L until 60L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-    val probeDf = (0L until 60L by 11).map(i => (1000L + i, mkVec(i)))
-      .toDF("vec_id", "embedding")
-    union.write.parquet(s"$base/ref")
-    probeDf.write.parquet(s"$base/probe")
-    val knobs = Map("subspaces" -> "4", "ksub" -> "8", "dim" -> "16",
-      "ncentroids" -> "8", "rounds" -> "2")
-    // exact oracle: x181's in-session operator (deterministic Lloyd)
-    // at the same knobs over the same corpus
-    val cb = graft.ext.Similarity.pqCodebook(union, "vec_id", "embedding",
-      subspaces = 4, ksub = 8, dim = 16)
-    val want = graft.ext.Similarity.ivfPqTopK(probeDf, "vec_id", "embedding",
-        union, "vec_id", "embedding", cb, k = 5, nCentroids = 8,
-        nProbe = 2, rounds = 2)
-      .select($"query_id", $"rank", $"corpus_id")
-      .as[(Long, Long, Long)].collect().toSet
-    def cliServe(dir: String, out: String, layout: Map[String, String]) = {
-      Main.run(Map("stage-name" -> "index_probe", "kind" -> "ivfpq",
-        "index-dir" -> dir, "probe" -> s"$base/probe", "out" -> out,
-        "k" -> "5", "nprobe" -> "2") ++ layout, spark)
-      spark.read.parquet(out).select($"query_id", $"rank", $"corpus_id")
-        .as[(Long, Long, Long)].collect().toSet
+  test("index stages: layout mistakes and a misplaced --merge-into are named errors") {
+    val c = kindCases.head
+    val base = fixture(c)
+    val (store, sliced) = (s"$base/idx", s"$base/idx_sliced")
+    for ((s, dir) <- Seq("index_build" -> store, "index_append" -> sliced))
+      stage(Map("stage-name" -> s, "source" -> s"$base/ref_a",
+        "index-dir" -> dir) ++ c.knobs)
+    def error(opts: (String, String)*): String =
+      intercept[RuntimeException](stage(Map("source" -> s"$base/ref_b",
+        "probe" -> s"$base/probe", "out" -> s"$base/out_bad") ++ c.knobs ++
+        opts)).getMessage
+    assert(error("stage-name" -> "index_build", "layout" -> "nope",
+      "index-dir" -> s"$base/idx_bad") ==
+      "invalid --layout nope; expected store or sliced")
+    assert(error("stage-name" -> "index_build", "kind" -> "pq",
+      "merge-into" -> store, "index-dir" -> s"$base/idx_bad") ==
+      "--merge-into does not apply to --kind pq")
+    assert(error("stage-name" -> "index_build", "layout" -> "sliced",
+      "merge-into" -> store, "index-dir" -> s"$base/idx_bad") ==
+      "--merge-into does not apply to --layout sliced")
+    // the layout on disk is named next to the one the stage expects
+    def mismatch(dir: String, found: String, wanted: String) =
+      s"index at $dir has the $found layout, not the $wanted layout"
+    assert(error("stage-name" -> "index_probe", "index-dir" -> sliced) ==
+      mismatch(sliced, "sliced", "store"))
+    assert(error("stage-name" -> "index_probe", "layout" -> "sliced",
+      "index-dir" -> store) == mismatch(store, "store", "sliced"))
+    for (s <- Seq("index_append", "index_compact"))
+      assert(error("stage-name" -> s, "index-dir" -> store) ==
+        mismatch(store, "store", "sliced"), s)
+  }
+
+  test("index_build --layout sliced commits a streaming kind's source as its first slice") {
+    for (c <- kindCases if c.streaming) {
+      val base = fixture(c)
+      stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
+        "layout" -> "sliced", "source" -> s"$base/ref_a",
+        "index-dir" -> s"$base/idx") ++ c.knobs)
+      assert(graft.streaming.RefIndexSlices.sliceCount(spark, s"$base/idx") == 1)
+      assert(probeAll(c, base, s"$base/idx", sliced = true, "built") ==
+        rowsOf(c, c.oracle(c.refA, c.refA)), s"${c.kind} sliced build != oracle")
     }
-    // one-shot layout
-    Main.run(Map("stage-name" -> "index_build", "kind" -> "ivfpq",
-      "source" -> s"$base/ref", "index-dir" -> s"$base/flat") ++ knobs, spark)
-    assert(cliServe(s"$base/flat", s"$base/flat_out", Map.empty) == want
-      && want.nonEmpty)
-    // sliced layout: same artifacts (trained on the one source),
-    // served through the slice union — and compact keeps the ranks
-    Main.run(Map("stage-name" -> "index_build", "kind" -> "ivfpq",
-      "layout" -> "sliced", "source" -> s"$base/ref",
-      "index-dir" -> s"$base/sliced") ++ knobs, spark)
-    assert(cliServe(s"$base/sliced", s"$base/sliced_out",
-      Map("layout" -> "sliced")) == want)
-    Main.run(Map("stage-name" -> "index_compact",
-      "index-dir" -> s"$base/sliced"), spark)
-    assert(graft.streaming.RefIndexSlices.sliceCount(spark, s"$base/sliced") == 1)
-    assert(cliServe(s"$base/sliced", s"$base/sliced_out2",
-      Map("layout" -> "sliced")) == want)
-    // --payload true build + --refine probe routes the refined serve
-    // (library-level parity vs the loaded index; the refined chain's
-    // independent oracle lives in AnnStoreSpec)
-    Main.run(Map("stage-name" -> "index_build", "kind" -> "ivfpq",
-      "payload" -> "true", "source" -> s"$base/ref",
-      "index-dir" -> s"$base/flatp") ++ knobs, spark)
-    val gotRefined = cliServe(s"$base/flatp", s"$base/ref_out",
-      Map("refine" -> "2"))
-    val wantRefined = graft.ext.AnnStore.ivfPqServeRefined(probeDf,
-        "vec_id", "embedding",
-        graft.ext.AnnStore.loadIvfPq(spark, s"$base/flatp"),
-        k = 5, nProbe = 2, refine = 2)
-      .select($"query_id", $"rank", $"corpus_id")
-      .as[(Long, Long, Long)].collect().toSet
-    assert(gotRefined == wantRefined && gotRefined.nonEmpty)
   }
 
   test("invalid stage and missing args error clearly") {
