@@ -184,47 +184,75 @@ class MainSpec extends AnyFunSuite {
       got
     }.head
 
-  test("index_build + index_probe stages: nightly build, merge, probe") {
-    for (c <- kindCases) {
-      val base = fixture(c)
+  private def kindCase(kind: String): KindCase =
+    kindCases.find(_.kind == kind).get
+
+  /** Store layout: a nightly build, probed; a streaming kind then
+    * merges `refB` into a second dir, probed again. */
+  private def storeLifecycle(c: KindCase): Unit = {
+    val base = fixture(c)
+    stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
+      "source" -> s"$base/ref_a", "index-dir" -> s"$base/idx") ++ c.knobs)
+    assert(probeAll(c, base, s"$base/idx", sliced = false, "built") ==
+      rowsOf(c, c.oracle(c.refA, c.refA)), s"${c.kind} build != oracle")
+    if (c.streaming) {
+      // the incremental merge publishes into a SECOND dir (the source
+      // index stays as it was: publish is whole-dir atomic)
       stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
-        "source" -> s"$base/ref_a", "index-dir" -> s"$base/idx") ++ c.knobs)
-      assert(probeAll(c, base, s"$base/idx", sliced = false, "built") ==
-        rowsOf(c, c.oracle(c.refA, c.refA)), s"${c.kind} build != oracle")
-      if (c.streaming) {
-        // the incremental merge publishes into a SECOND dir (the source
-        // index stays as it was: publish is whole-dir atomic)
-        stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
-          "source" -> s"$base/ref_b", "merge-into" -> s"$base/idx",
-          "index-dir" -> s"$base/idx2") ++ c.knobs)
-        val all = c.refA.unionByName(c.refB)
-        assert(probeAll(c, base, s"$base/idx2", sliced = false, "merged") ==
-          rowsOf(c, c.oracle(all, all)), s"${c.kind} merge != oracle")
-      }
+        "source" -> s"$base/ref_b", "merge-into" -> s"$base/idx",
+        "index-dir" -> s"$base/idx2") ++ c.knobs)
+      val all = c.refA.unionByName(c.refB)
+      assert(probeAll(c, base, s"$base/idx2", sliced = false, "merged") ==
+        rowsOf(c, c.oracle(all, all)), s"${c.kind} merge != oracle")
     }
   }
 
+  /** Sliced layout: a first slice and an append, probed; compaction
+    * to one slice, probed again. */
+  private def slicedLifecycle(c: KindCase): Unit = {
+    val base = fixture(c)
+    val dir = s"$base/idx"
+    // the first slice: a streaming kind's knobs freeze at its first
+    // append; an ANN kind's sliced build freezes its codebook (and
+    // centroids) on the first source
+    for ((s, src) <- Seq(
+        (if (c.streaming) "index_append" else "index_build") -> "ref_a",
+        "index_append" -> "ref_b"))
+      stage(Map("stage-name" -> s, "kind" -> c.kind, "layout" -> "sliced",
+        "source" -> s"$base/$src", "index-dir" -> dir) ++ c.knobs)
+    val appended = probeAll(c, base, dir, sliced = true, "appended")
+    assert(appended == rowsOf(c, c.oracle(c.refA,
+      c.refA.unionByName(c.refB))), s"${c.kind} sliced != oracle")
+    // compaction collapses the slices and moves no row
+    stage(Map("stage-name" -> "index_compact", "index-dir" -> dir))
+    assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
+    assert(probeAll(c, base, dir, sliced = true, "compacted") == appended,
+      s"${c.kind} compaction moved a row")
+  }
+
+  test("index_build + index_probe stages: nightly build, merge, probe") {
+    storeLifecycle(kindCase("semantic"))
+  }
+
   test("index_append + index_compact + sliced probe: nightly-append stages") {
-    for (c <- kindCases) {
-      val base = fixture(c)
-      val dir = s"$base/idx"
-      // the first slice: a streaming kind's knobs freeze at its first
-      // append; an ANN kind's sliced build freezes its codebook (and
-      // centroids) on the first source
-      for ((s, src) <- Seq(
-          (if (c.streaming) "index_append" else "index_build") -> "ref_a",
-          "index_append" -> "ref_b"))
-        stage(Map("stage-name" -> s, "kind" -> c.kind, "layout" -> "sliced",
-          "source" -> s"$base/$src", "index-dir" -> dir) ++ c.knobs)
-      val appended = probeAll(c, base, dir, sliced = true, "appended")
-      assert(appended == rowsOf(c, c.oracle(c.refA,
-        c.refA.unionByName(c.refB))), s"${c.kind} sliced != oracle")
-      // compaction collapses the slices and moves no row
-      stage(Map("stage-name" -> "index_compact", "index-dir" -> dir))
-      assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
-      assert(probeAll(c, base, dir, sliced = true, "compacted") == appended,
-        s"${c.kind} compaction moved a row")
+    slicedLifecycle(kindCase("semantic"))
+  }
+
+  test("index stages: --kind simhash and minhash route through the same dirs") {
+    for (k <- Seq("simhash", "minhash")) {
+      storeLifecycle(kindCase(k))
+      slicedLifecycle(kindCase(k))
     }
+  }
+
+  test("ANN lifecycle through the CLI: pq sliced build/append/compact/probe at exact rank parity") {
+    storeLifecycle(kindCase("pq"))
+    slicedLifecycle(kindCase("pq"))
+  }
+
+  test("ANN lifecycle through the CLI: ivfpq one-shot and sliced serve at exact rank parity") {
+    storeLifecycle(kindCase("ivfpq"))
+    slicedLifecycle(kindCase("ivfpq"))
   }
 
   test("index stages: an unknown --kind or --layout is refused by name") {
