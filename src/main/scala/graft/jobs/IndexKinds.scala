@@ -1,6 +1,5 @@
 package graft.jobs
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ext.{AnnStore, Similarity}
@@ -39,10 +38,10 @@ object IndexKinds {
     * reads to its default. `build` writes the store, or (sliced) the
     * first slice; `append` commits a slice; `probe` returns what
     * `index_probe` writes; `compact` collapses a sliced index into one
-    * slice. A `streaming` kind takes `--merge-into` on a store build. */
+    * slice. */
   final case class Kind(name: String, metaKinds: Map[String, Boolean],
                         id: String, dataOpt: String, data: String,
-                        knobs: Map[String, String], streaming: Boolean,
+                        knobs: Map[String, String],
                         build: (Args, DataFrame, String, Boolean) => Unit,
                         append: (Args, DataFrame, String) => Unit,
                         probe: (Args, DataFrame, String, Boolean) => DataFrame,
@@ -51,12 +50,17 @@ object IndexKinds {
   private val dim = "dim" -> "64"
   private val maxBucket = "max-bucket" -> "4096"
 
+  /** `--merge-into` reaches only a streaming kind's store build: an ANN
+    * build trains afresh, and a sliced build starts an index. */
+  private def refuseMerge(a: Args, to: String): Unit =
+    if (a.opts.contains("merge-into"))
+      sys.error(s"--merge-into does not apply to $to")
+
   /** A streaming dedup kind. A store build saves a fresh index, or with
     * `--merge-into` the index there merged with the source (which never
     * re-scans old rows, and whose save doubles as lineage compaction).
     * A sliced build commits the source as the first slice, as
-    * `index_append` does on an empty dir. A probe returns the distinct
-    * (id_a, id_b) match pairs. */
+    * `index_append` does on an empty dir. A probe returns the distinct (id_a, id_b) match pairs. */
   private def streaming[I](name: String, id: String, dataOpt: String,
                            data: String, knobs: Map[String, String])(
       fresh: (Args, DataFrame) => I,
@@ -67,23 +71,16 @@ object IndexKinds {
       add: (Args, DataFrame, String) => Unit,
       matches: (DataFrame, I, Args) => DataFrame): Kind =
     // a streaming store's kind string is its sliced store's too
-    Kind(name, Map(name -> true), id, dataOpt, data, knobs, streaming = true,
+    Kind(name, Map(name -> true), id, dataOpt, data, knobs,
       build = { (a, src, dir, sliced) =>
-        if (sliced) {
-          val (fs, root) = RefIndexSlices.fsOf(src.sparkSession, dir)
-          require(!fs.exists(new Path(root, "meta")),
-            s"sliced $name index already exists at $dir")
-          add(a, src, dir)
-        } else save(a.opts.get("merge-into").fold(fresh(a, src))(existing =>
+        if (sliced) { refuseMerge(a, "--layout sliced"); add(a, src, dir) }
+        else save(a.opts.get("merge-into").fold(fresh(a, src))(existing =>
           merge(loadStore(src.sparkSession, existing), src, a.id, a.data)), dir)
       },
       append = add,
-      probe = { (a, probe, dir, sliced) =>
-        val spark = probe.sparkSession
-        matches(probe,
-          if (sliced) loadSliced(spark, dir) else loadStore(spark, dir), a)
-          .select("id_a", "id_b").distinct()
-      },
+      probe = (a, probe, dir, sliced) => matches(probe, (if (sliced) loadSliced
+        else loadStore)(probe.sparkSession, dir), a)
+        .select("id_a", "id_b").distinct(),
       compact = RefIndexSlices.compact(_, _))
 
   /** In `--kind` order. */
@@ -134,8 +131,9 @@ object IndexKinds {
     // commits it as the first slice, so each append costs ∝ its batch
     Kind("pq", Map("pq" -> false, "pq_sliced" -> true), "vec_id", "vec",
       "embedding", Map("subspaces" -> "8", "ksub" -> "16", dim, "k" -> "10",
-        "refine" -> "4"), streaming = false,
+        "refine" -> "4"),
       build = { (a, src, dir, sliced) =>
+        refuseMerge(a, "--kind pq")
         if (sliced) {
           AnnStore.createPqSliced(src.sparkSession, dir,
             Similarity.pqCodebook(src, a.id, a.data, a.int("subspaces"),
@@ -145,12 +143,9 @@ object IndexKinds {
           a.int("subspaces"), a.int("ksub"), a.int("dim")), dir)
       },
       append = (a, src, dir) => AnnStore.appendPq(src, dir, a.id, a.data),
-      probe = { (a, probe, dir, sliced) =>
-        val spark = probe.sparkSession
-        AnnStore.pqServe(probe, a.id, a.data,
-          if (sliced) AnnStore.loadPqSliced(spark, dir)
-          else AnnStore.loadPq(spark, dir), a.int("k"), a.int("refine"))
-      },
+      probe = (a, probe, dir, sliced) => AnnStore.pqServe(probe, a.id, a.data,
+        (if (sliced) AnnStore.loadPqSliced _ else AnnStore.loadPq _)(
+          probe.sparkSession, dir), a.int("k"), a.int("refine")),
       compact = AnnStore.compactPq(_, _)),
     // --payload true persists the float payload (sorted on corpus_id)
     // at ~32x the codes' disk bytes; a probe with --refine N (no
@@ -158,8 +153,9 @@ object IndexKinds {
     Kind("ivfpq", Map("ivfpq" -> false, "ivfpq_sliced" -> true), "vec_id",
       "vec", "embedding", Map("subspaces" -> "8", "ksub" -> "16", dim,
         "ncentroids" -> "16", "rounds" -> "2", "payload" -> "false",
-        "k" -> "10", "nprobe" -> "4"), streaming = false,
+        "k" -> "10", "nprobe" -> "4"),
       build = { (a, src, dir, sliced) =>
+        refuseMerge(a, "--kind ivfpq")
         val built = AnnStore.buildIvfPq(src, a.id, a.data, a.int("subspaces"),
           a.int("ksub"), a.int("dim"), a.int("ncentroids"), a.int("rounds"))
         val withPayload = a("payload").toBoolean
@@ -171,9 +167,8 @@ object IndexKinds {
       },
       append = (a, src, dir) => AnnStore.appendIvfPq(src, dir, a.id, a.data),
       probe = { (a, probe, dir, sliced) =>
-        val spark = probe.sparkSession
-        val idx = if (sliced) AnnStore.loadIvfPqSliced(spark, dir)
-          else AnnStore.loadIvfPq(spark, dir)
+        val idx = (if (sliced) AnnStore.loadIvfPqSliced _
+          else AnnStore.loadIvfPq _)(probe.sparkSession, dir)
         a.opts.get("refine").fold(AnnStore.ivfPqServe(probe, a.id, a.data,
           idx, a.int("k"), a.int("nprobe")))(r => AnnStore.ivfPqServeRefined(
           probe, a.id, a.data, idx, a.int("k"), a.int("nprobe"), r.toInt))
@@ -189,8 +184,9 @@ object IndexKinds {
 
   /** The row of the index at `dir`, from one read of its `meta/` (None
     * when `dir` holds no index), once its layout is checked against
-    * the one the stage expects. */
-  def onDisk(spark: SparkSession, dir: String, sliced: Boolean): Option[Kind] =
+    * the one the stage expects and its kind against `wanted`. */
+  def onDisk(spark: SparkSession, dir: String, sliced: Boolean,
+             wanted: Option[Kind] = None): Option[Kind] =
     RefIndexStore.readMetaIfExists(spark, dir).map { meta =>
       val name = meta.getOrElse("kind", "?")
       val kind = kinds.find(_.metaKinds.contains(name)).getOrElse(sys.error(
@@ -199,6 +195,8 @@ object IndexKinds {
       val found = !meta.contains("buckets") && kind.metaKinds(name)
       if (found != sliced) sys.error(s"index at $dir has the " +
         s"${layout(found)} layout, not the ${layout(sliced)} layout")
+      wanted.filter(_ != kind).foreach(w =>
+        sys.error(s"index at $dir is kind=$name, not ${w.name}"))
       kind
     }
 }

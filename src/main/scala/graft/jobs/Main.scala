@@ -104,15 +104,15 @@ object Main {
           req("ingestion-date"),
           opts.getOrElse("parallelism", "20").toInt)
       case IndexBuild =>
-        val (kind, sliced) = (indexKind, slicedLayout)
-        if (opts.contains("merge-into") && (sliced || !kind.streaming))
-          sys.error("--merge-into does not apply to " +
-            (if (kind.streaming) "--layout sliced" else s"--kind ${kind.name}"))
+        val (kind, sliced, dir) = (indexKind, slicedLayout, req("index-dir"))
+        // a store build republishes the dir whole; a sliced one starts it
+        if (sliced) IndexKinds.onDisk(spark, dir, sliced).foreach(k =>
+          sys.error(s"sliced ${k.name} index already exists at $dir"))
         kind.build(IndexKinds.Args(opts, kind),
-          spark.read.parquet(req("source")), req("index-dir"), sliced)
+          spark.read.parquet(req("source")), dir, sliced)
       case IndexProbe =>
         val (kind, sliced, dir) = (indexKind, slicedLayout, req("index-dir"))
-        IndexKinds.onDisk(spark, dir, sliced)
+        IndexKinds.onDisk(spark, dir, sliced, Some(kind))
         val out = kind.probe(IndexKinds.Args(opts, kind),
           spark.read.parquet(req("probe")), dir, sliced)
         // natural write parallelism: a dup-heavy probe can yield an
@@ -123,7 +123,7 @@ object Main {
           .write.mode("overwrite").parquet(req("out"))
       case IndexAppend =>
         val (kind, dir) = (indexKind, req("index-dir"))
-        IndexKinds.onDisk(spark, dir, sliced = true)
+        IndexKinds.onDisk(spark, dir, sliced = true, Some(kind))
         kind.append(IndexKinds.Args(opts, kind),
           spark.read.parquet(req("source")), dir)
       case IndexCompact =>

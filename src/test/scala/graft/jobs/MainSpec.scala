@@ -51,17 +51,22 @@ class MainSpec extends AnyFunSuite {
 
   /** One row per index kind. `refA` builds the index or its first
     * slice, and `refB` is merged into it (`streaming` kinds) or
-    * appended to it. `knobs` go to every stage, as a scheduler passes
-    * one option set. Each `probes` option set is checked against
-    * `serve`: the library composition `index_probe` stands for, over
-    * the dir the CLI wrote. The first set is also checked against
-    * `oracle(first, all)`: the answer, from the corpus alone, of an
-    * index trained on `first` that holds `all`. */
+    * appended to it. `knobs` go only to the stage that creates the
+    * index (a store build or the first slice): every later stage runs
+    * at the CLI defaults, so it must serve the knobs frozen in `meta/`.
+    * Each `probes` option set is checked against `serve`: the library
+    * composition `index_probe` stands for, over the dir the CLI wrote.
+    * The first set is also checked against an answer from the corpus
+    * alone: `oracle(all)` for an index built on `all`, and
+    * `appendOracle(first, all)` for a sliced index first built on
+    * `first` that holds `all` (None for ivfpq: no in-session operator
+    * takes frozen centroids). */
   private case class KindCase(kind: String, streaming: Boolean,
       cols: Seq[String], refA: DataFrame, refB: DataFrame, probe: DataFrame,
       knobs: Map[String, String], probes: Seq[Map[String, String]],
       serve: (String, Boolean, Map[String, String]) => DataFrame,
-      oracle: (DataFrame, DataFrame) => DataFrame)
+      oracle: DataFrame => DataFrame,
+      appendOracle: Option[(DataFrame, DataFrame) => DataFrame])
 
   private lazy val kindCases: Seq[KindCase] = {
     import spark.implicits._
@@ -75,7 +80,16 @@ class MainSpec extends AnyFunSuite {
     def docs(ids: Seq[Long]) = ids.map(i => (i,
       (0 until 24).map(j => s"w${(i % 3) * 7 + j}").mkString(" ")))
       .toDF("doc_id", "text")
-    val pairs = Seq("id_a", "id_b")
+    // a dedup kind trains nothing: a sliced index answers as one built
+    // on all it holds
+    def dedup(kind: String, refA: DataFrame, refB: DataFrame,
+              probe: DataFrame, knobs: Map[String, String],
+              probes: Seq[Map[String, String]],
+              serve: (String, Boolean, Map[String, String]) => DataFrame,
+              oracle: DataFrame => DataFrame) =
+      KindCase(kind, streaming = true, Seq("id_a", "id_b"), refA, refB, probe,
+        knobs, probes, serve, oracle,
+        Some((_: DataFrame, all: DataFrame) => oracle(all)))
     val ranks = Seq("query_id", "rank", "corpus_id")
     val sem = vecs(0L until 20L, 5, 0.31, 8)
     val text = docs(0L until 12L)
@@ -83,33 +97,35 @@ class MainSpec extends AnyFunSuite {
     val annKnobs = Map("subspaces" -> "4", "ksub" -> "8", "dim" -> "16")
     def cb(corpus: DataFrame) =
       Similarity.pqCodebook(corpus, "vec_id", "embedding", 4, 8, 16)
+    // x197's in-session pipeline at the first corpus's codebook
+    val pqOracle = (first: DataFrame, all: DataFrame) =>
+      Similarity.pqTopKRefined(ann, "vec_id", "embedding", all, "vec_id",
+        "embedding", cb(first), k = 5, refine = 3)
     Seq(
-      KindCase("semantic", streaming = true, pairs,
-        vecs(100L until 120L, 5, 0.31, 8), vecs(120L until 140L, 5, 0.31, 8),
-        sem, Map("bands" -> "4", "bits" -> "4", "dim" -> "8"),
+      dedup("semantic", vecs(100L until 120L, 5, 0.31, 8),
+        vecs(120L until 140L, 5, 0.31, 8), sem,
+        Map("bands" -> "4", "bits" -> "4", "dim" -> "8"),
         Seq(Map("cos2-num" -> "4", "cos2-den" -> "25")),
         (dir, sliced, _) => EmbedStream.semanticDupMatches(sem,
           if (sliced) RefIndexSlices.loadSemantic(spark, dir)
           else RefIndexStore.loadSemantic(spark, dir),
           "vec_id", "embedding", cos2Num = 4, cos2Den = 25),
-        (_, all) => Dedup.semanticDupPairsInt8Across(sem, all, "vec_id",
+        all => Dedup.semanticDupPairsInt8Across(sem, all, "vec_id",
           "embedding", cos2Num = 4, cos2Den = 25, bands = 4,
           bitsPerBand = 4, dim = 8)),
-      KindCase("simhash", streaming = true, pairs,
-        docs(100L until 115L), docs(115L until 130L), text, Map.empty,
-        Seq(Map.empty),
+      dedup("simhash", docs(100L until 115L), docs(115L until 130L), text,
+        Map.empty, Seq(Map.empty),
         (dir, sliced, _) => SimHashStream.simhashDupMatches(text,
           if (sliced) RefIndexSlices.loadSimHash(spark, dir)
           else RefIndexStore.loadSimHash(spark, dir), "doc_id", "text"),
-        (_, all) => Dedup.simhashPairsAcross(text, all, "doc_id", "text",
+        all => Dedup.simhashPairsAcross(text, all, "doc_id", "text",
           maxHamming = 3)),
-      KindCase("minhash", streaming = true, pairs,
-        docs(100L until 115L), docs(115L until 130L), text, Map.empty,
-        Seq(Map.empty),
+      dedup("minhash", docs(100L until 115L), docs(115L until 130L), text,
+        Map.empty, Seq(Map.empty),
         (dir, sliced, _) => MinHashStream.minhashDupMatches(text,
           if (sliced) RefIndexSlices.loadMinHash(spark, dir)
           else RefIndexStore.loadMinHash(spark, dir), "doc_id", "text"),
-        (_, all) => Dedup.minhashLshPairsAcross(text, all, "doc_id", "text",
+        all => Dedup.minhashLshPairsAcross(text, all, "doc_id", "text",
           n = 3, threshold = 0.7)),
       KindCase("pq", streaming = false, ranks,
         vecs(0L until 30L, 7, 0.23, 16), vecs(30L until 60L, 7, 0.23, 16),
@@ -117,15 +133,11 @@ class MainSpec extends AnyFunSuite {
         (dir, sliced, _) => AnnStore.pqServe(ann, "vec_id", "embedding",
           if (sliced) AnnStore.loadPqSliced(spark, dir)
           else AnnStore.loadPq(spark, dir), k = 5, refine = 3),
-        // x197's in-session pipeline at the first corpus's codebook
-        (first, all) => Similarity.pqTopKRefined(ann, "vec_id", "embedding",
-          all, "vec_id", "embedding", cb(first), k = 5, refine = 3)),
+        all => pqOracle(all, all), Some(pqOracle)),
       KindCase("ivfpq", streaming = false, ranks,
         vecs(0L until 30L, 7, 0.23, 16), vecs(30L until 60L, 7, 0.23, 16),
-        ann, annKnobs ++ Map("ncentroids" -> "8", "rounds" -> "2",
-          "payload" -> "true"),
-        Seq(Map("k" -> "5", "nprobe" -> "2"),
-          Map("k" -> "5", "nprobe" -> "2", "refine" -> "2")),
+        ann, annKnobs ++ Map("ncentroids" -> "8", "rounds" -> "2"),
+        Seq(Map("k" -> "5", "nprobe" -> "2")),
         { (dir, sliced, opts) =>
           val idx = if (sliced) AnnStore.loadIvfPqSliced(spark, dir)
             else AnnStore.loadIvfPq(spark, dir)
@@ -134,25 +146,10 @@ class MainSpec extends AnyFunSuite {
             AnnStore.ivfPqServeRefined(ann, "vec_id", "embedding", idx,
               k = 5, nProbe = 2, refine = r.toInt))
         },
-        { (first, all) =>
-          // a store build trains on its whole corpus: x181's in-session
-          // operator. A sliced index keeps the first slice's centroids
-          // and codebook: the library's sliced store holding `all`.
-          if (first eq all) Similarity.ivfPqTopK(ann, "vec_id", "embedding",
-            all, "vec_id", "embedding", cb(all), k = 5, nCentroids = 8,
-            nProbe = 2, rounds = 2)
-          else {
-            val built = AnnStore.buildIvfPq(first, "vec_id", "embedding",
-              4, 8, 16, nCentroids = 8, rounds = 2)
-            val dir = Files.createTempDirectory("mainivfpqlib").toString +
-              "/idx"
-            AnnStore.createIvfPqSliced(spark, dir, built.codebook,
-              built.cents, dim = 16)
-            AnnStore.appendIvfPq(all, dir, "vec_id", "embedding")
-            AnnStore.ivfPqServe(ann, "vec_id", "embedding",
-              AnnStore.loadIvfPqSliced(spark, dir), k = 5, nProbe = 2)
-          }
-        }))
+        // x181's in-session operator (deterministic Lloyd) at the knobs
+        all => Similarity.ivfPqTopK(ann, "vec_id", "embedding", all,
+          "vec_id", "embedding", cb(all), k = 5, nCentroids = 8, nProbe = 2,
+          rounds = 2), None))
   }
 
   private def rowsOf(c: KindCase, df: DataFrame): Set[Row] =
@@ -176,8 +173,7 @@ class MainSpec extends AnyFunSuite {
       val out = s"$base/out_${tag}_$n"
       stage(Map("stage-name" -> "index_probe", "kind" -> c.kind,
         "index-dir" -> dir, "probe" -> s"$base/probe", "out" -> out) ++
-        (if (sliced) Map("layout" -> "sliced") else Map.empty) ++
-        c.knobs ++ p)
+        (if (sliced) Map("layout" -> "sliced") else Map.empty) ++ p)
       val got = rowsOf(c, spark.read.parquet(out))
       assert(got == rowsOf(c, c.serve(dir, sliced, p)) && got.nonEmpty,
         s"${c.kind} $tag probe $p != the library composition")
@@ -187,6 +183,11 @@ class MainSpec extends AnyFunSuite {
   private def kindCase(kind: String): KindCase =
     kindCases.find(_.kind == kind).get
 
+  private def compact(dir: String): Unit = {
+    stage(Map("stage-name" -> "index_compact", "index-dir" -> dir))
+    assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
+  }
+
   /** Store layout: a nightly build, probed; a streaming kind then
     * merges `refB` into a second dir, probed again. */
   private def storeLifecycle(c: KindCase): Unit = {
@@ -194,16 +195,16 @@ class MainSpec extends AnyFunSuite {
     stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
       "source" -> s"$base/ref_a", "index-dir" -> s"$base/idx") ++ c.knobs)
     assert(probeAll(c, base, s"$base/idx", sliced = false, "built") ==
-      rowsOf(c, c.oracle(c.refA, c.refA)), s"${c.kind} build != oracle")
+      rowsOf(c, c.oracle(c.refA)), s"${c.kind} build != oracle")
     if (c.streaming) {
       // the incremental merge publishes into a SECOND dir (the source
       // index stays as it was: publish is whole-dir atomic)
       stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
         "source" -> s"$base/ref_b", "merge-into" -> s"$base/idx",
-        "index-dir" -> s"$base/idx2") ++ c.knobs)
-      val all = c.refA.unionByName(c.refB)
+        "index-dir" -> s"$base/idx2"))
       assert(probeAll(c, base, s"$base/idx2", sliced = false, "merged") ==
-        rowsOf(c, c.oracle(all, all)), s"${c.kind} merge != oracle")
+        rowsOf(c, c.oracle(c.refA.unionByName(c.refB))),
+        s"${c.kind} merge != oracle")
     }
   }
 
@@ -215,18 +216,35 @@ class MainSpec extends AnyFunSuite {
     // the first slice: a streaming kind's knobs freeze at its first
     // append; an ANN kind's sliced build freezes its codebook (and
     // centroids) on the first source
-    for ((s, src) <- Seq(
-        (if (c.streaming) "index_append" else "index_build") -> "ref_a",
-        "index_append" -> "ref_b"))
-      stage(Map("stage-name" -> s, "kind" -> c.kind, "layout" -> "sliced",
-        "source" -> s"$base/$src", "index-dir" -> dir) ++ c.knobs)
+    stage(Map("stage-name" -> (if (c.streaming) "index_append"
+      else "index_build"), "kind" -> c.kind, "layout" -> "sliced",
+      "source" -> s"$base/ref_a", "index-dir" -> dir) ++ c.knobs)
+    stage(Map("stage-name" -> "index_append", "kind" -> c.kind,
+      "source" -> s"$base/ref_b", "index-dir" -> dir))
     val appended = probeAll(c, base, dir, sliced = true, "appended")
-    assert(appended == rowsOf(c, c.oracle(c.refA,
-      c.refA.unionByName(c.refB))), s"${c.kind} sliced != oracle")
+    for (o <- c.appendOracle)
+      assert(appended == rowsOf(c, o(c.refA, c.refA.unionByName(c.refB))),
+        s"${c.kind} sliced != oracle")
     // compaction collapses the slices and moves no row
-    stage(Map("stage-name" -> "index_compact", "index-dir" -> dir))
-    assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
+    compact(dir)
     assert(probeAll(c, base, dir, sliced = true, "compacted") == appended,
+      s"${c.kind} compaction moved a row")
+  }
+
+  /** A sliced build alone holds just the corpus it was built on, so it
+    * answers as a store build does, before and after compaction. */
+  private def slicedBuild(c: KindCase): Unit = {
+    val base = fixture(c)
+    val dir = s"$base/idx"
+    stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
+      "layout" -> "sliced", "source" -> s"$base/ref_a",
+      "index-dir" -> dir) ++ c.knobs)
+    assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
+    val want = rowsOf(c, c.oracle(c.refA))
+    assert(probeAll(c, base, dir, sliced = true, "built") == want,
+      s"${c.kind} sliced build != oracle")
+    compact(dir)
+    assert(probeAll(c, base, dir, sliced = true, "compacted") == want,
       s"${c.kind} compaction moved a row")
   }
 
@@ -251,8 +269,14 @@ class MainSpec extends AnyFunSuite {
   }
 
   test("ANN lifecycle through the CLI: ivfpq one-shot and sliced serve at exact rank parity") {
-    storeLifecycle(kindCase("ivfpq"))
-    slicedLifecycle(kindCase("ivfpq"))
+    val c = kindCase("ivfpq")
+    storeLifecycle(c)
+    slicedBuild(c)
+    // --payload true: a probe with --refine re-ranks over the payload
+    val paid = c.copy(knobs = c.knobs + ("payload" -> "true"),
+      probes = c.probes :+ (c.probes.head + ("refine" -> "2")))
+    storeLifecycle(paid)
+    slicedLifecycle(paid)
   }
 
   test("index stages: an unknown --kind or --layout is refused by name") {
@@ -282,7 +306,7 @@ class MainSpec extends AnyFunSuite {
         "index-dir" -> dir) ++ c.knobs)
     def error(opts: (String, String)*): String =
       intercept[RuntimeException](stage(Map("source" -> s"$base/ref_b",
-        "probe" -> s"$base/probe", "out" -> s"$base/out_bad") ++ c.knobs ++
+        "probe" -> s"$base/probe", "out" -> s"$base/out_bad") ++
         opts)).getMessage
     assert(error("stage-name" -> "index_build", "layout" -> "nope",
       "index-dir" -> s"$base/idx_bad") ==
@@ -303,18 +327,18 @@ class MainSpec extends AnyFunSuite {
     for (s <- Seq("index_append", "index_compact"))
       assert(error("stage-name" -> s, "index-dir" -> store) ==
         mismatch(store, "store", "sliced"), s)
+    assert(error("stage-name" -> "index_build", "layout" -> "sliced",
+      "index-dir" -> store) == mismatch(store, "store", "sliced"))
+    // a sliced build starts an index; the one read names what is there
+    assert(error("stage-name" -> "index_build", "layout" -> "sliced",
+      "index-dir" -> sliced) ==
+      s"sliced semantic index already exists at $sliced")
+    assert(error("stage-name" -> "index_probe", "kind" -> "simhash",
+      "index-dir" -> store) == s"index at $store is kind=semantic, not simhash")
   }
 
   test("index_build --layout sliced commits a streaming kind's source as its first slice") {
-    for (c <- kindCases if c.streaming) {
-      val base = fixture(c)
-      stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
-        "layout" -> "sliced", "source" -> s"$base/ref_a",
-        "index-dir" -> s"$base/idx") ++ c.knobs)
-      assert(graft.streaming.RefIndexSlices.sliceCount(spark, s"$base/idx") == 1)
-      assert(probeAll(c, base, s"$base/idx", sliced = true, "built") ==
-        rowsOf(c, c.oracle(c.refA, c.refA)), s"${c.kind} sliced build != oracle")
-    }
+    for (c <- kindCases if c.streaming) slicedBuild(c)
   }
 
   test("invalid stage and missing args error clearly") {
