@@ -93,12 +93,12 @@ object Audit {
         // cross-JVM survival instrument, save half: build the semantic
         // reference index over the SF corpus and persist it. Run
         // index-probe in a SEPARATE JVM to prove the index outlives
-        // the driver that built it (the RefIndexStore deployment claim
+        // the driver that built it (the RefIndexSlices deployment claim
         // a single-session spec cannot prove).
         val emb = tables.t(spark, sfDir, "embeddings")
         val idx = streaming.EmbedStream.semanticRefIndex(
           emb, "vec_id", "embedding")
-        streaming.RefIndexStore.saveSemantic(idx, dir)
+        streaming.RefIndexSlices.saveSemantic(idx, dir)
         val probe = emb.select((col("vec_id") + 10000000L).as("vec_id"),
           col("embedding"))
         val n = streaming.EmbedStream.semanticDupMatches(probe, idx,
@@ -108,10 +108,10 @@ object Audit {
       case "index-probe" :: sfDir :: dir :: Nil =>
         // cross-JVM survival instrument, probe half: a FRESH driver
         // loads the persisted index (knobs + bucket spec re-registered
-        // from meta/) and must reproduce the builder JVM's match count
+        // from the manifest) and must reproduce the building JVM's match count
         // exactly.
         val emb = tables.t(spark, sfDir, "embeddings")
-        val idx = streaming.RefIndexStore.loadSemantic(spark, dir)
+        val idx = streaming.RefIndexSlices.loadSemantic(spark, dir)
         val probe = emb.select((col("vec_id") + 10000000L).as("vec_id"),
           col("embedding"))
         val n = streaming.EmbedStream.semanticDupMatches(probe, idx,
@@ -159,15 +159,15 @@ object Audit {
         // setup (untimed): both layouts hold the 90% history
         val histIdx = streaming.EmbedStream.semanticRefIndex(
           hist, "vec_id", "embedding")
-        streaming.RefIndexStore.saveSemantic(histIdx, dirA)
+        streaming.RefIndexSlices.saveSemantic(histIdx, dirA)
         streaming.RefIndexSlices.appendSemantic(hist, dirB,
           "vec_id", "embedding",
           bands = histIdx.bands, bitsPerBand = histIdx.bitsPerBand)
         val (_, tRewrite) = Harness.clock {
           val merged = streaming.EmbedStream.mergeRefIndex(
-            streaming.RefIndexStore.loadSemantic(spark, dirA),
+            streaming.RefIndexSlices.loadSemantic(spark, dirA),
             slice, "vec_id", "embedding")
-          streaming.RefIndexStore.saveSemantic(merged, dirA)
+          streaming.RefIndexSlices.saveSemantic(merged, dirA)
         }
         val bytesRewrite = dirBytes(spark, dirA)
         val bytesB0 = dirBytes(spark, dirB)
@@ -183,7 +183,7 @@ object Audit {
               "vec_id", "embedding", cos2Num = 4, cos2Den = 25)
             .select("id_a", "id_b").distinct().count()
         val (nStore, tProbeStore) = Harness.clock(
-          probeCount(streaming.RefIndexStore.loadSemantic(spark, dirA)))
+          probeCount(streaming.RefIndexSlices.loadSemantic(spark, dirA)))
         val (nSliced, tProbeSliced) = Harness.clock(
           probeCount(streaming.RefIndexSlices.loadSemantic(spark, dirB)))
         require(nStore == nSliced,
@@ -212,8 +212,7 @@ object Audit {
               col("embedding").as("_cv")))
         // setup (untimed): both layouts hold the 90% history
         ext.AnnStore.savePq(fullIndex(hist), dirA)
-        ext.AnnStore.createPqSliced(spark, dirB, cb, dim = 64)
-        ext.AnnStore.appendPq(hist, dirB, "vec_id", "embedding")
+        ext.AnnStore.savePq(fullIndex(hist), dirB)
         val (_, tRewrite) = Harness.clock(ext.AnnStore.savePq(fullIndex(emb), dirA))
         val bytesRewrite = dirBytes(spark, dirA)
         val bytesB0 = dirBytes(spark, dirB)
@@ -223,7 +222,7 @@ object Audit {
         val (sumA, tServeFlat) = Harness.clock(pqPanelChecksum(spark, sfDir,
           ext.AnnStore.loadPq(spark, dirA), 0))
         val (sumB, tServeSliced) = Harness.clock(pqPanelChecksum(spark, sfDir,
-          ext.AnnStore.loadPqSliced(spark, dirB), 0))
+          ext.AnnStore.loadPq(spark, dirB), 0))
         require(sumA == sumB,
           s"layout mismatch: flat checksum $sumA != sliced $sumB")
         println(f"""{"audit":"pq-append-cost","sf":"$sfDir","rewrite_sec":$tRewrite%.2f,"append_sec":$tAppend%.2f,"rewrite_bytes":$bytesRewrite,"append_bytes":$bytesAppend,"serve_flat_sec":$tServeFlat%.2f,"serve_sliced_sec":$tServeSliced%.2f,"checksum":$sumA}""")
@@ -244,13 +243,12 @@ object Audit {
           (base.resolve("rebuild").toString, base.resolve("sliced").toString)
         val built = ext.AnnStore.buildIvfPq(hist, "vec_id", "embedding")
         // setup (untimed): the sliced store holds the 90% history
-        ext.AnnStore.createIvfPqSliced(spark, dirB, built.codebook,
-          built.cents, dim = 64)
-        ext.AnnStore.appendIvfPq(hist, dirB, "vec_id", "embedding")
+        ext.AnnStore.saveIvfPq(built, dirB)
         val (_, tRebuild) = Harness.clock {
-          ext.AnnStore.createIvfPqSliced(spark, dirA, built.codebook,
-            built.cents, dim = 64)
-          ext.AnnStore.appendIvfPq(emb, dirA, "vec_id", "embedding")
+          val cq = emb.select(col("vec_id").as("vid"), ext.Similarity
+            .int8Quantize(col("embedding")).getField("q").as("q8"))
+          ext.AnnStore.saveIvfPq(built.copy(codes = ext.Similarity
+            .ivfPqEncodeAssigned(cq, built.cents, built.codebook)), dirA)
         }
         val bytesRebuild = dirBytes(spark, dirA)
         val bytesB0 = dirBytes(spark, dirB)
@@ -258,9 +256,9 @@ object Audit {
           ext.AnnStore.appendIvfPq(slice, dirB, "vec_id", "embedding"))
         val bytesAppend = dirBytes(spark, dirB) - bytesB0
         val (sumA, tServeRebuild) = Harness.clock(ivfPqPanelChecksum(spark,
-          sfDir, ext.AnnStore.loadIvfPqSliced(spark, dirA), 0))
+          sfDir, ext.AnnStore.loadIvfPq(spark, dirA), 0))
         val (sumB, tServeSliced) = Harness.clock(ivfPqPanelChecksum(spark,
-          sfDir, ext.AnnStore.loadIvfPqSliced(spark, dirB), 0))
+          sfDir, ext.AnnStore.loadIvfPq(spark, dirB), 0))
         require(sumA == sumB,
           s"layout mismatch: rebuild checksum $sumA != sliced $sumB")
         println(f"""{"audit":"ivfpq-append-cost","sf":"$sfDir","rebuild_sec":$tRebuild%.2f,"append_sec":$tAppend%.2f,"rebuild_bytes":$bytesRebuild,"append_bytes":$bytesAppend,"serve_rebuild_sec":$tServeRebuild%.2f,"serve_sliced_sec":$tServeSliced%.2f,"checksum":$sumA}""")
@@ -395,7 +393,7 @@ object Audit {
     * [[graft.streaming.EmbedStream]] over embeddings; "simhash" →
     * [[graft.streaming.SimHashStream]] and "minhash" →
     * [[graft.streaming.MinHashStream]] over documents),
-    * optionally round-trips it through [[graft.streaming.RefIndexStore]]
+    * optionally round-trips it through [[graft.streaming.RefIndexSlices]]
     * (`refMode` = "disk" vs "session"), then drives TWO identical
     * corpus-sized micro-batches through the match path (trigger 1
     * warms file listing/codegen; trigger 2 is the filed number).
@@ -405,7 +403,7 @@ object Audit {
   private def streamRamp(spark: SparkSession,
                          kind: String, sfDir: String, refMode: String,
                          probeDiv: Int, bands: Int, bits: Int): Unit = {
-    import streaming.{EmbedStream, MinHashStream, RefIndexStore, SimHashStream}
+    import streaming.{EmbedStream, MinHashStream, RefIndexSlices, SimHashStream}
     val stage = java.nio.file.Files.createTempDirectory("graft_ramp")
     val (table, id, payload) = kind match {
       case "semantic" => ("embeddings", "vec_id", "embedding")
@@ -430,18 +428,18 @@ object Audit {
           // reference term from the recall-holding knob growth
           val idx = ref(EmbedStream.semanticRefIndex(src, id, payload,
             bands = bands, bitsPerBand = bits))(
-            RefIndexStore.saveSemantic(_, _), RefIndexStore.loadSemantic)
+            RefIndexSlices.saveSemantic(_, _), RefIndexSlices.loadSemantic)
           EmbedStream.semanticDupMatches(_, idx, id, payload,
             cos2Num = 4, cos2Den = 25)
         case "simhash" =>
           val idx = ref(SimHashStream.simhashRefIndex(src, id, payload,
-            maxHamming = 3))(RefIndexStore.saveSimHash(_, _), RefIndexStore.loadSimHash)
+            maxHamming = 3))(RefIndexSlices.saveSimHash(_, _), RefIndexSlices.loadSimHash)
           SimHashStream.simhashDupMatches(_, idx, id, payload)
         case _ =>
           // x50/x209's at-ingest family: shingle-MinHash banding
           // against a static reference index — knobs at the gate defaults
           val idx = ref(MinHashStream.minhashRefIndex(src, id, payload,
-            n = 3, threshold = 0.7))(RefIndexStore.saveMinHash(_, _), RefIndexStore.loadMinHash)
+            n = 3, threshold = 0.7))(RefIndexSlices.saveMinHash(_, _), RefIndexSlices.loadMinHash)
           MinHashStream.minhashDupMatches(_, idx, id, payload)
       }
       // two identical copies of the probe, each coalesced to a known

@@ -1372,7 +1372,7 @@ object Similarity {
     * corpus row to its nearest coarse centroid and PQ-encode it.
     * `cq` is (vid, q8); returns (cluster, _cid, codes). One
     * definition so the in-session and served paths cannot drift. */
-  private[ext] def ivfPqEncodeAssigned(cq: DataFrame, cents: DataFrame,
+  private[graft] def ivfPqEncodeAssigned(cq: DataFrame, cents: DataFrame,
                                        codebook: Seq[Seq[Seq[Long]]])
       : DataFrame = {
     // r12: one in-row select — the coarse assignment (the one-subspace

@@ -14,9 +14,9 @@ import org.apache.spark.sql.SparkSession
   * commit latencies.
   *
   * Used ONLY for writes that are independent by construction (distinct
-  * output dirs, no read-your-write ordering). Completeness markers
-  * (meta/, manifest commits) stay OUTSIDE, after the barrier — the
-  * atomic-publish and CAS protocols are unchanged.
+  * output dirs, no read-your-write ordering). Commit points (the
+  * partition swap, the index manifest commit) stay OUTSIDE, after the
+  * barrier — the publish and CAS protocols are unchanged.
   *
   * Failure cancels: every Spark job a task starts carries one job tag
   * of this call. When a task fails, the jobs of its still-running

@@ -52,8 +52,6 @@ object Lake {
 
   private val PublishTmp = ".publish_tmp"
   private val PublishTrash = ".publish_trash"
-  private val CompactTmp = ".compact_tmp"
-  private val CompactTrash = ".compact_trash"
 
   /** Partition-scoped overwrite with ATOMIC per-partition publish:
     * replaces only the partitions present in `df` (reference write
@@ -120,20 +118,19 @@ object Lake {
       fs.delete(tr, true)
     }
     fs.delete(staging, true)
-    // an empty frame publishes nothing: its staging write must not
-    // leave behind a table root (or parent) that did not exist before.
-    // Only EMPTY dirs go, innermost first; a non-recursive delete
-    // refuses a dir that a concurrent publisher of the same table has
-    // staged into meanwhile.
-    if (staged.isEmpty && created.nonEmpty)
-      (new Path(rootPath, PublishTmp) :: created).foreach { d =>
-        if (fs.exists(d) && fs.listStatus(d).isEmpty)
-          Try(fs.delete(d, false))
-      }
+    // the shared staging root goes once empty, and an empty frame
+    // publishes nothing: its staging write must not leave behind a
+    // table root (or parent) that did not exist before. Only EMPTY dirs
+    // go, innermost first; a non-recursive delete refuses a dir that a
+    // concurrent publisher of the same table has staged into meanwhile.
+    (new Path(rootPath, PublishTmp) ::
+        (if (staged.isEmpty) created else Nil)).foreach { d =>
+      if (fs.exists(d) && fs.listStatus(d).isEmpty) Try(fs.delete(d, false))
+    }
   }
 
   /** Hadoop `FileSystem.rename` reports failure by RETURNING FALSE,
-    * not throwing. Inside the publish/compact swap a silently failed
+    * not throwing. Inside the publish swap a silently failed
     * rename would let the subsequent trash delete destroy the only
     * surviving copy of a partition — so every swap rename goes
     * through this guard, which aborts (trash intact, [[recover]]able)
@@ -143,7 +140,7 @@ object Lake {
       throw new java.io.IOException(
         s"rename failed: $src -> $dst (aborting swap; trash left intact for recover)")
 
-  /** Heal a table after a crashed [[writePartitioned]]/[[compact]]:
+  /** Heal a table after a crashed [[writePartitioned]]:
     * any `part=` dir sitting in a trash dir with no live counterpart
     * is the partition's only copy (crash between rename-aside and
     * rename-in) — rename it back; trash entries whose live dir exists
@@ -155,8 +152,8 @@ object Lake {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(rootPath)) return Seq.empty
-    val restored = Seq(PublishTrash, CompactTrash).flatMap { tn =>
-      val trashRoot = new Path(rootPath, tn)
+    val trashRoot = new Path(rootPath, PublishTrash)
+    val restored =
       if (!fs.exists(trashRoot)) Seq.empty
       else fs.listStatus(trashRoot).filter(_.isDirectory).toSeq.flatMap { t =>
         val dst = new Path(rootPath, t.getPath.getName)
@@ -169,8 +166,7 @@ object Lake {
           Some(t.getPath.getName)
         }
       }
-    }
-    Seq(PublishTmp, CompactTmp, PublishTrash, CompactTrash)
+    Seq(PublishTmp, PublishTrash)
       .foreach(d => fs.delete(new Path(rootPath, d), true))
     restored
   }
@@ -241,69 +237,10 @@ object Lake {
       }
   }
 
-  /** One partition's compaction outcome. */
-  final case class CompactStat(part: String, filesBefore: Int, filesAfter: Int)
-
-  /** Small-file compaction (the OPTIMIZE of a plain-parquet lake).
-    *
-    * Streaming/incremental writers leave `part=` directories with many
-    * sub-target files; at 100 TB that means listing and opening
-    * millions of tiny footers per scan. For each partition whose file
-    * count exceeds `maxFiles`, rewrite it into
-    * ceil(bytes / targetBytes) files via write-to-temp + rename-aside
-    * swap — the old dir is parked in `.compact_trash` until the new
-    * one is in place, so a crash at ANY point leaves the partition
-    * recoverable ([[recover]] runs on entry): either the old copy is
-    * still live, or it is whole in trash. Readers of OTHER partitions
-    * are never touched. Partitions are processed independently
-    * (failure leaves earlier swaps intact — compaction is idempotent
-    * and re-runnable). Maintenance op: don't run concurrently with
-    * writers of the same table. */
-  def compact(spark: SparkSession, root: String,
-              targetBytes: Long = 128L * 1024 * 1024,
-              maxFiles: Int = 1,
-              format: String = "parquet"): Seq[CompactStat] = {
-    val ext = s".$format"
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(spark, root) // heal any prior crashed swap before listing
-    val parts = fs.listStatus(rootPath)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("part="))
-    val stats = parts.toSeq.flatMap { p =>
-      val files = fs.listStatus(p.getPath)
-        .filter(f => f.isFile && f.getPath.getName.endsWith(ext))
-      if (files.length <= maxFiles) None
-      else {
-        val bytes = files.map(_.getLen).sum
-        val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-        val name = p.getPath.getName
-        val tmp = new Path(rootPath, s"$CompactTmp/$name")
-        fs.delete(tmp, true)
-        spark.read.format(format).load(p.getPath.toString)
-          .repartition(nOut)
-          .write.mode("overwrite").format(format).save(tmp.toString)
-        // drop Spark's _SUCCESS marker before the dir becomes live
-        fs.delete(new Path(tmp, "_SUCCESS"), false)
-        // swap: old dir parked in trash (never deleted before the new
-        // dir is live), new dir renamed in, trash dropped last
-        val tr = new Path(rootPath, s"$CompactTrash/$name")
-        fs.mkdirs(new Path(rootPath, CompactTrash))
-        fs.delete(tr, true)
-        renameStrict(fs, p.getPath, tr)
-        renameStrict(fs, tmp, p.getPath)
-        fs.delete(tr, true)
-        Some(CompactStat(name, files.length, nOut))
-      }
-    }
-    Seq(CompactTmp, CompactTrash)
-      .foreach(d => fs.delete(new Path(rootPath, d), true))
-    stats
-  }
-
   /** Retention: delete every `part=` partition whose VALUE fails
     * `keep`. FS-level and partition-scoped (readers of kept partitions
     * never see a half-deleted table); returns the deleted partition
-    * values. Pairs with [[compact]] as the lake's maintenance pair. */
+    * values. */
   def vacuum(spark: SparkSession, root: String,
              keep: String => Boolean): Seq[String] = {
     val rootPath = new Path(root)

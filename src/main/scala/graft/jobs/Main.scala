@@ -18,12 +18,14 @@ import graft.schema.Layout
   * row also holds the `--file-key` default.
   *
   * The four index stages serve the five `--kind`s (default
-  * `semantic`) in two `--layout`s (default `store`): each kind is one
-  * row of [[IndexKinds.kinds]], which holds its options and their
-  * defaults (README's pipeline-CLI table lists them). `index_append`
-  * and `index_compact` need the sliced layout, and `index_compact`
-  * reads the kind from the index. A stage ignores the options it does
-  * not read.
+  * `semantic`): each kind is one row of [[IndexKinds.kinds]], which
+  * holds its options and their defaults (README's pipeline-CLI table
+  * lists them). Every index is one dir of manifest-committed versions:
+  * `index_build` commits a save that replaces the index,
+  * `index_append` commits one more slice, `index_compact` collapses
+  * the slices into one (it reads the kind from the index), and
+  * `index_probe` reads the newest version. A stage ignores the
+  * options it does not read.
   */
 object Main {
 
@@ -38,10 +40,9 @@ object Main {
     * bounded parallelism (default 20, the reference DAG's
     * max_active_tasks), then the silver stages once. */
   case object RunAll extends Stage { val name = "run_all" }
-  /** Build the `--kind` index over --source at --index-dir: the store
-    * layout, published atomically (with --merge-into, a streaming
-    * kind's index there merged with --source), or the sliced layout's
-    * first slice. */
+  /** Build the `--kind` index over --source at --index-dir (with
+    * --merge-into, a streaming kind's index there merged with
+    * --source), replacing any index there in one commit. */
   case object IndexBuild extends Stage { val name = "index_build" }
   /** Probe --probe rows against the index at --index-dir and write
     * the result to --out (parquet): the probe-from-many-jobs consumer
@@ -49,12 +50,12 @@ object Main {
     * write the match PAIR set; ANN kinds (pq/ivfpq) write the served
     * RANKING (query_id, rank, corpus_id, score). */
   case object IndexProbe extends Stage { val name = "index_probe" }
-  /** Nightly APPEND to a sliced index: commit only --source as a new
-    * slice, never rewriting history — the write-optimized cadence. A
-    * streaming kind creates the index on an empty dir; knobs freeze at
-    * the first slice. */
+  /** Nightly APPEND: commit only --source as a new slice, never
+    * rewriting history — the write-optimized cadence. A streaming kind
+    * creates the index on an empty dir; knobs freeze when the index is
+    * created. */
   case object IndexAppend extends Stage { val name = "index_append" }
-  /** Collapse a sliced index's committed slices into one (the full
+  /** Collapse an index's committed slices into one (the full
     * rewrite, paid on THIS stage's cadence instead of per append) and
     * sweep unreferenced slice dirs. */
   case object IndexCompact extends Stage { val name = "index_compact" }
@@ -80,12 +81,6 @@ object Main {
       opts.getOrElse(k, sys.error(s"missing required --$k"))
     // read by the index stages that take them
     def indexKind = IndexKinds.kind(opts.getOrElse("kind", "semantic"))
-    def slicedLayout = opts.getOrElse("layout", "store") match {
-      case "store" => false
-      case "sliced" => true
-      case other => sys.error(
-        s"invalid --layout $other; expected store or sliced")
-    }
 
     val stageName = req("stage-name")
     val stage = stages.find(_.name == stageName)
@@ -104,17 +99,14 @@ object Main {
           req("ingestion-date"),
           opts.getOrElse("parallelism", "20").toInt)
       case IndexBuild =>
-        val (kind, sliced, dir) = (indexKind, slicedLayout, req("index-dir"))
-        // a store build republishes the dir whole; a sliced one starts it
-        if (sliced) IndexKinds.onDisk(spark, dir, sliced).foreach(k =>
-          sys.error(s"sliced ${k.name} index already exists at $dir"))
+        val kind = indexKind
         kind.build(IndexKinds.Args(opts, kind),
-          spark.read.parquet(req("source")), dir, sliced)
+          spark.read.parquet(req("source")), req("index-dir"))
       case IndexProbe =>
-        val (kind, sliced, dir) = (indexKind, slicedLayout, req("index-dir"))
-        IndexKinds.onDisk(spark, dir, sliced, Some(kind))
+        val (kind, dir) = (indexKind, req("index-dir"))
+        IndexKinds.onDisk(spark, dir, Some(kind))
         val out = kind.probe(IndexKinds.Args(opts, kind),
-          spark.read.parquet(req("probe")), dir, sliced)
+          spark.read.parquet(req("probe")), dir)
         // natural write parallelism: a dup-heavy probe can yield an
         // arbitrarily large match set, so never funnel it through one
         // task (the bottleneck/OOM shape at corpus scale) — callers
@@ -123,13 +115,13 @@ object Main {
           .write.mode("overwrite").parquet(req("out"))
       case IndexAppend =>
         val (kind, dir) = (indexKind, req("index-dir"))
-        IndexKinds.onDisk(spark, dir, sliced = true, Some(kind))
+        IndexKinds.onDisk(spark, dir, Some(kind))
         kind.append(IndexKinds.Args(opts, kind),
           spark.read.parquet(req("source")), dir)
       case IndexCompact =>
         // the kind is the stored one: --kind is not read
         val dir = req("index-dir")
-        IndexKinds.onDisk(spark, dir, sliced = true)
+        IndexKinds.onDisk(spark, dir)
           .getOrElse(sys.error(s"no index at $dir")).compact(spark, dir)
     }
   }

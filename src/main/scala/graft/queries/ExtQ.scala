@@ -6654,14 +6654,14 @@ object ExtQ {
 
   /** Persistent streaming-index round trip, end-to-end: the x193
     * pipeline (build on two reference slices, MERGE the other two)
-    * with a SAVE + LOAD through [[graft.streaming.RefIndexStore]]
+    * with a SAVE + LOAD through [[graft.streaming.RefIndexSlices]]
     * between the merge and the probe — so the gate proves that the
     * on-disk bucketed form of the index (the build-nightly /
     * probe-from-many-jobs deployment) answers byte-identically to the
     * in-session index AND to the oracle's full replay. Same oracle as
     * x193 by construction: persistence must not change a single pair.
-    * The save dir is a fixed tmp location; save is an atomic
-    * overwrite (staging + rename swap), so repeated runs are safe. */
+    * The save dir is a fixed tmp location; a save commits a version
+    * that replaces the index there, so repeated runs are safe. */
   private val x206: (Sizing => Fn, String) = (
     z => (s, d) => {
       import s.implicits._
@@ -6678,8 +6678,8 @@ object ExtQ {
       // layout knob, not a semantics knob (the spec's plan assert
       // holds at any count); fewer buckets = fewer files + sort runs
       // per save, and the gate pays a full save every execution
-      graft.streaming.RefIndexStore.saveSemantic(merged, dir, buckets = 8)
-      val loaded = graft.streaming.RefIndexStore.loadSemantic(s, dir)
+      graft.streaming.RefIndexSlices.saveSemantic(merged, dir, buckets = 8)
+      val loaded = graft.streaming.RefIndexSlices.loadSemantic(s, dir)
       graft.streaming.EmbedStream.semanticDupMatches(
           z.capPanel(emb.filter(pmod($"vec_id", lit(5)) === 0),
             "vec_id"), loaded,
@@ -6714,7 +6714,7 @@ object ExtQ {
 
   /** Persistent SIGNATURE-index round trip: x195's cross-corpus
     * SimHash pipeline with the reference index saved + loaded through
-    * [[graft.streaming.RefIndexStore]] before the probe — the
+    * [[graft.streaming.RefIndexSlices]] before the probe — the
     * hamming-family counterpart of x206 (which proves the semantic
     * index), same oracle as x195: the on-disk bucketed index must
     * reproduce the batch operator's pair set exactly, hot buckets
@@ -6727,8 +6727,8 @@ object ExtQ {
         docs.filter($"doc_id" % 2 === 0), "doc_id", "text", maxHamming = 3)
       val dir = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_x208_sigidx").getAbsolutePath
-      graft.streaming.RefIndexStore.saveSimHash(idx0, dir, buckets = 8)
-      val loaded = graft.streaming.RefIndexStore.loadSimHash(s, dir)
+      graft.streaming.RefIndexSlices.saveSimHash(idx0, dir, buckets = 8)
+      val loaded = graft.streaming.RefIndexSlices.loadSimHash(s, dir)
       graft.streaming.SimHashStream.simhashDupMatches(
           docs.filter($"doc_id" % 2 === 1), loaded, "doc_id", "text")
         .select($"id_a", $"id_b", $"hamming".cast("int").as("hamming"))
@@ -6740,7 +6740,7 @@ object ExtQ {
   /** Persistent MINHASH-index round trip — the third index family
     * (x206 semantic, x208 simhash): x50's incremental cross-corpus
     * pipeline with the history index saved + loaded through
-    * [[graft.streaming.RefIndexStore]] before the probe, same oracle
+    * [[graft.streaming.RefIndexSlices]] before the probe, same oracle
     * (the exact cross-pair Jaccard slice — LSH recall at this margin
     * is total, and the shingle payload must survive the round trip
     * byte-exactly for the verify to agree). */
@@ -6753,8 +6753,8 @@ object ExtQ {
         n = 3, threshold = 0.6)
       val dir = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_x209_mhidx").getAbsolutePath
-      graft.streaming.RefIndexStore.saveMinHash(idx0, dir, buckets = 8)
-      val loaded = graft.streaming.RefIndexStore.loadMinHash(s, dir)
+      graft.streaming.RefIndexSlices.saveMinHash(idx0, dir, buckets = 8)
+      val loaded = graft.streaming.RefIndexSlices.loadMinHash(s, dir)
       graft.streaming.MinHashStream.minhashDupMatches(
           docs.filter($"doc_id" % 2 === 1), loaded, "doc_id", "text")
         .distinct()
@@ -6847,32 +6847,42 @@ object ExtQ {
     },
     x181._2) // persistence + partition pruning must not move a rank
 
+  /** The pq index over `emb` (codebook trained on all of it) holding
+    * only the even ids: the saved first slice of x213 and x215. */
+  private def evenPq(emb: DataFrame): graft.ext.AnnStore.PqServeIndex = {
+    val full = graft.ext.AnnStore.buildPq(emb, "vec_id", "embedding",
+      subspaces = 8, ksub = 16, dim = 64)
+    full.copy(codes = full.codes.filter(pmod(col("corpus_id"), lit(2)) === 0),
+      payload = full.payload.filter(pmod(col("corpus_id"), lit(2)) === 0))
+  }
+
+  /** `built` holding only the even ids: the saved first slice of x214
+    * and x217. */
+  private def evenIvfPq(built: graft.ext.AnnStore.IvfPqServeIndex) =
+    built.copy(codes = built.codes.filter(pmod(col("_cid"), lit(2)) === 0),
+      payload = built.payload.map(_.filter(pmod(col("corpus_id"), lit(2)) === 0)))
+
   /** INCREMENTAL PQ index maintenance ([[graft.ext.AnnStore]]
-    * createPqSliced/appendPq/loadPqSliced): the codebook freezes at
-    * create (standard PQ practice — train once, encode forever) and
-    * each ingest batch is encoded and committed as a slice, so the
-    * nightly write cost is ∝ the batch where savePq re-encodes and
-    * re-writes the whole corpus. Serving unions the slices; the
-    * candidate prune pushes into every slice's sorted payload. Same
-    * oracle as x197/x210: two appends must serve exactly like the
+    * savePq/appendPq/loadPq): the codebook freezes at the save
+    * (standard PQ practice — train once, encode forever) and each
+    * ingest batch is encoded and committed as a slice, so the nightly
+    * write cost is ∝ the batch where savePq re-encodes and re-writes
+    * the whole corpus. Serving unions the slices; the candidate prune
+    * pushes into every slice's sorted payload. Same oracle as
+    * x197/x210: a save plus an append must serve exactly like the
     * one-shot pipeline. */
   private val x213: (Sizing => Fn, String) = (
     z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
-      val cb = Similarity.pqCodebook(emb, "vec_id", "embedding",
-        subspaces = 8, ksub = 16, dim = 64)
       val dir = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_x213_pqslices").getAbsolutePath
-      // appends accumulate by design — reset the store per execution
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.ext.AnnStore.createPqSliced(s, dir, cb, dim = 64)
-      graft.ext.AnnStore.appendPq(
-        emb.filter(pmod($"vec_id", lit(2)) === 0), dir, "vec_id", "embedding")
+      // the save freezes the codebook trained on the whole corpus and
+      // holds the even ids; the odd ids are appended
+      graft.ext.AnnStore.savePq(evenPq(emb), dir)
       graft.ext.AnnStore.appendPq(
         emb.filter(pmod($"vec_id", lit(2)) === 1), dir, "vec_id", "embedding")
-      val loaded = graft.ext.AnnStore.loadPqSliced(s, dir)
+      val loaded = graft.ext.AnnStore.loadPq(s, dir)
       graft.ext.AnnStore.pqServe(
           z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, refine = 4)
@@ -6883,17 +6893,17 @@ object ExtQ {
     x197._2) // frozen-codebook appends must not move a single rank
 
   /** INCREMENTAL IVF-PQ maintenance ([[graft.ext.AnnStore]]
-    * createIvfPqSliced/appendIvfPq/loadIvfPqSliced): the production
-    * serving layout (x212's cluster-partitioned codes) finally gets
-    * the append path x213 gave flat PQ — coarse centroids AND the PQ
-    * codebook freeze at create, each ingest batch is assigned +
+    * saveIvfPq/appendIvfPq/loadIvfPq): the production serving layout
+    * (x212's cluster-partitioned codes) gets the append path x213
+    * gave flat PQ — coarse centroids AND the PQ codebook freeze at
+    * the save, each ingest batch is assigned +
     * encoded (both per-row functions of the frozen artifacts) and
     * committed as a cluster-partitioned code slice, so the nightly
     * refresh costs ∝ batch where saveIvfPq re-trains + re-encodes +
     * re-writes the corpus. Serving unions the slices; the probed-
     * cluster predicate prunes directories inside every slice. Same
-    * oracle as x181/x212: two appends must serve exactly like the
-    * one-shot build. */
+    * oracle as x181/x212: a save plus an append must serve exactly
+    * like the one-shot build. */
   private val x214: (Sizing => Fn, String) = (
     z => (s, d) => {
       import s.implicits._
@@ -6902,16 +6912,12 @@ object ExtQ {
         subspaces = 8, ksub = 16, dim = 64, nCentroids = 16, rounds = 2)
       val dir = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_x214_ivfpqslices").getAbsolutePath
-      // appends accumulate by design — reset the store per execution
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.ext.AnnStore.createIvfPqSliced(s, dir, built.codebook,
-        built.cents, dim = 64)
-      graft.ext.AnnStore.appendIvfPq(
-        emb.filter(pmod($"vec_id", lit(2)) === 0), dir, "vec_id", "embedding")
+      // the save freezes centroids + codebook trained on the whole
+      // corpus and holds the even ids; the odd ids are appended
+      graft.ext.AnnStore.saveIvfPq(evenIvfPq(built), dir)
       graft.ext.AnnStore.appendIvfPq(
         emb.filter(pmod($"vec_id", lit(2)) === 1), dir, "vec_id", "embedding")
-      val loaded = graft.ext.AnnStore.loadIvfPqSliced(s, dir)
+      val loaded = graft.ext.AnnStore.loadIvfPq(s, dir)
       graft.ext.AnnStore.ivfPqServe(
           z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, nProbe = 4)
@@ -6919,8 +6925,8 @@ object ExtQ {
     },
     x181._2) // frozen-artifact appends must not move a single rank
 
-  /** Sliced-PQ COMPACTION ([[graft.ext.AnnStore.compactPq]]): two
-    * appended slices collapsed into one (codes unioned, payload
+  /** PQ COMPACTION ([[graft.ext.AnnStore.compactPq]]): a saved and an
+    * appended slice collapsed into one (codes unioned, payload
     * globally re-sorted on corpus_id so the serving candidate prune
     * keeps its row-group stats), CAS replace-manifest + graced sweep,
     * then served. Same oracle as x197/x210/x213: compaction re-lays
@@ -6929,20 +6935,13 @@ object ExtQ {
     z => (s, d) => {
       import s.implicits._
       val emb = t(s, d, "embeddings")
-      val cb = Similarity.pqCodebook(emb, "vec_id", "embedding",
-        subspaces = 8, ksub = 16, dim = 64)
       val dir = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_x215_pqcompact").getAbsolutePath
-      // appends accumulate by design — reset the store per execution
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.ext.AnnStore.createPqSliced(s, dir, cb, dim = 64)
-      graft.ext.AnnStore.appendPq(
-        emb.filter(pmod($"vec_id", lit(2)) === 0), dir, "vec_id", "embedding")
+      graft.ext.AnnStore.savePq(evenPq(emb), dir)
       graft.ext.AnnStore.appendPq(
         emb.filter(pmod($"vec_id", lit(2)) === 1), dir, "vec_id", "embedding")
       graft.ext.AnnStore.compactPq(s, dir)
-      val loaded = graft.ext.AnnStore.loadPqSliced(s, dir)
+      val loaded = graft.ext.AnnStore.loadPq(s, dir)
       graft.ext.AnnStore.pqServe(
           z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, refine = 4)
@@ -7040,8 +7039,8 @@ object ExtQ {
          |  FROM rer) WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
     })
 
-  /** x216's chain served from the SLICED store — frozen-artifact
-    * appends with payload slices, refined serve over the slice union
+  /** x216's chain served from two slices — a saved one and a
+    * frozen-artifact append, both with payload; refined serve over the slice union
     * (candidate prune pushing into every slice's sorted payload,
     * cluster prune into every slice's partitioned codes). Same oracle
     * as x216: the layout must not move a single refined rank. */
@@ -7053,16 +7052,10 @@ object ExtQ {
         subspaces = 8, ksub = 16, dim = 64, nCentroids = 16, rounds = 2)
       val dir = new java.io.File(
         sys.props("java.io.tmpdir"), "graft_x217_ivfpqrefslices").getAbsolutePath
-      // appends accumulate by design — reset the store per execution
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      graft.ext.AnnStore.createIvfPqSliced(s, dir, built.codebook,
-        built.cents, dim = 64, withPayload = true)
-      graft.ext.AnnStore.appendIvfPq(
-        emb.filter(pmod($"vec_id", lit(2)) === 0), dir, "vec_id", "embedding")
+      graft.ext.AnnStore.saveIvfPq(evenIvfPq(built), dir, withPayload = true)
       graft.ext.AnnStore.appendIvfPq(
         emb.filter(pmod($"vec_id", lit(2)) === 1), dir, "vec_id", "embedding")
-      val loaded = graft.ext.AnnStore.loadIvfPqSliced(s, dir)
+      val loaded = graft.ext.AnnStore.loadIvfPq(s, dir)
       graft.ext.AnnStore.ivfPqServeRefined(
           z.capPanel(emb.filter($"vec_id" % 97 === 0), "vec_id"),
           "vec_id", "embedding", loaded, k = 10, nProbe = 4, refine = 4)

@@ -170,8 +170,8 @@ object EmbedStream {
         .otherwise(pmod(Planes.subHash(col("id_a")), col("_ns"))))
     // the reference index is corpus-sized: NEVER broadcast it (the
     // x152-class mistake). These are per-micro-batch equi-joins; AQE
-    // sizes the exchanges — and an index saved through
-    // [[RefIndexStore]] IS bucketed on the join keys, so the static
+    // sizes the exchanges — and an index loaded from one compacted
+    // slice ([[RefIndexSlices]]) IS bucketed on the join keys, so the static
     // side re-shuffles zero times across micro-batches and jobs.
     val matches = probes
       .join(idx.bandRows, Seq("band", "bucket", "sub"))

@@ -6,8 +6,9 @@ import graft.TestSpark
 
 /** Persistence parity for the PQ serving index: a loaded index must
   * serve every panel exactly like the in-session pipeline it encodes
-  * (codes, codebook and payload all survive byte-exactly), and the
-  * save is an atomic overwrite on the shared staging protocol. */
+  * (codes, codebook and payload all survive byte-exactly), appends and
+  * compactions must move no rank, and a save replaces the index in one
+  * manifest commit. */
 class AnnStoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -106,18 +107,19 @@ class AnnStoreSpec extends AnyFunSuite {
   }
 
   test("sliced pq: frozen-codebook appends == one-shot build; serve parity") {
-    val a = (0L until 30L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
     val b = (30L until 60L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
     val union = (0L until 60L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-    // codebook frozen at create (trained wherever the caller likes —
-    // here the union, matching the one-shot build it must equal)
-    val cb = Similarity.pqCodebook(union, "vec_id", "embedding",
+    // codebook frozen at the save (trained wherever the caller likes —
+    // here the union, matching the one-shot build it must equal); the
+    // save holds ids below 30, and `b` is appended
+    val full = AnnStore.buildPq(union, "vec_id", "embedding",
       subspaces = 4, ksub = 8, dim = 16)
+    val cb = full.codebook
     val dir = tmp("annstore_sliced")
-    AnnStore.createPqSliced(spark, dir, cb, dim = 16)
-    AnnStore.appendPq(a, dir, "vec_id", "embedding")
+    AnnStore.savePq(full.copy(codes = full.codes.filter($"corpus_id" < 30L),
+      payload = full.payload.filter($"corpus_id" < 30L)), dir)
     AnnStore.appendPq(b, dir, "vec_id", "embedding")
-    val loaded = AnnStore.loadPqSliced(spark, dir)
+    val loaded = AnnStore.loadPq(spark, dir)
     assert(loaded.codebook == cb)
     // encoding is per-row, so slice-wise appends must be bit-identical
     // to one encode over the union
@@ -136,10 +138,6 @@ class AnnStoreSpec extends AnyFunSuite {
     val want = ranking(Similarity.pqTopKRefined(queries, "vec_id",
       "embedding", union, "vec_id", "embedding", cb, k = 5, refine = 3))
     assert(got == want && got.nonEmpty)
-    // creating over an existing index is refused loudly
-    val e = intercept[IllegalArgumentException](
-      AnnStore.createPqSliced(spark, dir, cb, dim = 16))
-    assert(e.getMessage.contains("already exists"))
   }
 
   test("ivfpq index: round-trip; served == in-session; partition pruning engages") {
@@ -194,18 +192,17 @@ class AnnStoreSpec extends AnyFunSuite {
     val n = 400L
     val union = (0L until n).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
       .repartition(8)
-    val a = union.filter($"vec_id" < 200L)
     val b = union.filter($"vec_id" >= 200L)
-    // centroids + codebook frozen at create — trained here on the
+    // centroids + codebook frozen at the save — trained here on the
     // union so the one-shot build is the exact oracle (production
-    // trains on the seed corpus under the retune-audit discipline)
+    // trains on the seed corpus under the retune-audit discipline);
+    // the save holds ids below 200, and `b` is appended
     val idx = AnnStore.buildIvfPq(union, "vec_id", "embedding",
       subspaces = 4, ksub = 8, dim = 16, nCentroids = 8, rounds = 2)
     val dir = tmp("annstore_ivfpq_sliced")
-    AnnStore.createIvfPqSliced(spark, dir, idx.codebook, idx.cents, dim = 16)
-    AnnStore.appendIvfPq(a, dir, "vec_id", "embedding")
+    AnnStore.saveIvfPq(idx.copy(codes = idx.codes.filter($"_cid" < 200L)), dir)
     AnnStore.appendIvfPq(b, dir, "vec_id", "embedding")
-    val loaded = AnnStore.loadIvfPqSliced(spark, dir)
+    val loaded = AnnStore.loadIvfPq(spark, dir)
     assert(loaded.codebook == idx.codebook)
     // assignment + encoding are per-row for frozen artifacts, so
     // slice-wise appends must be bit-identical to the one-shot build
@@ -227,14 +224,14 @@ class AnnStoreSpec extends AnyFunSuite {
     assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 2)
     AnnStore.compactIvfPq(spark, dir, graceMs = 0)
     assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
-    val compacted = AnnStore.loadIvfPqSliced(spark, dir)
+    val compacted = AnnStore.loadIvfPq(spark, dir)
     val served = AnnStore.ivfPqServe(queries, "vec_id", "embedding",
       compacted, k = 5, nProbe = 2)
     assert(ranking(served) == want)
     // the one compacted slice holds one codes file per cluster
     val slices = graft.streaming.RefIndexSlices
     val (fs, root) = slices.fsOf(spark, dir)
-    val Seq(slice) = slices.readSlices(fs, root, slices.currentVersion(fs, root)): @unchecked
+    val Seq(slice) = slices.manifest(spark, dir).get.slices: @unchecked
     val clusters = fs.listStatus(new org.apache.hadoop.fs.Path(
         slices.slicePath(root, slice), "codes"))
       .filter(_.getPath.getName.startsWith("cluster="))
@@ -260,10 +257,6 @@ class AnnStoreSpec extends AnyFunSuite {
     val rows = codeScans.map(_.metrics("numOutputRows").value).sum
     assert(rows < n / 2,
       s"compacted codes scan read $rows of $n rows — pruning lost")
-    // double-create refused loudly
-    val e = intercept[IllegalArgumentException](
-      AnnStore.createIvfPqSliced(spark, dir, idx.codebook, idx.cents, dim = 16))
-    assert(e.getMessage.contains("already exists"))
   }
 
   test("ivfpq refined serve: == independent re-rank; payload optional and guarded") {
@@ -311,32 +304,30 @@ class AnnStoreSpec extends AnyFunSuite {
     assert(ranking(AnnStore.ivfPqServeRefined(queries, "vec_id", "embedding",
       AnnStore.loadIvfPq(spark, dir), k = 3, nProbe = 2, refine = 2))
       == want && want.nonEmpty)
-    // sliced with payload: two appends == same refined ranks; compact
-    // collapses to one slice and moves nothing
+    // with payload, a save of ids below 200 plus an append of the rest
+    // == same refined ranks; compact collapses to one slice and moves
+    // nothing
     val sdir = tmp("annstore_ivfpq_refsliced")
-    AnnStore.createIvfPqSliced(spark, sdir, idx.codebook, idx.cents,
-      dim = 16, withPayload = true)
-    AnnStore.appendIvfPq(union.filter($"vec_id" < 200L), sdir,
-      "vec_id", "embedding")
+    AnnStore.saveIvfPq(idx.copy(codes = idx.codes.filter($"_cid" < 200L),
+      payload = idx.payload.map(_.filter($"corpus_id" < 200L))), sdir,
+      withPayload = true)
     AnnStore.appendIvfPq(union.filter($"vec_id" >= 200L), sdir,
       "vec_id", "embedding")
     assert(ranking(AnnStore.ivfPqServeRefined(queries, "vec_id", "embedding",
-      AnnStore.loadIvfPqSliced(spark, sdir), k = 3, nProbe = 2,
+      AnnStore.loadIvfPq(spark, sdir), k = 3, nProbe = 2,
       refine = 2)) == want)
     AnnStore.compactIvfPq(spark, sdir, graceMs = 0)
     assert(graft.streaming.RefIndexSlices.sliceCount(spark, sdir) == 1)
     assert(ranking(AnnStore.ivfPqServeRefined(queries, "vec_id", "embedding",
-      AnnStore.loadIvfPqSliced(spark, sdir), k = 3, nProbe = 2,
+      AnnStore.loadIvfPq(spark, sdir), k = 3, nProbe = 2,
       refine = 2)) == want)
   }
 
   test("sliced pq compaction: one slice, ranks unchanged, graced orphan sweep") {
     val union = (0L until 60L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
-    val cb = Similarity.pqCodebook(union, "vec_id", "embedding",
-      subspaces = 4, ksub = 8, dim = 16)
     val dir = tmp("annstore_sliced_compact")
-    AnnStore.createPqSliced(spark, dir, cb, dim = 16)
-    AnnStore.appendPq(union.filter($"vec_id" < 30L), dir, "vec_id", "embedding")
+    AnnStore.savePq(AnnStore.buildPq(union.filter($"vec_id" < 30L), "vec_id",
+      "embedding", subspaces = 4, ksub = 8, dim = 16), dir)
     AnnStore.appendPq(union.filter($"vec_id" >= 30L), dir, "vec_id", "embedding")
     val queries = (0L until 60L by 11).map(i => (1000L + i, mkVec(i)))
       .toDF("vec_id", "embedding")
@@ -345,7 +336,7 @@ class AnnStoreSpec extends AnyFunSuite {
           refine = 3)
         .select($"query_id", $"rank", $"corpus_id")
         .as[(Long, Long, Long)].collect().toSet
-    val want = ranking(AnnStore.loadPqSliced(spark, dir))
+    val want = ranking(AnnStore.loadPq(spark, dir))
     // a crashed append's orphan: fresh → survives the graced compact,
     // aged → swept (the RefIndexSlices discipline, pq shape)
     val orphan = new org.apache.hadoop.fs.Path(s"$dir/slices/orphan-uuid")
@@ -356,16 +347,15 @@ class AnnStoreSpec extends AnyFunSuite {
     assert(fs.exists(orphan),
       "a young unreferenced dir may be an in-flight append — keep it")
     assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
-    assert(ranking(AnnStore.loadPqSliced(spark, dir)) == want && want.nonEmpty)
+    assert(ranking(AnnStore.loadPq(spark, dir)) == want && want.nonEmpty)
     AnnStore.compactPq(spark, dir, graceMs = 0)
     assert(!fs.exists(orphan), "compact must sweep AGED orphans")
-    assert(ranking(AnnStore.loadPqSliced(spark, dir)) == want)
-    // the CLI stage dispatches on the stored kind (pq_sliced); MainSpec
-    // checks that it refuses a store-layout dir
+    assert(ranking(AnnStore.loadPq(spark, dir)) == want)
+    // the CLI stage dispatches on the stored kind
     graft.jobs.Main.run(Map("stage-name" -> "index_compact",
       "index-dir" -> dir), spark)
     assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
-    assert(ranking(AnnStore.loadPqSliced(spark, dir)) == want)
+    assert(ranking(AnnStore.loadPq(spark, dir)) == want)
   }
 
   test("save over an existing pq index swaps atomically") {
@@ -376,9 +366,13 @@ class AnnStoreSpec extends AnyFunSuite {
     AnnStore.savePq(mk(20), dir)
     AnnStore.savePq(mk(40), dir)
     assert(AnnStore.loadPq(spark, dir).codes.count() == 40)
-    // kind guard: a RefIndexStore loader refuses a pq dir loudly
+    // the replaced version's frozen codebook and slice are swept
+    val live = graft.streaming.RefIndexSlices.manifest(spark, dir).get
+    assert(new java.io.File(s"$dir/frozen").list().toSeq == live.frozen.toSeq)
+    assert(new java.io.File(s"$dir/slices").list().toSeq == live.slices)
+    // kind guard: a streaming loader refuses a pq dir loudly
     val e = intercept[IllegalArgumentException](
-      graft.streaming.RefIndexStore.loadSemantic(spark, dir))
+      graft.streaming.RefIndexSlices.loadSemantic(spark, dir))
     assert(e.getMessage.contains("kind"))
   }
 }

@@ -49,22 +49,22 @@ class MainSpec extends AnyFunSuite {
   // ------------------------------------------------------ index stages
   private def stage(opts: Map[String, String]): Unit = Main.run(opts, spark)
 
-  /** One row per index kind. `refA` builds the index or its first
-    * slice, and `refB` is merged into it (`streaming` kinds) or
-    * appended to it. `knobs` go only to the stage that creates the
-    * index (a store build or the first slice): every later stage runs
-    * at the CLI defaults, so it must serve the knobs frozen in `meta/`.
-    * Each `probes` option set is checked against `serve`: the library
+  /** One row per index kind. `refA` builds the index, and `refB` is
+    * appended to it, merged into it (`streaming` kinds, with
+    * `--merge-into`) and rebuilt from. `knobs` go only to the stage
+    * that creates the index: every later stage runs at the CLI
+    * defaults, so it must serve the knobs frozen in the manifest. Each
+    * `probes` option set is checked against `serve`: the library
     * composition `index_probe` stands for, over the dir the CLI wrote.
     * The first set is also checked against an answer from the corpus
     * alone: `oracle(all)` for an index built on `all`, and
-    * `appendOracle(first, all)` for a sliced index first built on
-    * `first` that holds `all` (None for ivfpq: no in-session operator
-    * takes frozen centroids). */
+    * `appendOracle(first, all)` for an index built on `first` that
+    * holds `all` (None for ivfpq: no in-session operator takes frozen
+    * centroids). */
   private case class KindCase(kind: String, streaming: Boolean,
       cols: Seq[String], refA: DataFrame, refB: DataFrame, probe: DataFrame,
       knobs: Map[String, String], probes: Seq[Map[String, String]],
-      serve: (String, Boolean, Map[String, String]) => DataFrame,
+      serve: (String, Map[String, String]) => DataFrame,
       oracle: DataFrame => DataFrame,
       appendOracle: Option[(DataFrame, DataFrame) => DataFrame])
 
@@ -72,7 +72,7 @@ class MainSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.ext.{AnnStore, Dedup, Similarity}
     import graft.streaming.{EmbedStream, MinHashStream, RefIndexSlices,
-      RefIndexStore, SimHashStream}
+      SimHashStream}
     def vecs(ids: Seq[Long], mod: Int, step: Double, dim: Int,
              idBase: Long = 0L) =
       ids.map(i => (idBase + i, Array.tabulate(dim)(j =>
@@ -80,12 +80,12 @@ class MainSpec extends AnyFunSuite {
     def docs(ids: Seq[Long]) = ids.map(i => (i,
       (0 until 24).map(j => s"w${(i % 3) * 7 + j}").mkString(" ")))
       .toDF("doc_id", "text")
-    // a dedup kind trains nothing: a sliced index answers as one built
-    // on all it holds
+    // a dedup kind trains nothing: an appended index answers as one
+    // built on all it holds
     def dedup(kind: String, refA: DataFrame, refB: DataFrame,
               probe: DataFrame, knobs: Map[String, String],
               probes: Seq[Map[String, String]],
-              serve: (String, Boolean, Map[String, String]) => DataFrame,
+              serve: (String, Map[String, String]) => DataFrame,
               oracle: DataFrame => DataFrame) =
       KindCase(kind, streaming = true, Seq("id_a", "id_b"), refA, refB, probe,
         knobs, probes, serve, oracle,
@@ -106,41 +106,36 @@ class MainSpec extends AnyFunSuite {
         vecs(120L until 140L, 5, 0.31, 8), sem,
         Map("bands" -> "4", "bits" -> "4", "dim" -> "8"),
         Seq(Map("cos2-num" -> "4", "cos2-den" -> "25")),
-        (dir, sliced, _) => EmbedStream.semanticDupMatches(sem,
-          if (sliced) RefIndexSlices.loadSemantic(spark, dir)
-          else RefIndexStore.loadSemantic(spark, dir),
+        (dir, _) => EmbedStream.semanticDupMatches(sem,
+          RefIndexSlices.loadSemantic(spark, dir),
           "vec_id", "embedding", cos2Num = 4, cos2Den = 25),
         all => Dedup.semanticDupPairsInt8Across(sem, all, "vec_id",
           "embedding", cos2Num = 4, cos2Den = 25, bands = 4,
           bitsPerBand = 4, dim = 8)),
       dedup("simhash", docs(100L until 115L), docs(115L until 130L), text,
         Map.empty, Seq(Map.empty),
-        (dir, sliced, _) => SimHashStream.simhashDupMatches(text,
-          if (sliced) RefIndexSlices.loadSimHash(spark, dir)
-          else RefIndexStore.loadSimHash(spark, dir), "doc_id", "text"),
+        (dir, _) => SimHashStream.simhashDupMatches(text,
+          RefIndexSlices.loadSimHash(spark, dir), "doc_id", "text"),
         all => Dedup.simhashPairsAcross(text, all, "doc_id", "text",
           maxHamming = 3)),
       dedup("minhash", docs(100L until 115L), docs(115L until 130L), text,
         Map.empty, Seq(Map.empty),
-        (dir, sliced, _) => MinHashStream.minhashDupMatches(text,
-          if (sliced) RefIndexSlices.loadMinHash(spark, dir)
-          else RefIndexStore.loadMinHash(spark, dir), "doc_id", "text"),
+        (dir, _) => MinHashStream.minhashDupMatches(text,
+          RefIndexSlices.loadMinHash(spark, dir), "doc_id", "text"),
         all => Dedup.minhashLshPairsAcross(text, all, "doc_id", "text",
           n = 3, threshold = 0.7)),
       KindCase("pq", streaming = false, ranks,
         vecs(0L until 30L, 7, 0.23, 16), vecs(30L until 60L, 7, 0.23, 16),
         ann, annKnobs, Seq(Map("k" -> "5", "refine" -> "3")),
-        (dir, sliced, _) => AnnStore.pqServe(ann, "vec_id", "embedding",
-          if (sliced) AnnStore.loadPqSliced(spark, dir)
-          else AnnStore.loadPq(spark, dir), k = 5, refine = 3),
+        (dir, _) => AnnStore.pqServe(ann, "vec_id", "embedding",
+          AnnStore.loadPq(spark, dir), k = 5, refine = 3),
         all => pqOracle(all, all), Some(pqOracle)),
       KindCase("ivfpq", streaming = false, ranks,
         vecs(0L until 30L, 7, 0.23, 16), vecs(30L until 60L, 7, 0.23, 16),
         ann, annKnobs ++ Map("ncentroids" -> "8", "rounds" -> "2"),
         Seq(Map("k" -> "5", "nprobe" -> "2")),
-        { (dir, sliced, opts) =>
-          val idx = if (sliced) AnnStore.loadIvfPqSliced(spark, dir)
-            else AnnStore.loadIvfPq(spark, dir)
+        { (dir, opts) =>
+          val idx = AnnStore.loadIvfPq(spark, dir)
           opts.get("refine").fold(AnnStore.ivfPqServe(ann, "vec_id",
             "embedding", idx, k = 5, nProbe = 2))(r =>
             AnnStore.ivfPqServeRefined(ann, "vec_id", "embedding", idx,
@@ -168,14 +163,13 @@ class MainSpec extends AnyFunSuite {
     * each output must equal the library composition. Returns the first
     * set's rows. */
   private def probeAll(c: KindCase, base: String, dir: String,
-                       sliced: Boolean, tag: String): Set[Row] =
+                       tag: String): Set[Row] =
     c.probes.zipWithIndex.map { case (p, n) =>
       val out = s"$base/out_${tag}_$n"
       stage(Map("stage-name" -> "index_probe", "kind" -> c.kind,
-        "index-dir" -> dir, "probe" -> s"$base/probe", "out" -> out) ++
-        (if (sliced) Map("layout" -> "sliced") else Map.empty) ++ p)
+        "index-dir" -> dir, "probe" -> s"$base/probe", "out" -> out) ++ p)
       val got = rowsOf(c, spark.read.parquet(out))
-      assert(got == rowsOf(c, c.serve(dir, sliced, p)) && got.nonEmpty,
+      assert(got == rowsOf(c, c.serve(dir, p)) && got.nonEmpty,
         s"${c.kind} $tag probe $p != the library composition")
       got
     }.head
@@ -183,100 +177,91 @@ class MainSpec extends AnyFunSuite {
   private def kindCase(kind: String): KindCase =
     kindCases.find(_.kind == kind).get
 
-  private def compact(dir: String): Unit = {
+  private def build(c: KindCase, base: String, source: String,
+                    dir: String): Unit =
+    stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
+      "source" -> s"$base/$source", "index-dir" -> dir) ++ c.knobs)
+
+  private def append(c: KindCase, base: String, source: String,
+                     dir: String, opts: Map[String, String] = Map.empty): Unit =
+    stage(Map("stage-name" -> "index_append", "kind" -> c.kind,
+      "source" -> s"$base/$source", "index-dir" -> dir) ++ opts)
+
+  /** Compaction collapses the slices into one and moves no row. */
+  private def compact(c: KindCase, base: String, dir: String,
+                      before: Set[Row]): Unit = {
     stage(Map("stage-name" -> "index_compact", "index-dir" -> dir))
     assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
+    assert(probeAll(c, base, dir, "compacted") == before,
+      s"${c.kind} compaction moved a row")
   }
 
-  /** Store layout: a nightly build, probed; a streaming kind then
-    * merges `refB` into a second dir, probed again. */
-  private def storeLifecycle(c: KindCase): Unit = {
+  /** One kind's life: build → probe → append → probe; compact → probe;
+    * build again over the dir → probe, equal to a fresh build's. A
+    * streaming kind also merges `refB` into a second dir. */
+  private def lifecycle(c: KindCase): Unit = {
     val base = fixture(c)
-    stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
-      "source" -> s"$base/ref_a", "index-dir" -> s"$base/idx") ++ c.knobs)
-    assert(probeAll(c, base, s"$base/idx", sliced = false, "built") ==
-      rowsOf(c, c.oracle(c.refA)), s"${c.kind} build != oracle")
+    val dir = s"$base/idx"
+    build(c, base, "ref_a", dir)
+    assert(probeAll(c, base, dir, "built") == rowsOf(c, c.oracle(c.refA)),
+      s"${c.kind} build != oracle")
     if (c.streaming) {
       // the incremental merge publishes into a SECOND dir (the source
-      // index stays as it was: publish is whole-dir atomic)
+      // index stays as it was)
       stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
-        "source" -> s"$base/ref_b", "merge-into" -> s"$base/idx",
+        "source" -> s"$base/ref_b", "merge-into" -> dir,
         "index-dir" -> s"$base/idx2"))
-      assert(probeAll(c, base, s"$base/idx2", sliced = false, "merged") ==
+      assert(probeAll(c, base, s"$base/idx2", "merged") ==
         rowsOf(c, c.oracle(c.refA.unionByName(c.refB))),
         s"${c.kind} merge != oracle")
     }
-  }
-
-  /** Sliced layout: a first slice and an append, probed; compaction
-    * to one slice, probed again. */
-  private def slicedLifecycle(c: KindCase): Unit = {
-    val base = fixture(c)
-    val dir = s"$base/idx"
-    // the first slice: a streaming kind's knobs freeze at its first
-    // append; an ANN kind's sliced build freezes its codebook (and
-    // centroids) on the first source
-    stage(Map("stage-name" -> (if (c.streaming) "index_append"
-      else "index_build"), "kind" -> c.kind, "layout" -> "sliced",
-      "source" -> s"$base/ref_a", "index-dir" -> dir) ++ c.knobs)
-    stage(Map("stage-name" -> "index_append", "kind" -> c.kind,
-      "source" -> s"$base/ref_b", "index-dir" -> dir))
-    val appended = probeAll(c, base, dir, sliced = true, "appended")
+    append(c, base, "ref_b", dir)
+    val appended = probeAll(c, base, dir, "appended")
     for (o <- c.appendOracle)
       assert(appended == rowsOf(c, o(c.refA, c.refA.unionByName(c.refB))),
-        s"${c.kind} sliced != oracle")
-    // compaction collapses the slices and moves no row
-    compact(dir)
-    assert(probeAll(c, base, dir, sliced = true, "compacted") == appended,
-      s"${c.kind} compaction moved a row")
-  }
-
-  /** A sliced build alone holds just the corpus it was built on, so it
-    * answers as a store build does, before and after compaction. */
-  private def slicedBuild(c: KindCase): Unit = {
-    val base = fixture(c)
-    val dir = s"$base/idx"
-    stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
-      "layout" -> "sliced", "source" -> s"$base/ref_a",
-      "index-dir" -> dir) ++ c.knobs)
+        s"${c.kind} append != oracle")
+    compact(c, base, dir, appended)
+    build(c, base, "ref_b", dir)
     assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
-    val want = rowsOf(c, c.oracle(c.refA))
-    assert(probeAll(c, base, dir, sliced = true, "built") == want,
-      s"${c.kind} sliced build != oracle")
-    compact(dir)
-    assert(probeAll(c, base, dir, sliced = true, "compacted") == want,
-      s"${c.kind} compaction moved a row")
+    build(c, base, "ref_b", s"$base/fresh")
+    assert(probeAll(c, base, dir, "rebuilt") ==
+      probeAll(c, base, s"$base/fresh", "fresh"),
+      s"${c.kind} build over an index != a fresh build")
   }
 
   test("index_build + index_probe stages: nightly build, merge, probe") {
-    storeLifecycle(kindCase("semantic"))
+    lifecycle(kindCase("semantic"))
   }
 
   test("index_append + index_compact + sliced probe: nightly-append stages") {
-    slicedLifecycle(kindCase("semantic"))
+    // a streaming kind's first append creates the index, with knobs
+    // frozen from that stage
+    val c = kindCase("semantic")
+    val base = fixture(c)
+    val dir = s"$base/idx"
+    append(c, base, "ref_a", dir, c.knobs)
+    append(c, base, "ref_b", dir)
+    val appended = probeAll(c, base, dir, "appended")
+    for (o <- c.appendOracle)
+      assert(appended == rowsOf(c, o(c.refA, c.refA.unionByName(c.refB))),
+        s"${c.kind} append != oracle")
+    compact(c, base, dir, appended)
   }
 
   test("index stages: --kind simhash and minhash route through the same dirs") {
-    for (k <- Seq("simhash", "minhash")) {
-      storeLifecycle(kindCase(k))
-      slicedLifecycle(kindCase(k))
-    }
+    for (k <- Seq("simhash", "minhash")) lifecycle(kindCase(k))
   }
 
   test("ANN lifecycle through the CLI: pq sliced build/append/compact/probe at exact rank parity") {
-    storeLifecycle(kindCase("pq"))
-    slicedLifecycle(kindCase("pq"))
+    lifecycle(kindCase("pq"))
   }
 
   test("ANN lifecycle through the CLI: ivfpq one-shot and sliced serve at exact rank parity") {
     val c = kindCase("ivfpq")
-    storeLifecycle(c)
-    slicedBuild(c)
+    lifecycle(c)
     // --payload true: a probe with --refine re-ranks over the payload
-    val paid = c.copy(knobs = c.knobs + ("payload" -> "true"),
-      probes = c.probes :+ (c.probes.head + ("refine" -> "2")))
-    storeLifecycle(paid)
-    slicedLifecycle(paid)
+    lifecycle(c.copy(knobs = c.knobs + ("payload" -> "true"),
+      probes = c.probes :+ (c.probes.head + ("refine" -> "2"))))
   }
 
   test("index stages: an unknown --kind or --layout is refused by name") {
@@ -290,55 +275,47 @@ class MainSpec extends AnyFunSuite {
       assert(e.getMessage == "invalid --kind nope; expected semantic, " +
         "simhash, minhash, pq or ivfpq", s"$s: ${e.getMessage}")
     }
-    val e = intercept[RuntimeException](stage(Map(
-      "stage-name" -> "index_probe", "layout" -> "nope",
-      "index-dir" -> s"$base/idx", "probe" -> s"$base/probe",
-      "out" -> s"$base/out_bad")))
-    assert(e.getMessage == "invalid --layout nope; expected store or sliced")
   }
 
   test("index stages: layout mistakes and a misplaced --merge-into are named errors") {
     val c = kindCases.head
     val base = fixture(c)
-    val (store, sliced) = (s"$base/idx", s"$base/idx_sliced")
-    for ((s, dir) <- Seq("index_build" -> store, "index_append" -> sliced))
-      stage(Map("stage-name" -> s, "source" -> s"$base/ref_a",
-        "index-dir" -> dir) ++ c.knobs)
+    val dir = s"$base/idx"
+    build(c, base, "ref_a", dir)
     def error(opts: (String, String)*): String =
       intercept[RuntimeException](stage(Map("source" -> s"$base/ref_b",
         "probe" -> s"$base/probe", "out" -> s"$base/out_bad") ++
         opts)).getMessage
-    assert(error("stage-name" -> "index_build", "layout" -> "nope",
-      "index-dir" -> s"$base/idx_bad") ==
-      "invalid --layout nope; expected store or sliced")
-    assert(error("stage-name" -> "index_build", "kind" -> "pq",
-      "merge-into" -> store, "index-dir" -> s"$base/idx_bad") ==
-      "--merge-into does not apply to --kind pq")
-    assert(error("stage-name" -> "index_build", "layout" -> "sliced",
-      "merge-into" -> store, "index-dir" -> s"$base/idx_bad") ==
-      "--merge-into does not apply to --layout sliced")
-    // the layout on disk is named next to the one the stage expects
-    def mismatch(dir: String, found: String, wanted: String) =
-      s"index at $dir has the $found layout, not the $wanted layout"
-    assert(error("stage-name" -> "index_probe", "index-dir" -> sliced) ==
-      mismatch(sliced, "sliced", "store"))
-    assert(error("stage-name" -> "index_probe", "layout" -> "sliced",
-      "index-dir" -> store) == mismatch(store, "store", "sliced"))
-    for (s <- Seq("index_append", "index_compact"))
-      assert(error("stage-name" -> s, "index-dir" -> store) ==
-        mismatch(store, "store", "sliced"), s)
-    assert(error("stage-name" -> "index_build", "layout" -> "sliced",
-      "index-dir" -> store) == mismatch(store, "store", "sliced"))
-    // a sliced build starts an index; the one read names what is there
-    assert(error("stage-name" -> "index_build", "layout" -> "sliced",
-      "index-dir" -> sliced) ==
-      s"sliced semantic index already exists at $sliced")
-    assert(error("stage-name" -> "index_probe", "kind" -> "simhash",
-      "index-dir" -> store) == s"index at $store is kind=semantic, not simhash")
+    for (k <- Seq("pq", "ivfpq"))
+      assert(error("stage-name" -> "index_build", "kind" -> k,
+        "merge-into" -> dir, "index-dir" -> s"$base/idx_bad") ==
+        s"--merge-into does not apply to --kind $k")
+    // the kind on disk is named next to the one the stage expects
+    for (s <- Seq("index_probe", "index_append"))
+      assert(error("stage-name" -> s, "kind" -> "simhash",
+        "index-dir" -> dir) == s"index at $dir is kind=semantic, not simhash", s)
+    // an ANN append, a probe and a compaction need an index
+    val empty = s"$base/empty"
+    assert(error("stage-name" -> "index_append", "kind" -> "pq",
+      "index-dir" -> empty) == s"no index at $empty")
+    assert(error("stage-name" -> "index_probe", "index-dir" -> empty) ==
+      s"no index at $empty")
+    assert(error("stage-name" -> "index_compact", "index-dir" -> empty) ==
+      s"no index at $empty")
   }
 
   test("index_build --layout sliced commits a streaming kind's source as its first slice") {
-    for (c <- kindCases if c.streaming) slicedBuild(c)
+    // --layout is not an option any stage reads: a build ignores it
+    for (c <- kindCases if c.streaming) {
+      val base = fixture(c)
+      val dir = s"$base/idx"
+      stage(Map("stage-name" -> "index_build", "kind" -> c.kind,
+        "layout" -> "sliced", "source" -> s"$base/ref_a",
+        "index-dir" -> dir) ++ c.knobs)
+      assert(graft.streaming.RefIndexSlices.sliceCount(spark, dir) == 1)
+      assert(probeAll(c, base, dir, "built") == rowsOf(c, c.oracle(c.refA)),
+        s"${c.kind} build != oracle")
+    }
   }
 
   test("invalid stage and missing args error clearly") {

@@ -64,11 +64,10 @@ class RefIndexSlicesSpec extends AnyFunSuite {
     val compacted = RefIndexSlices.loadSemantic(spark, dir)
     assert(rows(compacted.bandRows) == rows(full.bandRows))
     assert(m(compacted) == viaRebuild)
-    // and the read-optimized publish path: round-trip the combined
-    // index through the bucketed store
+    // and a save of the combined index into another dir
     val servingDir = tmp("slices_sem_serving")
-    RefIndexStore.saveSemantic(compacted, servingDir, buckets = 4)
-    assert(m(RefIndexStore.loadSemantic(spark, servingDir)) == viaRebuild)
+    RefIndexSlices.saveSemantic(compacted, servingDir, buckets = 4)
+    assert(m(RefIndexSlices.loadSemantic(spark, servingDir)) == viaRebuild)
   }
 
   test("simhash + minhash slices == rebuild on the probe answer") {
@@ -102,8 +101,8 @@ class RefIndexSlicesSpec extends AnyFunSuite {
     val dir = tmp("slices_knobs")
     RefIndexSlices.appendSemantic(a, dir, "vec_id", "embedding",
       bands = 4, bitsPerBand = 4, dim = 8)
-    // appendSemantic PINS knobs from meta, so drift can only come from
-    // a mismatched maxBucket-style override in appendParts — assert the
+    // appendSemantic PINS knobs from the manifest, so drift can only
+    // come from a concurrent first append (IndexCrashSpec) — assert the
     // kind guard (the cross-family mistake) here
     val e = intercept[IllegalArgumentException](
       RefIndexSlices.appendSimHash(
@@ -164,5 +163,26 @@ class RefIndexSlicesSpec extends AnyFunSuite {
     RefIndexSlices.compact(spark, dir, graceMs = 0)
     assert(RefIndexSlices.sliceCount(spark, dir) == 1)
     assert(RefIndexSlices.loadSemantic(spark, dir).payload.count() == 12)
+  }
+
+  test("version-name collision retries as the next version (rename CAS)") {
+    val a = (0L until 6L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
+    val dir = tmp("slices_collision")
+    RefIndexSlices.appendSemantic(a, dir, "vec_id", "embedding",
+      bands = 4, bitsPerBand = 4, dim = 8)
+    val (fs, root) = RefIndexSlices.fsOf(spark, dir)
+    // a concurrent winner takes version 2's name after this commit
+    // derived its manifest from version 1: the rename loses, and the
+    // commit derives again from version 2 and lands at 3
+    var derived = Seq.empty[Long]
+    val v = RefIndexSlices.commit(fs, root) { (v, cur) =>
+      derived :+= v
+      if (v == 1L) RefIndexSlices.commit(fs, root)((_, c) =>
+        c.get.copy(slices = c.get.slices :+ "winner"))
+      cur.get.copy(slices = cur.get.slices :+ "loser")
+    }
+    assert(v == 3L && derived == Seq(1L, 2L))
+    assert(RefIndexSlices.manifest(spark, dir).get.slices.takeRight(2) ==
+      Seq("winner", "loser"))
   }
 }

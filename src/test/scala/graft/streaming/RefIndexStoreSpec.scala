@@ -7,9 +7,9 @@ import graft.TestSpark
 /** Persistence parity for the three streaming reference indexes: a
   * LOADED index must answer every probe exactly like the in-session
   * index it was saved from (band rows, census, payload — and therefore
-  * matches), the save must be an atomic overwrite, and the loaded
-  * band-row table must carry its bucket layout so the probe join pays
-  * no static-side Exchange. */
+  * matches), a save must replace the index in one commit, and the
+  * band-row table of a saved or compacted index must carry its bucket
+  * layout so the probe join pays no static-side Exchange. */
 class RefIndexStoreSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -29,8 +29,8 @@ class RefIndexStoreSpec extends AnyFunSuite {
     val idx = EmbedStream.semanticRefIndex(ref, "vec_id", "embedding",
       bands = 4, bitsPerBand = 4, dim = 8)
     val dir = tmp("refidx_sem")
-    RefIndexStore.saveSemantic(idx, dir, buckets = 4)
-    val loaded = RefIndexStore.loadSemantic(spark, dir)
+    RefIndexSlices.saveSemantic(idx, dir, buckets = 4)
+    val loaded = RefIndexSlices.loadSemantic(spark, dir)
     assert(loaded.bands == idx.bands && loaded.bitsPerBand == idx.bitsPerBand
       && loaded.dim == idx.dim && loaded.maxBucket == idx.maxBucket)
     // component-level parity: band rows, census, payload as sets
@@ -58,8 +58,8 @@ class RefIndexStoreSpec extends AnyFunSuite {
     val idx = EmbedStream.semanticRefIndex(ref, "vec_id", "embedding",
       bands = 4, bitsPerBand = 4, dim = 8)
     val dir = tmp("refidx_plan")
-    RefIndexStore.saveSemantic(idx, dir, buckets = 4)
-    val loaded = RefIndexStore.loadSemantic(spark, dir)
+    RefIndexSlices.saveSemantic(idx, dir, buckets = 4)
+    val loaded = RefIndexSlices.loadSemantic(spark, dir)
     val probes = (0L until 10L).map(i => (0, i % 4, 0L, i)).toDF(
       "band", "bucket", "sub", "id_a")
     // force the shuffle-join planner path (a tiny probe side would
@@ -80,6 +80,29 @@ class RefIndexStoreSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 
+  test("compact of a two-slice index loads bucketed: probe join has no static-side Exchange") {
+    val a = (100L until 120L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
+    val b = (120L until 140L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
+    val dir = tmp("refidx_compact_plan")
+    RefIndexSlices.appendSemantic(a, dir, "vec_id", "embedding",
+      bands = 4, bitsPerBand = 4, dim = 8)
+    RefIndexSlices.appendSemantic(b, dir, "vec_id", "embedding")
+    RefIndexSlices.compact(spark, dir)
+    val loaded = RefIndexSlices.loadSemantic(spark, dir)
+    val probes = (0L until 10L).map(i => (0, i % 4, 0L, i)).toDF(
+      "band", "bucket", "sub", "id_a")
+    val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val plan = probes.join(loaded.bandRows, Seq("band", "bucket", "sub"))
+        .queryExecution.explainString(ExplainMode.fromString("formatted"))
+      assert(plan.contains("Bucketed: true"),
+        s"compacted band_rows scan must use its bucket layout:\n$plan")
+      val exchanges = """\(\d+\) Exchange""".r.findAllIn(plan).size
+      assert(exchanges == 1, s"expected only the probe-side exchange:\n$plan")
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
+  }
+
   test("merge-then-save is the compaction: loaded == full rebuild, flat lineage") {
     val a = (100L until 120L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
     val b = (120L until 140L).map(i => (i, mkVec(i))).toDF("vec_id", "embedding")
@@ -88,8 +111,8 @@ class RefIndexStoreSpec extends AnyFunSuite {
         bands = 4, bitsPerBand = 4, dim = 8),
       b, "vec_id", "embedding")
     val dir = tmp("refidx_compact")
-    RefIndexStore.saveSemantic(merged, dir, buckets = 4)
-    val loaded = RefIndexStore.loadSemantic(spark, dir)
+    RefIndexSlices.saveSemantic(merged, dir, buckets = 4)
+    val loaded = RefIndexSlices.loadSemantic(spark, dir)
     val full = EmbedStream.semanticRefIndex(a.unionByName(b), "vec_id",
       "embedding", bands = 4, bitsPerBand = 4, dim = 8)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -114,8 +137,8 @@ class RefIndexStoreSpec extends AnyFunSuite {
     val idx = SimHashStream.simhashRefIndex(ref, "doc_id", "text",
       maxHamming = 3)
     val dir = tmp("refidx_sim")
-    RefIndexStore.saveSimHash(idx, dir, buckets = 4)
-    val loaded = RefIndexStore.loadSimHash(spark, dir)
+    RefIndexSlices.saveSimHash(idx, dir, buckets = 4)
+    val loaded = RefIndexSlices.loadSimHash(spark, dir)
     assert(loaded.maxHamming == idx.maxHamming
       && loaded.maxBucket == idx.maxBucket)
     val probe = (0L until 12L).map(i => (i, doc(i))).toDF("doc_id", "text")
@@ -133,8 +156,8 @@ class RefIndexStoreSpec extends AnyFunSuite {
     val idx = MinHashStream.minhashRefIndex(ref, "doc_id", "text",
       n = 3, threshold = 0.7)
     val dir = tmp("refidx_min")
-    RefIndexStore.saveMinHash(idx, dir, buckets = 4)
-    val loaded = RefIndexStore.loadMinHash(spark, dir)
+    RefIndexSlices.saveMinHash(idx, dir, buckets = 4)
+    val loaded = RefIndexSlices.loadMinHash(spark, dir)
     assert(loaded.n == idx.n && loaded.threshold == idx.threshold
       && loaded.bands == idx.bands && loaded.rowsPerBand == idx.rowsPerBand)
     val probe = (0L until 12L).map(i => (i, doc(i))).toDF("doc_id", "text")
@@ -145,81 +168,16 @@ class RefIndexStoreSpec extends AnyFunSuite {
     assert(inSession == fromDisk && fromDisk.nonEmpty)
   }
 
-  test("save over an existing index swaps atomically; recover heals the aside window") {
+  test("save over an existing index replaces it in one commit and sweeps the old slice") {
     val mk = (ids: Seq[Long]) => EmbedStream.semanticRefIndex(
       ids.map(i => (i, mkVec(i))).toDF("vec_id", "embedding"),
       "vec_id", "embedding", bands = 4, bitsPerBand = 4, dim = 8)
     val dir = tmp("refidx_swap")
-    RefIndexStore.saveSemantic(mk(100L until 110L), dir, buckets = 4)
-    RefIndexStore.saveSemantic(mk(100L until 140L), dir, buckets = 4)
-    val loaded = RefIndexStore.loadSemantic(spark, dir)
-    assert(loaded.payload.count() == 40) // v2 fully replaced v1
-    // crash window: old index renamed aside, new never swapped in —
-    // recover must restore the aside copy (meta present == complete)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val trash = new org.apache.hadoop.fs.Path(p.getParent,
-      s".${p.getName}.refidx_trash-dead")
-    assert(fs.rename(p, trash))
-    assert(RefIndexStore.recover(spark, dir))
-    assert(RefIndexStore.loadSemantic(spark, dir).payload.count() == 40)
-    assert(!RefIndexStore.recover(spark, dir)) // idempotent: nothing left
-  }
-
-  test("recover restores the NEWEST complete trash; refuses an in-flight save") {
-    val mk = (ids: Seq[Long]) => EmbedStream.semanticRefIndex(
-      ids.map(i => (i, mkVec(i))).toDF("vec_id", "embedding"),
-      "vec_id", "embedding", bands = 4, bitsPerBand = 4, dim = 8)
-    val dir = tmp("refidx_recover2")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // two crashed-save trash siblings, both complete, publish millis
-    // embedded in the name (13-digit epoch tokens — the width the
-    // parser trusts): the OLDER one holds 10 rows, the NEWER 20
-    RefIndexStore.saveSemantic(mk(100L until 110L), dir, buckets = 4)
-    assert(fs.rename(p,
-      new org.apache.hadoop.fs.Path(p.getParent,
-        f".${p.getName}.refidx_trash-${1000L}%013d-old")))
-    RefIndexStore.saveSemantic(mk(100L until 120L), dir, buckets = 4)
-    assert(fs.rename(p,
-      new org.apache.hadoop.fs.Path(p.getParent,
-        f".${p.getName}.refidx_trash-${2000L}%013d-new")))
-    assert(RefIndexStore.recover(spark, dir))
-    // a stale snapshot must never shadow the most recent complete one
-    assert(RefIndexStore.loadSemantic(spark, dir).payload.count() == 20)
-    // a FRESH staging sibling means a writer may be mid-save: recover
-    // must refuse rather than destroy its in-flight work
-    val live = new org.apache.hadoop.fs.Path(p.getParent,
-      s".${p.getName}.refidx_tmp-${System.currentTimeMillis()}-live")
-    fs.mkdirs(live)
-    val e = intercept[IllegalStateException](RefIndexStore.recover(spark, dir))
-    assert(e.getMessage.contains("IN FLIGHT"))
-    assert(fs.exists(live), "refusal must leave the staging dir intact")
-    // with the grace overridden (writer known dead) the sweep proceeds
-    assert(!RefIndexStore.recover(spark, dir, inFlightGraceMs = 0))
-    assert(!fs.exists(live))
-  }
-
-  test("recover liveness keys on staging CONTENT mtime, not the name stamp") {
-    // a healthy save that has been running longer than the grace:
-    // its staging NAME timestamp is ancient, but it is still closing
-    // files — recover must key liveness on the newest content mtime
-    // and refuse, not treat the old name stamp as a death certificate
-    val dir = tmp("refidx_slowsave")
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val slow = new org.apache.hadoop.fs.Path(p.getParent,
-      f".${p.getName}.refidx_tmp-${1000L}%013d-slowwriter")
-    fs.mkdirs(new org.apache.hadoop.fs.Path(slow, "band_rows"))
-    val out = fs.create(new org.apache.hadoop.fs.Path(
-      new org.apache.hadoop.fs.Path(slow, "band_rows"), "part-0.parquet"))
-    out.writeBytes("fresh"); out.close() // freshly-written content
-    val e = intercept[IllegalStateException](RefIndexStore.recover(spark, dir))
-    assert(e.getMessage.contains("IN FLIGHT"))
-    assert(fs.exists(slow), "refusal must leave the slow save intact")
-    // once the content itself ages past the grace it is a dead save
-    assert(!RefIndexStore.recover(spark, dir, inFlightGraceMs = 0))
-    assert(!fs.exists(slow))
+    RefIndexSlices.saveSemantic(mk(100L until 110L), dir, buckets = 4)
+    RefIndexSlices.saveSemantic(mk(100L until 140L), dir, buckets = 4)
+    assert(RefIndexSlices.loadSemantic(spark, dir).payload.count() == 40)
+    // the replaced version's slice is gone; only the live one is left
+    assert(new java.io.File(s"$dir/slices").list().toSeq ==
+      RefIndexSlices.manifest(spark, dir).get.slices)
   }
 }
